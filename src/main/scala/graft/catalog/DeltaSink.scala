@@ -25,49 +25,6 @@ import org.apache.spark.sql.types._
   * Single-writer contract: the commit fails loudly if the target version
   * file already exists — optimistic-concurrency retry is a coordinator
   * feature this library intentionally leaves to a connector jar. */
-/** One ordered `WHEN MATCHED [AND <cond>] THEN UPDATE SET …/DELETE`
-  * clause for [[DeltaSink.mergeInto]]/[[IcebergSink.mergeInto]]:
-  * `set` None = DELETE, Some = the UPDATE's column → expression map.
-  * Clause ORDER is SQL first-match order — a matched pair takes the
-  * first clause whose condition it satisfies (NULL ⇒ not satisfied),
-  * and carries unchanged when none does. */
-final case class MergeMatchedClause(cond: Option[String],
-    set: Option[Map[String, String]])
-
-/** One ordered `WHEN NOT MATCHED [AND <cond>] THEN INSERT` clause:
-  * `proj` None = identity whole-row insert (`INSERT *` / the full
-  * column list), Some = table column → VALUES expression over the
-  * source row, omitted columns NULL-fill. Clause order is SQL
-  * first-match order over the unmatched source rows; a row satisfying
-  * no clause does not insert. */
-final case class MergeInsertClause(cond: Option[String],
-    proj: Option[Map[String, String]])
-
-/** Shared MERGE clause-classification arithmetic for both writers: the
-  * row's claiming clause is computed ONCE as a small int (a chained
-  * `when` takes the FIRST satisfied gate — SQL clause order — and -1
-  * when none is), and every downstream filter/projection branches on
-  * that int. The r15 shape re-derived the classification per FIELD with
-  * prefix-negated gate chains, growing the projection tree O(F × C²) in
-  * clause count C over F fields; this is O(F + C). */
-private[catalog] object MergeClauses {
-  import org.apache.spark.sql.Column
-  import org.apache.spark.sql.functions.{lit, when}
-  /** First-match classification: index of the first true gate, else -1.
-    * Gates must be NULL-free (the writers coalesce user conditions to
-    * false), so chained `when` equals the prefix-negated expansion. */
-  def clauseIdx(gates: Seq[Column]): Column =
-    if (gates.isEmpty) lit(-1)
-    else gates.zipWithIndex.tail
-      .foldLeft(when(gates.head, lit(0))) { case (acc, (g, i)) => acc.when(g, lit(i)) }
-      .otherwise(lit(-1))
-  /** `classified` claimed by one of `idxs` (a clause-kind membership test). */
-  def hit(classified: Column, idxs: Seq[Int]): Column =
-    if (idxs.isEmpty) lit(false)
-    else if (idxs.length == 1) classified === lit(idxs.head)
-    else classified.isin(idxs.map(Int.box): _*)
-}
-
 object DeltaSink {
   import graft.sources.DeltaNative.DeltaReadException
 
@@ -1980,17 +1937,8 @@ object DeltaSink {
     // no commit, exactly as before.
     val (descriptors, imageFiles) =
       if (!isUpdate) (descriptorJob(), Seq.empty[NewFile])
-      else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try IcebergSink.withMicrosTimestamps(spark) {
-          val fDesc = Future { descriptorJob() }
-          val fImg = Future { imageJob() }
-          (Await.result(fDesc, Duration.Inf), Await.result(fImg, Duration.Inf))
-        } finally pool.shutdown()
+      else IcebergSink.withMicrosTimestamps(spark) {
+        ParallelFiles.both(descriptorJob(), imageJob())
       }
     if (descriptors.isEmpty) return 0L
 
@@ -2468,75 +2416,22 @@ object DeltaSink {
     changedCount
   }
 
-  /** MERGE INTO — the upsert: `source` rows joining the table on `condSql`
-    * (reference the sides as `t.` and `s.`) update the matched target rows
-    * with `matchedSet` (column → expression over BOTH sides' pre-update
-    * values); source rows matching nothing insert (when
-    * `insertNotMatched`). Copy-on-write like DELETE/UPDATE: one join pass
-    * finds the files holding matches, only those rewrite, inserts append
-    * as new files, one commit carries it all (+ cdc rows on a CDF table:
-    * update_preimage/update_postimage/insert). Two source rows matching
-    * ONE target row is ambiguous and rejects loudly (the SQL MERGE
-    * cardinality rule).
-    *
-    * Conditional clauses (the CDC-apply shape): `matchedDeleteCond` is a
-    * `WHEN MATCHED AND <cond> THEN DELETE` — matched pairs satisfying it
-    * drop the target row (cdc: `delete` rows) instead of updating;
-    * `matchedUpdateCond` is `WHEN MATCHED AND <cond> THEN UPDATE` — pairs
-    * failing it carry unchanged (no cdc rows, row tracking keeps their
-    * commit version); `insertCond` gates `WHEN NOT MATCHED` on a condition
-    * over the source row (e.g. `s._change_type != 'delete'`). Every clause
-    * condition follows the SQL MERGE rule for NULL: a condition that
-    * evaluates NULL is NOT satisfied (the pair falls through to the next
-    * clause, never silently dropped — coalesced to false at every site).
-    * `matchedUpdateFirst` selects SQL first-match order when a pair could
-    * satisfy both matched clauses: false (default) = the DELETE clause is
-    * listed first and wins; true = the UPDATE clause is listed first.
-    * `bySourceUpdateFirst` is the BY SOURCE family's mirror.
-    *
-    * `insertProj` renders a non-identity `INSERT (cols) VALUES (exprs)`:
-    * each table column maps to an expression over the source row (`s.`),
-    * omitted columns NULL-fill (SQL MERGE insert semantics). With a
-    * projection the source need not carry the table's columns at all.
-    *
-    * BY SOURCE clauses (the FULL-SYNC shape, mirroring delta-spark's
-    * `whenNotMatchedBySource`): target rows matching NO source row —
-    * conditions may reference only `t.` columns, there is no source side.
-    * `bySourceDeleteCond` is `WHEN NOT MATCHED BY SOURCE AND <cond> THEN
-    * DELETE` (pass `Some("true")` for unconditional — the "target row
-    * vanished from the feed ⇒ drop it" sync); `bySourceSet` (gated by
-    * `bySourceUpdateCond`) is `... THEN UPDATE SET`. When both could
-    * apply to a row the DELETE clause wins (fixed clause order, the
-    * delta-spark first-match rule). CDC rows are exact: by-source deletes
-    * emit `delete`, by-source updates emit pre/post images; row tracking
-    * keeps ids and re-defaults updated rows' commit versions, same as
-    * matched updates. Returns (rowsUpdated incl. by-source updates,
-    * rowsInserted); deletes show in the table itself and the feed. */
+  /** MERGE INTO, copy-on-write, under the clause contract of
+    * [[MergePlan]]: one join pass finds the files holding claimed target
+    * rows and only those rewrite (delete-claimed rows dropped,
+    * update-claimed rows SET-transformed, the rest carried), inserts
+    * append as new files, and one commit carries it all — plus, on a CDF
+    * table, exact change rows: `update_preimage`/`update_postimage` for
+    * matched and by-source updates, `delete`, `insert`. Row tracking keeps
+    * every target row's stable id and re-defaults updated rows' commit
+    * versions. Returns (rows updated incl. by-source updates, rows
+    * inserted); deletes show in the table itself and the feed. */
   def mergeInto(spark: org.apache.spark.sql.SparkSession, path: String,
       source: DataFrame, condSql: String,
-      matchedSet: Map[String, String],
-      insertNotMatched: Boolean = true,
-      matchedDeleteCond: Option[String] = None,
-      insertCond: Option[String] = None,
-      bySourceSet: Map[String, String] = Map.empty,
-      bySourceUpdateCond: Option[String] = None,
-      bySourceDeleteCond: Option[String] = None,
-      matchedUpdateCond: Option[String] = None,
-      matchedUpdateFirst: Boolean = false,
-      bySourceUpdateFirst: Boolean = false,
-      insertProj: Option[Map[String, String]] = None,
-      // the GENERAL matched-clause form: any number of conditional
-      // UPDATE/DELETE clauses in statement order, SQL first-match. When
-      // non-empty it supersedes matchedSet/matchedDeleteCond/
-      // matchedUpdateCond/matchedUpdateFirst (which remain as the common
-      // two-clause convenience surface).
       matchedClauses: Seq[MergeMatchedClause] = Nil,
-      // the general BY SOURCE form (conditions over `t.` only) and the
-      // general NOT MATCHED form — same first-match contract; non-empty
-      // supersedes the corresponding legacy params.
       bySourceClauses: Seq[MergeMatchedClause] = Nil,
       insertClauses: Seq[MergeInsertClause] = Nil): (Long, Long) = {
-    import org.apache.spark.sql.functions.{coalesce, col, expr, input_file_name, lit}
+    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, when}
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(rootPath, "_delta_log")
@@ -2567,39 +2462,6 @@ object DeltaSink {
       if (!mapped) df
       else df.select(df.columns.map(c =>
         col(c).as(physByLogical.getOrElse(c, c))).toSeq: _*)
-    // ordered matched clauses: the explicit list wins; else synthesized
-    // from the legacy two-clause params (delete listed first unless
-    // matchedUpdateFirst)
-    val clauses: Seq[MergeMatchedClause] =
-      if (matchedClauses.nonEmpty) matchedClauses
-      else {
-        val upd = if (matchedSet.nonEmpty)
-          Seq(MergeMatchedClause(matchedUpdateCond, Some(matchedSet))) else Nil
-        val del = matchedDeleteCond.map(c => MergeMatchedClause(Some(c), None)).toSeq
-        if (matchedUpdateFirst) upd ++ del else del ++ upd
-      }
-    val updIdx = clauses.zipWithIndex.filter(_._1.set.isDefined).map(_._2)
-    val delIdx = clauses.zipWithIndex.filter(_._1.set.isEmpty).map(_._2)
-    // ordered insert clauses: explicit list wins; else synthesized from
-    // the legacy insertNotMatched/insertCond/insertProj params
-    val insClauses: Seq[MergeInsertClause] =
-      if (insertClauses.nonEmpty) insertClauses
-      else if (insertNotMatched) Seq(MergeInsertClause(insertCond, insertProj))
-      else Nil
-    (clauses.flatMap(_.set).flatMap(_.keys) ++ insClauses.flatMap(_.proj).flatMap(_.keys))
-      .find(k => !schema.fieldNames.contains(k)).foreach { k =>
-        throw DeltaReadException(s"`$path`: SET column `$k` is not in the table schema")
-      }
-    // only an identity whole-row INSERT needs the source to mirror the
-    // table's columns — a projection builds the inserted row itself, and a
-    // merge with no insert clause needs only the columns its conditions
-    // and SET expressions reference
-    val identityInsert = insClauses.exists(_.proj.isEmpty)
-    if (identityInsert)
-      schema.fieldNames.find(c => !source.schema.fieldNames.contains(c)).foreach { c =>
-        throw DeltaReadException(
-          s"`$path`: MERGE source lacks table column `$c` (insert needs the full row)")
-      }
     val cdf = st.conf.get("delta.enableChangeDataFeed").exists(_.toBoolean)
 
     def resolve(rel: String): String = {
@@ -2658,446 +2520,211 @@ object DeltaSink {
       }
     }
 
-    val srcCols = schema.fieldNames.toSeq
-    // extra source columns (CDC metadata like _change_type) stay visible to
-    // matchedDeleteCond/insertCond; inserts project them away below. With
-    // an insert projection the source frame passes through as-is (its
-    // columns need not mirror the table's).
-    val extraCols = source.schema.fieldNames.toSeq.filterNot(srcCols.contains)
-    val s1 = (if (identityInsert) source.select((srcCols ++ extraCols).map(col): _*)
-      else source)
-      .withColumn("__s_matched", lit(true))
-    val cond = expr(condSql)
-    // SQL MERGE clause-condition rule: NULL is NOT satisfied — coalesce
-    // every user condition to false so three-valued logic can never drop a
-    // pair out of BOTH sides of a split
-    def condCol(c: String) = coalesce(expr(c), lit(false))
+    MergePlan.run(source, condSql, matchedClauses, bySourceClauses, insertClauses,
+        schema.fieldNames.toSeq, m => DeltaReadException(s"`$path`: $m")) { plan =>
+      val (matched, bySource) = (plan.matched, plan.bySource)
+      val srcCols = schema.fieldNames.toSeq
+      // the source side carries a marker, so the rewrite's LEFT join tells
+      // matched target rows from unmatched ones
+      val s1 = plan.sourceRows.withColumn("__s_matched", lit(true))
+      val matchedPairs = plan.matchedPairs(target, s1)
+      val bsRows = plan.bySourceRows(target, s1)
+      val inserts =
+        if (!plan.inserting) null
+        else plan.pin(plan.insertRows(plan.unmatched(target, s1), schema.fields.toSeq))
+      // a target row is (file, row hash)
+      val stats = plan.stats(matchedPairs,
+        org.apache.spark.sql.functions.xxhash64(srcCols.map(c => col(s"t.$c")): _*).as("__rid"),
+        bsRows, Option(inserts), withFiles = true)
+      if (!stats.changed) (0L, 0L)
+      else {
+        val affectedAbs = (stats.files ++ stats.bsFiles).distinct
+        val affectedRel = affectedAbs.map(a => relByAbs.getOrElse(norm(a),
+          throw DeltaReadException(s"`$path`: scanned file $a is not in the live set")))
+        val updatePairs = matchedPairs.filter(matched.updates)
+        val deletePairs = matchedPairs.filter(matched.deletes)
+        val bsDeleteRows = if (!bySource.active) null else bsRows.filter(bySource.deletes)
+        val bsUpdateRows = if (!bySource.active) null else bsRows.filter(bySource.updates)
 
-    // matched pairs with their FIRST-MATCH classification computed once
-    // as a small int (`__mc` = index of the first clause whose gate the
-    // pair satisfies, -1 when none — NULL ⇒ false via condCol, so the
-    // chained `when` IS the SQL clause-order rule). A pair classifying -1
-    // carries unchanged (no rewrite of its file unless a sibling row
-    // needs it, no cdc rows, no row-tracking bump).
-    val gates = clauses.map(c => c.cond.map(condCol).getOrElse(lit(true)))
-    // STATEMENT-LIFETIME CACHES (guide §1.2 "don't compute things you throw
-    // away"): a CDF MERGE consumes the matched-pair join up to FIVE times
-    // (fused stats pass, constraint validation, cdc pre-image, cdc
-    // post-image, delete-cdc) and the insert anti-join four times (count,
-    // validation, data write, cdc insert) — each consumer re-executed the
-    // whole target⋈source join. Persist each join result for the
-    // statement's duration (MEMORY_AND_DISK — bounded by the rows the
-    // merge actually touches, the same working set any engine
-    // materializes), release in the finally.
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      pinned += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df
-    }
-    val matchedPairs = pin(target.alias("t").join(s1.alias("s"), cond, "inner")
-      .withColumn("__mc", MergeClauses.clauseIdx(gates)))
-    try {
-    // the plain unconditional single-UPDATE merge keeps its r14 plan shape
-    // (no extra expression nodes — the measured fixed planning cost)
-    val matchedCondActive = clauses.exists(_.cond.isDefined) || clauses.length > 1
-    // BY SOURCE rows: target rows matching NOTHING in the source —
-    // conditions see only `t.` columns. Ordered clauses with the same
-    // first-match rule as the matched family (explicit list wins; else
-    // synthesized from the legacy two-clause params).
-    val bsClauses: Seq[MergeMatchedClause] =
-      if (bySourceClauses.nonEmpty) bySourceClauses
-      else {
-        val upd = if (bySourceSet.nonEmpty)
-          Seq(MergeMatchedClause(bySourceUpdateCond, Some(bySourceSet))) else Nil
-        val del = bySourceDeleteCond.map(c => MergeMatchedClause(Some(c), None)).toSeq
-        if (bySourceUpdateFirst) upd ++ del else del ++ upd
-      }
-    val bsUpdIdx = bsClauses.zipWithIndex.filter(_._1.set.isDefined).map(_._2)
-    val bsDelIdx = bsClauses.zipWithIndex.filter(_._1.set.isEmpty).map(_._2)
-    val bySourceActive = bsClauses.nonEmpty
-    bsClauses.flatMap(_.set).flatMap(_.keys)
-      .find(k => !schema.fieldNames.contains(k)).foreach { k =>
-        throw DeltaReadException(
-          s"`$path`: BY SOURCE SET column `$k` is not in the table schema")
-      }
-    val bsGates = bsClauses.map(c => c.cond.map(condCol).getOrElse(lit(true)))
-    val bsCondActive = bsClauses.exists(_.cond.isDefined) || bsClauses.length > 1
-    // by-source rows carry their classification (`__bsc`, conditions see
-    // `t.` only)
-    val bsRows = if (!bySourceActive) null
-      else pin(target.alias("t").join(s1.alias("s"), cond, "left_anti")
-        .withColumn("__bsc", MergeClauses.clauseIdx(bsGates)))
-    // inserts: source rows matching NOTHING in the whole table, taken by
-    // the FIRST insert clause whose condition they satisfy (NULL ⇒ not
-    // satisfied; a row satisfying no clause does not insert), projected
-    // per that clause — identity whole-row or VALUES expressions with
-    // NULL-filled omitted columns.
-    val inserts =
-      if (insClauses.isEmpty) null
-      else {
-        val iGates = insClauses.map(c => c.cond.map(condCol).getOrElse(lit(true)))
-        // the claiming insert clause, computed ONCE per row (`__ic`) —
-        // each field then branches on the int, not on re-derived gates
-        val unmatched = s1.alias("s").join(target.alias("t"), cond, "left_anti")
-          .withColumn("__ic", MergeClauses.clauseIdx(iGates))
-        val single = insClauses.length == 1
-        def insVal(f: StructField) = {
-          def valOf(i: Int) = insClauses(i).proj match {
-            // identity keeps the source column as-is in the single-clause
-            // case (the legacy shape); inside a chain it casts so the
-            // branches type-agree
-            case None => if (single) col(f.name) else col(f.name).cast(f.dataType)
-            case Some(p) => p.get(f.name).map(e => expr(e).cast(f.dataType))
-              .getOrElse(lit(null).cast(f.dataType))
+        // rewrites: affected files' rows — delete-claimed rows dropped,
+        // update-claimed rows SET-transformed, the rest carried unchanged
+        val doRewrite = (stats.updated > 0 || stats.deleted > 0 ||
+          stats.bsUpdated > 0 || stats.bsDeleted > 0) && affectedAbs.nonEmpty
+        val matchedFlag = coalesce(col("s.__s_matched"), lit(false))
+        // the rewrite is a DIFFERENT join (left, affected files only), so it
+        // classifies again: `__mc` gated by matchedFlag so an unconditional
+        // clause never claims an unmatched row, `__bsc` its mirror. A flat
+        // family adds neither column and tests matchedFlag alone.
+        val joinedAff =
+          if (!doRewrite) null
+          else {
+            val j0 = target.filter(col("__file").isin(affectedAbs: _*)).alias("t")
+              .join(s1.alias("s"), plan.cond, "left")
+            val j1 = if (!matched.condActive) j0
+              else j0.withColumn("__mc", when(matchedFlag, matched.classify).otherwise(lit(-1)))
+            if (!bySource.condActive) j1
+            else j1.withColumn("__bsc",
+              when(!matchedFlag, bySource.classify).otherwise(lit(-1)))
           }
-          if (single) valOf(0)
-          else insClauses.indices.tail
-            .foldLeft(org.apache.spark.sql.functions
-              .when(col("__ic") === lit(0), valOf(0))) {
-              (acc, i) => acc.when(col("__ic") === lit(i), valOf(i))
-            }
-            .otherwise(lit(null).cast(f.dataType)) // unreachable under the filter
+        def kindHit(fam: MergePlan.Family, idxs: Seq[Int], flat: org.apache.spark.sql.Column) =
+          if (idxs.isEmpty) lit(false)
+          else if (!fam.condActive) flat
+          else MergePlan.hit(col(fam.tag), idxs)
+        val updFlag = kindHit(matched, matched.updIdx, matchedFlag)
+        val delHit = kindHit(matched, matched.delIdx, matchedFlag)
+        val bsUpdFlag = kindHit(bySource, bySource.updIdx, !matchedFlag)
+        val bsDelHit = kindHit(bySource, bySource.delIdx, !matchedFlag)
+        // the BY SOURCE branches join the rewrite expressions ONLY when a
+        // by-source clause is live (the flat-plan discipline of
+        // MergePlan.Family.condActive)
+        val rewritten =
+          if (!doRewrite) null
+          else joinedAff.filter(
+              if (bySource.active) !delHit && !bsDelHit
+              else !delHit)
+            .select(schema.fields.map { f =>
+              val matchedBranch = when(updFlag, matched.setValue(f))
+              (if (bySource.active) matchedBranch.when(bsUpdFlag, bySource.setValue(f))
+               else matchedBranch)
+                .otherwise(col(s"t.${f.name}")).as(f.name)
+            }.toSeq ++ (rtMat match {
+              // carried rows keep id+version; updated rows keep id, re-default
+              // their commit version to THIS commit
+              case None => Nil
+              case Some((matId, matVer)) => Seq(
+                col("t.__rt_id").as(matId),
+                when(if (bySource.active) updFlag || bsUpdFlag else updFlag,
+                  lit(null).cast("long"))
+                  .otherwise(col("t.__rt_ver")).as(matVer))
+            }): _*)
+        def postImages(rows: DataFrame, fam: MergePlan.Family): DataFrame =
+          rows.select(schema.fields.map(f => fam.setValue(f).as(f.name)).toSeq: _*)
+
+        // post-SET images and inserted rows are rows this writer ADDS —
+        // constraint-check them before any file moves
+        if (doRewrite && stats.updated > 0)
+          validateIncomingRows(st, postImages(updatePairs, matched), path)
+        if (doRewrite && stats.bsUpdated > 0)
+          validateIncomingRows(st, postImages(bsUpdateRows, bySource), path)
+        if (stats.inserted > 0) validateIncomingRows(st, inserts, path)
+
+        // ONE data write when possible: rewrite survivors and inserted rows
+        // share the table schema, so they fuse into a single write job +
+        // finalize + commit's worth of files. Row tracking keeps them
+        // SEPARATE: rewritten files carry materialized ids while insert
+        // files take fresh base+position ids at commit — fusing would move
+        // insert rows into id ranges the unfused layout never assigns
+        // (w14/w15/x22 pin ids). Built as THUNKS: the independent writes run
+        // concurrently below.
+        def writeData(df: DataFrame): () => Seq[NewFile] =
+          () => writeDataFiles(toPhys(df), rootPath, partColsT.map(physKey), Map.empty)
+        val dataThunks: Seq[() => Seq[NewFile]] =
+          if (doRewrite && stats.inserted > 0 && rtMat.isEmpty)
+            Seq(writeData(rewritten.unionByName(inserts)))
+          else (if (doRewrite) Seq(writeData(rewritten)) else Nil) ++
+            (if (stats.inserted > 0) Seq(writeData(inserts)) else Nil)
+        // row tracking + CDF: pre/post/delete change rows materialize their
+        // stable ids into the cdc files (postimage version re-defaults to
+        // THIS commit → null here, served from _commit_version by the
+        // reader). Inserted rows' ids are allocated per-file AT COMMIT (base
+        // + position of the new data files) — a cdc insert row has no
+        // position in those files, so its materialized id is honestly null.
+        def matCdc(df: DataFrame, idc: org.apache.spark.sql.Column,
+            verc: org.apache.spark.sql.Column): DataFrame = rtMat match {
+          case None => df
+          case Some((matId, matVer)) =>
+            df.withColumn(matId, idc.cast("long")).withColumn(matVer, verc.cast("long"))
         }
-        pin(unmatched.filter(col("__ic") >= 0)
-          .select(schema.fields.map(f => insVal(f).as(f.name)).toSeq: _*))
-      }
-    // ONE aggregation JOB replaces r16's three (matched-stats agg,
-    // by-source agg, insert count): the per-family one-row aggregate
-    // subtrees union into a single collect, so every statement pin
-    // (matched join, by-source anti-join, insert projection)
-    // materializes inside ONE driver-planned job whose independent
-    // stages run concurrently — guide §1.2 (fewer passes) + §2.6
-    // (overlap independent work). Join shapes are untouched: each
-    // subtree still broadcast-joins the source side exactly as before.
-    // The ambiguity throw still happens before anything is WRITTEN.
-    val statRows: Map[String, org.apache.spark.sql.Row] = {
-      val F = org.apache.spark.sql.functions
-      // per target row identity — (file, row hash) — the match count and
-      // the claiming clause, then a global fold
-      val mStats = matchedPairs
-        .select(col("t.__file").as("__f"),
-          F.xxhash64(srcCols.map(c => col(s"t.$c")): _*).as("__rid"),
-          col("__mc"))
-        .groupBy(col("__f"), col("__rid"))
-        .agg(F.count(lit(1)).as("__n"), F.max(col("__mc")).as("__c"))
-        .agg(F.max(col("__n")).as("__maxn"),
-          F.sum(F.when(MergeClauses.hit(col("__c"), delIdx), 1L).otherwise(0L))
-            .as("__ndel"),
-          F.sum(F.when(MergeClauses.hit(col("__c"), updIdx), 1L).otherwise(0L))
-            .as("__nupd"),
-          F.collect_set(F.when(col("__c") >= 0, col("__f"))).as("__files"))
-        .select(lit("m").as("__kind"), col("__maxn"), col("__ndel"),
-          col("__nupd"), col("__files"))
-      val bsStats =
-        if (!bySourceActive) Nil
-        else Seq(bsRows.agg(
-          F.sum(F.when(MergeClauses.hit(col("__bsc"), bsDelIdx), 1L).otherwise(0L))
-            .as("__ndel"),
-          F.sum(F.when(MergeClauses.hit(col("__bsc"), bsUpdIdx), 1L).otherwise(0L))
-            .as("__nupd"),
-          F.collect_set(F.when(col("__bsc") >= 0, col("__file"))).as("__files"))
-          .select(lit("b").as("__kind"), lit(null).cast("long").as("__maxn"),
-            col("__ndel"), col("__nupd"), col("__files")))
-      val insStats =
-        if (inserts == null) Nil
-        else Seq(inserts.agg(F.count(lit(1)).as("__n"))
-          .select(lit("i").as("__kind"), lit(null).cast("long").as("__maxn"),
-            col("__n").as("__ndel"), lit(null).cast("long").as("__nupd"),
-            lit(null).cast("array<string>").as("__files")))
-      (Seq(mStats) ++ bsStats ++ insStats).reduce(_ unionByName _)
-        .collect().map(r => r.getString(0) -> r).toMap
-    }
-    val mRow = statRows("m")
-    if (!mRow.isNullAt(1) && mRow.getLong(1) > 1) throw DeltaReadException(
-      s"`$path`: MERGE is ambiguous — multiple source rows match one target row")
-    val deletedCount = if (mRow.isNullAt(2)) 0L else mRow.getLong(2)
-    val updatedCount = if (mRow.isNullAt(3)) 0L else mRow.getLong(3)
-    val matchedFilesAbs: Seq[String] = mRow.getSeq[String](4)
-    val (bsDeletedCount, bsUpdatedCount, bySourceFilesAbs) = statRows.get("b")
-      .map(r => (if (r.isNullAt(2)) 0L else r.getLong(2),
-        if (r.isNullAt(3)) 0L else r.getLong(3),
-        Option(r.getSeq[String](4)).getOrElse(Seq.empty[String])))
-      .getOrElse((0L, 0L, Seq.empty[String]))
-    val insertCount = statRows.get("i").map(_.getLong(2)).getOrElse(0L)
-    val bsDeleteRows = if (!bySourceActive) null
-      else bsRows.filter(MergeClauses.hit(col("__bsc"), bsDelIdx))
-    val bsUpdateRows = if (!bySourceActive) null
-      else bsRows.filter(MergeClauses.hit(col("__bsc"), bsUpdIdx))
-
-    val affectedAbs = (matchedFilesAbs ++ bySourceFilesAbs).distinct
-    val affectedRel = affectedAbs.map(a => relByAbs.getOrElse(norm(a),
-      throw DeltaReadException(s"`$path`: scanned file $a is not in the live set")))
-
-    // matched pairs split by the `__mc` classification: delete pairs drop
-    // out of the rewrite; update pairs transform by SET; pairs matching
-    // no clause carry unchanged. (Counts came from the fused stats pass.)
-    val updatePairs = matchedPairs.filter(MergeClauses.hit(col("__mc"), updIdx))
-    val deletePairs = matchedPairs.filter(MergeClauses.hit(col("__mc"), delIdx))
-
-    // rewrites: affected files' rows — delete-matched and by-source-
-    // deleted dropped, SET-matched and by-source-SET transformed,
-    // untouched rows carried unchanged
-    val doRewrite = (updatedCount > 0 || deletedCount > 0 ||
-      bsUpdatedCount > 0 || bsDeletedCount > 0) && affectedAbs.nonEmpty
-    val matchedFlag = coalesce(col("s.__s_matched"), lit(false))
-    // the rewrite join carries its own classification columns (it is a
-    // DIFFERENT join — left, affected files only): `__mc` gated by
-    // matchedFlag so an unconditional clause can never claim an unmatched
-    // row, `__bsc` its mirror. The plain unconditional single-clause
-    // merges keep their flat r14 plans — neither column is added nor
-    // referenced then (same planning-cost discipline as r15's guards).
-    val joinedAff =
-      if (!doRewrite) null
-      else {
-        val j0 = target.filter(col("__file").isin(affectedAbs: _*)).alias("t")
-          .join(s1.alias("s"), cond, "left")
-        val j1 = if (!matchedCondActive) j0
-          else j0.withColumn("__mc", org.apache.spark.sql.functions
-            .when(matchedFlag, MergeClauses.clauseIdx(gates)).otherwise(lit(-1)))
-        if (!bsCondActive) j1
-        else j1.withColumn("__bsc", org.apache.spark.sql.functions
-          .when(!matchedFlag, MergeClauses.clauseIdx(bsGates)).otherwise(lit(-1)))
-      }
-    // the SET-transformed value of a field for an UPDATE-claimed pair:
-    // one branch per update clause on the PRE-COMPUTED `__mc` int (the
-    // classification is never re-derived per field); the plain
-    // single-unconditional-UPDATE merge keeps its flat r14 expression
-    def newVal(f: StructField) = {
-      def valOf(i: Int) = clauses(i).set.get.get(f.name)
-        .map(e => expr(e).cast(f.dataType)).getOrElse(col(s"t.${f.name}"))
-      if (updIdx.isEmpty) col(s"t.${f.name}")
-      else if (!matchedCondActive) valOf(updIdx.head)
-      else updIdx.tail
-        .foldLeft(org.apache.spark.sql.functions
-          .when(col("__mc") === lit(updIdx.head), valOf(updIdx.head))) {
-          (acc, i) => acc.when(col("__mc") === lit(i), valOf(i))
-        }
-        .otherwise(col(s"t.${f.name}"))
-    }
-    // the by-source SET value per field: branches on `__bsc`
-    def bsVal(f: StructField) = {
-      def valOf(i: Int) = bsClauses(i).set.get.get(f.name)
-        .map(e => expr(e).cast(f.dataType)).getOrElse(col(s"t.${f.name}"))
-      if (bsUpdIdx.isEmpty) col(s"t.${f.name}")
-      else if (!bsCondActive) valOf(bsUpdIdx.head)
-      else bsUpdIdx.tail
-        .foldLeft(org.apache.spark.sql.functions
-          .when(col("__bsc") === lit(bsUpdIdx.head), valOf(bsUpdIdx.head))) {
-          (acc, i) => acc.when(col("__bsc") === lit(i), valOf(i))
-        }
-        .otherwise(col(s"t.${f.name}"))
-    }
-    // clause-kind hit tests in the rewrite frame: flat (matchedFlag-only)
-    // on the unconditional single-clause paths, `__mc`/`__bsc` membership
-    // otherwise (the matchedFlag gate is already folded into the column)
-    val updFlag =
-      if (updIdx.isEmpty) lit(false)
-      else if (!matchedCondActive) matchedFlag
-      else MergeClauses.hit(col("__mc"), updIdx)
-    val delHit =
-      if (delIdx.isEmpty) lit(false)
-      else if (!matchedCondActive) matchedFlag
-      else MergeClauses.hit(col("__mc"), delIdx)
-    val bsUpdFlag =
-      if (bsUpdIdx.isEmpty) lit(false)
-      else if (!bsCondActive) !matchedFlag
-      else MergeClauses.hit(col("__bsc"), bsUpdIdx)
-    val bsDelHit =
-      if (bsDelIdx.isEmpty) lit(false)
-      else if (!bsCondActive) !matchedFlag
-      else MergeClauses.hit(col("__bsc"), bsDelIdx)
-    // the BY SOURCE branches are grafted into the rewrite expressions ONLY
-    // when a by-source clause is live: the literal-false conditions would
-    // constant-fold anyway, but the extra nodes still pay analysis/planning
-    // time on every plain-MERGE invocation (measured ~+0.1 s fixed per
-    // call in the r14 A/B — see BASELINE.md)
-    val rewritten =
-      if (!doRewrite) null
-      else joinedAff.filter(
-          if (bySourceActive) !delHit && !bsDelHit
-          else !delHit)
-        .select(schema.fields.map { f =>
-          val matchedBranch = org.apache.spark.sql.functions
-            .when(updFlag, newVal(f))
-          (if (bySourceActive) matchedBranch.when(bsUpdFlag, bsVal(f))
-           else matchedBranch)
-            .otherwise(col(s"t.${f.name}")).as(f.name)
-        }.toSeq ++ (rtMat match {
-          // carried rows keep id+version; updated rows keep id, re-default
-          // their commit version to THIS commit
-          case None => Nil
-          case Some((matId, matVer)) => Seq(
-            col("t.__rt_id").as(matId),
-            org.apache.spark.sql.functions
-              .when(if (bySourceActive) updFlag || bsUpdFlag else updFlag,
-                lit(null).cast("long"))
-              .otherwise(col("t.__rt_ver")).as(matVer))
-        }): _*)
-    val updatedRows =
-      if (!doRewrite) null
-      else updatePairs.select(schema.fields.map(f => newVal(f).as(f.name)).toSeq: _*)
-    val preRows =
-      if (!doRewrite) null
-      else updatePairs.select(schema.fieldNames.map(c => col(s"t.$c").as(c)).toSeq: _*)
-
-    if (updatedCount == 0L && insertCount == 0L && deletedCount == 0L &&
-      bsUpdatedCount == 0L && bsDeletedCount == 0L)
-      return (0L, 0L)
-    // post-SET images and inserted rows are rows this writer ADDS —
-    // constraint-check them before any file moves
-    if (doRewrite && updatedCount > 0) validateIncomingRows(st, updatedRows, path)
-    if (doRewrite && bsUpdatedCount > 0) validateIncomingRows(st,
-      bsUpdateRows.select(schema.fields.map(f => bsVal(f).as(f.name)).toSeq: _*), path)
-    if (insertCount > 0) validateIncomingRows(st, inserts, path)
-
-    // ONE data write when possible: rewrite survivors and inserted rows
-    // share the table schema, so they fuse into a single write job +
-    // finalize + commit's worth of files (a CDF CDC-apply merge ran TWO
-    // full write jobs here). Row tracking keeps them SEPARATE: rewritten
-    // files carry materialized ids while insert files take fresh
-    // base+position ids at commit — fusing would move insert rows into
-    // id ranges the unfused layout never assigns (w14/w15/x22 pin ids).
-    // Built as THUNKS: the independent writes run concurrently below.
-    val dataThunks: Seq[() => Seq[NewFile]] =
-      if (doRewrite && insertCount > 0 && rtMat.isEmpty)
-        Seq(() => writeDataFiles(toPhys(rewritten.unionByName(inserts)), rootPath,
-          partColsT.map(physKey), Map.empty))
-      else
-        (if (doRewrite)
-          Seq(() => writeDataFiles(toPhys(rewritten), rootPath,
-            partColsT.map(physKey), Map.empty))
-        else Nil) ++
-          (if (insertCount > 0)
-            Seq(() => writeDataFiles(toPhys(inserts), rootPath,
-              partColsT.map(physKey), Map.empty))
-          else Nil)
-    // row tracking + CDF: pre/post/delete change rows materialize their
-    // stable ids into the cdc files (postimage version re-defaults to THIS
-    // commit → null here, served from _commit_version by the reader).
-    // Inserted rows' ids are allocated per-file AT COMMIT (base + position
-    // of the new data files) — a cdc insert row has no position in those
-    // files, so its materialized id is honestly null.
-    def matCdc(df: DataFrame, idc: org.apache.spark.sql.Column,
-        verc: org.apache.spark.sql.Column): DataFrame = rtMat match {
-      case None => df
-      case Some((matId, matVer)) =>
-        df.withColumn(matId, idc.cast("long")).withColumn(matVer, verc.cast("long"))
-    }
-    val cdcFrames = Seq(
-      if (cdf && doRewrite && updatedCount > 0)
-        Some(matCdc(
-          updatePairs.select(schema.fieldNames.map(c => col(s"t.$c").as(c)).toSeq ++
+        // the target rows as they were, tagged `kind` (the id/version
+        // columns stay for the caller to drop)
+        def preImage(rows: DataFrame, kind: String): DataFrame = matCdc(
+          rows.select(schema.fieldNames.map(c => col(s"t.$c").as(c)).toSeq ++
             (if (rtOn) Seq(col("t.__rt_id").as("__c_id"), col("t.__rt_ver").as("__c_ver"))
              else Nil): _*)
-            .withColumn("_change_type", lit("update_preimage")),
+            .withColumn("_change_type", lit(kind)),
           col("__c_id"), col("__c_ver"))
-          .unionByName(matCdc(
-            updatePairs.select(schema.fields.map(f => newVal(f).as(f.name)).toSeq ++
-              (if (rtOn) Seq(col("t.__rt_id").as("__c_id"),
-                lit(null).cast("long").as("__c_ver")) else Nil): _*)
-              .withColumn("_change_type", lit("update_postimage")),
-            col("__c_id"), lit(null)))
-          .drop("__c_id", "__c_ver"))
-      else None,
-      if (cdf && deletedCount > 0)
-        Some(matCdc(
-          deletePairs
-            .select(schema.fieldNames.map(c => col(s"t.$c").as(c)).toSeq ++
-              (if (rtOn) Seq(col("t.__rt_id").as("__c_id"), col("t.__rt_ver").as("__c_ver"))
-               else Nil): _*)
-            .withColumn("_change_type", lit("delete")),
-          col("__c_id"), col("__c_ver")).drop("__c_id", "__c_ver"))
-      else None,
-      if (cdf && insertCount > 0)
-        Some(matCdc(inserts.withColumn("_change_type", lit("insert")),
-          lit(null), lit(null)))
-      else None,
-      // BY SOURCE updates: pre/post images with the target row's stable id
-      // (postimage version re-defaults to THIS commit → null, served from
-      // _commit_version by the reader) — same arrangement as matched pairs
-      if (cdf && bsUpdatedCount > 0)
-        Some(matCdc(
-          bsUpdateRows.select(schema.fieldNames.map(c => col(s"t.$c").as(c)).toSeq ++
-            (if (rtOn) Seq(col("t.__rt_id").as("__c_id"), col("t.__rt_ver").as("__c_ver"))
-             else Nil): _*)
-            .withColumn("_change_type", lit("update_preimage")),
-          col("__c_id"), col("__c_ver"))
-          .unionByName(matCdc(
-            bsUpdateRows.select(schema.fields.map(f => bsVal(f).as(f.name)).toSeq ++
-              (if (rtOn) Seq(col("t.__rt_id").as("__c_id"),
-                lit(null).cast("long").as("__c_ver")) else Nil): _*)
-              .withColumn("_change_type", lit("update_postimage")),
-            col("__c_id"), lit(null)))
-          .drop("__c_id", "__c_ver"))
-      else None,
-      if (cdf && bsDeletedCount > 0)
-        Some(matCdc(
-          bsDeleteRows
-            .select(schema.fieldNames.map(c => col(s"t.$c").as(c)).toSeq ++
-              (if (rtOn) Seq(col("t.__rt_id").as("__c_id"), col("t.__rt_ver").as("__c_ver"))
-               else Nil): _*)
-            .withColumn("_change_type", lit("delete")),
-          col("__c_id"), col("__c_ver")).drop("__c_id", "__c_ver"))
-      else None).flatten
-    // all change-row frames share one schema (table columns + _change_type
-    // [+ materialized id/version]) — union them into ONE cdc write instead
-    // of one write job per change kind (values are branch-computed, so the
-    // union changes file layout only, never a row)
-    val cdcThunk: Seq[() => Seq[NewFile]] =
-      if (cdcFrames.isEmpty) Nil
-      else Seq(() => writeDataFiles(toPhys(cdcFrames.reduce(_ unionByName _)), rootPath,
-        partColsT.map(physKey), Map.empty, subDir = Some("_change_data")))
-    // CONCURRENT independent write jobs (guide §2.6 "overlap independent
-    // jobs"): the data write(s) and the cdc write consume only pinned
-    // statement frames and land in disjoint destinations, so driver
-    // planning, the jobs and the per-file finalize all overlap instead of
-    // running back to back. The micros-timestamp session pin is HELD
-    // ACROSS the phase: each write's nested pin then sets/restores the
-    // same value, so the concurrent set/reset can never race a writer
-    // onto INT96. ParallelFiles opens a fresh pool per call (threads
-    // inherit this statement's job group), and results return in input
-    // order — commit lines and row-id allocation see exactly the layout
-    // the serial loop produced.
-    val written = IcebergSink.withMicrosTimestamps(spark) {
-      ParallelFiles.mapOrdered(dataThunks ++ cdcThunk)(t => t())
-    }
-    val newFiles = written.take(dataThunks.length).flatten
-    val cdcFiles = written.drop(dataThunks.length).flatten
+        // update pre + post images for one family's update-claimed rows
+        def updateImages(rows: DataFrame, fam: MergePlan.Family): DataFrame =
+          preImage(rows, "update_preimage")
+            .unionByName(matCdc(
+              rows.select(schema.fields.map(f => fam.setValue(f).as(f.name)).toSeq ++
+                (if (rtOn) Seq(col("t.__rt_id").as("__c_id"),
+                  lit(null).cast("long").as("__c_ver")) else Nil): _*)
+                .withColumn("_change_type", lit("update_postimage")),
+              col("__c_id"), lit(null)))
+            .drop("__c_id", "__c_ver")
+        val cdcFrames = if (!cdf) Nil else Seq(
+          if (doRewrite && stats.updated > 0) Some(updateImages(updatePairs, matched))
+          else None,
+          if (stats.deleted > 0)
+            Some(preImage(deletePairs, "delete").drop("__c_id", "__c_ver"))
+          else None,
+          if (stats.inserted > 0)
+            Some(matCdc(inserts.withColumn("_change_type", lit("insert")),
+              lit(null), lit(null)))
+          else None,
+          if (stats.bsUpdated > 0) Some(updateImages(bsUpdateRows, bySource)) else None,
+          if (stats.bsDeleted > 0)
+            Some(preImage(bsDeleteRows, "delete").drop("__c_id", "__c_ver"))
+          else None).flatten
+        // all change-row frames share one schema (table columns +
+        // _change_type [+ materialized id/version]) — union them into ONE
+        // cdc write instead of one write job per change kind
+        val cdcThunk: Seq[() => Seq[NewFile]] =
+          if (cdcFrames.isEmpty) Nil
+          else Seq(() => writeDataFiles(toPhys(cdcFrames.reduce(_ unionByName _)), rootPath,
+            partColsT.map(physKey), Map.empty, subDir = Some("_change_data")))
+        // CONCURRENT independent write jobs (guide §2.6 "overlap independent
+        // jobs"): the data write(s) and the cdc write consume only pinned
+        // statement frames and land in disjoint destinations. The
+        // micros-timestamp session pin is HELD ACROSS the phase: each
+        // write's nested pin then sets/restores the same value, so the
+        // concurrent set/reset can never race a writer onto INT96.
+        // ParallelFiles opens a fresh pool per call (threads inherit this
+        // statement's job group), and results return in input order —
+        // commit lines and row-id allocation see exactly the layout the
+        // serial loop produced.
+        val written = IcebergSink.withMicrosTimestamps(spark) {
+          ParallelFiles.mapOrdered(dataThunks ++ cdcThunk)(t => t())
+        }
+        val newFiles = written.take(dataThunks.length).flatten
+        val cdcFiles = written.drop(dataThunks.length).flatten
 
-    def esc(s: String): String = mapper.writeValueAsString(s)
-    val lines = Seq.newBuilder[String]
-    lines += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"MERGE","operationParameters":{"predicate":${esc(condSql)}}}}"""
-    cdcFiles.foreach { f =>
-      val pvNode = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
+        def esc(s: String): String = mapper.writeValueAsString(s)
+        val lines = Seq.newBuilder[String]
+        lines += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"MERGE","operationParameters":{"predicate":${esc(condSql)}}}}"""
+        cdcFiles.foreach { f =>
+          val pvNode = mapper.createObjectNode()
+          f.partitionValues.foreach { case (k, v) =>
+            if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
+          }
+          lines += s"""{"cdc":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},"size":${f.size},"dataChange":false}}"""
+        }
+        val version = st.version + 1
+        val alloc = new RowIdAllocator(st, version)
+        if (doRewrite) affectedRel.foreach { rel =>
+          lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true${rtEchoFields(st.live(rel))}}}"""
+        }
+        newFiles.foreach { f =>
+          val pvNode = mapper.createObjectNode()
+          f.partitionValues.foreach { case (k, v) =>
+            if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
+          }
+          val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
+          lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},""" +
+            s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":true$rt,""" +
+            s""""stats":${esc(f.stats)}}}"""
+        }
+        alloc.domainLine.foreach(lines += _)
+        val target2 = new Path(logDir, f"$version%020d.json")
+        if (fs.exists(target2)) throw DeltaReadException(
+          s"`$path`: commit $version already exists — another writer got there first")
+        val out = fs.create(target2, false)
+        try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
+        finally out.close()
+        (stats.updated + stats.bsUpdated, stats.inserted)
       }
-      lines += s"""{"cdc":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},"size":${f.size},"dataChange":false}}"""
     }
-    val version = st.version + 1
-    val alloc = new RowIdAllocator(st, version)
-    if (doRewrite) affectedRel.foreach { rel =>
-      lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true${rtEchoFields(st.live(rel))}}}"""
-    }
-    newFiles.foreach { f =>
-      val pvNode = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
-      }
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},""" +
-        s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":true$rt,""" +
-        s""""stats":${esc(f.stats)}}}"""
-    }
-    alloc.domainLine.foreach(lines += _)
-    val target2 = new Path(logDir, f"$version%020d.json")
-    if (fs.exists(target2)) throw DeltaReadException(
-      s"`$path`: commit $version already exists — another writer got there first")
-    val out = fs.create(target2, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    (updatedCount + bsUpdatedCount, insertCount)
-    } finally pinned.foreach(_.unpersist(blocking = false))
   }
 
   /** OPTIMIZE — bin-pack small files (the lakehouse maintenance pass that

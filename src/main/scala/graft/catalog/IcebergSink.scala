@@ -2142,17 +2142,9 @@ object IcebergSink {
       // pinned matches — run them CONCURRENTLY (guide §2.6); the commit
       // still sees both results in the serial order. Zero matches ⇒ both
       // produce nothing ⇒ no commit, exactly as before.
-      val (dvEntries, dataFiles) = {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try withMicrosTimestamps(spark) {
-          val fDv = Future { writePuffinDvs(spark, st, mergedPos) }
-          val fData = Future { writeMorData(updatedRows, st, s"updv-$stamp") }
-          (Await.result(fDv, Duration.Inf), Await.result(fData, Duration.Inf))
-        } finally pool.shutdown()
+      val (dvEntries, dataFiles) = withMicrosTimestamps(spark) {
+        ParallelFiles.both(writePuffinDvs(spark, st, mergedPos),
+          writeMorData(updatedRows, st, s"updv-$stamp"))
       }
       if (dvEntries.isEmpty) return 0L
       commitMor(st, "overwrite", Seq("graft-predicate" -> predicateSql,
@@ -2260,342 +2252,91 @@ object IcebergSink {
     updated
   }
 
-  /** MERGE — merge-on-read: matched target rows' positions become a
-    * positional delete file; their SET-transformed images plus unmatched
-    * source rows append as new data files — ONE snapshot, no data
-    * rewrites. `condSql` sees aliases `t` (target, incl. `__file`/`__pos`)
-    * and `s` (source); matched-SET expressions may reference both. A
-    * target row matching more than one source row rejects loudly (the
-    * SQL MERGE cardinality rule). Returns (rowsUpdated, rowsInserted). */
+  /** MERGE — merge-on-read, under the clause contract of [[MergePlan]]:
+    * claimed target rows' positions become positional delete files; their
+    * SET-transformed images plus the inserted rows append as new data
+    * files — ONE snapshot, no data rewrites. `condSql` sees the target's
+    * `__file`/`__pos` too. Row lineage keeps updated rows' ids. Returns
+    * (rows updated incl. by-source updates, rows inserted). */
   def mergeInto(spark: org.apache.spark.sql.SparkSession, path: String,
       source: DataFrame, condSql: String,
-      matchedSet: Map[String, String],
-      insertNotMatched: Boolean = true,
-      // conditional clauses (the CDC-apply shape, same contract as the
-      // Delta sibling): matchedDeleteCond = WHEN MATCHED AND <cond> THEN
-      // DELETE (pairs satisfying it positional-delete INSTEAD of
-      // updating); matchedUpdateCond gates the UPDATE clause (pairs
-      // failing it carry untouched); insertCond gates WHEN NOT MATCHED
-      // over the source row (extra source columns like _change_type stay
-      // visible to all three). SQL NULL rule everywhere: a condition
-      // evaluating NULL is NOT satisfied — the pair falls through, never
-      // silently dropped. matchedUpdateFirst/bySourceUpdateFirst select
-      // SQL first-match order when a row satisfies both clauses of a
-      // family (false = DELETE listed first, the default).
-      matchedDeleteCond: Option[String] = None,
-      insertCond: Option[String] = None,
-      // WHEN NOT MATCHED BY SOURCE (the full-sync shape; conditions over
-      // `t.` only — same contract as the Delta sibling): merge-on-read
-      // flavor — affected target rows positional-delete, by-source
-      // updates re-append their new images
-      bySourceSet: Map[String, String] = Map.empty,
-      bySourceUpdateCond: Option[String] = None,
-      bySourceDeleteCond: Option[String] = None,
-      matchedUpdateCond: Option[String] = None,
-      matchedUpdateFirst: Boolean = false,
-      bySourceUpdateFirst: Boolean = false,
-      // non-identity INSERT (cols) VALUES (exprs): table column →
-      // expression over the source row; omitted columns NULL-fill. With a
-      // projection the source need not mirror the table's columns.
-      insertProj: Option[Map[String, String]] = None,
-      // the GENERAL matched-clause form (same contract as the Delta
-      // sibling): any number of conditional UPDATE/DELETE clauses in
-      // statement order, SQL first-match; non-empty supersedes the legacy
-      // two-clause params. bySourceClauses/insertClauses are the other
-      // two families' general forms.
       matchedClauses: Seq[MergeMatchedClause] = Nil,
       bySourceClauses: Seq[MergeMatchedClause] = Nil,
       insertClauses: Seq[MergeInsertClause] = Nil): (Long, Long) = {
-    import org.apache.spark.sql.functions.{col, expr, lit}
+    import org.apache.spark.sql.functions.{col, lit}
     val st = loadMorState(spark, path)
     rejectOnDvs(path, st, "MERGE")
     val names = schemaFieldIds(st.meta).map(_._1)
-    // ordered matched clauses: explicit list wins; else synthesized from
-    // the legacy two-clause params (the Delta sibling's arrangement)
-    val clauses: Seq[MergeMatchedClause] =
-      if (matchedClauses.nonEmpty) matchedClauses
-      else {
-        val upd = if (matchedSet.nonEmpty)
-          Seq(MergeMatchedClause(matchedUpdateCond, Some(matchedSet))) else Nil
-        val del = matchedDeleteCond.map(c => MergeMatchedClause(Some(c), None)).toSeq
-        if (matchedUpdateFirst) upd ++ del else del ++ upd
-      }
-    val updIdx = clauses.zipWithIndex.filter(_._1.set.isDefined).map(_._2)
-    val delIdx = clauses.zipWithIndex.filter(_._1.set.isEmpty).map(_._2)
-    // ordered insert + by-source clauses (explicit lists win; else
-    // synthesized from the legacy params — the Delta sibling's contract)
-    val insClauses: Seq[MergeInsertClause] =
-      if (insertClauses.nonEmpty) insertClauses
-      else if (insertNotMatched) Seq(MergeInsertClause(insertCond, insertProj))
-      else Nil
-    val bsClauses: Seq[MergeMatchedClause] =
-      if (bySourceClauses.nonEmpty) bySourceClauses
-      else {
-        val upd = if (bySourceSet.nonEmpty)
-          Seq(MergeMatchedClause(bySourceUpdateCond, Some(bySourceSet))) else Nil
-        val del = bySourceDeleteCond.map(c => MergeMatchedClause(Some(c), None)).toSeq
-        if (bySourceUpdateFirst) upd ++ del else del ++ upd
-      }
-    val bsUpdIdx = bsClauses.zipWithIndex.filter(_._1.set.isDefined).map(_._2)
-    val bsDelIdx = bsClauses.zipWithIndex.filter(_._1.set.isEmpty).map(_._2)
-    (clauses.flatMap(_.set).flatMap(_.keys) ++ bsClauses.flatMap(_.set).flatMap(_.keys) ++
-      insClauses.flatMap(_.proj).flatMap(_.keys))
-      .find(k => !names.contains(k)).foreach { k =>
-        throw IcebergReadException(
-          s"`$path`: SET column `$k` is not in the table schema")
-      }
-    // only an identity whole-row INSERT needs the source to mirror the
-    // table's columns — a projection builds the inserted row itself, and a
-    // merge with no insert clause needs only the columns its conditions
-    // and SET expressions reference
-    val identityInsert = insClauses.exists(_.proj.isEmpty)
-    if (identityInsert)
-      names.find(c => !source.schema.fieldNames.contains(c)).foreach { c =>
-        throw IcebergReadException(
-          s"`$path`: MERGE source lacks table column `$c` (insert needs the full row)")
-      }
-    // SQL MERGE clause-condition rule: NULL is NOT satisfied — coalesce
-    // every user condition to false so three-valued logic can never drop
-    // a pair out of BOTH sides of a split
-    def condCol(c: String) = org.apache.spark.sql.functions.coalesce(expr(c), lit(false))
-    // insert selection + projection over the unmatched source rows: each
-    // row is taken by the FIRST clause whose condition it satisfies and
-    // projected per that clause (identity whole-row, or VALUES
-    // expressions with NULL-filled omissions typed from `fields`); rows
-    // satisfying no clause do not insert
-    def insertFrame(unmatched0: DataFrame, fields: Seq[StructField]): DataFrame = {
-      val iGates = insClauses.map(c => c.cond.map(condCol).getOrElse(lit(true)))
-      // the claiming insert clause as ONE small int (`__ic`, chained when
-      // = first-match); each field branches on it instead of re-deriving
-      // prefix-negated gates per field
-      val unmatched = unmatched0.withColumn("__ic", MergeClauses.clauseIdx(iGates))
-      val single = insClauses.length == 1
-      def insVal(f: StructField) = {
-        def valOf(i: Int) = insClauses(i).proj match {
-          case None => col(f.name).cast(f.dataType)
-          case Some(p) => p.get(f.name).map(e => expr(e).cast(f.dataType))
-            .getOrElse(lit(null).cast(f.dataType))
-        }
-        if (single) valOf(0)
-        else insClauses.indices.tail
-          .foldLeft(org.apache.spark.sql.functions
-            .when(col("__ic") === lit(0), valOf(0))) {
-            (acc, i) => acc.when(col("__ic") === lit(i), valOf(i))
-          }
-          .otherwise(lit(null).cast(f.dataType)) // unreachable under the filter
-      }
-      unmatched.filter(col("__ic") >= 0)
-        .select(fields.map(f => insVal(f).as(f.name)): _*)
-    }
-    val stamp = java.util.UUID.randomUUID().toString.take(8)
-    if (st.dataPaths.isEmpty) {
-      // empty table: nothing matches, every insert-eligible source row inserts
-      if (insClauses.isEmpty) return (0L, 0L)
-      val src0 = source.alias("s")
-      // no data files to scan types from — the iceberg schema supplies them
-      val emptyFields = {
+    MergePlan.run(source, condSql, matchedClauses, bySourceClauses, insertClauses,
+        names, m => IcebergReadException(s"`$path`: $m")) { plan =>
+      val stamp = java.util.UUID.randomUUID().toString.take(8)
+      if (st.dataPaths.isEmpty) {
+        // empty table: nothing matches, every insert-eligible source row
+        // inserts; no data files to scan types from — the iceberg schema
+        // supplies them
         val schNode = if (st.meta.has("schemas")) {
           val cur = st.meta.path("current-schema-id").asInt(0)
           st.meta.path("schemas").elements().asScala
             .find(_.path("schema-id").asInt(-1) == cur).getOrElse(
               throw IcebergReadException("current schema not listed in metadata"))
         } else st.meta.path("schema")
-        graft.sources.IcebergNative.toStruct(schNode).fields.toSeq
+        val dataFiles = if (!plan.inserting) Nil
+          else writeMorData(plan.insertRows(source.alias("s"),
+            graft.sources.IcebergNative.toStruct(schNode).fields.toSeq), st, s"mrg-$stamp")
+        val inserted = dataFiles.map(_.rows).sum
+        if (inserted > 0L)
+          commitMor(st, "overwrite", Seq("graft-merge-on" -> condSql), Nil, dataFiles)
+        (0L, inserted)
+      } else {
+        val (matched, bySource) = (plan.matched, plan.bySource)
+        val live0 = liveRows(spark, st, withLineage = st.hasLineage)
+        val scanFields = live0.schema.fields
+          .filterNot(f => Set("__file", "__pos", "__rlid", "__rlseq")(f.name)).toSeq
+        val s1 = plan.sourceRows
+        val matchedPairs = plan.matchedPairs(live0, s1)
+        val bsRows = plan.bySourceRows(live0, s1)
+        // a target row is (file, position); inserts count from their files
+        val stats = plan.stats(matchedPairs, col("t.__pos").as("__p"), bsRows,
+          inserts = None, withFiles = false)
+        def positions(rows: DataFrame, prefix: String) = writeMoved(rows.select(
+          col("t.__file").as("file_path"), col("t.__pos").as("pos")), st, s"$prefix-$stamp")
+        // row lineage: updated rows keep their ids; sequence re-defaults
+        def images(rows: DataFrame, fam: MergePlan.Family, prefix: String) =
+          writeMorData(rows.filter(fam.updates).select(
+            scanFields.map(f => fam.setValue(f).as(f.name)) ++
+              (if (st.hasLineage)
+                Seq(col("t.__rlid").as(RowIdColName), lit(null).cast("long").as(LastSeqColName))
+              else Nil): _*), st, s"$prefix-$stamp")
+        type Written = (Seq[(String, Long, Long)], Seq[MorDataFile])
+        // CONCURRENT independent writes (guide §2.6 "overlap independent
+        // jobs"): matched tombstones (ONE write covers delete- and
+        // update-claimed rows, `__mc` >= 0), update images, by-source
+        // tombstones, by-source images and inserts read only the
+        // statement's frames and write under DISTINCT prefixes. A zero-row
+        // write is SKIPPED instead of running a join-scale job to write
+        // nothing. The micros-timestamp session pin is HELD ACROSS the
+        // phase, making each write's nested set/restore a same-value no-op
+        // — no INT96 race. Results return in input order, so the commit
+        // sees the serial loop's per-list file order.
+        val written: Seq[Written] = withMicrosTimestamps(spark) {
+          ParallelFiles.mapOrdered(Seq[() => Written](
+            () => (if (stats.deleted + stats.updated == 0L) Nil
+              else positions(matchedPairs.filter(col("__mc") >= 0), "mdd"), Nil),
+            () => (Nil, if (stats.updated > 0) images(matchedPairs, matched, "mrgu") else Nil),
+            () => (if (stats.bsDeleted + stats.bsUpdated == 0L) Nil
+              else positions(bsRows.filter(col("__bsc") >= 0), "bsd"), Nil),
+            () => (Nil, if (stats.bsUpdated > 0) images(bsRows, bySource, "bsui") else Nil),
+            () => (Nil, if (!plan.inserting) Nil
+              else writeMorData(plan.insertRows(plan.unmatched(live0, s1), scanFields),
+                st, s"mrgi-$stamp"))))(_())
+        }
+        val inserted = written.last._2.map(_.rows).sum
+        if (stats.changed || inserted > 0)
+          commitMor(st, "overwrite", Seq("graft-merge-on" -> condSql),
+            written.flatMap(_._1), written.flatMap(_._2))
+        (stats.updated + stats.bsUpdated, inserted)
       }
-      val dataFiles = writeMorData(insertFrame(src0, emptyFields), st, s"mrg-$stamp")
-      val inserted = dataFiles.map(_.rows).sum
-      if (inserted == 0L) return (0L, 0L)
-      commitMor(st, "overwrite", Seq("graft-merge-on" -> condSql), Nil, dataFiles)
-      return (0L, inserted)
     }
-    val live0 = liveRows(spark, st, withLineage = st.hasLineage)
-    val scanFields = live0.schema.fields
-      .filterNot(f => Set("__file", "__pos", "__rlid", "__rlseq")(f.name)).toSeq
-    val target = live0.alias("t")
-    // extra source columns (CDC metadata like _change_type) stay visible
-    // to matchedDeleteCond/insertCond; every write projects scanFields.
-    // With an insert projection the source passes through as-is (its
-    // columns need not mirror the table's).
-    val srcExtra = source.schema.fieldNames.toSeq.filterNot(names.contains)
-    val s1 = (if (identityInsert) source.select((names ++ srcExtra).map(col): _*)
-      else source).alias("s")
-    val cond = expr(condSql)
-    // matched pairs with their FIRST-MATCH classification computed once
-    // as a small int (`__mc`, chained when = SQL clause order; NULL ⇒
-    // false via condCol). Delete-claimed pairs positional-delete with NO
-    // re-append; update-claimed pairs transform by their claiming
-    // clause's SET; pairs claiming no clause (-1) carry untouched (no
-    // tombstone, no re-append).
-    val gates = clauses.map(c => c.cond.map(condCol).getOrElse(lit(true)))
-    // STATEMENT-LIFETIME CACHES (same arrangement as the Delta sibling):
-    // the matched join feeds the stats pass, the fused tombstone write and
-    // the update-image write; the by-source anti-join feeds its stats pass,
-    // tombstone write and update write. Persist each for the statement's
-    // duration (MEMORY_AND_DISK, bounded by the rows the merge touches),
-    // release in the finally.
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = {
-      pinned += df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      df
-    }
-    val matchedPairs = pin(target.join(s1, cond, "inner")
-      .withColumn("__mc", MergeClauses.clauseIdx(gates)))
-    try {
-    val matchedCondActive = clauses.exists(_.cond.isDefined) || clauses.length > 1
-    // BY SOURCE clause setup hoisted ABOVE the stats pass so one job can
-    // serve both families (conditions see `t.` only; ordered clauses,
-    // first-match — the Delta sibling's contract).
-    val bySourceActive = bsClauses.nonEmpty
-    val bsGates = bsClauses.map(c => c.cond.map(condCol).getOrElse(lit(true)))
-    val bsCondActive = bsClauses.exists(_.cond.isDefined) || bsClauses.length > 1
-    // by-source rows carry their classification (`__bsc`)
-    val bsRows = if (!bySourceActive) null
-      else pin(target.join(s1, cond, "left_anti")
-        .withColumn("__bsc", MergeClauses.clauseIdx(bsGates)))
-    // ONE aggregation JOB serves BOTH families (r16 ran the matched-stats
-    // agg and the by-source agg as two jobs): the two one-row aggregate
-    // subtrees union into a single collect, materializing both statement
-    // pins in one driver-planned job whose independent stages run
-    // concurrently — guide §1.2 + §2.6. Join shapes untouched.
-    val statRows: Map[String, org.apache.spark.sql.Row] = {
-      val F = org.apache.spark.sql.functions
-      val mStats = matchedPairs
-        .select(col("t.__file").as("__f"), col("t.__pos").as("__p"), col("__mc"))
-        .groupBy(col("__f"), col("__p"))
-        .agg(F.count(lit(1)).as("__n"), F.max(col("__mc")).as("__c"))
-        .agg(F.max(col("__n")).as("__maxn"),
-          F.sum(F.when(MergeClauses.hit(col("__c"), delIdx), 1L).otherwise(0L))
-            .as("__ndel"),
-          F.sum(F.when(MergeClauses.hit(col("__c"), updIdx), 1L).otherwise(0L))
-            .as("__nupd"))
-        .select(lit("m").as("__kind"), col("__maxn"), col("__ndel"), col("__nupd"))
-      val bsStats =
-        if (!bySourceActive) Nil
-        else Seq(bsRows.agg(
-          F.sum(F.when(MergeClauses.hit(col("__bsc"), bsDelIdx), 1L).otherwise(0L))
-            .as("__ndel"),
-          F.sum(F.when(MergeClauses.hit(col("__bsc"), bsUpdIdx), 1L).otherwise(0L))
-            .as("__nupd"))
-          .select(lit("b").as("__kind"), lit(null).cast("long").as("__maxn"),
-            col("__ndel"), col("__nupd")))
-      (Seq(mStats) ++ bsStats).reduce(_ unionByName _)
-        .collect().map(r => r.getString(0) -> r).toMap
-    }
-    val mStatsRow = statRows("m")
-    if (!mStatsRow.isNullAt(1) && mStatsRow.getLong(1) > 1) throw IcebergReadException(
-      s"`$path`: MERGE is ambiguous — multiple source rows match one target row")
-    val mDeleted = if (mStatsRow.isNullAt(2)) 0L else mStatsRow.getLong(2)
-    val updated = if (mStatsRow.isNullAt(3)) 0L else mStatsRow.getLong(3)
-    val (bsDeleted, bsUpdated) = statRows.get("b")
-      .map(r => (if (r.isNullAt(2)) 0L else r.getLong(2),
-        if (r.isNullAt(3)) 0L else r.getLong(3)))
-      .getOrElse((0L, 0L))
-    val updatePairs = matchedPairs.filter(MergeClauses.hit(col("__mc"), updIdx))
-    // SET-transformed value per field: one branch per update clause on
-    // the PRE-COMPUTED `__mc` (never re-derived per field); the plain
-    // single-unconditional-UPDATE merge keeps its flat expression
-    def newVal(f: StructField) = {
-      def valOf(i: Int) = clauses(i).set.get.get(f.name)
-        .map(e => expr(e).cast(f.dataType)).getOrElse(col(s"t.${f.name}"))
-      if (updIdx.isEmpty) col(s"t.${f.name}")
-      else if (!matchedCondActive) valOf(updIdx.head)
-      else updIdx.tail
-        .foldLeft(org.apache.spark.sql.functions
-          .when(col("__mc") === lit(updIdx.head), valOf(updIdx.head))) {
-          (acc, i) => acc.when(col("__mc") === lit(i), valOf(i))
-        }
-        .otherwise(col(s"t.${f.name}"))
-    }
-    val bsUpdRows = if (!bySourceActive) null
-      else bsRows.filter(MergeClauses.hit(col("__bsc"), bsUpdIdx))
-    // by-source SET value per field: branches on `__bsc`
-    def bsVal(f: StructField) = {
-      def valOf(i: Int) = bsClauses(i).set.get.get(f.name)
-        .map(e => expr(e).cast(f.dataType)).getOrElse(col(s"t.${f.name}"))
-      if (bsUpdIdx.isEmpty) col(s"t.${f.name}")
-      else if (!bsCondActive) valOf(bsUpdIdx.head)
-      else bsUpdIdx.tail
-        .foldLeft(org.apache.spark.sql.functions
-          .when(col("__bsc") === lit(bsUpdIdx.head), valOf(bsUpdIdx.head))) {
-          (acc, i) => acc.when(col("__bsc") === lit(i), valOf(i))
-        }
-        .otherwise(col(s"t.${f.name}"))
-    }
-    // CONCURRENT independent write jobs (guide §2.6 "overlap independent
-    // jobs"): the five writes — matched tombstones, update images,
-    // inserts, by-source tombstones, by-source images — consume only the
-    // pinned statement frames, write under DISTINCT prefixes/tmp dirs and
-    // feed commitMor as ordered lists, so driver planning, the jobs and
-    // the per-file finalize all overlap instead of running back to back
-    // (r16 ran them as up to five sequential jobs). The micros-timestamp
-    // session pin is HELD ACROSS the phase, making each write's nested
-    // set/restore a same-value no-op — no INT96 race. The pool is fresh
-    // (threads inherit this statement's job group) and the commit sees
-    // exactly the per-list file order the serial loop produced.
-    val (mDelFiles, updFiles, insFiles, bsDelFiles, bsUpdFiles) = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(5)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try withMicrosTimestamps(spark) {
-        // ONE tombstone write covers delete- AND update-claimed rows
-        // (`__mc` >= 0 ⇔ modified); zero-row writes are SKIPPED instead
-        // of running join-scale jobs to write nothing
-        val fMDel = Future {
-          if (mDeleted + updated == 0L) Nil
-          else writeMoved(matchedPairs.filter(col("__mc") >= 0).select(
-            col("t.__file").as("file_path"), col("t.__pos").as("pos")),
-            st, s"mdd-$stamp")
-        }
-        val fUpd = Future {
-          if (updated > 0)
-            // row lineage: updated rows keep their ids; sequence re-defaults
-            writeMorData(updatePairs.select(
-              scanFields.map(f => newVal(f).as(f.name)) ++
-                (if (st.hasLineage)
-                  Seq(col("t.__rlid").as(RowIdColName),
-                    org.apache.spark.sql.functions.lit(null).cast("long")
-                      .as(LastSeqColName))
-                else Nil): _*), st, s"mrgu-$stamp")
-          else Nil
-        }
-        val fIns = Future {
-          if (insClauses.nonEmpty) {
-            val unmatched = s1.join(target, cond, "left_anti")
-            writeMorData(insertFrame(unmatched, scanFields), st, s"mrgi-$stamp")
-          } else Nil
-        }
-        val fBsDel = Future {
-          if (bsDeleted + bsUpdated == 0L) Nil
-          else writeMoved(bsRows.filter(col("__bsc") >= 0).select(
-            col("t.__file").as("file_path"), col("t.__pos").as("pos")),
-            st, s"bsd-$stamp")
-        }
-        val fBsUpd = Future {
-          if (bsUpdated > 0)
-            writeMorData(bsUpdRows.select(
-              scanFields.map(f => bsVal(f).as(f.name)) ++
-                (if (st.hasLineage)
-                  Seq(col("t.__rlid").as(RowIdColName),
-                    lit(null).cast("long").as(LastSeqColName))
-                else Nil): _*), st, s"bsui-$stamp")
-          else Nil
-        }
-        (Await.result(fMDel, Duration.Inf), Await.result(fUpd, Duration.Inf),
-          Await.result(fIns, Duration.Inf), Await.result(fBsDel, Duration.Inf),
-          Await.result(fBsUpd, Duration.Inf))
-      } finally pool.shutdown()
-    }
-    val inserted = insFiles.map(_.rows).sum
-    if (updated == 0L && inserted == 0L && bsUpdated == 0L && bsDeleted == 0L &&
-      mDeleted == 0L)
-      return (0L, 0L)
-    commitMor(st, "overwrite", Seq("graft-merge-on" -> condSql),
-      mDelFiles ++ bsDelFiles,
-      updFiles ++ bsUpdFiles ++ insFiles)
-    (updated + bsUpdated, inserted)
-    } finally pinned.foreach(_.unpersist(blocking = false))
   }
 
   private def writeAvroAt(fs: org.apache.hadoop.fs.FileSystem, rootPath: Path,

@@ -11,7 +11,11 @@ package graft.catalog
   * independent (distinct sources, distinct destinations; Hadoop FileSystem
   * instances are thread-safe), so a bounded pool collapses the wall-clock
   * to O(files / threads) while results return in INPUT order — commit and
-  * manifest row order stays exactly what the serial loop produced. */
+  * manifest row order stays exactly what the serial loop produced. The
+  * same pools run a statement's independent write jobs concurrently
+  * (MERGE data/change/tombstone writes, DV UPDATE's descriptor and image
+  * passes): each call opens a fresh pool whose threads inherit the
+  * caller's job group, and this is the one place the catalog builds one. */
 private[catalog] object ParallelFiles {
 
   private val threads = 32
@@ -34,5 +38,11 @@ private[catalog] object ParallelFiles {
         }
       }
     } finally pool.shutdownNow()
+  }
+
+  /** `a` and `b` concurrently, each on its own pool thread. */
+  def both[A, B](a: => A, b: => B): (A, B) = {
+    val r = mapOrdered(Seq[() => Either[A, B]](() => Left(a), () => Right(b)))(_())
+    (r.head.left.toOption.get, r(1).toOption.get)
   }
 }

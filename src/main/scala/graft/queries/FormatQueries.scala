@@ -2410,7 +2410,9 @@ object FormatQueries {
         .unionByName(cust.filter(col("c_custkey") % 100 === 1)
           .withColumn("c_custkey", col("c_custkey") + 1000000L))
       graft.catalog.DeltaSink.mergeInto(s, out, src, "t.c_custkey = s.c_custkey",
-        Map("c_acctbal" -> "t.c_acctbal + s.c_acctbal"))
+        matchedClauses = Seq(graft.catalog.MergeMatchedClause(None,
+          Some(Map("c_acctbal" -> "t.c_acctbal + s.c_acctbal")))),
+        insertClauses = Seq(graft.catalog.MergeInsertClause(None, None)))
       Catalog.attach(s, "w04_customer_delta_dml", "delta", Map("files" -> out))
         .select("c_custkey", "c_acctbal", "c_mktsegment")
     },
@@ -2471,7 +2473,9 @@ object FormatQueries {
         .unionByName(cust.filter(col("c_custkey") % 100 === 1)
           .withColumn("c_custkey", col("c_custkey") + 1000000L))
       graft.catalog.IcebergSink.mergeInto(s, out, src, "t.c_custkey = s.c_custkey",
-        Map("c_acctbal" -> "t.c_acctbal + s.c_acctbal"))
+        matchedClauses = Seq(graft.catalog.MergeMatchedClause(None,
+          Some(Map("c_acctbal" -> "t.c_acctbal + s.c_acctbal")))),
+        insertClauses = Seq(graft.catalog.MergeInsertClause(None, None)))
       Catalog.attach(s, "w05_customer_iceberg_dml", "iceberg", Map("files" -> out))
         .select("c_custkey", "c_acctbal", "c_mktsegment")
     },
@@ -3528,10 +3532,13 @@ object FormatQueries {
         .unionByName(cust.filter(col("c_custkey") % 100 === 7)
           .withColumn("c_custkey", col("c_custkey") + 2000000L))
       graft.catalog.DeltaSink.mergeInto(s, out, src, "t.c_custkey = s.c_custkey",
-        matchedSet = Map("c_acctbal" -> "s.c_acctbal"),
-        bySourceSet = Map("c_acctbal" -> "CAST(-1.0 AS DOUBLE)"),
-        bySourceUpdateCond = Some("t.c_mktsegment = 'BUILDING'"),
-        bySourceDeleteCond = Some("t.c_mktsegment = 'MACHINERY'"))
+        matchedClauses = Seq(graft.catalog.MergeMatchedClause(None,
+          Some(Map("c_acctbal" -> "s.c_acctbal")))),
+        bySourceClauses = Seq(
+          graft.catalog.MergeMatchedClause(Some("t.c_mktsegment = 'MACHINERY'"), None),
+          graft.catalog.MergeMatchedClause(Some("t.c_mktsegment = 'BUILDING'"),
+            Some(Map("c_acctbal" -> "CAST(-1.0 AS DOUBLE)")))),
+        insertClauses = Seq(graft.catalog.MergeInsertClause(None, None)))
       val table = Catalog.attach(s, "w17_cust_bysource", "delta",
           Map("files" -> out))
         .select(col("c_custkey"), col("c_acctbal"), col("c_mktsegment"))

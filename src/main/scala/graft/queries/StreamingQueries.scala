@@ -813,7 +813,9 @@ object StreamingQueries {
               .withColumn("c_custkey", col("c_custkey") + 1000000L))
           graft.catalog.DeltaSink.mergeInto(s, rootA.getPath, src,
             "t.c_custkey = s.c_custkey",
-            Map("c_acctbal" -> "t.c_acctbal + s.c_acctbal"))
+            matchedClauses = Seq(graft.catalog.MergeMatchedClause(None,
+              Some(Map("c_acctbal" -> "t.c_acctbal + s.c_acctbal")))),
+            insertClauses = Seq(graft.catalog.MergeInsertClause(None, None)))
           q.processAllAvailable() // merge cdc (updates + inserts) applies
         } finally q.stop()
       }

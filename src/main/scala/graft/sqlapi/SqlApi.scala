@@ -139,26 +139,29 @@ object SqlApi {
     * src/api/parquet.rs:74-146): one row per leaf with physical type,
     * repetition, logical type, precision/scale, field id. Reads footers via
     * parquet-hadoop (on the Spark classpath). */
-  def parquetSchema(spark: SparkSession, path: String): DataFrame = {
+  def parquetSchema(spark: SparkSession, path: String): DataFrame =
+    footerFrame(spark, parquetFiles(spark, path, "parquet_schema"))
+
+  /** The file at `path`, or every `.parquet` file under the directory —
+    * RECURSIVELY: hive-partitioned layouts keep their files in key=value
+    * subdirectories, and a shallow listing would return zero rows, the one
+    * failure shape introspection must not have. `fn` names the caller in
+    * the error for a directory holding none. */
+  private def parquetFiles(spark: SparkSession, path: String,
+      fn: String): Seq[org.apache.hadoop.fs.Path] = {
     import org.apache.hadoop.fs.Path
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    val files = if (fs.getFileStatus(new Path(path)).isDirectory) {
-      // RECURSIVE listing: hive-partitioned layouts keep their files in
-      // key=value subdirectories; a shallow listing would return zero rows
-      // — the one failure shape introspection must not have
-      val it = fs.listFiles(new Path(path), true)
-      val b = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) b += st.getPath
-      }
-      val found = b.result()
-      if (found.isEmpty) throw new IllegalArgumentException(
-        s"parquet_schema: no .parquet files under `$path` (searched recursively)")
-      found
-    } else Seq(new Path(path))
-    footerFrame(spark, files)
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.getFileStatus(new Path(path)).isDirectory) return Seq(new Path(path))
+    val it = fs.listFiles(new Path(path), true)
+    val b = Seq.newBuilder[Path]
+    while (it.hasNext) {
+      val st = it.next()
+      if (st.isFile && st.getPath.getName.endsWith(".parquet")) b += st.getPath
+    }
+    val found = b.result()
+    if (found.isEmpty) throw new IllegalArgumentException(
+      s"$fn: no .parquet files under `$path` (searched recursively)")
+    found
   }
 
   /** One driver loop over footers → one DataFrame: O(files) metadata reads
@@ -237,20 +240,34 @@ object SqlApi {
   private val dsRe = """(?i)duckdb_settings\(\)""".r
   private val deRe = """(?i)duckdb_extensions\(\)""".r
 
+  /** The table-or-path check of the introspection functions: the argument
+    * names a registered table or view, or else it is a path. An argument
+    * that does not even parse as an identifier (an absolute path) is a
+    * path, not an error. */
+  private def isTable(spark: SparkSession, nameOrPath: String): Boolean =
+    try spark.catalog.tableExists(nameOrPath)
+    catch { case _: org.apache.spark.sql.catalyst.parser.ParseException => false }
+
   private def describeAny(spark: SparkSession, nameOrPath: String): DataFrame =
-    if (spark.catalog.tableExists(nameOrPath))
-      describeOf(spark, spark.table(nameOrPath).schema)
+    if (isTable(spark, nameOrPath)) describeOf(spark, spark.table(nameOrPath).schema)
     else parquetDescribe(spark, nameOrPath)
 
-  private def schemaAny(spark: SparkSession, nameOrPath: String): DataFrame =
-    if (spark.catalog.tableExists(nameOrPath)) {
-      // footer rows of the table's actual backing files; a file-less
-      // relation (VALUES view, empty lakehouse table) lists zero footers
+  /** Footer rows (`frame`) of a table's actual backing files, or of the
+    * parquet files at a path. A file-less relation (VALUES view, empty
+    * lakehouse table) lists zero footers. One driver loop over the footers
+    * builds one flat frame, never a per-file plan-tree union. */
+  private def footersAny(spark: SparkSession, nameOrPath: String, fn: String,
+      schema: StructType,
+      frame: Seq[org.apache.hadoop.fs.Path] => DataFrame): DataFrame =
+    if (!isTable(spark, nameOrPath)) frame(parquetFiles(spark, nameOrPath, fn))
+    else {
       val files = spark.table(nameOrPath).inputFiles.toSeq
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], footerSchema)
-      else footerFrame(spark, files.map(new org.apache.hadoop.fs.Path(_)))
-    } else parquetSchema(spark, nameOrPath)
+      if (files.isEmpty) spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+      else frame(files.map(new org.apache.hadoop.fs.Path(_)))
+    }
+
+  private def schemaAny(spark: SparkSession, nameOrPath: String): DataFrame =
+    footersAny(spark, nameOrPath, "parquet_schema", footerSchema, footerFrame(spark, _))
 
   // a one-arg call's tail in an unquoted segment: text, the function name,
   // an open paren — the quoted argument is the NEXT segment
@@ -288,26 +305,8 @@ object SqlApi {
     * min/max/null-count stats (the rows DuckDB users read to judge
     * skipping health). Table-or-path like parquet_schema; bounded driver
     * footer reads. */
-  def parquetMetadata(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new Path(path).getFileSystem(conf)
-    val files = if (fs.getFileStatus(new Path(path)).isDirectory) {
-      val it = fs.listFiles(new Path(path), true)
-      val b = Seq.newBuilder[Path]
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) b += st.getPath
-      }
-      val found = b.result()
-      if (found.isEmpty) throw new IllegalArgumentException(
-        s"parquet_metadata: no .parquet files under `$path` (searched recursively)")
-      found
-    } else Seq(new Path(path))
-    parquetMetadataFiles(spark, files)
-  }
+  def parquetMetadata(spark: SparkSession, path: String): DataFrame =
+    parquetMetadataFiles(spark, parquetFiles(spark, path, "parquet_metadata"))
 
   private def parquetMetadataFiles(spark: SparkSession,
       files: Seq[org.apache.hadoop.fs.Path]): DataFrame = {
@@ -353,15 +352,8 @@ object SqlApi {
     StructField("compression", StringType)))
 
   private def parquetMetadataAny(spark: SparkSession, nameOrPath: String): DataFrame =
-    if (spark.catalog.tableExists(nameOrPath)) {
-      // single driver loop over the table's backing footers — one flat
-      // frame, never a per-file plan-tree union (the schemaAny discipline)
-      val files = spark.table(nameOrPath).inputFiles.toSeq
-      if (files.isEmpty)
-        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], parquetMetaSchema)
-      else parquetMetadataFiles(spark,
-        files.map(new org.apache.hadoop.fs.Path(_)))
-    } else parquetMetadata(spark, nameOrPath)
+    footersAny(spark, nameOrPath, "parquet_metadata", parquetMetaSchema,
+      parquetMetadataFiles(spark, _))
 
   /** Commit history of a native Delta table (one row per commit JSON). */
   def deltaHistory(spark: SparkSession, root: String): DataFrame =
@@ -1505,13 +1497,11 @@ object SqlApi {
     val (nUpd, nIns) = fmt.toLowerCase match {
       case "delta" =>
         graft.catalog.DeltaSink.mergeInto(spark, root, srcFrame, cond,
-          matchedSet = Map.empty, insertNotMatched = false,
           matchedClauses = matchedClauses.toSeq,
           bySourceClauses = bySourceClauses.toSeq,
           insertClauses = insertClauses.toSeq)
       case "iceberg" =>
         graft.catalog.IcebergSink.mergeInto(spark, root, srcFrame, cond,
-          matchedSet = Map.empty, insertNotMatched = false,
           matchedClauses = matchedClauses.toSeq,
           bySourceClauses = bySourceClauses.toSeq,
           insertClauses = insertClauses.toSeq)

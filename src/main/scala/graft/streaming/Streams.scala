@@ -3,6 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
+import graft.catalog.{MergeInsertClause, MergeMatchedClause}
+
 /** Structured Streaming surface. The reference is batch-only (SURVEY §2.2:
   * streaming n/a — no watermarks/windows/state anywhere in its src/), so
   * nothing here mirrors reference code; it extends the engine with the
@@ -603,9 +605,10 @@ object Streams {
           } else if (changeCount > 0) {
             graft.catalog.DeltaSink.mergeInto(sp, targetRoot, latest,
               keyCols.map(k => s"t.$k = s.$k").mkString(" AND "),
-              matchedSet = dataCols.map(c => c -> s"s.$c").toMap,
-              matchedDeleteCond = Some("s._change_type = 'delete'"),
-              insertCond = Some("s._change_type != 'delete'"))
+              matchedClauses = Seq(
+                MergeMatchedClause(Some("s._change_type = 'delete'"), None),
+                MergeMatchedClause(None, Some(dataCols.map(c => c -> s"s.$c").toMap))),
+              insertClauses = Seq(MergeInsertClause(Some("s._change_type != 'delete'"), None)))
           }
         } finally latest.unpersist(blocking = false)
         ()
@@ -653,7 +656,9 @@ object Streams {
           else if (!latest.isEmpty)
             graft.catalog.DeltaSink.mergeInto(sp, targetRoot, latest,
               keyCols.map(k => s"t.$k = s.$k").mkString(" AND "),
-              matchedSet = dataCols.map(c => c -> s"s.$c").toMap)
+              matchedClauses = Seq(
+                MergeMatchedClause(None, Some(dataCols.map(c => c -> s"s.$c").toMap))),
+              insertClauses = Seq(MergeInsertClause(None, None)))
         } finally latest.unpersist(blocking = false)
         ()
     }

@@ -39,7 +39,6 @@ object MergePlanProbe {
     }
     val t0 = System.nanoTime()
     graft.catalog.DeltaSink.mergeInto(spark, root, src, "t.id = s.id",
-      matchedSet = Map.empty, insertNotMatched = false,
       matchedClauses = clauses)
     (System.nanoTime() - t0) / 1e9
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.catalog.DeltaSink
+import graft.catalog.{DeltaSink, MergeInsertClause, MergeMatchedClause}
 import graft.sources.DeltaNative
 
 /** PROTOCOL.md "Row Tracking" on the native Delta writer + reader:
@@ -114,7 +114,8 @@ class DeltaRowTrackingSpec extends SparkSpec {
     val before = rowIds(root)
     val src = Seq((4L, 111L), (100L, 222L)).toDF("k", "v")
     val (up, ins) = DeltaSink.mergeInto(spark, root, src, "t.k = s.k",
-      Map("v" -> "s.v"))
+      matchedClauses = Seq(MergeMatchedClause(None, Some(Map("v" -> "s.v")))),
+      insertClauses = Seq(MergeInsertClause(None, None)))
     assert(up === 1L && ins === 1L)
     val after = rowIds(root)
     assert(after(4L)._1 === before(4L)._1 && after(4L)._2 === 2L)
@@ -252,8 +253,10 @@ class DeltaRowTrackingSpec extends SparkSpec {
       root, Map("row_tracking" -> "true", "change_data_feed" -> "true"))
     val src = Seq((4L, 111L), (8L, 222L), (100L, 333L)).toDF("k", "v")
     val (up, ins) = DeltaSink.mergeInto(spark, root, src, "t.k = s.k",
-      Map("v" -> "s.v"),
-      matchedDeleteCond = Some("s.v = 222"))
+      matchedClauses = Seq(
+        MergeMatchedClause(Some("s.v = 222"), None),
+        MergeMatchedClause(None, Some(Map("v" -> "s.v")))),
+      insertClauses = Seq(MergeInsertClause(None, None)))
     assert(up === 1L && ins === 1L)
     val feed = graft.sources.DeltaChanges.read(spark, root,
       Map("starting_version" -> "1", "row_tracking" -> "true"))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
 
-import graft.catalog.{Catalog, DeltaSink, Sinks}
+import graft.catalog.{Catalog, DeltaSink, MergeInsertClause, MergeMatchedClause, Sinks}
 import graft.sources.DeltaNative
 
 /** Native Delta writer → native Delta reader round-trips: protocol commit
@@ -238,9 +238,10 @@ class DeltaSinkSpec extends SparkSpec {
       (9L, 90.0, "insert"), (8L, 0.0, "delete"))
       .toDF("id", "bal", "_change_type")
     val (upd, ins) = DeltaSink.mergeInto(spark, root, src, "t.id = s.id",
-      matchedSet = Map("bal" -> "s.bal"),
-      matchedDeleteCond = Some("s._change_type = 'delete'"),
-      insertCond = Some("s._change_type != 'delete'"))
+      matchedClauses = Seq(
+        MergeMatchedClause(Some("s._change_type = 'delete'"), None),
+        MergeMatchedClause(None, Some(Map("bal" -> "s.bal")))),
+      insertClauses = Seq(MergeInsertClause(Some("s._change_type != 'delete'"), None)))
     assert((upd, ins) === ((1L, 1L)))
     assert(readBack(root).orderBy("id").as[(Long, Double)].collect().toSeq
       === Seq((1L, 10.0), (3L, 33.0), (9L, 90.0)))
@@ -254,9 +255,8 @@ class DeltaSinkSpec extends SparkSpec {
     // delete-only merge (no SET, no inserts) still commits the removals
     val src2 = Seq((1L, 0.0, "delete")).toDF("id", "bal", "_change_type")
     assert(DeltaSink.mergeInto(spark, root, src2, "t.id = s.id",
-      matchedSet = Map.empty,
-      matchedDeleteCond = Some("s._change_type = 'delete'"),
-      insertCond = Some("false")) === ((0L, 0L)))
+      matchedClauses = Seq(MergeMatchedClause(Some("s._change_type = 'delete'"), None)),
+      insertClauses = Seq(MergeInsertClause(Some("false"), None))) === ((0L, 0L)))
     assert(readBack(root).select("id").as[Long].collect().sorted.toSeq
       === Seq(3L, 9L))
   }
@@ -272,10 +272,11 @@ class DeltaSinkSpec extends SparkSpec {
     // vanished rows delete UNLESS st='keep', which get stamped stale
     val src = Seq((2L, 22.0, "live"), (9L, 90.0, "live")).toDF("id", "bal", "st")
     val (upd, ins) = DeltaSink.mergeInto(spark, root, src, "t.id = s.id",
-      matchedSet = Map("bal" -> "s.bal"),
-      bySourceSet = Map("st" -> "'stale'"),
-      bySourceUpdateCond = Some("t.st = 'keep'"),
-      bySourceDeleteCond = Some("t.st != 'keep'"))
+      matchedClauses = Seq(MergeMatchedClause(None, Some(Map("bal" -> "s.bal")))),
+      bySourceClauses = Seq(
+        MergeMatchedClause(Some("t.st != 'keep'"), None),
+        MergeMatchedClause(Some("t.st = 'keep'"), Some(Map("st" -> "'stale'")))),
+      insertClauses = Seq(MergeInsertClause(None, None)))
     assert((upd, ins) === ((2L, 1L))) // 1 matched + 1 by-source update
     assert(readBack(root).orderBy("id").as[(Long, Double, String)].collect().toSeq
       === Seq((2L, 22.0, "live"), (4L, 40.0, "stale"), (9L, 90.0, "live")))
@@ -292,8 +293,7 @@ class DeltaSinkSpec extends SparkSpec {
     // unconditional by-source delete with an EMPTY source truncates
     val empty = Seq.empty[(Long, Double, String)].toDF("id", "bal", "st")
     val (u2, i2) = DeltaSink.mergeInto(spark, root, empty, "t.id = s.id",
-      matchedSet = Map.empty, insertNotMatched = false,
-      bySourceDeleteCond = Some("true"))
+      bySourceClauses = Seq(MergeMatchedClause(Some("true"), None)))
     assert(u2 === 0L && i2 === 0L)
     assert(readBack(root).count() === 0L)
   }
@@ -308,10 +308,11 @@ class DeltaSinkSpec extends SparkSpec {
     // source holds only id=2: 1 and 3 are by-source — 3 deletes, 1 updates
     val src = Seq((2L, 22L)).toDF("id", "v")
     DeltaSink.mergeInto(spark, root, src, "t.id = s.id",
-      matchedSet = Map("v" -> "s.v"),
-      bySourceSet = Map("v" -> "t.v + 100"),
-      bySourceUpdateCond = Some("t.id = 1"),
-      bySourceDeleteCond = Some("t.id = 3"))
+      matchedClauses = Seq(MergeMatchedClause(None, Some(Map("v" -> "s.v")))),
+      bySourceClauses = Seq(
+        MergeMatchedClause(Some("t.id = 3"), None),
+        MergeMatchedClause(Some("t.id = 1"), Some(Map("v" -> "t.v + 100")))),
+      insertClauses = Seq(MergeInsertClause(None, None)))
     val after = DeltaNative.read(spark, root, Map("row_tracking" -> "true"))
       .select("id", "v", "_row_id", "_row_commit_version").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -558,7 +559,8 @@ class DeltaSinkSpec extends SparkSpec {
     // source updates id=3 (amount += s.amount) and inserts id=9
     val src = Seq((3L, 5L), (9L, 90L)).toDF("id", "amount")
     val (u, i) = DeltaSink.mergeInto(spark, root, src, "t.id = s.id",
-      Map("amount" -> "t.amount + s.amount"))
+      matchedClauses = Seq(MergeMatchedClause(None, Some(Map("amount" -> "t.amount + s.amount")))),
+      insertClauses = Seq(MergeInsertClause(None, None)))
     assert(u === 1L && i === 1L)
     assert(readBack(root).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       === Set((1L, 10L), (2L, 20L), (3L, 35L), (9L, 90L)))
@@ -576,12 +578,14 @@ class DeltaSinkSpec extends SparkSpec {
     val dup = Seq((1L, 1L), (1L, 2L)).toDF("id", "amount")
     val e = intercept[DeltaNative.DeltaReadException] {
       DeltaSink.mergeInto(spark, root, dup, "t.id = s.id",
-        Map("amount" -> "s.amount"))
+        matchedClauses = Seq(MergeMatchedClause(None, Some(Map("amount" -> "s.amount")))),
+        insertClauses = Seq(MergeInsertClause(None, None)))
     }
     assert(e.getMessage.contains("ambiguous"))
     // insert-only merge (no matched clause): no rewrite, pure append
     val (u2, i2) = DeltaSink.mergeInto(spark, root,
-      Seq((7L, 70L)).toDF("id", "amount"), "t.id = s.id", Map.empty)
+      Seq((7L, 70L)).toDF("id", "amount"), "t.id = s.id",
+      insertClauses = Seq(MergeInsertClause(None, None)))
     assert(u2 === 0L && i2 === 1L)
     assert(readBack(root).count() === 5L)
   }
@@ -1194,7 +1198,8 @@ class DeltaSinkSpec extends SparkSpec {
     val src = Seq((3L, 5.0, "US"), (9L, 90.0, "FR"))
       .toDF("id", "balance", "region")
     val (upd, ins) = DeltaSink.mergeInto(spark, root, src, "t.id = s.id",
-      Map("balance" -> "t.balance + s.balance"))
+      matchedClauses = Seq(MergeMatchedClause(None, Some(Map("balance" -> "t.balance + s.balance")))),
+      insertClauses = Seq(MergeInsertClause(None, None)))
     assert((upd, ins) === ((1L, 1L)))
     assert(readBack(root).orderBy("id").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq ===

@@ -4,7 +4,7 @@ import java.io.File
 
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{DeltaSink, Sinks}
+import graft.catalog.{DeltaSink, MergeInsertClause, MergeMatchedClause, Sinks}
 import graft.sources.DeltaNative
 
 /** PROTOCOL.md writer obligations on FOREIGN tables: a writer must
@@ -69,7 +69,9 @@ class DeltaWriterGatesSpec extends SparkSpec {
     assert(e.getMessage.contains("x_positive"))
     val e2 = intercept[DeltaNative.DeltaReadException] {
       DeltaSink.mergeInto(spark, root, Seq((9L, -2.0)).toDF("id", "x"),
-        "t.id = s.id", matchedSet = Map("x" -> "s.x"))
+        "t.id = s.id",
+        matchedClauses = Seq(MergeMatchedClause(None, Some(Map("x" -> "s.x")))),
+        insertClauses = Seq(MergeInsertClause(None, None)))
     }
     assert(e2.getMessage.contains("x_positive"))
     // untouched after both rejects
@@ -102,7 +104,9 @@ class DeltaWriterGatesSpec extends SparkSpec {
       () => DeltaSink.deleteWhere(spark, root, "id = 1"),
       () => DeltaSink.updateWhere(spark, root, "id = 1", Map("x" -> "0.0")),
       () => DeltaSink.mergeInto(spark, root, Seq((1L, 0.0)).toDF("id", "x"),
-        "t.id = s.id", matchedSet = Map("x" -> "s.x")),
+        "t.id = s.id",
+        matchedClauses = Seq(MergeMatchedClause(None, Some(Map("x" -> "s.x")))),
+        insertClauses = Seq(MergeInsertClause(None, None))),
       () => DeltaSink.write(Seq((9L, 9.0)).toDF("id", "x"), root,
         Map("overwrite" -> "true"))
     ).foreach { op =>

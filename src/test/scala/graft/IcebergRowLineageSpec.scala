@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.catalog.IcebergSink
+import graft.catalog.{IcebergSink, MergeInsertClause, MergeMatchedClause}
 import graft.sources.IcebergNative
 
 /** Iceberg v3 ROW LINEAGE on the native writer + reader (spec "Row
@@ -84,7 +84,8 @@ class IcebergRowLineageSpec extends SparkSpec {
     val before = lineage(root)
     val src = Seq((6L, 111L), (100L, 222L)).toDF("k", "v")
     val (up, ins) = IcebergSink.mergeInto(spark, root, src, "t.k = s.k",
-      Map("v" -> "s.v"))
+      matchedClauses = Seq(MergeMatchedClause(None, Some(Map("v" -> "s.v")))),
+      insertClauses = Seq(MergeInsertClause(None, None)))
     assert(up === 1L && ins === 1L)
     val after = lineage(root)
     assert(after(6L)._1 === before(6L)._1 && after(6L)._2 === 3L)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{Catalog, IcebergSink, Sinks}
+import graft.catalog.{Catalog, IcebergSink, MergeInsertClause, MergeMatchedClause, Sinks}
 import graft.sources.IcebergNative
 
 /** Native Iceberg writer → native Iceberg reader round-trips: metadata.json
@@ -185,8 +185,9 @@ class IcebergSinkSpec extends SparkSpec {
     val root = tempDir("isink_mrg").getPath
     Sinks.copyTo(Seq((1L, 10.0), (2L, 20.0)).toDF("id", "bal"), root, "iceberg")
     val src = Seq((2L, 5.0), (9L, 90.0)).toDF("id", "bal")
-    val (upd, ins) = IcebergSink.mergeInto(spark, root, src,
-      "t.id = s.id", Map("bal" -> "t.bal + s.bal"))
+    val (upd, ins) = IcebergSink.mergeInto(spark, root, src, "t.id = s.id",
+      matchedClauses = Seq(MergeMatchedClause(None, Some(Map("bal" -> "t.bal + s.bal")))),
+      insertClauses = Seq(MergeInsertClause(None, None)))
     assert((upd, ins) === ((1L, 1L)))
     assert(readBack(root).orderBy("id").as[(Long, Double)].collect().toSeq
       === Seq((1L, 10.0), (2L, 25.0), (9L, 90.0)))
@@ -196,18 +197,22 @@ class IcebergSinkSpec extends SparkSpec {
     val dupSrc = Seq((1L, 1.0), (1L, 2.0)).toDF("id", "bal")
     val e = intercept[IcebergNative.IcebergReadException] {
       IcebergSink.mergeInto(spark, root, dupSrc, "t.id = s.id",
-        Map("bal" -> "s.bal"))
+        matchedClauses = Seq(MergeMatchedClause(None, Some(Map("bal" -> "s.bal")))),
+        insertClauses = Seq(MergeInsertClause(None, None)))
     }
     assert(e.getMessage.contains("ambiguous"))
+    // the ambiguity check runs before any write: no snapshot lands
+    assert(IcebergNative.snapshots(spark, root).count() === 2L)
     // insert-only merge (no matched clause): matched rows untouched
     val src2 = Seq((2L, 99.0), (7L, 70.0)).toDF("id", "bal")
-    assert(IcebergSink.mergeInto(spark, root, src2, "t.id = s.id", Map.empty)
-      === ((0L, 1L)))
+    assert(IcebergSink.mergeInto(spark, root, src2, "t.id = s.id",
+      insertClauses = Seq(MergeInsertClause(None, None))) === ((0L, 1L)))
     assert(readBack(root).filter("id = 2").select("bal").as[Double].head() === 25.0)
     assert(readBack(root).filter("id = 7").count() === 1L)
     // source lacking a table column rejects loudly
     val e2 = intercept[IcebergNative.IcebergReadException] {
-      IcebergSink.mergeInto(spark, root, Seq(1L).toDF("id"), "t.id = s.id", Map.empty)
+      IcebergSink.mergeInto(spark, root, Seq(1L).toDF("id"), "t.id = s.id",
+        insertClauses = Seq(MergeInsertClause(None, None)))
     }
     assert(e2.getMessage.contains("lacks table column"))
   }
@@ -220,10 +225,11 @@ class IcebergSinkSpec extends SparkSpec {
     // vanished rows delete UNLESS st='keep', which get stamped stale
     val src = Seq((2L, 22.0, "live"), (9L, 90.0, "live")).toDF("id", "bal", "st")
     val (upd, ins) = IcebergSink.mergeInto(spark, root, src, "t.id = s.id",
-      matchedSet = Map("bal" -> "s.bal"),
-      bySourceSet = Map("st" -> "'stale'"),
-      bySourceUpdateCond = Some("t.st = 'keep'"),
-      bySourceDeleteCond = Some("t.st != 'keep'"))
+      matchedClauses = Seq(MergeMatchedClause(None, Some(Map("bal" -> "s.bal")))),
+      bySourceClauses = Seq(
+        MergeMatchedClause(Some("t.st != 'keep'"), None),
+        MergeMatchedClause(Some("t.st = 'keep'"), Some(Map("st" -> "'stale'")))),
+      insertClauses = Seq(MergeInsertClause(None, None)))
     assert((upd, ins) === ((2L, 1L))) // 1 matched + 1 by-source update
     assert(readBack(root).orderBy("id").as[(Long, Double, String)].collect().toSeq
       === Seq((2L, 22.0, "live"), (4L, 40.0, "stale"), (9L, 90.0, "live")))
@@ -233,8 +239,7 @@ class IcebergSinkSpec extends SparkSpec {
     val empty = Seq.empty[(Long, Double, String)].toDF("id", "bal", "st")
     // empty source + no inserts: the delete-everything sync
     val (u2, i2) = IcebergSink.mergeInto(spark, root, empty, "t.id = s.id",
-      matchedSet = Map.empty, insertNotMatched = false,
-      bySourceDeleteCond = Some("true"))
+      bySourceClauses = Seq(MergeMatchedClause(Some("true"), None)))
     assert(u2 === 0L && i2 === 0L)
     assert(readBack(root).count() === 0L)
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.catalog.{DeltaSink, Sinks}
+import graft.catalog.{DeltaSink, MergeInsertClause, MergeMatchedClause, Sinks}
 import graft.sources.DeltaNative
 import graft.streaming.Streams
 
@@ -30,7 +30,8 @@ class MergeShapeSpec extends SparkSpec {
     val src = Seq((1L, "x"), (1L, "y"), (9L, "z")).toDF("id", "v")
     val e = intercept[DeltaNative.DeltaReadException] {
       DeltaSink.mergeInto(spark, root, src, "t.id = s.id",
-        Map("v" -> "s.v"))
+        matchedClauses = Seq(MergeMatchedClause(None, Some(Map("v" -> "s.v")))),
+        insertClauses = Seq(MergeInsertClause(None, None)))
     }
     assert(e.getMessage.contains("ambiguous"))
     assert(logDir.list().count(_.endsWith(".json")) === before,
@@ -46,10 +47,11 @@ class MergeShapeSpec extends SparkSpec {
       "delta", Map("change_data_feed" -> "true"))
     val src = Seq((1L, "upd"), (2L, "del"), (9L, "ins")).toDF("id", "op")
     val (u, i) = DeltaSink.mergeInto(spark, root, src, "t.id = s.id",
-      Map("v" -> "s.op"),
-      matchedDeleteCond = Some("s.op = 'del'"),
-      insertCond = Some("s.op = 'ins'"),
-      insertProj = Some(Map("id" -> "s.id", "v" -> "s.op")))
+      matchedClauses = Seq(
+        MergeMatchedClause(Some("s.op = 'del'"), None),
+        MergeMatchedClause(None, Some(Map("v" -> "s.op")))),
+      insertClauses = Seq(MergeInsertClause(Some("s.op = 'ins'"),
+        Some(Map("id" -> "s.id", "v" -> "s.op")))))
     assert((u, i) === (1L, 1L))
     assert(DeltaNative.read(spark, root, Map.empty).orderBy("id")
       .as[(Long, String)].collect().toSeq ===
@@ -64,6 +66,31 @@ class MergeShapeSpec extends SparkSpec {
     assert(feed.map(t => (t._1, t._2)) === Seq(
       (1L, "update_postimage"), (1L, "update_preimage"),
       (2L, "delete"), (9L, "insert")).sorted)
+  }
+
+  test("plain upsert keeps its flat plans: no by-source branch, no CASE chain") {
+    val root = tempDir("mshape_flat").getPath
+    Sinks.copyTo(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root, "delta")
+    val src = Seq((1L, "x"), (9L, "z")).toDF("id", "v")
+    // the upsertDeltaStream shape: one unconditional UPDATE SET plus one
+    // identity INSERT. Its flat plans keep ~0.1 s of analysis and planning
+    // off every plain MERGE (the r14 A/B in BASELINE.md)
+    val ((u, i), plans) = org.apache.spark.graft.ActionPlans.capture(spark) {
+      DeltaSink.mergeInto(spark, root, src, "t.id = s.id",
+        matchedClauses = Seq(MergeMatchedClause(None, Some(Map("v" -> "s.v")))),
+        insertClauses = Seq(MergeInsertClause(None, None)))
+    }
+    assert((u, i) === (1L, 1L))
+    // analyzed plans too: an always-false branch folds away in optimization
+    // but still costs analysis and planning
+    val text = plans.flatMap { case (_, qe) =>
+      Seq(qe.analyzed.treeString, qe.optimizedPlan.treeString)
+    }
+    assert(text.exists(_.contains("__mc")), s"the statement's plans were not captured: $text")
+    assert(!text.exists(_.contains("__bsc")), "a plain merge plans no by-source branch")
+    // a CASE with two WHEN branches is a multi-clause classification chain
+    val chain = "CASE WHEN (?:(?! END).)*? WHEN ".r
+    text.flatMap(chain.findFirstIn).foreach(c => fail(s"multi-clause CASE chain: $c"))
   }
 
   test("static pins are keyed: a second gate build keeps the first gate's pins") {

@@ -251,6 +251,17 @@ class SqlApiSpec extends SparkSpec {
     assert(e.getMessage.contains("no .parquet files"))
   }
 
+  test("parquet_schema/describe/metadata take an absolute path through executePg") {
+    // an absolute path does not parse as a table identifier: it must
+    // route to the path form, not throw a ParseException
+    val path = new java.io.File(s"$sf/lineitem.parquet").getAbsolutePath
+    Seq("parquet_schema", "parquet_describe", "parquet_metadata").foreach { fn =>
+      val n = SqlApi.executePg(spark, s"SELECT count(*) AS n FROM $fn('$path')")
+        .collect().head.getLong(0)
+      assert(n > 0L, fn)
+    }
+  }
+
   test("debug flags force observable plan changes (reference debug GUCs)") {
     import graft.sqlapi.DebugFlags
     Tables.registerAll(spark, sf)

@@ -305,7 +305,8 @@ class StreamingSpec extends SparkSpec {
       q.processAllAvailable() // bootstrap from the snapshot batch — ids real
       graft.catalog.DeltaSink.mergeInto(spark, rootA,
         Seq((2L, 99L), (7L, 70L), (8L, 80L)).toDF("k", "v"), "t.k = s.k",
-        Map("v" -> "s.v"))
+        matchedClauses = Seq(graft.catalog.MergeMatchedClause(None, Some(Map("v" -> "s.v")))),
+        insertClauses = Seq(graft.catalog.MergeInsertClause(None, None)))
       val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
         q.processAllAvailable()
       }
