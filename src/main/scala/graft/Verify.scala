@@ -35,16 +35,19 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // `__SF__` in an oracle resolves to the scale-factor directory's
-    // basename at dump time — export-path oracles (c01/j01/h01) then point
-    // at THIS rung's derived fixtures, so the sf1 stress gate covers the
-    // full inventory instead of carving them out.
+    // `__EXPORT__` in an oracle resolves to this checkout's export root and
+    // `__SF__` to the scale-factor directory's basename at dump time —
+    // export-path oracles (c01/j01/h01) then point at THIS checkout's and
+    // THIS rung's derived fixtures, so the sf1 stress gate covers the full
+    // inventory instead of carving them out. The unresolved templates land
+    // beside the oracles for selfcheck's absolute-path lint.
     val sfBase = new java.io.File(sfDir).getName
-    val json = SparkEntry.oracleSql
-      .filter { case (n, _) => only.forall(_.contains(n)) }
-      .map { case (k, v) => s"${q(k)}: ${q(v.replace("__SF__", sfBase))}" }
-      .mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    val oracles = SparkEntry.oracleSql.filter { case (n, _) => only.forall(_.contains(n)) }
+    def json(resolve: String => String): String =
+      oracles.map { case (k, v) => s"${q(k)}: ${q(resolve(v))}" }.mkString("{", ",", "}")
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json(
+      _.replace("__EXPORT__", queries.FormatQueries.exportBase).replace("__SF__", sfBase)))
+    Files.writeString(Paths.get(s"$outDir/oracle_templates.json"), json(identity))
     spark.stop()
   }
 }

@@ -396,6 +396,12 @@ object DeltaSink {
       if (n.isNumber) Some(n.asLong()) else None
     }.getOrElse(-1L)
 
+  /** A live file's row count as its add stats log it; None when the file
+    * carries no stats or no numRecords. Output sizing reads it: ZORDER's
+    * row target and the copy-on-write byte estimate ([[cowBytes]]). */
+  private def loggedRows(e: LiveEntry): Option[Long] =
+    e.stats.map(s => mapper.readTree(s).path("numRecords")).filter(_.isNumber).map(_.asLong())
+
   private def statsNumRecords(stats: String, path: String): Long = {
     val n = mapper.readTree(stats).path("numRecords")
     if (n.isNumber) n.asLong()
@@ -513,7 +519,9 @@ object DeltaSink {
     }
     schemaOpt.foreach { sch =>
       sch.fields.filterNot(_.nullable).foreach { f =>
-        if (rows.schema.fieldNames.contains(f.name)) {
+        // a column the incoming plan itself proves non-nullable cannot
+        // carry null: the probe would only plan and run an empty action
+        if (rows.schema.fieldNames.contains(f.name) && rows.schema(f.name).nullable) {
           val bad = rows.filter(col(f.name).isNull).take(1)
           if (bad.nonEmpty) throw DeltaReadException(
             s"`$path`: column `${f.name}` is NOT NULL in the table schema but " +
@@ -1616,12 +1624,43 @@ object DeltaSink {
     st.version
   }
 
+  /** Bytes a copy-on-write data write will produce, as the log counts
+    * them: the rewritten files' `size` plus `insertedRows` at the table's
+    * mean bytes per row (live `size` over live `numRecords`). None when
+    * inserted rows cannot be priced: no live file carries `numRecords`. */
+  private def cowBytes(st: TableState, rewritten: Seq[String],
+      insertedRows: Long): Option[Long] = {
+    val rewrittenBytes = rewritten.map(st.live(_).size).sum
+    if (insertedRows <= 0) Some(rewrittenBytes)
+    else {
+      val counted = st.live.values.flatMap(e => loggedRows(e).map(n => (e.size, n)))
+      val rows = counted.map(_._2).sum
+      if (rows <= 0) None
+      else Some(rewrittenBytes +
+        math.ceil(insertedRows * (counted.map(_._1).sum.toDouble / rows)).toLong)
+    }
+  }
+
   /** Distributed parquet write into a temp dir under `rootPath`, then move
     * each part (preserving hive partition dirs) under the root — returns
-    * one NewFile per part with true size and footer-derived stats. */
+    * one NewFile per part with true size and footer-derived stats.
+    *
+    * Output sizing (the one file-size rule for copy-on-write; ZORDER
+    * sizes by rows instead, `targetFileRows`): an unpartitioned write
+    * given `bytes` (the log's estimate of what it rewrites and inserts,
+    * see [[cowBytes]]) is coalesced to
+    * `max(1, ceil(bytes / spark.sql.files.maxPartitionBytes))` partitions,
+    * so each output file holds about one read split. Without it a MERGE
+    * writes one file per shuffle partition of its join, and every later
+    * MERGE scans, joins and rewrites all of them: a stream of small
+    * upserts grows its table and its per-batch cost with every batch.
+    * `coalesce` adds no shuffle and never raises the width, but it sets
+    * the task count of the whole stage back to the last exchange: a caller
+    * passes `bytes` only for a frame whose scan reads no more than the
+    * bytes counted (MERGE reads just the files it rewrites). */
   private def writeDataFiles(df: DataFrame, rootPath: Path, partCols: Seq[String],
       options: Map[String, String],
-      subDir: Option[String] = None): Seq[NewFile] = {
+      subDir: Option[String] = None, bytes: Option[Long] = None): Seq[NewFile] = {
     val spark = df.sparkSession
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val tmp = new Path(rootPath,
@@ -1632,7 +1671,10 @@ object DeltaSink {
     // pinned (numShufflePartitions) so AQE cannot coalesce the fanout to
     // one serial writer task at fixture sizes; tuple→task affinity (at
     // most one file per tuple) is unchanged.
-    val dfW = if (partCols.isEmpty) df
+    val dfW = if (partCols.isEmpty) bytes.fold(df) { b =>
+        val split = spark.sessionState.conf.filesMaxPartitionBytes
+        df.coalesce(math.max(1L, (b + split - 1) / split).toInt)
+      }
       else df.repartition(
         math.max(spark.sessionState.conf.numShufflePartitions,
           spark.sparkContext.defaultParallelism),
@@ -2484,13 +2526,15 @@ object DeltaSink {
       if (!rtOn) dataSchema0
       else StructType(dataSchema0.fields ++
         matColNames.map(n => StructField(n, LongType, nullable = true)))
-    val target: DataFrame = {
+    // the rows of `files` (rel path -> partition values), tagged with their
+    // `__file` and, on a row-tracked table, their stable id and version
+    def targetOf(files: Map[String, Map[String, String]]): DataFrame = {
       val target0: DataFrame =
-        if (live.isEmpty)
+        if (files.isEmpty)
           spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
             StructType(schema.fields :+ StructField("__file", StringType)))
-        else live.toSeq.groupBy(_._2).toSeq.map { case (pv, files) =>
-          var s0 = spark.read.schema(dataSchema).parquet(files.map(f => resolve(f._1)): _*)
+        else files.toSeq.groupBy(_._2).toSeq.map { case (pv, group) =>
+          var s0 = spark.read.schema(dataSchema).parquet(group.map(f => resolve(f._1)): _*)
           if (rtOn) s0 = s0.withColumn("__rt_idx", col("_metadata.row_index"))
           if (mapped)
             s0 = s0.select(dataFields.map(f => col(physName(f)).as(f.name)).toSeq
@@ -2507,7 +2551,7 @@ object DeltaSink {
         }.reduce(_ unionByName _)
       rtMat match {
         case None => target0
-        case _ if live.isEmpty => target0
+        case _ if files.isEmpty => target0
           .withColumn("__rt_id", lit(null).cast("long"))
           .withColumn("__rt_ver", lit(null).cast("long"))
         case Some((matId, matVer)) =>
@@ -2519,6 +2563,7 @@ object DeltaSink {
             .drop(Seq("__rt_key", "__rt_idx", "__rt_base", "__rt_def") ++ matColNames: _*)
       }
     }
+    val target = targetOf(live)
 
     MergePlan.run(source, condSql, matchedClauses, bySourceClauses, insertClauses,
         schema.fieldNames.toSeq, m => DeltaReadException(s"`$path`: $m")) { plan =>
@@ -2558,8 +2603,11 @@ object DeltaSink {
         val joinedAff =
           if (!doRewrite) null
           else {
-            val j0 = target.filter(col("__file").isin(affectedAbs: _*)).alias("t")
-              .join(s1.alias("s"), plan.cond, "left")
+            // read just the affected files (a filter on the nondeterministic
+            // `__file` would not prune the scan): the sized write below
+            // then runs as many tasks as the bytes it rewrites need
+            val j0 = targetOf(affectedRel.map(rel => rel -> live(rel)).toMap)
+              .alias("t").join(s1.alias("s"), plan.cond, "left")
             val j1 = if (!matched.condActive) j0
               else j0.withColumn("__mc", when(matchedFlag, matched.classify).otherwise(lit(-1)))
             if (!bySource.condActive) j1
@@ -2614,15 +2662,20 @@ object DeltaSink {
         // SEPARATE: rewritten files carry materialized ids while insert
         // files take fresh base+position ids at commit — fusing would move
         // insert rows into id ranges the unfused layout never assigns
-        // (w14/w15/x22 pin ids). Built as THUNKS: the independent writes run
-        // concurrently below.
-        def writeData(df: DataFrame): () => Seq[NewFile] =
-          () => writeDataFiles(toPhys(df), rootPath, partColsT.map(physKey), Map.empty)
+        // (w14/w15/x22 pin ids), so on a row-tracked table the insert files
+        // also keep their unsized layout. Built as THUNKS: the independent
+        // writes run concurrently below.
+        val rewrittenRel = if (doRewrite) affectedRel else Nil
+        def writeData(df: DataFrame, bytes: Option[Long]): () => Seq[NewFile] =
+          () => writeDataFiles(toPhys(df), rootPath, partColsT.map(physKey), Map.empty,
+            bytes = bytes)
+        val rewriteFrames = if (doRewrite) Seq(rewritten) else Nil
+        val insertFrames = if (stats.inserted > 0) Seq(inserts) else Nil
         val dataThunks: Seq[() => Seq[NewFile]] =
-          if (doRewrite && stats.inserted > 0 && rtMat.isEmpty)
-            Seq(writeData(rewritten.unionByName(inserts)))
-          else (if (doRewrite) Seq(writeData(rewritten)) else Nil) ++
-            (if (stats.inserted > 0) Seq(writeData(inserts)) else Nil)
+          if (rtMat.isEmpty) (rewriteFrames ++ insertFrames).reduceOption(_ unionByName _)
+            .toSeq.map(writeData(_, cowBytes(st, rewrittenRel, stats.inserted)))
+          else rewriteFrames.map(writeData(_, cowBytes(st, rewrittenRel, 0L))) ++
+            insertFrames.map(writeData(_, None))
         // row tracking + CDF: pre/post/delete change rows materialize their
         // stable ids into the cdc files (postimage version re-defaults to
         // THIS commit → null here, served from _commit_version by the
@@ -3024,9 +3077,7 @@ object DeltaSink {
     }.reduce(_ bitwiseOR _)
     // log-served row counts size the output; any file without stats falls
     // back to one count job (a partial sum would under-size silently)
-    val recordCounts = st.live.values.toSeq.map(_.stats.flatMap(s =>
-      Option(mapper.readTree(s).path("numRecords"))
-        .filter(_.isNumber).map(_.asLong())))
+    val recordCounts = st.live.values.toSeq.map(loggedRows)
     val totalRows =
       if (recordCounts.nonEmpty && recordCounts.forall(_.isDefined))
         recordCounts.flatten.sum

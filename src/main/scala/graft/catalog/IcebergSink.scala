@@ -446,6 +446,13 @@ object IcebergSink {
               Some(ByteBuffer.wrap(Array[Byte](if (b0) 1 else 0)))
             case (StringType, b0: org.apache.parquet.io.api.Binary) =>
               Some(ByteBuffer.wrap(b0.getBytes))
+            // spec Appendix D: the unscaled value as minimal big-endian
+            // two's-complement bytes, whichever physical form holds it
+            // (INT32/INT64 numbers, fixed-length big-endian bytes)
+            case (_: DecimalType, n: Number) =>
+              Some(ByteBuffer.wrap(java.math.BigInteger.valueOf(n.longValue()).toByteArray))
+            case (_: DecimalType, b0: org.apache.parquet.io.api.Binary) =>
+              Some(ByteBuffer.wrap(new java.math.BigInteger(b0.getBytes).toByteArray))
             case _ => None
           }
           if (merged.hasNonNullValue) {
@@ -2047,10 +2054,15 @@ object IcebergSink {
         col(c).as(c, new MetadataBuilder()
           .putLong("parquet.field.id", idByName(c).toLong).build())
       }: _*)
-    val eqFiles =
-      if (st.dataPaths.isEmpty) Nil // nothing older to kill
-      else writeMoved(keyDf, st, s"eqdel-$stamp")
-    val dataFiles = writeMorData(dedupedRows.select(names.map(col): _*), st, s"ups-$stamp")
+    // the delete file and the data file are independent writes into
+    // disjoint temp dirs: run them concurrently, the micros-timestamp pin
+    // held across both so their nested pins cannot race each other
+    val (eqFiles, dataFiles) = withMicrosTimestamps(spark) {
+      ParallelFiles.both(
+        if (st.dataPaths.isEmpty) Nil // nothing older to kill
+        else writeMoved(keyDf, st, s"eqdel-$stamp"),
+        writeMorData(dedupedRows.select(names.map(col): _*), st, s"ups-$stamp"))
+    }
     val inserted = dataFiles.map(_.rows).sum
     if (inserted == 0L && eqFiles.isEmpty) return (0L, 0L)
     commitMor(st, "overwrite",

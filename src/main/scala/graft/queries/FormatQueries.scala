@@ -11,16 +11,23 @@ import graft.catalog.Catalog
   * SAME exported files.
   *
   * Exports are derived deterministically from the driver's parquet testdata
-  * and written once per scale factor under /root/repo/target/export/<sf>/
-  * (idempotent via _SUCCESS marker). Export-path oracles reference
-  * `__SF__`, which Verify resolves to the scale directory's basename at
+  * and written once per scale factor under `target/export/<sf>/` of the
+  * checkout the process runs in (idempotent via _SUCCESS marker).
+  * Export-path oracles spell that directory `__EXPORT__/__SF__`, which
+  * Verify resolves to [[exportBase]] and the scale directory's basename at
   * dump time — the fixtures derive per rung, so the stress gate covers
   * them at every scale (TESTDATA.md).
   */
 object FormatQueries {
 
-  private def exportRoot(dir: String): String =
-    s"/root/repo/target/export/${new java.io.File(dir).getName}"
+  /** `target/export` under the process's working directory: each checkout
+    * derives, reads and writes its own fixtures, so two checkouts (a parent
+    * clone beside a change) never share tables. */
+  private[graft] val exportBase: String =
+    new java.io.File(System.getProperty("user.dir"), "target/export").getAbsolutePath
+
+  private[queries] def exportRoot(dir: String): String =
+    s"$exportBase/${new java.io.File(dir).getName}"
 
   private def ensure(out: String)(write: => Unit): String = {
     if (!new java.io.File(s"$out/_SUCCESS").exists()) write
@@ -974,7 +981,7 @@ object FormatQueries {
     },
     Some("""
       SELECT c_custkey, c_name, c_nationkey, c_acctbal, c_mktsegment
-      FROM read_csv('/root/repo/target/export/__SF__/customer_csv/*.csv', header=true,
+      FROM read_csv('__EXPORT__/__SF__/customer_csv/*.csv', header=true,
         columns={'c_custkey':'BIGINT','c_name':'VARCHAR','c_nationkey':'INTEGER',
                  'c_acctbal':'DOUBLE','c_mktsegment':'VARCHAR'})"""))
 
@@ -1025,7 +1032,7 @@ object FormatQueries {
     },
     Some("""
       SELECT doc_id, text, lang, source, n_chars
-      FROM read_json('/root/repo/target/export/__SF__/documents_jsonl/*.json',
+      FROM read_json('__EXPORT__/__SF__/documents_jsonl/*.json',
         format='newline_delimited',
         columns={'doc_id':'BIGINT','text':'VARCHAR','lang':'VARCHAR',
                  'source':'VARCHAR','n_chars':'BIGINT'})"""))
@@ -1046,7 +1053,7 @@ object FormatQueries {
     },
     Some("""
       SELECT event_type, count(*) AS n, count(DISTINCT user_id) AS n_users
-      FROM read_parquet('/root/repo/target/export/__SF__/events_hive/*/*.parquet',
+      FROM read_parquet('__EXPORT__/__SF__/events_hive/*/*.parquet',
                         hive_partitioning=1)
       WHERE event_type <> 'purchase'
       GROUP BY event_type"""))
@@ -2891,12 +2898,12 @@ object FormatQueries {
       WITH csv_side AS (
         SELECT lang, count(*) AS n, CAST(sum(n_chars) AS BIGINT) AS chars,
                'csv' AS src
-        FROM read_csv('/root/repo/target/export/__SF__/hf_store/datasets/acme/corpus/resolve/main/docs.csv', header=true)
+        FROM read_csv('__EXPORT__/__SF__/hf_store/datasets/acme/corpus/resolve/main/docs.csv', header=true)
         GROUP BY lang),
       json_side AS (
         SELECT lang, count(*) AS n, CAST(sum(length(text)) AS BIGINT) AS chars,
                'jsonl' AS src
-        FROM read_json('/root/repo/target/export/__SF__/hf_store/datasets/acme/corpus/resolve/main/docs.jsonl', format='newline_delimited')
+        FROM read_json('__EXPORT__/__SF__/hf_store/datasets/acme/corpus/resolve/main/docs.jsonl', format='newline_delimited')
         GROUP BY lang)
       SELECT lang, n, chars, src FROM csv_side
       UNION ALL SELECT lang, n, chars, src FROM json_side"""))

@@ -371,7 +371,7 @@ object PipelineQueries {
   // the persisted-and-served search is bit-identical to inline training —
   // the oracle replays the one deterministic chain.
   private def annScratch(dir: String): String =
-    s"/root/repo/target/export/${new java.io.File(dir).getName}"
+    FormatQueries.exportRoot(dir)
   private val s17 = QueryDef(
     "s17_ann_index_persisted",
     (s, dir) => {

@@ -65,7 +65,7 @@ object StreamingQueries {
     * stale siblings (>3 h old, safely past any live run) bounds disk. */
   private def freshRoot(dir: String, tag: String): java.io.File = {
     val base = new java.io.File(
-      s"/root/repo/target/export/${new java.io.File(dir).getName}/stream_fixtures")
+      s"${FormatQueries.exportRoot(dir)}/stream_fixtures")
     base.mkdirs()
     val cutoff = System.currentTimeMillis() - 3L * 3600 * 1000
     Option(base.listFiles()).getOrElse(Array.empty[java.io.File])
@@ -1783,7 +1783,7 @@ object StreamingQueries {
       val e = Tables.load(s, dir, "embeddings")
       val candidates = e.filter(col("vec_id") >= 5)
         .select(col("vec_id"), col("embedding"))
-      val idx = s"/root/repo/target/export/${new java.io.File(dir).getName}/ann_ivf_index"
+      val idx = s"${FormatQueries.exportRoot(dir)}/ann_ivf_index"
       graft.operators.AnnIndex.ensureIvf(candidates, idx, kCells = 4, iters = 2)
       val out = new java.io.File(freshRoot(dir, "x30"), "serve_delta").getPath
       val in = MemoryStream[(Long, Seq[Float])](1)
@@ -1892,7 +1892,7 @@ object StreamingQueries {
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = s.sqlContext
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       val d = Tables.load(s, dir, "documents")
-      val idx = s"/root/repo/target/export/${new java.io.File(dir).getName}/dedup_fuzzy_index"
+      val idx = s"${FormatQueries.exportRoot(dir)}/dedup_fuzzy_index"
       if (graft.operators.DedupIndex.ensureFuzzy(
           d.filter(col("doc_id") % 2 === 0), "text", "doc_id", idx))
         graft.operators.DedupIndex.appendFuzzy(
@@ -1955,7 +1955,7 @@ object StreamingQueries {
       val e = Tables.load(s, dir, "embeddings")
       val candidates = e.filter(col("vec_id") >= 5)
         .select(col("vec_id"), col("embedding"))
-      val idx = s"/root/repo/target/export/${new java.io.File(dir).getName}/ann_pq_index"
+      val idx = s"${FormatQueries.exportRoot(dir)}/ann_pq_index"
       graft.operators.AnnIndex.ensurePq(candidates, idx, m = 8, kCodes = 8,
         iters = 2, dim = 64)
       val out = new java.io.File(freshRoot(dir, "x32"), "serve_delta").getPath
@@ -2000,7 +2000,7 @@ object StreamingQueries {
       val e = Tables.load(s, dir, "embeddings")
       val candidates = e.filter(col("vec_id") >= 5)
         .select(col("vec_id"), col("embedding"))
-      val idx = s"/root/repo/target/export/${new java.io.File(dir).getName}/ann_sq_index"
+      val idx = s"${FormatQueries.exportRoot(dir)}/ann_sq_index"
       graft.operators.AnnIndex.ensureSq(candidates, idx)
       val out = new java.io.File(freshRoot(dir, "x34"), "serve_delta").getPath
       val in = MemoryStream[(Long, Seq[Float])](1)

@@ -640,8 +640,9 @@ object Streams {
         // last row per key within the batch (monotonic id = arrival order)
         val w = Window.partitionBy(keyCols.map(col): _*)
           .orderBy(col("__arr").desc)
-        // batch-lifetime cache: `latest` feeds the emptiness probe and both
-        // of the merge's joins (released at batch end)
+        // batch-lifetime cache: `latest` feeds both of the merge's joins
+        // (released at batch end). An empty batch needs no probe: its MERGE
+        // finds nothing changed and commits nothing.
         val latest = batch
           .withColumn("__arr", monotonically_increasing_id())
           .withColumn("__rn", row_number().over(w))
@@ -653,7 +654,7 @@ object Streams {
             .getFileSystem(sp.sessionState.newHadoopConf())
           val exists = fs.exists(new org.apache.hadoop.fs.Path(targetRoot, "_delta_log"))
           if (!exists) graft.catalog.DeltaSink.write(latest, targetRoot, Map.empty)
-          else if (!latest.isEmpty)
+          else
             graft.catalog.DeltaSink.mergeInto(sp, targetRoot, latest,
               keyCols.map(k => s"t.$k = s.$k").mkString(" AND "),
               matchedClauses = Seq(

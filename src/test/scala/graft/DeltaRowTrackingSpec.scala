@@ -125,6 +125,30 @@ class DeltaRowTrackingSpec extends SparkSpec {
     assert(after(100L)._1 === 15L, "insert allocates above the hwm")
   }
 
+  test("MERGE rewriting two files into one keeps every carried id; inserts stay unfused") {
+    val root = mkTable(tempDir("rt"))
+    val before = rowIds(root)
+    // 4 and 5 sit in different files, so both files rewrite
+    val src = Seq((4L, 111L), (5L, 222L), (100L, 1L), (101L, 2L)).toDF("k", "v")
+    val (up, ins) = DeltaSink.mergeInto(spark, root, src, "t.k = s.k",
+      matchedClauses = Seq(MergeMatchedClause(None, Some(Map("v" -> "s.v")))),
+      insertClauses = Seq(MergeInsertClause(None, None)))
+    assert(up === 2L && ins === 2L)
+    val after = rowIds(root)
+    (0L to 9L).foreach(k => assert(after(k)._1 === before(k)._1, s"key $k lost its id"))
+    // the commit sizes its rewrite to one file holding all ten carried and
+    // updated rows; the inserts land in their own files, so their ids
+    // start above the rewrite's allocation (10..19), as before the sizing
+    val commit = java.nio.file.Files.readString(
+      new java.io.File(root, f"_delta_log/${2L}%020d.json").toPath)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val addRecords = commit.split("\n").toSeq.map(json.readTree(_).path("add"))
+      .filterNot(_.isMissingNode)
+      .map(a => json.readTree(a.path("stats").asText()).path("numRecords").asLong())
+    assert(addRecords.contains(10L) && addRecords.sum === 12L, commit)
+    assert(Set(after(100L)._1, after(101L)._1) === Set(20L, 21L))
+  }
+
   test("overwrite removes echo the removed files' row-tracking fields; fresh ranges after") {
     val root = mkTable(tempDir("rt"))
     DeltaSink.write(

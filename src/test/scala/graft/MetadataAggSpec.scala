@@ -176,12 +176,21 @@ class MetadataAggSpec extends SparkSpec {
 
   private lazy val icebergRoot: String = {
     val root = tempDir("metaagg_ice").getPath + "/t"
+    // amt: DECIMAL(12,2), an INT64 unscaled value in parquet, with a
+    // negative bound; big: DECIMAL(38,6), a fixed-length byte array;
+    // qty: DECIMAL(7,2), an INT32
     val df = Seq((10L, 3, java.sql.Date.valueOf("2024-03-01"),
-        java.sql.Timestamp.valueOf("2024-03-01 10:30:00.123456")),
+        java.sql.Timestamp.valueOf("2024-03-01 10:30:00.123456"), "-1234.56", "1.000001"),
       (20L, 1, java.sql.Date.valueOf("2024-01-15"),
-        java.sql.Timestamp.valueOf("2024-01-15 00:00:01.000001")),
+        java.sql.Timestamp.valueOf("2024-01-15 00:00:01.000001"), "0.01",
+        "-98765432109876543210.123456"),
       (30L, 9, java.sql.Date.valueOf("2024-09-30"),
-        java.sql.Timestamp.valueOf("2024-09-30 23:59:59.999999"))).toDF("id", "prio", "d", "ts")
+        java.sql.Timestamp.valueOf("2024-09-30 23:59:59.999999"), "99999.99",
+        "12345678901234567890123456.654321"))
+      .toDF("id", "prio", "d", "ts", "amt", "big")
+      .withColumn("amt", $"amt".cast("decimal(12,2)"))
+      .withColumn("big", $"big".cast("decimal(38,6)"))
+      .withColumn("qty", ($"prio" - 5).cast("decimal(7,2)"))
     Sinks.copyTo(df.repartition(2), root, "iceberg")
     root
   }
@@ -189,7 +198,10 @@ class MetadataAggSpec extends SparkSpec {
   test("iceberg: count/min/max answer from manifest bounds with no file scan") {
     val t = Catalog.attach(spark, "ma_ice", "iceberg", Map("files" -> icebergRoot))
     val mk = () => t.agg(count(lit(1)).as("n"), min($"id").as("mn"),
-      max($"d").as("mxd"), min($"ts").as("mnts"), max($"ts").as("mxts"))
+      max($"d").as("mxd"), min($"ts").as("mnts"), max($"ts").as("mxts"),
+      min($"amt").as("mnamt"), max($"amt").as("mxamt"),
+      min($"big").as("mnbig"), max($"big").as("mxbig"),
+      min($"qty").as("mnqty"), max($"qty").as("mxqty"))
     val exp = scanAnswer(mk)
     assert(metadataOnly(mk), mk().queryExecution.executedPlan.toString)
     assert(mk().collect().toSeq == exp)
@@ -198,6 +210,12 @@ class MetadataAggSpec extends SparkSpec {
     assert(r.getDate(2) == java.sql.Date.valueOf("2024-09-30"))
     assert(r.getTimestamp(3) == java.sql.Timestamp.valueOf("2024-01-15 00:00:01.000001"))
     assert(r.getTimestamp(4) == java.sql.Timestamp.valueOf("2024-09-30 23:59:59.999999"))
+    assert(r.getDecimal(5) == new java.math.BigDecimal("-1234.56"))
+    assert(r.getDecimal(6) == new java.math.BigDecimal("99999.99"))
+    assert(r.getDecimal(7) == new java.math.BigDecimal("-98765432109876543210.123456"))
+    assert(r.getDecimal(8) == new java.math.BigDecimal("12345678901234567890123456.654321"))
+    assert(r.getDecimal(9) == new java.math.BigDecimal("-4.00"))
+    assert(r.getDecimal(10) == new java.math.BigDecimal("4.00"))
   }
 
   test("iceberg: row-level deletes disable the fold (rowsExact=false)") {

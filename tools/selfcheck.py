@@ -9,7 +9,12 @@ and compares values exactly (with a small report of diffs).
 
 SELFCHECK_SKIP=name1,name2 skips queries whose oracles are pinned to a
 different scale's export paths (c01/j01/h01 pin sf0.01 — the driver's
-correctness scale) when checking a derived stress set."""
+correctness scale) when checking a derived stress set.
+
+An oracle whose unresolved SQL (<outDir>/oracle_templates.json, written by
+Verify) names an absolute path fails as ABS_PATH: export paths are spelled
+__EXPORT__/__SF__ so each checkout reads its own fixtures. An oracle missing
+from that file fails as NO_TEMPLATE."""
 import sys, json, glob, os, re
 import duckdb
 import pandas as pd
@@ -51,6 +56,22 @@ def main():
             if m != sf_base:
                 results[name] = (f"SCALE_PIN: oracle reads target/export/{m}/ "
                                  f"but this run is {sf_base} — use __SF__")
+    # Checkout-path lint: an oracle that spells an absolute path reads the
+    # fixtures of whichever checkout that path names, not the one Verify
+    # ran in. Verify writes the unresolved oracles beside the resolved ones;
+    # every path in them must start from a placeholder (__EXPORT__). An
+    # oracle with no template (an outDir from an older Verify) fails too.
+    templates_path = os.path.join(out_dir, "oracle_templates.json")
+    templates = (json.load(open(templates_path))
+                 if os.path.exists(templates_path) else {})
+    for name in sorted(oracle):
+        if name not in templates:
+            results[name] = ("NO_TEMPLATE: oracle_templates.json has no entry "
+                             "for it — rerun Verify")
+            continue
+        for p in re.findall(r"'(/[^'/\s]+/[^'\s]+)'", templates[name]):
+            results[name] = (f"ABS_PATH: oracle names the absolute path {p} "
+                             "— spell the export root __EXPORT__")
     for name, sql in sorted(oracle.items()):
         if name in results:
             continue
