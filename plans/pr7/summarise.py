@@ -7,42 +7,13 @@ sink.
 
 Usage: python3 plans/pr7/summarise.py   (from the root of a checkout)
 """
-import glob, json, os, statistics, sys
+import glob, json, os, sys
 
 HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, os.path.join(HERE, "..", "..", "perfbench"))
+sys.path.insert(0, os.path.join(HERE, "..", "..", "tools"))
 from workloads import SINKS, STREAM_PATTERN, WARMUP_CYCLES  # noqa: E402
-
-BETTER = {"setup_s": -1, "ops_per_s": 1, "op_p50_ms": -1, "op_tail_ms": -1}
-
-
-def quartiles(xs):
-    q = statistics.quantiles(xs, n=4, method="inclusive") if len(xs) > 1 else [xs[0]] * 3
-    return q[0], statistics.median(xs), q[2]
-
-
-def end_to_end(workload):
-    pairs = {}
-    for side in ("parent", "change"):
-        for f in glob.glob(os.path.join(HERE, "runs", "*-%s-%s-*-trace0.json" % (side, workload))):
-            tag = os.path.basename(f).split("-")[0]
-            seed = json.load(open(f))["seed"]
-            pairs.setdefault((tag, seed), {})[side] = json.load(open(f))
-    pairs = [p for p in pairs.values() if len(p) == 2]
-    print("## %s: %d untraced pairs" % (workload, len(pairs)))
-    if not pairs:
-        return
-    print("| metric | parent q1 / median / q3 | change q1 / median / q3 | change wins |")
-    print("|---|---|---|---|")
-    for m, sign in BETTER.items():
-        par = [p["parent"]["end_to_end"][m]["value"] for p in pairs]
-        chg = [p["change"]["end_to_end"][m]["value"] for p in pairs]
-        wins = sum(1 for a, b in zip(par, chg) if (b - a) * sign > 0)
-        fmt = lambda q: " / ".join("%.3f" % v for v in q)
-        print("| %s | %s | %s | %d of %d |" % (m, fmt(quartiles(par)), fmt(quartiles(chg)), wins, len(pairs)))
-    fails = [(p[s]["failed"], p[s]["attempted"]) for p in pairs for s in ("parent", "change")]
-    print("failed ops over all these runs: %d of %d" % (sum(f for f, _ in fails), sum(a for _, a in fails)))
-    print()
+from ab_summary import end_to_end  # noqa: E402
 
 
 def traced_stream():
@@ -78,7 +49,7 @@ def traced_olap():
 
 
 if __name__ == "__main__":
-    end_to_end("stream_upsert")
-    end_to_end("olap_scan")
+    end_to_end(os.path.join(HERE, "runs"), "stream_upsert")
+    end_to_end(os.path.join(HERE, "runs"), "olap_scan")
     traced_stream()
     traced_olap()

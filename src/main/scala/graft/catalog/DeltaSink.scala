@@ -2198,9 +2198,98 @@ object DeltaSink {
     (dvFiles.size, dvFiles.map(_._2.dv.get.cardinality).sum)
   }
 
+  /** A snapshot's rows as a copy-on-write statement (UPDATE/DELETE and
+    * MERGE) reads them. Under column mapping mode `name` the data files,
+    * partitionValues keys and rewritten/cdc files carry PHYSICAL names
+    * while the caller's expressions see LOGICAL ones: `rows` reads
+    * physical and renames to logical, `toPhys` renames back before a
+    * write. */
+  private final class CowTarget(spark: org.apache.spark.sql.SparkSession, path: String,
+      st: TableState, schema: StructType, rootPath: Path,
+      fs: org.apache.hadoop.fs.FileSystem) {
+    import org.apache.spark.sql.functions.{broadcast, coalesce, col, input_file_name, lit}
+    private val mapped = st.conf.getOrElse("delta.columnMapping.mode", "none") == "name"
+    private def physName(f: StructField): String =
+      if (f.metadata.contains("delta.columnMapping.physicalName"))
+        f.metadata.getString("delta.columnMapping.physicalName")
+      else f.name
+    private val physByLogical: Map[String, String] =
+      schema.fields.map(f => f.name -> physName(f)).toMap
+    def physKey(c: String): String = physByLogical.getOrElse(c, c)
+    def toPhys(df: DataFrame): DataFrame =
+      if (!mapped) df
+      else df.select(df.columns.map(c => col(c).as(physKey(c))).toSeq: _*)
+
+    private def resolve(rel: String): String = {
+      val dp = new Path(java.net.URLDecoder.decode(rel, "UTF-8"))
+      fs.makeQualified(if (dp.isAbsolute) dp else new Path(rootPath, dp)).toString
+    }
+    // input_file_name() emits URI forms (file:///x); Path normalizes both
+    // spellings to one key space
+    private def norm(s: String): String = new Path(s).toString
+    private lazy val relByAbs: Map[String, String] =
+      st.live.keys.map(r => norm(resolve(r)) -> r).toMap
+    /** The live file (relative, as the log names it) a scanned `__file` is. */
+    def relOf(abs: String): String = relByAbs.getOrElse(norm(abs),
+      throw DeltaReadException(s"`$path`: scanned file $abs is not in the live set"))
+
+    // row tracking: rows a statement rewrites MOVE to new files, so the
+    // scan computes each row's stable id up front — materialized value when
+    // present, else file base + physical row position
+    val rtOn: Boolean = rowTrackingEnabled(st)
+    lazy val rtMat: Option[(String, String)] = if (rtOn) Some(rtMatCols(st, path)) else None
+
+    /** The rows of `files` (rel path -> partition values), tagged with their
+      * `__file` and, on a row-tracked table, their stable `__rt_id` and
+      * `__rt_ver`. One scan per partition tuple with the log's values
+      * attached (hive and non-hive layouts alike) reads just these files:
+      * a filter on the nondeterministic `__file` would prune none. */
+    def rows(files: Map[String, Map[String, String]]): DataFrame = {
+      val partCols = st.partCols
+      val dataFields = schema.fields.filterNot(f => partCols.contains(f.name))
+      val matColNames: Seq[String] = rtMat.toSeq.flatMap { case (a, b) => Seq(a, b) }
+      val dataSchema = StructType(dataFields.map(f =>
+        StructField(if (mapped) physName(f) else f.name, f.dataType, f.nullable)) ++
+        matColNames.map(n => StructField(n, LongType, nullable = true)))
+      val target0: DataFrame =
+        if (files.isEmpty)
+          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+            StructType(schema.fields :+ StructField("__file", StringType)))
+        else files.toSeq.groupBy(_._2).toSeq.map { case (pv, group) =>
+          var s0 = spark.read.schema(dataSchema).parquet(group.map(f => resolve(f._1)): _*)
+          // _metadata must be addressed on the DIRECT scan, before any select
+          if (rtOn) s0 = s0.withColumn("__rt_idx", col("_metadata.row_index"))
+          if (mapped)
+            s0 = s0.select(dataFields.map(f => col(physName(f)).as(f.name)).toSeq
+              ++ matColNames.map(col)
+              ++ (if (rtOn) Seq(col("__rt_idx")) else Nil): _*)
+          partCols.foreach { pc =>
+            val f = schema(schema.fieldIndex(pc))
+            s0 = s0.withColumn(pc, lit(pv.getOrElse(physKey(pc), null)).cast(f.dataType))
+          }
+          s0.select(schema.fieldNames.map(col).toSeq ++
+            Seq(input_file_name().as("__file")) ++
+            matColNames.map(col) ++
+            (if (rtOn) Seq(col("__rt_idx")) else Nil): _*)
+        }.reduce(_ unionByName _)
+      rtMat match {
+        case None => target0
+        case _ if files.isEmpty => target0
+          .withColumn("__rt_id", lit(null).cast("long"))
+          .withColumn("__rt_ver", lit(null).cast("long"))
+        case Some((matId, matVer)) =>
+          target0.withColumn("__rt_key", graft.sources.PathKeys.keyCol(col("__file")))
+            .join(broadcast(rtInfoDf(spark, st, resolve)), Seq("__rt_key"), "left")
+            .withColumn("__rt_id", coalesce(col(matId), col("__rt_base") + col("__rt_idx")))
+            .withColumn("__rt_ver", coalesce(col(matVer), col("__rt_def")))
+            .drop(Seq("__rt_key", "__rt_idx", "__rt_base", "__rt_def") ++ matColNames: _*)
+      }
+    }
+  }
+
   private def copyOnWriteDml(spark: org.apache.spark.sql.SparkSession, path: String,
       predicateSql: String, setExprs: Map[String, String]): Long = {
-    import org.apache.spark.sql.functions.{broadcast, coalesce, col, expr, input_file_name, lit}
+    import org.apache.spark.sql.functions.{col, expr, lit}
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(rootPath, "_delta_log")
@@ -2221,21 +2310,8 @@ object DeltaSink {
     val schema = DataType.fromJson(st.schemaJson.getOrElse(
       throw DeltaReadException(s"`$path`: no metaData action"))).asInstanceOf[StructType]
     val cdf = st.conf.get("delta.enableChangeDataFeed").exists(_.toBoolean)
-    // mode=name: data files, partitionValues keys, and rewritten/cdc files
-    // carry PHYSICAL names; the predicate and SET expressions see LOGICAL
-    // ones — read physical, rename to logical, rename back before writing
-    val mapped = cmMode == "name"
-    def physName(f: org.apache.spark.sql.types.StructField): String =
-      if (f.metadata.contains("delta.columnMapping.physicalName"))
-        f.metadata.getString("delta.columnMapping.physicalName")
-      else f.name
-    val physByLogical: Map[String, String] =
-      schema.fields.map(f => f.name -> physName(f)).toMap
-    def physKey(c: String): String = physByLogical.getOrElse(c, c)
-    def toPhys(df: DataFrame): DataFrame =
-      if (!mapped) df
-      else df.select(df.columns.map(c =>
-        col(c).as(physByLogical.getOrElse(c, c))).toSeq: _*)
+    val cow = new CowTarget(spark, path, st, schema, rootPath, fs)
+    import cow.{physKey, rtMat, rtOn, toPhys}
 
     // DELETE whose predicate references ONLY partition columns is
     // METADATA-ONLY (delta-spark's partition-delete fast path — the
@@ -2293,72 +2369,16 @@ object DeltaSink {
       }
     }
 
-    def resolve(rel: String): String = {
-      val dp = new Path(java.net.URLDecoder.decode(rel, "UTF-8"))
-      fs.makeQualified(if (dp.isAbsolute) dp else new Path(rootPath, dp)).toString
-    }
-    // input_file_name() emits URI forms (file:///x); Path normalizes both
-    // spellings to one key space
-    def norm(s: String): String = new Path(s).toString
-    val relByAbs: Map[String, String] = live.keys.map(r => norm(resolve(r)) -> r).toMap
-
-    // one scan over the live files, log partition values attached per file
-    // (union of per-partition-tuple scans — hive AND non-hive layouts);
-    // within each branch the predicate pushes down to parquet as usual
-    val dataFields = schema.fields.filterNot(f => partColsT.contains(f.name))
-    val dataSchema0 = StructType(dataFields.map(f =>
-      StructField(if (mapped) physName(f) else f.name, f.dataType, f.nullable)))
-    // row tracking: survivors (and updated rows) MOVE to new files, so the
-    // scan computes each row's stable id up front — materialized value when
-    // present, else file base + physical row position
-    val rtOn = rowTrackingEnabled(st)
-    val rtMat: Option[(String, String)] = if (rtOn) Some(rtMatCols(st, path)) else None
-    val matColNames: Seq[String] = rtMat.toSeq.flatMap { case (a, b) => Seq(a, b) }
-    val dataSchema =
-      if (!rtOn) dataSchema0
-      else StructType(dataSchema0.fields ++
-        matColNames.map(n => StructField(n, LongType, nullable = true)))
-    val byTuple = live.toSeq.groupBy(_._2)
-    val scans = byTuple.toSeq.map { case (pv, files) =>
-      var s0 = spark.read.schema(dataSchema).parquet(files.map(f => resolve(f._1)): _*)
-      // _metadata must be addressed on the DIRECT scan, before any select
-      if (rtOn) s0 = s0.withColumn("__rt_idx", col("_metadata.row_index"))
-      if (mapped) // physical file columns → the logical names the SQL sees
-        s0 = s0.select(dataFields.map(f => col(physName(f)).as(f.name)).toSeq
-          ++ matColNames.map(col)
-          ++ (if (rtOn) Seq(col("__rt_idx")) else Nil): _*)
-      partColsT.foreach { pc =>
-        val f = schema(schema.fieldIndex(pc))
-        // add.partitionValues are keyed by PHYSICAL names under mapping
-        s0 = s0.withColumn(pc, lit(pv.getOrElse(physKey(pc), null)).cast(f.dataType))
-      }
-      s0.select(schema.fieldNames.map(col).toSeq ++
-        Seq(input_file_name().as("__file")) ++
-        matColNames.map(col) ++
-        (if (rtOn) Seq(col("__rt_idx")) else Nil): _*)
-    }
-    val full0 = scans.reduce(_ unionByName _)
-    val full = rtMat match {
-      case None => full0
-      case Some((matId, matVer)) =>
-        full0.withColumn("__rt_key", graft.sources.PathKeys.keyCol(col("__file")))
-          .join(broadcast(rtInfoDf(spark, st, resolve)), Seq("__rt_key"), "left")
-          .withColumn("__rt_id", coalesce(col(matId), col("__rt_base") + col("__rt_idx")))
-          .withColumn("__rt_ver", coalesce(col(matVer), col("__rt_def")))
-          .drop(Seq("__rt_key", "__rt_idx", "__rt_base", "__rt_def") ++ matColNames: _*)
-    }
     val rtCarry: Seq[org.apache.spark.sql.Column] =
       if (rtOn) Seq(col("__rt_id"), col("__rt_ver")) else Nil
     val pred = expr(predicateSql)
-    val affectedAbs = full.filter(pred).select(col("__file")).distinct()
-      .collect().map(_.getString(0)).toSeq
-    if (affectedAbs.isEmpty) return 0L
-    val affectedRel = affectedAbs.map(a => relByAbs.getOrElse(norm(a),
-      throw DeltaReadException(s"`$path`: scanned file $a is not in the live set")))
+    val affectedRel = cow.rows(live).filter(pred).select(col("__file")).distinct()
+      .collect().map(r => cow.relOf(r.getString(0))).toSeq
+    if (affectedRel.isEmpty) return 0L
 
-    // survivors + changed rows come from the SAME bounded re-scan of only
-    // the affected files
-    val affectedScan = full.filter(col("__file").isin(affectedAbs: _*))
+    // survivors + changed rows come from the SAME re-scan of only the
+    // affected files
+    val affectedScan = cow.rows(affectedRel.map(rel => rel -> live(rel)).toMap)
       .select(schema.fieldNames.map(col).toSeq ++ rtCarry: _*)
     val isUpdate = setExprs.nonEmpty
     setExprs.keys.find(k => !schema.fieldNames.contains(k)).foreach { k =>
@@ -2473,7 +2493,7 @@ object DeltaSink {
       matchedClauses: Seq[MergeMatchedClause] = Nil,
       bySourceClauses: Seq[MergeMatchedClause] = Nil,
       insertClauses: Seq[MergeInsertClause] = Nil): (Long, Long) = {
-    import org.apache.spark.sql.functions.{coalesce, col, input_file_name, lit, when}
+    import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(rootPath, "_delta_log")
@@ -2490,80 +2510,10 @@ object DeltaSink {
           "MERGE; use a delta connector jar")
     val schema = DataType.fromJson(st.schemaJson.getOrElse(
       throw DeltaReadException(s"`$path`: no metaData action"))).asInstanceOf[StructType]
-    // mode=name plumbing, same as copyOnWriteDml: physical files in/out,
-    // logical names for every expression the caller wrote
-    val mapped = cmMode == "name"
-    def physName(f: org.apache.spark.sql.types.StructField): String =
-      if (f.metadata.contains("delta.columnMapping.physicalName"))
-        f.metadata.getString("delta.columnMapping.physicalName")
-      else f.name
-    val physByLogical: Map[String, String] =
-      schema.fields.map(f => f.name -> physName(f)).toMap
-    def physKey(c: String): String = physByLogical.getOrElse(c, c)
-    def toPhys(df: DataFrame): DataFrame =
-      if (!mapped) df
-      else df.select(df.columns.map(c =>
-        col(c).as(physByLogical.getOrElse(c, c))).toSeq: _*)
     val cdf = st.conf.get("delta.enableChangeDataFeed").exists(_.toBoolean)
-
-    def resolve(rel: String): String = {
-      val dp = new Path(java.net.URLDecoder.decode(rel, "UTF-8"))
-      fs.makeQualified(if (dp.isAbsolute) dp else new Path(rootPath, dp)).toString
-    }
-    def norm(s: String): String = new Path(s).toString
-    val relByAbs: Map[String, String] = live.keys.map(r => norm(resolve(r)) -> r).toMap
-
-    val dataFields = schema.fields.filterNot(f => partColsT.contains(f.name))
-    val dataSchema0 = StructType(dataFields.map(f =>
-      StructField(if (mapped) physName(f) else f.name, f.dataType, f.nullable)))
-    // row tracking: rewritten files carry every target row's stable id
-    // materialized (updated rows keep their id, re-default their commit
-    // version; carried rows keep both); inserts default fresh
-    val rtOn = rowTrackingEnabled(st)
-    val rtMat: Option[(String, String)] = if (rtOn) Some(rtMatCols(st, path)) else None
-    val matColNames: Seq[String] = rtMat.toSeq.flatMap { case (a, b) => Seq(a, b) }
-    val dataSchema =
-      if (!rtOn) dataSchema0
-      else StructType(dataSchema0.fields ++
-        matColNames.map(n => StructField(n, LongType, nullable = true)))
-    // the rows of `files` (rel path -> partition values), tagged with their
-    // `__file` and, on a row-tracked table, their stable id and version
-    def targetOf(files: Map[String, Map[String, String]]): DataFrame = {
-      val target0: DataFrame =
-        if (files.isEmpty)
-          spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            StructType(schema.fields :+ StructField("__file", StringType)))
-        else files.toSeq.groupBy(_._2).toSeq.map { case (pv, group) =>
-          var s0 = spark.read.schema(dataSchema).parquet(group.map(f => resolve(f._1)): _*)
-          if (rtOn) s0 = s0.withColumn("__rt_idx", col("_metadata.row_index"))
-          if (mapped)
-            s0 = s0.select(dataFields.map(f => col(physName(f)).as(f.name)).toSeq
-              ++ matColNames.map(col)
-              ++ (if (rtOn) Seq(col("__rt_idx")) else Nil): _*)
-          partColsT.foreach { pc =>
-            val f = schema(schema.fieldIndex(pc))
-            s0 = s0.withColumn(pc, lit(pv.getOrElse(physKey(pc), null)).cast(f.dataType))
-          }
-          s0.select(schema.fieldNames.map(col).toSeq ++
-            Seq(input_file_name().as("__file")) ++
-            matColNames.map(col) ++
-            (if (rtOn) Seq(col("__rt_idx")) else Nil): _*)
-        }.reduce(_ unionByName _)
-      rtMat match {
-        case None => target0
-        case _ if files.isEmpty => target0
-          .withColumn("__rt_id", lit(null).cast("long"))
-          .withColumn("__rt_ver", lit(null).cast("long"))
-        case Some((matId, matVer)) =>
-          import org.apache.spark.sql.functions.broadcast
-          target0.withColumn("__rt_key", graft.sources.PathKeys.keyCol(col("__file")))
-            .join(broadcast(rtInfoDf(spark, st, resolve)), Seq("__rt_key"), "left")
-            .withColumn("__rt_id", coalesce(col(matId), col("__rt_base") + col("__rt_idx")))
-            .withColumn("__rt_ver", coalesce(col(matVer), col("__rt_def")))
-            .drop(Seq("__rt_key", "__rt_idx", "__rt_base", "__rt_def") ++ matColNames: _*)
-      }
-    }
-    val target = targetOf(live)
+    val cow = new CowTarget(spark, path, st, schema, rootPath, fs)
+    import cow.{physKey, rtMat, rtOn, toPhys}
+    val target = cow.rows(live)
 
     MergePlan.run(source, condSql, matchedClauses, bySourceClauses, insertClauses,
         schema.fieldNames.toSeq, m => DeltaReadException(s"`$path`: $m")) { plan =>
@@ -2584,8 +2534,7 @@ object DeltaSink {
       if (!stats.changed) (0L, 0L)
       else {
         val affectedAbs = (stats.files ++ stats.bsFiles).distinct
-        val affectedRel = affectedAbs.map(a => relByAbs.getOrElse(norm(a),
-          throw DeltaReadException(s"`$path`: scanned file $a is not in the live set")))
+        val affectedRel = affectedAbs.map(cow.relOf)
         val updatePairs = matchedPairs.filter(matched.updates)
         val deletePairs = matchedPairs.filter(matched.deletes)
         val bsDeleteRows = if (!bySource.active) null else bsRows.filter(bySource.deletes)
@@ -2603,10 +2552,9 @@ object DeltaSink {
         val joinedAff =
           if (!doRewrite) null
           else {
-            // read just the affected files (a filter on the nondeterministic
-            // `__file` would not prune the scan): the sized write below
-            // then runs as many tasks as the bytes it rewrites need
-            val j0 = targetOf(affectedRel.map(rel => rel -> live(rel)).toMap)
+            // read just the affected files: the sized write below then runs
+            // as many tasks as the bytes it rewrites need
+            val j0 = cow.rows(affectedRel.map(rel => rel -> live(rel)).toMap)
               .alias("t").join(s1.alias("s"), plan.cond, "left")
             val j1 = if (!matched.condActive) j0
               else j0.withColumn("__mc", when(matchedFlag, matched.classify).otherwise(lit(-1)))

@@ -65,6 +65,19 @@ object Engine {
       .config("spark.hadoop.fs.https.impl", "graft.sources.HttpsFileSystem")
       .config("spark.hadoop.fs.hf.impl", "graft.sources.HfFileSystem")
       .config("spark.ui.enabled", "false")
+      // Whole-stage codegen's class cache, so each query shape compiles
+      // once per JVM. It is a static, JVM-wide conf: Spark reads it when it
+      // first generates code, so only the first session's value counts.
+      // Spark's 100 entries are split over 4 segments of 25, and a query
+      // shape that was evicted compiles twice per run (on the driver for
+      // exchanges and broadcasts, then in the task). Measured on local[4]:
+      // the benchmark's olap_scan needs about 180 classes and recompiled
+      // about 13 per op at 100 entries (1.5 at 1000); its stream_upsert
+      // needs about 76. A class averages 10.6 K chars of source and 3.3 KB
+      // of bytecode, so 1000 entries hold a few tens of MB at most. Dates
+      // and ints are inlined into the generated Java, so each new literal
+      // value still compiles a class.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
 
   @volatile private var cached: SparkSession = _
 

@@ -1,6 +1,8 @@
 package graft.sqlapi
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 import scala.collection.mutable
@@ -14,7 +16,11 @@ object SqlApi {
   /** Two explain styles, mirroring `EXPLAIN (STYLE pg|duckdb)` (reference:
     * src/hooks/utility/explain.rs:39-155): "pg" → one-line scan summary
     * (+ wall-clock when analyze), "duckdb" → the engine's full plan
-    * (Spark formatted mode; analyze adds timing). */
+    * (Spark formatted mode; analyze adds timing). Analyze also reports the
+    * generated classes compiled while the query ran and their Janino time
+    * (`Codegen: <n> classes compiled in <ms> ms`); a query shape whose
+    * classes are still in Spark's codegen cache compiles none. The count is
+    * JVM-wide: a query running concurrently in the same JVM adds its own. */
   def explain(spark: SparkSession, sql: String, style: String = "pg",
       analyze: Boolean = false): String = {
     val df = spark.sql(sql)
@@ -25,10 +31,14 @@ object SqlApi {
         // Catalyst collapse the projection; with parquet aggregate pushdown
         // a SELECT * analyze would reduce to footer metadata and report
         // microseconds for a scan of gigabytes.)
+        val compiles0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val compileNs0 = CodeGenerator.compileTime
         val t0 = System.nanoTime()
         df.write.format("noop").mode("overwrite").save()
         val ms = (System.nanoTime() - t0) / 1e6
-        f"%nExecution Time: $ms%.3f ms"
+        val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - compiles0
+        val compileMs = (CodeGenerator.compileTime - compileNs0) / 1e6
+        f"%nExecution Time: $ms%.3f ms%nCodegen: $compiles classes compiled in $compileMs%.3f ms"
       } else ""
     // pg style prints the one-line scan summary only for SELECT statements —
     // the reference emits `DuckDB Scan:` only on the pushdown (SELECT) path

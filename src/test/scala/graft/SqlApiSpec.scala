@@ -13,6 +13,23 @@ class SqlApiSpec extends SparkSpec {
     assert(analyzed.contains("Execution Time"))
   }
 
+  test("EXPLAIN ANALYZE reports compile cost; a repeated shape compiles nothing") {
+    Tables.registerAll(spark, sf)
+    // an int literal no other query uses is inlined into the generated
+    // Java, so the first run compiles its classes
+    val q = "SELECT l_returnflag, sum(l_linenumber * 7919) FROM lineitem GROUP BY 1"
+    val line = """Codegen: (\d+) classes compiled in [0-9.]+ ms""".r
+    def classes(out: String): Long =
+      line.findFirstMatchIn(out).map(_.group(1).toLong).getOrElse(fail(out))
+    val first = SqlApi.explain(spark, q, "duckdb", analyze = true)
+    assert(first.indexOf("Codegen:") > first.indexOf("Execution Time"))
+    assert(classes(first) > 0L)
+    assert(classes(SqlApi.explain(spark, q, "duckdb", analyze = true)) === 0L)
+    assert(classes(SqlApi.explain(spark, q, "pg", analyze = true)) === 0L)
+    assert(!SqlApi.explain(spark, q, "duckdb").contains("Codegen:"))
+    assert(!SqlApi.explain(spark, q, "pg").contains("Codegen:"))
+  }
+
   test("explain duckdb style returns the full physical plan") {
     Tables.registerAll(spark, sf)
     val out = SqlApi.explain(spark, "SELECT l_returnflag, sum(l_quantity) FROM lineitem GROUP BY 1", "duckdb")

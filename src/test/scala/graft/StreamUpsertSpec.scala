@@ -10,7 +10,9 @@ import graft.streaming.Streams
   * copy-on-write MERGE sizes its output from the log, so a small table
   * stays one data file however many batches land, and an Iceberg upsert
   * commits its equality-delete file and its data file in one snapshot
-  * (written concurrently) with the batch ledger still guarding replays. */
+  * (written concurrently) with the batch ledger still guarding replays.
+  * A Delta copy-on-write statement (MERGE, UPDATE, DELETE) reads only the
+  * files it rewrites. */
 class StreamUpsertSpec extends SparkSpec {
 
   import spark.implicits._
@@ -63,43 +65,71 @@ class StreamUpsertSpec extends SparkSpec {
     assert(got === model)
   }
 
-  test("delta MERGE: the sized rewrite reads only the file it rewrites") {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-    val root = tempDir("cow_scan").getPath + "/t"
-    // 8 files of 50 rows, key k in file k / 50
+  /** A Delta table of 8 files of 50 rows, key k in file k / 50. */
+  private def eightFiles(name: String): String = {
+    val root = tempDir(name).getPath + "/t"
     DeltaSink.write(spark.range(0, 400).selectExpr("id AS k", "CAST(id AS STRING) AS v")
       .repartitionByRange(8, $"k"), root, Map.empty)
     assert(liveFiles(root).size === 8)
-    // parquet records read by each task that wrote data
-    val writers = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    root
+  }
+
+  /** Parquet records read by every task `body` runs, and by each task that
+    * wrote data. */
+  private def recordsRead(body: => Unit): (Seq[Long], Seq[Long]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[(Long, Boolean)]()
     val listener = new SparkListener {
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
         val m = t.taskMetrics
-        if (m != null && m.outputMetrics.bytesWritten > 0) {
-          writers.add(m.inputMetrics.recordsRead); ()
+        if (m != null) {
+          tasks.add((m.inputMetrics.recordsRead, m.outputMetrics.bytesWritten > 0)); ()
         }
       }
     }
     spark.sparkContext.addSparkListener(listener)
-    try {
-      DeltaSink.mergeInto(spark, root, Seq((7L, "x")).toDF("k", "v"), "t.k = s.k",
-        matchedClauses = Seq(MergeMatchedClause(None, Some(Map("v" -> "s.v")))))
-    } finally {
+    try body
+    finally {
       // let the async listener bus drain before reading the queue
       var last = -1
       var waited = 0
-      while (waited < 3000 && last != writers.size) {
-        last = writers.size; Thread.sleep(200); waited += 200
+      while (waited < 3000 && last != tasks.size) {
+        last = tasks.size; Thread.sleep(200); waited += 200
       }
       spark.sparkContext.removeSparkListener(listener)
     }
+    val all = tasks.asScala.toSeq
+    (all.map(_._1), all.collect { case (n, true) => n })
+  }
+
+  test("delta MERGE: the sized rewrite reads only the file it rewrites") {
+    val root = eightFiles("cow_scan")
+    val (_, writers) = recordsRead {
+      DeltaSink.mergeInto(spark, root, Seq((7L, "x")).toDF("k", "v"), "t.k = s.k",
+        matchedClauses = Seq(MergeMatchedClause(None, Some(Map("v" -> "s.v")))))
+    }
     // one writer task over the 50 rows of the one affected file, not a
     // one-task scan of all 400
-    assert(writers.asScala.toSeq === Seq(50L))
+    assert(writers === Seq(50L))
     assert(liveFiles(root).size === 8)
     val got = DeltaNative.read(spark, root, Map.empty).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(got === (0L until 400L).map(k => k -> (if (k == 7L) "x" else k.toString)).toMap)
+  }
+
+  test("delta DELETE: the changed-row count and the survivor write read only the affected file") {
+    val root = eightFiles("cow_dml_scan")
+    val (all, writers) = recordsRead {
+      assert(DeltaSink.deleteWhere(spark, root, "k = 7") === 1L)
+    }
+    // the survivors of the one affected file, written by one task
+    assert(writers === Seq(50L))
+    // the affected-file search reads the table once (400); the count and
+    // the survivor write read the affected file's 50 rows each
+    assert(all.sum === 500L)
+    assert(liveFiles(root).size === 8)
+    val got = DeltaNative.read(spark, root, Map.empty).collect().map(_.getLong(0)).toSet
+    assert(got === (0L until 400L).toSet - 7L)
   }
 
   test("iceberg upsert: one snapshot holds the delete and data files; a replayed batch is a no-op") {
