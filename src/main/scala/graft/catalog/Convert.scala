@@ -39,6 +39,7 @@ import org.apache.spark.sql.types._
   * O(files) cost the original write paid), so plan-time skipping AND
   * metadata-only aggregates work on the converted table immediately. */
 object Convert {
+  import graft.sources.DeltaLog
   import graft.sources.IcebergNative.IcebergReadException
 
   private val mapper = new ObjectMapper()
@@ -72,12 +73,13 @@ object Convert {
     val conf = spark.sessionState.newHadoopConf()
     val fs = rootPath.getFileSystem(conf)
 
-    val st = DeltaSink.replayState(spark, rootPath, forbidDv = "convert_to_iceberg")
+    val st = DeltaLog.snapshot(spark, path)
+    DeltaSink.requireNoDv(st, rootPath, "convert_to_iceberg")
     if (!st.exists) throw IcebergReadException(
       s"convert_to_iceberg: `$path` has no _delta_log — not a Delta table")
     val schemaJson = st.schemaJson.getOrElse(throw IcebergReadException(
       s"convert_to_iceberg: `$path` log declares no schema"))
-    val mapping = st.conf.getOrElse("delta.columnMapping.mode", "none")
+    val mapping = st.columnMappingMode
     if (mapping != "none") throw IcebergReadException(
       s"convert_to_iceberg: `$path` uses columnMapping mode=$mapping — parquet " +
         "physical names differ from logical names, which an id-less Iceberg " +
@@ -547,21 +549,13 @@ object Convert {
 
     // ---- existing _delta_log: only our own conversions may re-sync ----
     val logDir = new Path(rootPath, "_delta_log")
-    val st = DeltaSink.replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, path)
     if (st.exists) {
-      val commitRe = """(\d{20})\.json""".r
-      val commits = fs.listStatus(logDir).toSeq
-        .filter(s0 => commitRe.pattern.matcher(s0.getPath.getName).matches())
-        .sortBy(_.getPath.getName)
-      val markers = commits.map { c =>
-        val in = fs.open(c.getPath)
-        val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        text.linesIterator.flatMap { ln =>
-          val node = mapper.readTree(ln)
+      val markers = st.commits.map { case (_, c) =>
+        DeltaLog.readActions(fs, c.getPath).flatMap { node =>
           Option(node.path("commitInfo").path(IcebergSnapshotKey))
             .filter(!_.isMissingNode).map(_.asLong())
-        }.toSeq.headOption
+        }.headOption
       }
       if (markers.exists(_.isEmpty)) throw IcebergReadException(
         s"convert_to_delta: `$path` already has a _delta_log this converter " +

@@ -22,10 +22,16 @@ import org.apache.spark.sql.types._
   * else is driver metadata — one footer read per written file (the same
   * O(new files) delta-spark pays to collect stats) and one commit JSON.
   *
+  * Every statement starts from `sources/DeltaLog.snapshot`, the same log
+  * replay the native reader uses: version, schema, configuration, table
+  * id, protocol, live files keyed by path, txn ledger and domains.
+  *
   * Single-writer contract: the commit fails loudly if the target version
   * file already exists — optimistic-concurrency retry is a coordinator
   * feature this library intentionally leaves to a connector jar. */
 object DeltaSink {
+  import graft.sources.DeltaLog
+  import graft.sources.DeltaLog.{FileEntry, Protocol, Snapshot, physicalName}
   import graft.sources.DeltaNative.DeltaReadException
 
   private val mapper = new ObjectMapper()
@@ -61,7 +67,7 @@ object DeltaSink {
     val rtOpt = options.get("row_tracking").exists(_.toBoolean)
 
     // ---- existing-table state (checkpoint + commit JSONs after it) ----
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, path)
     val creating = !st.exists
     val tableSchemaJson = st.schemaJson
     val tablePartCols = st.partCols
@@ -85,7 +91,7 @@ object DeltaSink {
       dfW = dfId
       identitySchemaUpdate = idSchema
       validateIncomingRows(st, dfW, path)
-      val cmMode = tableConf.getOrElse("delta.columnMapping.mode", "none")
+      val cmMode = st.columnMappingMode
       if (cmMode != "none" && cmMode != "name")
         throw DeltaReadException(
           s"`$path`: column mapping mode `$cmMode` needs parquet field ids; " +
@@ -104,13 +110,9 @@ object DeltaSink {
           s"`$path`: partition_by ${partCols.mkString(",")} does not match the " +
             s"table's partitioning ${tablePartCols.mkString(",")}")
       if (cmMode == "name") {
-        def physName(f: org.apache.spark.sql.types.StructField): String =
-          if (f.metadata.contains("delta.columnMapping.physicalName"))
-            f.metadata.getString("delta.columnMapping.physicalName")
-          else f.name
-        val physByLogical = existing.fields.map(f => f.name -> physName(f)).toMap
+        val physByLogical = existing.fields.map(f => f.name -> physicalName(f)).toMap
         dfW = dfW.select(existing.fields.map(f =>
-          org.apache.spark.sql.functions.col(f.name).as(physName(f))).toSeq: _*)
+          org.apache.spark.sql.functions.col(f.name).as(physicalName(f))).toSeq: _*)
         partColsW = partCols.map(c => physByLogical.getOrElse(c, c))
       }
       // re-stating the CURRENT property is a no-op (a streaming sink sends
@@ -178,13 +180,12 @@ object DeltaSink {
       lines += s"""{"metaData":${mapper.writeValueAsString(meta)}}"""
     }
     // an advanced identity high-water mark re-commits the metaData with the
-    // updated field metadata (same table id — metaDataJson probes the log)
+    // updated field metadata (same table id)
     identitySchemaUpdate.foreach { ns =>
-      lines += s"""{"metaData":${metaDataJson(spark, fs, logDir, ns,
-        tablePartCols, tableConf)}}"""
+      lines += s"""{"metaData":${metaDataJson(st.tableId, ns, tablePartCols, tableConf)}}"""
     }
     if (overwrite && !creating) live.foreach { case (p, e) =>
-      lines += s"""{"remove":{"path":${esc(p)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true${rtEchoFields(e)}}}"""
+      lines += removeJson(p, e, System.currentTimeMillis(), dataChange = true)
     }
     val alloc = new RowIdAllocator(st, version, forceActive = creating && rtOpt)
     newFiles.foreach { f =>
@@ -218,90 +219,6 @@ object DeltaSink {
   private final case class NewFile(rel: String, size: Long, modTime: Long,
     partitionValues: Map[String, String], stats: String)
 
-  /** One live file in the replayed writer-side state. */
-  /** `add.deletionVector` carried through replay verbatim — checkpoints
-    * and re-emitted adds must not lose it (a dropped DV resurrects
-    * deleted rows). */
-  private[catalog] final case class DvInfo(storageType: String, payload: String,
-    offset: Option[Int], sizeInBytes: Int, cardinality: Long)
-
-  private[catalog] final case class LiveEntry(partitionValues: Map[String, String],
-    size: Long, modTime: Long, stats: Option[String], dv: Option[DvInfo],
-    // PROTOCOL.md Row Tracking: the add action's fresh-row-id base and the
-    // commit version its rows default to — replayed so rewrites can
-    // preserve stable ids and checkpoints can carry them
-    baseRowId: Option[Long] = None,
-    defaultRowCommitVersion: Option[Long] = None) {
-    def hasDv: Boolean = dv.isDefined
-  }
-
-  /** The table's protocol action, replayed so commits that NEED a feature
-    * (deletion vectors) can verify support and emit the spec's upgrade
-    * action when absent — an external protocol-compliant reader ignores
-    * features the protocol does not declare. */
-  private[catalog] final case class ProtoInfo(minReader: Int, minWriter: Int,
-      readerFeatures: Set[String], writerFeatures: Set[String]) {
-    def supportsDv: Boolean =
-      minReader >= 3 && minWriter >= 7 &&
-        readerFeatures.contains("deletionVectors") &&
-        writerFeatures.contains("deletionVectors")
-    /** PROTOCOL.md: upgrading a legacy protocol to table features must
-      * carry over every feature the legacy versions implied, or a writer
-      * honoring only the feature list would stop enforcing them. */
-    def withDeletionVectors: ProtoInfo = {
-      val legacyWriter = Seq(2 -> "appendOnly", 2 -> "invariants",
-        3 -> "checkConstraints", 4 -> "changeDataFeed", 4 -> "generatedColumns",
-        5 -> "columnMapping", 6 -> "identityColumns")
-        .collect { case (v, f) if minWriter >= v && minWriter < 7 => f }
-      val legacyReader =
-        if (minReader >= 2 && minReader < 3) Set("columnMapping") else Set.empty[String]
-      ProtoInfo(3, 7,
-        readerFeatures ++ legacyReader + "deletionVectors",
-        writerFeatures ++ legacyWriter + "deletionVectors")
-    }
-    def supportsColumnMapping: Boolean =
-      (minReader >= 2 && minWriter >= 5 && minWriter < 7) ||
-        (minWriter >= 7 && writerFeatures.contains("columnMapping") &&
-          (minReader < 3 || readerFeatures.contains("columnMapping")))
-    def withColumnMapping: ProtoInfo =
-      if (minReader >= 3 || minWriter >= 7) {
-        // table-features protocol: the feature must be declared explicitly
-        val nr = math.max(minReader, 2)
-        ProtoInfo(nr, minWriter,
-          if (nr >= 3) readerFeatures + "columnMapping" else readerFeatures,
-          if (minWriter >= 7) writerFeatures + "columnMapping" else writerFeatures)
-      } else ProtoInfo(math.max(minReader, 2), math.max(minWriter, 5),
-        readerFeatures, writerFeatures)
-    def json: String = {
-      val rf = if (minReader >= 3)
-        s""","readerFeatures":[${readerFeatures.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}]"""
-      else ""
-      val wf = if (minWriter >= 7)
-        s""","writerFeatures":[${writerFeatures.toSeq.sorted.map("\"" + _ + "\"").mkString(",")}]"""
-      else ""
-      s"""{"protocol":{"minReaderVersion":$minReader,"minWriterVersion":$minWriter$rf$wf}}"""
-    }
-  }
-
-  /** Writer-side table state: latest version, declared shape, live files,
-    * and the txn ledger — from the checkpoint (classic single-file,
-    * multi-part, or V2 UUID parquet manifest + sidecars) plus the commit
-    * JSONs after it. The same bounded driver replay every method here
-    * shares; V2 JSON manifests stay read-only (DeltaNative reads them;
-    * this writer never produces them). */
-  private[catalog] final case class TableState(version: Long, schemaJson: Option[String],
-    partCols: Seq[String], conf: Map[String, String],
-    live: scala.collection.mutable.LinkedHashMap[String, LiveEntry],
-    txnVersions: Map[String, Long], exists: Boolean,
-    protocol: Option[ProtoInfo] = None,
-    // live domainMetadata: domain → configuration JSON-string (PROTOCOL.md
-    // "Domain Metadata" — latest action per domain wins, removed=true
-    // tombstones drop the domain; a checkpoint carries the live set)
-    domains: Map[String, String] = Map.empty,
-    // highest inCommitTimestamp observed in the replayed commits — the
-    // monotonicity floor for the NEXT commit on an ICT table
-    lastIct: Option[Long] = None)
-
   // ------------------------------------------------ writer protocol gates
   // PROTOCOL.md: "a writer must implement every writer feature the table's
   // protocol lists (or implies through a legacy version) before committing"
@@ -332,7 +249,7 @@ object DeltaSink {
 
   /** The writer features the table DEMANDS: the v7 list verbatim, or the
     * set a legacy minWriterVersion implies. */
-  private def demandedWriterFeatures(p: ProtoInfo): Set[String] =
+  private def demandedWriterFeatures(p: Protocol): Set[String] =
     if (p.minWriter >= 7) p.writerFeatures
     else Seq(2 -> "appendOnly", 2 -> "invariants", 3 -> "checkConstraints",
       4 -> "changeDataFeed", 4 -> "generatedColumns", 5 -> "columnMapping",
@@ -345,7 +262,7 @@ object DeltaSink {
     * forbids the operation. `removesData` = the op deletes or rewrites
     * live rows (DELETE/UPDATE/MERGE/overwrite); OPTIMIZE's dataChange=false
     * re-binning is explicitly allowed by the append-only rule. */
-  private[catalog] def writerGates(st: TableState, path: String,
+  private[catalog] def writerGates(st: Snapshot, path: String,
       removesData: Boolean, opName: String): Unit = {
     st.protocol.foreach { p =>
       val demanded = demandedWriterFeatures(p)
@@ -383,14 +300,14 @@ object DeltaSink {
   private[catalog] val MatRowIdKey = "delta.rowTracking.materializedRowIdColumnName"
   private[catalog] val MatRowVerKey = "delta.rowTracking.materializedRowCommitVersionColumnName"
 
-  private[catalog] def rowTrackingSupported(st: TableState): Boolean =
+  private[catalog] def rowTrackingSupported(st: Snapshot): Boolean =
     st.protocol.exists(p => p.minWriter >= 7 &&
       p.writerFeatures.contains("rowTracking"))
-  private[catalog] def rowTrackingEnabled(st: TableState): Boolean =
+  private[catalog] def rowTrackingEnabled(st: Snapshot): Boolean =
     rowTrackingSupported(st) &&
       st.conf.get("delta.enableRowTracking").exists(_.toBoolean)
 
-  private def rowIdHwm(st: TableState): Long =
+  private def rowIdHwm(st: Snapshot): Long =
     st.domains.get(RowTrackingDomain).flatMap { c =>
       val n = mapper.readTree(c).path("rowIdHighWaterMark")
       if (n.isNumber) Some(n.asLong()) else None
@@ -399,7 +316,7 @@ object DeltaSink {
   /** A live file's row count as its add stats log it; None when the file
     * carries no stats or no numRecords. Output sizing reads it: ZORDER's
     * row target and the copy-on-write byte estimate ([[cowBytes]]). */
-  private def loggedRows(e: LiveEntry): Option[Long] =
+  private def loggedRows(e: FileEntry): Option[Long] =
     e.stats.map(s => mapper.readTree(s).path("numRecords")).filter(_.isNumber).map(_.asLong())
 
   private def statsNumRecords(stats: String, path: String): Long = {
@@ -415,7 +332,7 @@ object DeltaSink {
     * advanced high-water mark (one domainMetadata action per commit that
     * allocated anything). Inactive (empty strings, no line) on tables
     * whose protocol does not list rowTracking. */
-  private[catalog] final class RowIdAllocator(st: TableState,
+  private[catalog] final class RowIdAllocator(st: Snapshot,
       commitVersion: Long, forceActive: Boolean = false) {
     val active: Boolean = forceActive || rowTrackingSupported(st)
     private var next: Long = rowIdHwm(st) + 1
@@ -435,16 +352,24 @@ object DeltaSink {
           s"""{"rowIdHighWaterMark":${next - 1}}""")},"removed":false}}""")
   }
 
+  /** The remove action of a live file. It carries the file's deletion
+    * vector, since readers reconcile on (path, DV id): a bare remove would
+    * leave a DV-carrying add live. */
+  private def removeJson(rel: String, e: FileEntry, nowMs: Long,
+      dataChange: Boolean): String =
+    s"""{"remove":{"path":${mapper.writeValueAsString(rel)},"deletionTimestamp":$nowMs,"dataChange":$dataChange""" +
+      e.dv.map(d => s""","deletionVector":${d.json}""").getOrElse("") + rtEchoFields(e) + "}}"
+
   /** Echo a live entry's row-tracking fields on a re-emitted add (DV
     * re-adds, RESTORE, clone) — losing them would re-default every row. */
-  private def rtEchoFields(e: LiveEntry): String =
+  private def rtEchoFields(e: FileEntry): String =
     e.baseRowId.map(b => s""","baseRowId":$b""").getOrElse("") +
       e.defaultRowCommitVersion.map(v => s""","defaultRowCommitVersion":$v""").getOrElse("")
 
   /** The materialized column names preservation writes under — demanded
     * from the table configuration (this writer's creation path always sets
     * them alongside delta.enableRowTracking). */
-  private def rtMatCols(st: TableState, path: String): (String, String) = {
+  private def rtMatCols(st: Snapshot, path: String): (String, String) = {
     val id = st.conf.getOrElse(MatRowIdKey, throw DeltaReadException(
       s"`$path`: delta.enableRowTracking is set but the table configuration " +
         s"lacks $MatRowIdKey — cannot preserve stable row ids; use a delta " +
@@ -460,7 +385,7 @@ object DeltaSink {
     * broadcast-joined against scans that must compute each row's stable
     * id: coalesce(materialized, base + row_index). */
   private def rtInfoDf(spark: org.apache.spark.sql.SparkSession,
-      st: TableState, resolve: String => String): DataFrame = {
+      st: Snapshot, resolve: String => String): DataFrame = {
     val schema = StructType(Seq(
       StructField("__rt_key", StringType, nullable = false),
       StructField("__rt_base", LongType, nullable = true),
@@ -479,7 +404,7 @@ object DeltaSink {
     * One validation job per rule, each pruned to the first violation; rules
     * are rare (0–2 per table), so this stays one cheap pass over the frame.
     * NULL check-results PASS per SQL CHECK semantics. */
-  private[catalog] def validateIncomingRows(st: TableState, rows: DataFrame,
+  private[catalog] def validateIncomingRows(st: Snapshot, rows: DataFrame,
       path: String): Unit = {
     import org.apache.spark.sql.functions.{col, expr}
     val schemaOpt = st.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
@@ -534,7 +459,7 @@ object DeltaSink {
   /** Generated columns the incoming frame OMITS are computed from their
     * `delta.generationExpression` in the table's declared column order;
     * frames that already carry every column pass through unchanged. */
-  private[catalog] def computeGeneratedColumns(st: TableState, df: DataFrame): DataFrame = {
+  private[catalog] def computeGeneratedColumns(st: Snapshot, df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.{col, expr}
     val schemaOpt = st.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
     val missing = schemaOpt.toSeq.flatMap(_.fields.toSeq.collect {
@@ -562,7 +487,7 @@ object DeltaSink {
     * DEFAULT), and the high-water mark advances past the supplied extreme.
     * Returns the (possibly widened) frame + the updated table schema to
     * re-commit as metaData when any mark moved. */
-  private[catalog] def applyIdentityColumns(st: TableState, df: DataFrame,
+  private[catalog] def applyIdentityColumns(st: Snapshot, df: DataFrame,
       path: String): (DataFrame, Option[StructType]) = {
     import org.apache.spark.sql.functions.col
     val schemaOpt = st.schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
@@ -628,280 +553,13 @@ object DeltaSink {
     (out, if (changed) Some(newSchema) else None)
   }
 
-  /** `stopAt = Some(v)` replays only through commit v — the historical
-    * state RESTORE diffs against. Rejects loudly when v is below a folded
-    * checkpoint (its commits may be gone) or does not exist. */
-  private[catalog] def replayState(spark: org.apache.spark.sql.SparkSession,
-      rootPath: Path, forbidDv: String = "",
-      stopAt: Option[Long] = None): TableState = {
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
-    val live = scala.collection.mutable.LinkedHashMap[String, LiveEntry]()
-    if (!fs.exists(logDir))
-      return TableState(-1L, None, Nil, Map.empty, live, Map.empty, exists = false)
-    val commitRe = """(\d{20})\.json""".r
-    val allCommits = fs.listStatus(logDir).toSeq.flatMap(st => st.getPath.getName match {
-      case commitRe(v) => Some((v.toLong, st.getPath))
-      case _ => None
-    }).sortBy(_._1)
-    var schemaJson: Option[String] = None
-    var partCols: Seq[String] = Nil
-    var conf = Map.empty[String, String]
-    var proto: Option[ProtoInfo] = None
-    val txns = scala.collection.mutable.Map[String, Long]()
-    val domains = scala.collection.mutable.LinkedHashMap[String, String]()
-    var lastIct: Option[Long] = None
-    // one JSON action (commit line or V2 JSON-manifest line) applied to the
-    // replay state — shared by the commit loop and the JSON-manifest path
-    // (remove/commitInfo stay commit-only; a checkpoint's removes are
-    // expired tombstones)
-    def applyActionNode(n: com.fasterxml.jackson.databind.JsonNode): Unit = {
-      if (n.has("txn")) {
-        val t = n.path("txn")
-        val app = t.path("appId").asText()
-        txns(app) = math.max(t.path("version").asLong(),
-          txns.getOrElse(app, Long.MinValue))
-      }
-      if (n.has("protocol")) {
-        val p = n.path("protocol")
-        def feats(k: String): Set[String] = {
-          val f = p.path(k)
-          if (f.isMissingNode || f.isNull) Set.empty
-          else f.elements().asScala.map(_.asText()).toSet
-        }
-        proto = Some(ProtoInfo(p.path("minReaderVersion").asInt(1),
-          p.path("minWriterVersion").asInt(2),
-          feats("readerFeatures"), feats("writerFeatures")))
-      }
-      if (n.has("metaData")) {
-        val m = n.path("metaData")
-        schemaJson = Some(m.path("schemaString").asText())
-        partCols = m.path("partitionColumns").elements().asScala.map(_.asText()).toSeq
-        conf = m.path("configuration").fields().asScala
-          .map(e => e.getKey -> e.getValue.asText()).toMap
-      }
-      if (n.has("add")) {
-        val a = n.path("add")
-        val dvNode = a.path("deletionVector")
-        val dvInfo: Option[DvInfo] =
-          if (dvNode.isMissingNode || dvNode.isNull) None
-          else Some(DvInfo(dvNode.path("storageType").asText(),
-            dvNode.path("pathOrInlineDv").asText(),
-            Option(dvNode.path("offset")).filter(!_.isMissingNode).map(_.asInt()),
-            dvNode.path("sizeInBytes").asInt(),
-            dvNode.path("cardinality").asLong()))
-        if (dvInfo.isDefined && forbidDv.nonEmpty) throw DeltaReadException(
-          s"`$rootPath`: deletion-vector files — use a delta connector jar " +
-            s"for $forbidDv")
-        def optLong(k: String): Option[Long] = {
-          val x = a.path(k)
-          if (x.isNumber) Some(x.asLong()) else None
-        }
-        live(a.path("path").asText()) = LiveEntry(
-          a.path("partitionValues").fields().asScala
-            .map(e => e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap,
-          a.path("size").asLong(0L),
-          a.path("modificationTime").asLong(0L),
-          Option(a.path("stats")).filter(s => s.isTextual && s.asText().nonEmpty)
-            .map(_.asText()),
-          dvInfo,
-          baseRowId = optLong("baseRowId"),
-          defaultRowCommitVersion = optLong("defaultRowCommitVersion"))
-      }
-      if (n.has("domainMetadata")) {
-        val d = n.path("domainMetadata")
-        if (d.path("removed").asBoolean(false)) domains.remove(d.path("domain").asText())
-        else domains(d.path("domain").asText()) = d.path("configuration").asText("")
-      }
-    }
-    // classic checkpoint (single OR multi-part — delta-spark splits large
-    // logs across N parts; the union of parts is the state): ingest its
-    // protocol/metaData/add rows
-    val lastCpInfo: Option[(Long, Option[Int])] = {
-      val lc = new Path(logDir, "_last_checkpoint")
-      if (!fs.exists(lc)) None
-      else {
-        val in = fs.open(lc)
-        val node = try mapper.readTree(in) finally in.close()
-        Some((node.path("version").asLong(),
-          Option(node.path("parts")).filter(!_.isMissingNode).map(_.asInt())))
-      }
-    }
-    val lastCp: Option[Long] = lastCpInfo.map(_._1)
-    lastCpInfo.foreach { case (cpV, parts) =>
-      val cpFiles: Seq[Path] = parts match {
-        case None =>
-          val classic = new Path(logDir, f"$cpV%020d.checkpoint.parquet")
-          if (fs.exists(classic)) Seq(classic)
-          else {
-            // V2 checkpoints are UUID-named and found by LISTING (same rule
-            // as the native reader); each manifest — parquet OR json — is
-            // complete on its own
-            val prefix = f"$cpV%020d.checkpoint."
-            val cands = fs.listStatus(logDir).map(_.getPath).filter { p =>
-              val n = p.getName
-              n.startsWith(prefix) && (n.endsWith(".parquet") || n.endsWith(".json"))
-            }
-            if (cands.isEmpty) throw DeltaReadException(
-              s"`$rootPath`: _last_checkpoint names version $cpV but no " +
-                "matching checkpoint manifest exists in _delta_log")
-            Seq(cands.maxBy(_.getName))
-          }
-        case Some(n) => (1 to n).map(i =>
-          new Path(logDir, f"$cpV%020d.checkpoint.$i%010d.$n%010d.parquet"))
-      }
-      cpFiles.find(!fs.exists(_)).foreach { missing =>
-        throw DeltaReadException(
-          s"`$rootPath`: _last_checkpoint names version $cpV but " +
-            s"${missing.getName} does not exist")
-      }
-      def resolveSidecar(p: String): String = {
-        val raw = new Path(java.net.URLDecoder.decode(p, "UTF-8"))
-        (if (raw.isAbsolute) raw
-         else new Path(new Path(logDir, "_sidecars"), raw)).toString
-      }
-      // V2 JSON manifest: newline-delimited actions (the commit encoding)
-      // applied directly; its file actions live in parquet sidecars, read
-      // through the SAME typed ingestion below
-      val cpOpt: Option[org.apache.spark.sql.DataFrame] =
-        if (cpFiles.length == 1 && cpFiles.head.getName.endsWith(".json")) {
-          val in = fs.open(cpFiles.head)
-          val mLines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-          val sidecarNames = Seq.newBuilder[String]
-          mLines.filter(_.nonEmpty).map(mapper.readTree).foreach { n =>
-            applyActionNode(n)
-            if (n.has("sidecar"))
-              sidecarNames += n.path("sidecar").path("path").asText()
-          }
-          val scPaths = sidecarNames.result().map(resolveSidecar)
-          if (scPaths.isEmpty) None
-          else Some(spark.read.option("mergeSchema", "true").parquet(scPaths: _*))
-        } else {
-          // mergeSchema: parts may split action kinds, the union of part
-          // schemas is the action schema (same rule as the native reader)
-          var cp0 = spark.read.option("mergeSchema", "true")
-            .parquet(cpFiles.map(_.toString): _*)
-          // V2 parquet manifest: its file actions live behind sidecar
-          // pointers — union the sidecar frames in
-          if (cp0.schema.fieldNames.contains("sidecar")) {
-            val scPaths = cp0.filter(org.apache.spark.sql.functions.col("sidecar").isNotNull)
-              .selectExpr("sidecar.path").collect().map(_.getString(0)).toSeq
-              .map(resolveSidecar)
-            if (scPaths.nonEmpty)
-              cp0 = spark.read.option("mergeSchema", "true")
-                .parquet((cpFiles.map(_.toString) ++ scPaths): _*)
-          }
-          Some(cp0)
-        }
-      cpOpt.foreach { cp =>
-      val cols = cp.schema.fieldNames.toSet
-      if (cols.contains("protocol")) {
-        val sub = cp.schema("protocol").dataType.asInstanceOf[StructType].fieldNames.toSet
-        val featSels =
-          if (sub.contains("readerFeatures") && sub.contains("writerFeatures"))
-            Seq("protocol.readerFeatures", "protocol.writerFeatures")
-          else Seq("CAST(NULL AS ARRAY<STRING>)", "CAST(NULL AS ARRAY<STRING>)")
-        cp.filter(org.apache.spark.sql.functions.col("protocol").isNotNull)
-          .selectExpr(Seq("protocol.minReaderVersion", "protocol.minWriterVersion")
-            ++ featSels: _*)
-          .collect().foreach { r =>
-            proto = Some(ProtoInfo(r.getInt(0), r.getInt(1),
-              if (r.isNullAt(2)) Set.empty else r.getSeq[String](2).toSet,
-              if (r.isNullAt(3)) Set.empty else r.getSeq[String](3).toSet))
-          }
-      }
-      if (cols.contains("metaData")) {
-        cp.filter(org.apache.spark.sql.functions.col("metaData").isNotNull)
-          .selectExpr("metaData.schemaString", "metaData.partitionColumns",
-            "metaData.configuration")
-          .collect().foreach { r =>
-            schemaJson = Some(r.getString(0))
-            partCols = if (r.isNullAt(1)) Nil else r.getSeq[String](1)
-            conf = if (r.isNullAt(2)) Map.empty else r.getMap[String, String](2).toMap
-          }
-      }
-      if (cols.contains("txn")) {
-        cp.filter(org.apache.spark.sql.functions.col("txn").isNotNull)
-          .selectExpr("txn.appId", "txn.version").collect().foreach { r =>
-            txns(r.getString(0)) = math.max(r.getLong(1),
-              txns.getOrElse(r.getString(0), Long.MinValue))
-          }
-      }
-      if (cols.contains("domainMetadata")) {
-        cp.filter(org.apache.spark.sql.functions.col("domainMetadata").isNotNull)
-          .selectExpr("domainMetadata.domain", "domainMetadata.configuration",
-            "domainMetadata.removed").collect().foreach { r =>
-            if (!r.isNullAt(2) && r.getBoolean(2)) domains.remove(r.getString(0))
-            else domains(r.getString(0)) = Option(r.getString(1)).getOrElse("")
-          }
-      }
-      if (cols.contains("add")) {
-        val sub = cp.schema("add").dataType.asInstanceOf[StructType].fieldNames.toSet
-        val dvSels =
-          if (sub.contains("deletionVector")) Seq(
-            "add.deletionVector.storageType", "add.deletionVector.pathOrInlineDv",
-            "add.deletionVector.offset", "add.deletionVector.sizeInBytes",
-            "add.deletionVector.cardinality")
-          else Seq("CAST(NULL AS STRING)", "CAST(NULL AS STRING)",
-            "CAST(NULL AS INT)", "CAST(NULL AS INT)", "CAST(NULL AS BIGINT)")
-        val rtSels = Seq("baseRowId", "defaultRowCommitVersion").map(f =>
-          if (sub.contains(f)) s"add.$f" else "CAST(NULL AS BIGINT)")
-        cp.filter(org.apache.spark.sql.functions.col("add").isNotNull)
-          .selectExpr(Seq("add.path", "add.partitionValues", "add.size",
-            "add.modificationTime", "add.stats") ++ dvSels ++ rtSels: _*)
-          .collect().foreach { r =>
-            val dvInfo: Option[DvInfo] =
-              if (r.isNullAt(5)) None
-              else Some(DvInfo(r.getString(5), r.getString(6),
-                if (r.isNullAt(7)) None else Some(r.getInt(7)),
-                r.getInt(8), r.getLong(9)))
-            if (dvInfo.isDefined && forbidDv.nonEmpty) throw DeltaReadException(
-              s"`$rootPath`: deletion-vector files — use a delta connector jar " +
-                s"for $forbidDv")
-            live(r.getString(0)) = LiveEntry(
-              if (r.isNullAt(1)) Map.empty else r.getMap[String, String](1).toMap,
-              if (r.isNullAt(2)) 0L else r.getLong(2),
-              if (r.isNullAt(3)) 0L else r.getLong(3),
-              Option(r.getString(4)).filter(_.nonEmpty),
-              dvInfo,
-              baseRowId = if (r.isNullAt(10)) None else Some(r.getLong(10)),
-              defaultRowCommitVersion = if (r.isNullAt(11)) None else Some(r.getLong(11)))
-          }
-      }
-      }
-    }
-    stopAt.foreach { v =>
-      if (lastCp.exists(_ > v)) throw DeltaReadException(
-        s"`$rootPath`: state at version $v is below the folded checkpoint " +
-          s"(${lastCp.get}) — its commits may be vacuumed; use a delta " +
-          "connector jar")
-      if (!allCommits.exists(_._1 == v) && !lastCp.contains(v))
-        throw DeltaReadException(
-          s"`$rootPath`: version $v does not exist (latest: " +
-            s"${(lastCp.toSeq ++ allCommits.map(_._1)).maxOption.getOrElse(-1L)})")
-    }
-    val commits = allCommits.filter { case (v, _) =>
-      lastCp.forall(v > _) && stopAt.forall(v <= _)
-    }
-    commits.foreach { case (_, p) =>
-      val in = fs.open(p)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-      lines.filter(_.nonEmpty).map(mapper.readTree).foreach { n =>
-        applyActionNode(n)
-        if (n.has("remove")) live.remove(n.path("remove").path("path").asText())
-        if (n.has("commitInfo") && n.path("commitInfo").has("inCommitTimestamp"))
-          lastIct = Some(math.max(n.path("commitInfo").path("inCommitTimestamp").asLong(),
-            lastIct.getOrElse(Long.MinValue)))
-      }
-    }
-    val version = stopAt.getOrElse(
-      (lastCp.toSeq ++ allCommits.map(_._1)).maxOption.getOrElse(-1L))
-    TableState(version, schemaJson, partCols, conf, live, txns.toMap,
-      exists = lastCp.isDefined || allCommits.nonEmpty, protocol = proto,
-      domains = domains.toMap, lastIct = lastIct)
-  }
+  /** The gate of the statements that do not carry deletion vectors
+    * through (MERGE, copy-on-write UPDATE/DELETE, OPTIMIZE, ZORDER,
+    * RESTORE, convert_to_iceberg): reject when a LIVE file has one. A DV
+    * that a later commit removed (REORG PURGE) no longer blocks them. */
+  private[catalog] def requireNoDv(st: Snapshot, rootPath: Path, op: String): Unit =
+    if (st.live.values.exists(_.dv.isDefined)) throw DeltaReadException(
+      s"`$rootPath`: deletion-vector files — use a delta connector jar for $op")
 
   /** RESTORE TABLE ... TO VERSION — Delta's RESTORE command: ONE new
     * commit whose add/remove set flips the live-file set back to version
@@ -941,9 +599,9 @@ object DeltaSink {
       dstPath: String): Long = {
     val srcRoot = new Path(srcPath)
     val fs = srcRoot.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, srcRoot)
+    val st = DeltaLog.snapshot(spark, srcPath)
     if (!st.exists) throw DeltaReadException(s"`$srcPath`: not a Delta table")
-    if (st.live.values.exists(_.hasDv)) throw DeltaReadException(
+    if (st.live.values.exists(_.dv.isDefined)) throw DeltaReadException(
       s"`$srcPath`: table carries deletion vectors — their storage paths are " +
         "table-root-relative and would dangle from a clone; purge first " +
         "(purgeDeletionVectors), then clone")
@@ -964,13 +622,13 @@ object DeltaSink {
         s"${esc(k)}:${if (v == null) "null" else esc(v)}"
       }.mkString("{", ",", "}")
       s"""{"add":{"path":${esc(absUri(rel))},"partitionValues":$pv,""" +
-        s""""size":${e.size},"modificationTime":${e.modTime},"dataChange":true${rtEchoFields(e)}""" +
+        s""""size":${e.size},"modificationTime":${e.modificationTime},"dataChange":true${rtEchoFields(e)}""" +
         e.stats.map(s0 => s""","stats":${esc(s0)}""").getOrElse("") + "}}"
     }
     val protoJson = st.protocol.map(_.json).getOrElse(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
-    fs.mkdirs(dstLog) // metaDataJson probes the log dir for an existing id
-    val metaData = metaDataJson(spark, fs, dstLog,
+    fs.mkdirs(dstLog)
+    val metaData = metaDataJson(None,
       DataType.fromJson(schemaJson).asInstanceOf[StructType], st.partCols, st.conf)
     // live domains ride along — dropping delta.rowTracking's high-water
     // mark would let the clone's first append allocate row-id ranges that
@@ -999,7 +657,7 @@ object DeltaSink {
     import org.apache.spark.sql.functions.expr
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
     val key = s"delta.constraints.${name.toLowerCase}"
@@ -1028,7 +686,7 @@ object DeltaSink {
     val lines = Seq(
       s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"ADD CONSTRAINT","operationParameters":{"name":${esc(name)},"expr":${esc(exprSql)}}}}""") ++
       protoLine ++
-      Seq(s"""{"metaData":${metaDataJson(spark, fs, logDir, schema, st.partCols,
+      Seq(s"""{"metaData":${metaDataJson(st.tableId, schema, st.partCols,
         st.conf + (key -> exprSql))}}""")
     writeCommit(fs, logDir, st.version + 1, withIct(st, lines), path)
   }
@@ -1039,7 +697,7 @@ object DeltaSink {
       name: String): Unit = {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
     val key = s"delta.constraints.${name.toLowerCase}"
@@ -1052,7 +710,7 @@ object DeltaSink {
     val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
     val lines = Seq(
       s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"DROP CONSTRAINT","operationParameters":{"name":${esc(name)}}}}""",
-      s"""{"metaData":${metaDataJson(spark, fs, logDir, schema, st.partCols,
+      s"""{"metaData":${metaDataJson(st.tableId, schema, st.partCols,
         st.conf - key)}}""")
     writeCommit(fs, logDir, st.version + 1, withIct(st, lines), path)
   }
@@ -1082,14 +740,14 @@ object DeltaSink {
       }
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
     val logDir = new Path(rootPath, "_delta_log")
     val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
     val lines = Seq(
       s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"SET TBLPROPERTIES"}}""",
-      s"""{"metaData":${metaDataJson(spark, fs, logDir, schema, st.partCols,
+      s"""{"metaData":${metaDataJson(st.tableId, schema, st.partCols,
         st.conf ++ props)}}""")
     writeCommit(fs, logDir, st.version + 1, withIct(st, lines), path)
   }
@@ -1098,7 +756,7 @@ object DeltaSink {
       colName: String, typeDdl: String): Unit = {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
     val schema = DataType.fromJson(st.schemaJson.getOrElse(throw DeltaReadException(
@@ -1112,7 +770,7 @@ object DeltaSink {
     // with column mapping active, every field needs an id + physicalName
     // (protocol: Column Mapping) — new columns get a fresh synthetic
     // physical name so a later rename of THIS column stays metadata-only
-    val mapped = st.conf.getOrElse("delta.columnMapping.mode", "none") != "none"
+    val mapped = st.columnMappingMode != "none"
     val newField =
       if (!mapped) StructField(colName, dt, nullable = true)
       else {
@@ -1134,7 +792,7 @@ object DeltaSink {
     lazy val esc = (s: String) => mapper.writeValueAsString(s)
     val lines = Seq(
       s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"ADD COLUMNS","operationParameters":{"column":${esc(colName)},"type":${esc(typeDdl)}}}}""",
-      s"""{"metaData":${metaDataJson(spark, fs, logDir, newSchema, st.partCols, newConf)}}""")
+      s"""{"metaData":${metaDataJson(st.tableId, newSchema, st.partCols, newConf)}}""")
     writeCommit(fs, logDir, st.version + 1, withIct(st, lines), path)
   }
 
@@ -1161,7 +819,7 @@ object DeltaSink {
       path: String, op: String, colName: String, renameTo: Option[String]): Unit = {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
     val schema = DataType.fromJson(st.schemaJson.getOrElse(throw DeltaReadException(
@@ -1177,7 +835,7 @@ object DeltaSink {
         "partition-column evolution needs a table rewrite")
     if (renameTo.isEmpty && schema.fields.length <= 1) throw DeltaReadException(
       s"ALTER TABLE: cannot drop the only column of `$path`")
-    val curMode = st.conf.getOrElse("delta.columnMapping.mode", "none")
+    val curMode = st.columnMappingMode
     if (curMode != "none" && curMode != "name") throw DeltaReadException(
       s"ALTER TABLE: `$path` uses column mapping mode `$curMode`; this writer " +
         "evolves mode `name` tables only")
@@ -1220,45 +878,19 @@ object DeltaSink {
     // column mapping must be declared in the protocol before a compliant
     // reader honors physicalName resolution (legacy reader 2 / writer 5,
     // or the columnMapping feature on a table-features protocol)
-    val curProto = st.protocol.getOrElse(ProtoInfo(1, 2, Set.empty, Set.empty))
+    val curProto = st.protocol.getOrElse(Protocol(1, 2, Set.empty, Set.empty))
     if (!curProto.supportsColumnMapping) lines += curProto.withColumnMapping.json
-    lines += s"""{"metaData":${metaDataJson(spark, fs, logDir,
+    lines += s"""{"metaData":${metaDataJson(st.tableId,
       StructType(newFields), st.partCols, newConf)}}"""
     writeCommit(fs, logDir, st.version + 1, withIct(st, lines.result()), path)
   }
 
-  /** metaData action JSON with the table id preserved (latest commit
-    * metaData, else the checkpoint's, else fresh). */
-  private def metaDataJson(spark: org.apache.spark.sql.SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, logDir: Path,
-      newSchema: StructType, partCols: Seq[String],
-      conf: Map[String, String]): String = {
-    val commitRe = """(\d{20})\.json""".r
-    val tableId: String = {
-      val fromCommits = fs.listStatus(logDir).toSeq
-        .filter(s0 => commitRe.pattern.matcher(s0.getPath.getName).matches())
-        .sortBy(_.getPath.getName).reverseIterator.flatMap { c =>
-          val in = fs.open(c.getPath)
-          val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-          finally in.close()
-          text.linesIterator.map(mapper.readTree)
-            .collectFirst { case n if n.has("metaData") =>
-              n.path("metaData").path("id").asText() }
-        }.find(_.nonEmpty)
-      fromCommits.orElse {
-        val cpFile = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
-          .filter(n => n.contains(".checkpoint.") && n.endsWith(".parquet"))
-          .sorted.lastOption
-        cpFile.flatMap { name =>
-          val cp = spark.read.parquet(new Path(logDir, name).toString)
-          if (!cp.schema.fieldNames.contains("metaData")) None
-          else cp.where("metaData is not null").selectExpr("metaData.id")
-            .collect().headOption.map(_.getString(0))
-        }
-      }.getOrElse(java.util.UUID.randomUUID().toString)
-    }
+  /** metaData action JSON carrying the table's id (a new table, `None`,
+    * gets a fresh one). */
+  private def metaDataJson(tableId: Option[String], newSchema: StructType,
+      partCols: Seq[String], conf: Map[String, String]): String = {
     val meta = mapper.createObjectNode()
-    meta.put("id", tableId)
+    meta.put("id", tableId.getOrElse(java.util.UUID.randomUUID().toString))
     val fmtN = meta.putObject("format")
     fmtN.put("provider", "parquet"); fmtN.putObject("options")
     meta.put("schemaString", newSchema.json)
@@ -1275,7 +907,7 @@ object DeltaSink {
     * previous commit's — readers order history by it instead of file
     * mtimes, which object stores can rewrite. Returns the lines reordered
     * and stamped, or unchanged when the feature is off. */
-  private[catalog] def withIct(st: TableState, lines: Seq[String]): Seq[String] = {
+  private[catalog] def withIct(st: Snapshot, lines: Seq[String]): Seq[String] = {
     val on = st.conf.get("delta.enableInCommitTimestamps").exists(_.toBoolean) ||
       st.protocol.exists(p => demandedWriterFeatures(p).contains("inCommitTimestamp"))
     if (!on) lines
@@ -1300,18 +932,10 @@ object DeltaSink {
       path: String): DataFrame = {
     import org.apache.spark.sql.Row
     val rootPath = new Path(path)
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
-    val proto = st.protocol.getOrElse(ProtoInfo(1, 2, Set.empty, Set.empty))
-    val tableId = {
-      // the latest metaData action's id (same probe the writer uses)
-      val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-      val logDir = new Path(rootPath, "_delta_log")
-      metaDataJson(spark, fs, logDir,
-        DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType],
-        st.partCols, st.conf)
-    }
-    val id = mapper.readTree(tableId).path("id").asText()
+    val proto = st.protocol.getOrElse(Protocol(1, 2, Set.empty, Set.empty))
+    val id = st.tableId.getOrElse(java.util.UUID.randomUUID().toString)
     spark.createDataFrame(
       spark.sparkContext.parallelize(Seq(Row("delta", id, path,
         st.partCols, st.live.size.toLong, st.live.values.map(_.size).sum,
@@ -1348,11 +972,19 @@ object DeltaSink {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(rootPath, "_delta_log")
-    val cur = replayState(spark, rootPath, forbidDv = "RESTORE")
+    val cur = DeltaLog.snapshot(spark, path)
+    requireNoDv(cur, rootPath, "RESTORE")
     if (!cur.exists) throw DeltaReadException(s"`$path`: not a Delta table")
     writerGates(cur, path, removesData = true, "RESTORE")
-    val old = replayState(spark, rootPath, forbidDv = "RESTORE",
-      stopAt = Some(version))
+    // the commits below a folded checkpoint may be vacuumed, so RESTORE
+    // does not reach past it
+    cur.checkpointVersion.filter(_ > version).foreach { cpV =>
+      throw DeltaReadException(
+        s"`$rootPath`: state at version $version is below the folded checkpoint " +
+          s"($cpV) — its commits may be vacuumed; use a delta connector jar")
+    }
+    val old = DeltaLog.snapshot(spark, path, stopAt = Some(version))
+    requireNoDv(old, rootPath, "RESTORE")
     if (cur.schemaJson != old.schemaJson) throw DeltaReadException(
       s"`$path`: schema changed since version $version — schema-evolving " +
         "RESTORE needs a delta connector jar")
@@ -1364,7 +996,7 @@ object DeltaSink {
     val lines = Seq.newBuilder[String]
     lines += s"""{"commitInfo":{"timestamp":$now,"operation":"RESTORE","operationParameters":{"version":$version}}}"""
     removes.foreach { rel =>
-      lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":$now,"dataChange":true${rtEchoFields(cur.live(rel))}}}"""
+      lines += removeJson(rel, cur.live(rel), now, dataChange = true)
     }
     adds.foreach { case (rel, e) =>
       val pvNode = mapper.createObjectNode()
@@ -1375,7 +1007,7 @@ object DeltaSink {
       // re-adds keep their ORIGINAL row-id base/default (content identical,
       // rows never moved); the hwm never rewinds, so no domain update
       lines += s"""{"add":{"path":${esc(rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},""" +
-        s""""size":${e.size},"modificationTime":${e.modTime},"dataChange":true${rtEchoFields(e)}$statsPart}}"""
+        s""""size":${e.size},"modificationTime":${e.modificationTime},"dataChange":true${rtEchoFields(e)}$statsPart}}"""
     }
     val newVersion = cur.version + 1
     val target = new Path(logDir, f"$newVersion%020d.json")
@@ -1405,7 +1037,7 @@ object DeltaSink {
     import org.apache.spark.sql.Row
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
     val schemaJson = st.schemaJson.getOrElse(
       throw DeltaReadException(s"`$path`: no metaData action"))
@@ -1484,12 +1116,12 @@ object DeltaSink {
       fs.delete(tmp, true)
       fs.getFileStatus(dest)
     }
-    val metaRow = Row("graft-checkpoint", schemaJson, st.partCols, st.conf)
+    val metaRow = Row(st.tableId.orNull, schemaJson, st.partCols, st.conf)
     val addStructRows: Seq[Row] = st.live.toSeq.map { case (p, e) =>
       val dvRow = e.dv.map(d =>
-        Row(d.storageType, d.payload, d.offset.map(Int.box).orNull,
+        Row(d.storageType, d.pathOrInlineDv, d.offset.map(Int.box).orNull,
           d.sizeInBytes, d.cardinality)).orNull
-      Row(p, e.partitionValues, e.size, e.modTime, false, e.stats.orNull, dvRow,
+      Row(p, e.partitionValues, e.size, e.modificationTime, false, e.stats.orNull, dvRow,
         e.baseRowId.map(Long.box).orNull,
         e.defaultRowCommitVersion.map(Long.box).orNull)
     }
@@ -1533,7 +1165,7 @@ object DeltaSink {
         val protoJson = st.protocol.map(_.json).getOrElse(
           s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":${if (cdf) 4 else 2}}}""")
         val metaNode = mapper.createObjectNode()
-        metaNode.put("id", "graft-checkpoint")
+        metaNode.put("id", st.tableId.orNull)
         val fmtNode = metaNode.putObject("format")
         fmtNode.put("provider", "parquet"); fmtNode.putObject("options")
         metaNode.put("schemaString", schemaJson)
@@ -1628,7 +1260,7 @@ object DeltaSink {
     * them: the rewritten files' `size` plus `insertedRows` at the table's
     * mean bytes per row (live `size` over live `numRecords`). None when
     * inserted rows cannot be priced: no live file carries `numRecords`. */
-  private def cowBytes(st: TableState, rewritten: Seq[String],
+  private def cowBytes(st: Snapshot, rewritten: Seq[String],
       insertedRows: Long): Option[Long] = {
     val rewrittenBytes = rewritten.map(st.live(_).size).sum
     if (insertedRows <= 0) Some(rewrittenBytes)
@@ -1796,11 +1428,11 @@ object DeltaSink {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(rootPath, "_delta_log")
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
     writerGates(st, path, removesData = true,
       if (setExprs.nonEmpty) "DV UPDATE" else "DV DELETE")
-    val cmMode = st.conf.getOrElse("delta.columnMapping.mode", "none")
+    val cmMode = st.columnMappingMode
     if (cmMode != "none" && cmMode != "name")
       throw DeltaReadException(
         s"`$path`: column mapping mode `$cmMode` needs parquet field ids for " +
@@ -1815,12 +1447,8 @@ object DeltaSink {
     val partColsT = st.partCols
     // mode=name: files carry physical names, the predicate/SET see logical
     val mapped = cmMode == "name"
-    def physName(f: org.apache.spark.sql.types.StructField): String =
-      if (f.metadata.contains("delta.columnMapping.physicalName"))
-        f.metadata.getString("delta.columnMapping.physicalName")
-      else f.name
     val physByLogical: Map[String, String] =
-      schema.fields.map(f => f.name -> physName(f)).toMap
+      schema.fields.map(f => f.name -> physicalName(f)).toMap
     def physKey(c: String): String = physByLogical.getOrElse(c, c)
     def toPhys(df: DataFrame): DataFrame =
       if (!mapped) df
@@ -1838,7 +1466,7 @@ object DeltaSink {
     // one scan, log partitions attached, physical row index per file
     val dataFields = schema.fields.filterNot(f => partColsT.contains(f.name))
     val dataSchema0 = StructType(dataFields.map(f =>
-      StructField(if (mapped) physName(f) else f.name, f.dataType, f.nullable)))
+      StructField(if (mapped) physicalName(f) else f.name, f.dataType, f.nullable)))
     // row tracking: a DV never moves surviving rows (ids are position-
     // stable by construction), but an UPDATE's post-SET images land in NEW
     // files — they must carry their row ids materialized
@@ -1856,7 +1484,7 @@ object DeltaSink {
         col("_metadata.row_index").as("__pos"))
       if (mapped)
         s0 = s0.select(dataFields.map(f =>
-          col(physName(f)).as(f.name)).toSeq ++ matColNames.map(col) ++ metaCols: _*)
+          col(physicalName(f)).as(f.name)).toSeq ++ matColNames.map(col) ++ metaCols: _*)
       partColsT.foreach { pc =>
         val f = schema(schema.fieldIndex(pc))
         s0 = s0.withColumn(pc, lit(pv.getOrElse(physKey(pc), null)).cast(f.dataType))
@@ -1877,10 +1505,7 @@ object DeltaSink {
     // file's new vector is the UNION of its old positions and the fresh
     // ones (a DV REPLACES its predecessor; it never stacks)
     val existingDvs: Seq[(String, graft.sources.DeletionVectors.Descriptor)] =
-      st.live.toSeq.flatMap { case (rel, e) =>
-        e.dv.map(d => resolve(rel) -> graft.sources.DeletionVectors.Descriptor(
-          d.storageType, d.payload, d.offset, d.sizeInBytes, d.cardinality))
-      }
+      st.live.toSeq.flatMap { case (rel, e) => e.dv.map(resolve(rel) -> _) }
     val deadDf: Option[DataFrame] =
       if (existingDvs.isEmpty) None
       else Some(graft.sources.DeletionVectors.deletedRows(spark,
@@ -1994,7 +1619,7 @@ object DeltaSink {
     // descriptor and resurrect deleted rows) — the first DV commit
     // upgrades to reader 3 / writer 7 with the deletionVectors feature,
     // legacy-implied features carried over per PROTOCOL.md
-    val curProto = st.protocol.getOrElse(ProtoInfo(1, 2, Set.empty, Set.empty))
+    val curProto = st.protocol.getOrElse(Protocol(1, 2, Set.empty, Set.empty))
     if (!curProto.supportsDv) lines += curProto.withDeletionVectors.json
     val version = st.version + 1
     val alloc = new RowIdAllocator(st, version)
@@ -2006,12 +1631,8 @@ object DeltaSink {
       e.partitionValues.foreach { case (k, v) =>
         if (v == null) pv.putNull(k) else pv.put(k, v)
       }
-      val dv = mapper.createObjectNode()
-      dv.put("storageType", storage)
-      dv.put("pathOrInlineDv", payload)
-      if (storage == "u") dv.put("offset", 1)
-      dv.put("sizeInBytes", size)
-      dv.put("cardinality", card)
+      val dv = DeletionVectors.Descriptor(storage, payload,
+        if (storage == "u") Some(1) else None, size, card)
       // stats keep the PHYSICAL numRecords (per protocol) but must flag
       // tightBounds:false — external engines serve COUNT(*)/skipping from
       // stats and would otherwise overcount the DV-deleted rows
@@ -2020,22 +1641,13 @@ object DeltaSink {
         node.put("tightBounds", false)
         mapper.writeValueAsString(node)
       }
-      val oldDvJson = e.dv.map { d =>
-        val o = mapper.createObjectNode()
-        o.put("storageType", d.storageType)
-        o.put("pathOrInlineDv", d.payload)
-        d.offset.foreach(o.put("offset", _))
-        o.put("sizeInBytes", d.sizeInBytes)
-        o.put("cardinality", d.cardinality)
-        s""","deletionVector":${mapper.writeValueAsString(o)}"""
-      }.getOrElse("")
       // the re-add keeps the file's ORIGINAL base/default — rows never
       // moved, so their ids still derive from the original range
-      lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":$nowMs,"dataChange":true$oldDvJson${rtEchoFields(e)}}}"""
+      lines += removeJson(rel, e, nowMs, dataChange = true)
       lines += s"""{"add":{"path":${esc(rel)},"partitionValues":${mapper.writeValueAsString(pv)},""" +
-        s""""size":${e.size},"modificationTime":${e.modTime},"dataChange":true${rtEchoFields(e)},""" +
+        s""""size":${e.size},"modificationTime":${e.modificationTime},"dataChange":true${rtEchoFields(e)},""" +
         loosened.map(s0 => s""""stats":${esc(s0)},""").getOrElse("") +
-        s""""deletionVector":${mapper.writeValueAsString(dv)}}}"""
+        s""""deletionVector":${dv.json}}}"""
     }
     imageFiles.foreach { f =>
       val pv = mapper.createObjectNode()
@@ -2073,7 +1685,8 @@ object DeltaSink {
     * DV-carrying files rewrite (their survivors, decoded by the same
     * executor-side DV machinery the reader uses); clean files are
     * untouched. After a purge the table is DV-free, so OPTIMIZE, RESTORE,
-    * and further DML (all forbidDv) work again. Returns
+    * and further DML (whose gate, `requireNoDv`, reads the live set) work
+    * again. Returns
     * (filesRewritten, rowsDropped). */
   def purgeDeletionVectors(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Long) = {
@@ -2082,24 +1695,21 @@ object DeltaSink {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(rootPath, "_delta_log")
-    val st = replayState(spark, rootPath)
+    val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
-    val cmMode = st.conf.getOrElse("delta.columnMapping.mode", "none")
+    val cmMode = st.columnMappingMode
     if (cmMode != "none" && cmMode != "name")
       throw DeltaReadException(
         s"`$path`: column mapping mode `$cmMode` needs parquet field ids; " +
           "use a delta connector jar")
-    val dvFiles = st.live.toSeq.filter(_._2.hasDv)
+    val dvFiles = st.live.toSeq.filter(_._2.dv.isDefined)
     if (dvFiles.isEmpty) return (0, 0L)
     val schema = DataType.fromJson(st.schemaJson.getOrElse(
       throw DeltaReadException(s"`$path`: no metaData action"))).asInstanceOf[StructType]
     val partColsT = st.partCols
     // mode=name: the purge never evaluates user expressions, so the whole
     // rewrite runs in PHYSICAL column names end to end
-    def physName(f: org.apache.spark.sql.types.StructField): String =
-      if (cmMode == "name" && f.metadata.contains("delta.columnMapping.physicalName"))
-        f.metadata.getString("delta.columnMapping.physicalName")
-      else f.name
+    def physName(f: StructField): String = if (cmMode == "name") physicalName(f) else f.name
     def physKey(c: String): String = physName(schema(schema.fieldIndex(c)))
     def resolve(rel: String): String = {
       val dp = new Path(java.net.URLDecoder.decode(rel, "UTF-8"))
@@ -2118,11 +1728,8 @@ object DeltaSink {
         matColNames.map(n => StructField(n, LongType, nullable = true)))
     // survivors of ONLY the DV'd files, dead positions anti-joined in
     // executors via the reader's decode machinery
-    val dvPairs: Seq[(String, DeletionVectors.Descriptor)] = dvFiles.map { case (rel, e) =>
-      val d = e.dv.get
-      resolve(rel) -> DeletionVectors.Descriptor(
-        d.storageType, d.payload, d.offset, d.sizeInBytes, d.cardinality)
-    }
+    val dvPairs: Seq[(String, DeletionVectors.Descriptor)] =
+      dvFiles.map { case (rel, e) => resolve(rel) -> e.dv.get }
     val byTuple = dvFiles.groupBy(_._2.partitionValues)
     val scans = byTuple.toSeq.map { case (pv, files) =>
       var s0 = spark.read.schema(dataSchema).parquet(files.map(f => resolve(f._1)): _*)
@@ -2162,14 +1769,7 @@ object DeltaSink {
       // the remove must carry the removed version's DV: the protocol
       // reconciles on (path, dv-id), so a bare remove would leave the
       // DV'd add live and DUPLICATE the purged rows
-      val d = e.dv.get
-      val dv = mapper.createObjectNode()
-      dv.put("storageType", d.storageType)
-      dv.put("pathOrInlineDv", d.payload)
-      d.offset.foreach(o => dv.put("offset", o))
-      dv.put("sizeInBytes", d.sizeInBytes)
-      dv.put("cardinality", d.cardinality)
-      lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":$nowMs,"dataChange":false,"deletionVector":${mapper.writeValueAsString(dv)}${rtEchoFields(e)}}}"""
+      lines += removeJson(rel, e, nowMs, dataChange = false)
     }
     val version = st.version + 1
     val alloc = new RowIdAllocator(st, version)
@@ -2205,16 +1805,12 @@ object DeltaSink {
     * physical and renames to logical, `toPhys` renames back before a
     * write. */
   private final class CowTarget(spark: org.apache.spark.sql.SparkSession, path: String,
-      st: TableState, schema: StructType, rootPath: Path,
+      st: Snapshot, schema: StructType, rootPath: Path,
       fs: org.apache.hadoop.fs.FileSystem) {
     import org.apache.spark.sql.functions.{broadcast, coalesce, col, input_file_name, lit}
-    private val mapped = st.conf.getOrElse("delta.columnMapping.mode", "none") == "name"
-    private def physName(f: StructField): String =
-      if (f.metadata.contains("delta.columnMapping.physicalName"))
-        f.metadata.getString("delta.columnMapping.physicalName")
-      else f.name
+    private val mapped = st.columnMappingMode == "name"
     private val physByLogical: Map[String, String] =
-      schema.fields.map(f => f.name -> physName(f)).toMap
+      schema.fields.map(f => f.name -> physicalName(f)).toMap
     def physKey(c: String): String = physByLogical.getOrElse(c, c)
     def toPhys(df: DataFrame): DataFrame =
       if (!mapped) df
@@ -2249,7 +1845,7 @@ object DeltaSink {
       val dataFields = schema.fields.filterNot(f => partCols.contains(f.name))
       val matColNames: Seq[String] = rtMat.toSeq.flatMap { case (a, b) => Seq(a, b) }
       val dataSchema = StructType(dataFields.map(f =>
-        StructField(if (mapped) physName(f) else f.name, f.dataType, f.nullable)) ++
+        StructField(if (mapped) physicalName(f) else f.name, f.dataType, f.nullable)) ++
         matColNames.map(n => StructField(n, LongType, nullable = true)))
       val target0: DataFrame =
         if (files.isEmpty)
@@ -2260,7 +1856,7 @@ object DeltaSink {
           // _metadata must be addressed on the DIRECT scan, before any select
           if (rtOn) s0 = s0.withColumn("__rt_idx", col("_metadata.row_index"))
           if (mapped)
-            s0 = s0.select(dataFields.map(f => col(physName(f)).as(f.name)).toSeq
+            s0 = s0.select(dataFields.map(f => col(physicalName(f)).as(f.name)).toSeq
               ++ matColNames.map(col)
               ++ (if (rtOn) Seq(col("__rt_idx")) else Nil): _*)
           partCols.foreach { pc =>
@@ -2293,15 +1889,15 @@ object DeltaSink {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(rootPath, "_delta_log")
-    val st = replayState(spark, rootPath,
-      forbidDv = if (setExprs.nonEmpty) "UPDATE" else "DELETE")
+    val st = DeltaLog.snapshot(spark, path)
+    requireNoDv(st, rootPath, if (setExprs.nonEmpty) "UPDATE" else "DELETE")
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
     writerGates(st, path, removesData = true,
       if (setExprs.nonEmpty) "UPDATE" else "DELETE")
     val partColsT = st.partCols
     val live: Map[String, Map[String, String]] =
       st.live.toMap.map { case (p, e) => p -> e.partitionValues }
-    val cmMode = st.conf.getOrElse("delta.columnMapping.mode", "none")
+    val cmMode = st.columnMappingMode
     if (cmMode != "none" && cmMode != "name")
       throw DeltaReadException(
         s"`$path`: column mapping mode `$cmMode` needs parquet field ids for " +
@@ -2361,7 +1957,7 @@ object DeltaSink {
           val lines = Seq.newBuilder[String]
           lines += s"""{"commitInfo":{"timestamp":$now,"operation":"DELETE","operationParameters":{"predicate":${esc0(predicateSql)},"strategy":"metadata-only-partition-drop"}}}"""
           matched.foreach { rel =>
-            lines += s"""{"remove":{"path":${esc0(rel)},"deletionTimestamp":$now,"dataChange":true${rtEchoFields(st.live(rel))}}}"""
+            lines += removeJson(rel, st.live(rel), now, dataChange = true)
           }
           writeCommit(fs, logDir, st.version + 1, withIct(st, lines.result()), path)
           return counts.flatten.sum
@@ -2456,7 +2052,7 @@ object DeltaSink {
     val version = st.version + 1
     val alloc = new RowIdAllocator(st, version)
     affectedRel.foreach { rel =>
-      lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true${rtEchoFields(st.live(rel))}}}"""
+      lines += removeJson(rel, st.live(rel), System.currentTimeMillis(), dataChange = true)
     }
     newFiles.foreach { f =>
       val pvNode = mapper.createObjectNode()
@@ -2497,13 +2093,14 @@ object DeltaSink {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(rootPath, "_delta_log")
-    val st = replayState(spark, rootPath, forbidDv = "MERGE")
+    val st = DeltaLog.snapshot(spark, path)
+    requireNoDv(st, rootPath, "MERGE")
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
     writerGates(st, path, removesData = true, "MERGE")
     val partColsT = st.partCols
     val live: Map[String, Map[String, String]] =
       st.live.toMap.map { case (p, e) => p -> e.partitionValues }
-    val cmMode = st.conf.getOrElse("delta.columnMapping.mode", "none")
+    val cmMode = st.columnMappingMode
     if (cmMode != "none" && cmMode != "name")
       throw DeltaReadException(
         s"`$path`: column mapping mode `$cmMode` needs parquet field ids for " +
@@ -2704,7 +2301,7 @@ object DeltaSink {
         val version = st.version + 1
         val alloc = new RowIdAllocator(st, version)
         if (doRewrite) affectedRel.foreach { rel =>
-          lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":true${rtEchoFields(st.live(rel))}}}"""
+          lines += removeJson(rel, st.live(rel), System.currentTimeMillis(), dataChange = true)
         }
         newFiles.foreach { f =>
           val pvNode = mapper.createObjectNode()
@@ -2748,17 +2345,19 @@ object DeltaSink {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(rootPath, "_delta_log")
-    val st = replayState(spark, rootPath, forbidDv = "OPTIMIZE")
+    val st = DeltaLog.snapshot(spark, path)
+    requireNoDv(st, rootPath, "OPTIMIZE")
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
     // dataChange=false re-binning is legal under appendOnly (no rows change)
     writerGates(st, path, removesData = false, "OPTIMIZE")
     val partColsT = st.partCols
-    val cmMode = st.conf.getOrElse("delta.columnMapping.mode", "none")
+    val cmMode = st.columnMappingMode
     if (cmMode != "none" && cmMode != "name")
       throw DeltaReadException(
         s"`$path`: column mapping mode `$cmMode` cannot be compacted by this " +
           "native OPTIMIZE; use a delta connector jar")
     val logicalSchema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
+    def physKeyOf(c: String): String = physicalName(logicalSchema(logicalSchema.fieldIndex(c)))
     val groups0 = st.live.toSeq.map { case (p, e) => p -> e }
       .filter(_._2.size < minFileBytes)
       .groupBy(_._2.partitionValues).filter(_._2.size >= 2)
@@ -2780,11 +2379,6 @@ object DeltaSink {
           throw DeltaReadException(
             s"`$path`: OPTIMIZE ... WHERE must reference only partition " +
               s"columns (${partColsT.mkString(", ")})")
-        def physKeyOf(c: String): String = {
-          val f = logicalSchema(logicalSchema.fieldIndex(c))
-          if (f.metadata.contains("delta.columnMapping.physicalName"))
-            f.metadata.getString("delta.columnMapping.physicalName") else c
-        }
         val pvSchema = StructType(
           StructField("__i", IntegerType, nullable = false) +:
             partColsT.map(pc => StructField(pc, StringType)))
@@ -2807,18 +2401,9 @@ object DeltaSink {
     // PHYSICAL names its footer carries
     val dataSchema =
       if (cmMode == "none") logicalSchema
-      else StructType(logicalSchema.fields.map { f =>
-        val n = if (f.metadata.contains("delta.columnMapping.physicalName"))
-          f.metadata.getString("delta.columnMapping.physicalName") else f.name
-        StructField(n, f.dataType, f.nullable)
-      })
-    val partColsPhys =
-      if (cmMode == "none") partColsT
-      else partColsT.map { c =>
-        val f = logicalSchema(logicalSchema.fieldIndex(c))
-        if (f.metadata.contains("delta.columnMapping.physicalName"))
-          f.metadata.getString("delta.columnMapping.physicalName") else c
-      }
+      else StructType(logicalSchema.fields.map(f =>
+        StructField(physicalName(f), f.dataType, f.nullable)))
+    val partColsPhys = if (cmMode == "none") partColsT else partColsT.map(physKeyOf)
     val lines = Seq.newBuilder[String]
     lines += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"OPTIMIZE"}}"""
     def esc(s: String): String = mapper.writeValueAsString(s)
@@ -2885,7 +2470,7 @@ object DeltaSink {
       val pvNode = mapper.createObjectNode()
       pv.foreach { case (k, v) => if (v == null) pvNode.putNull(k) else pvNode.put(k, v) }
       files.foreach { case (rel, e) =>
-        lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":false${rtEchoFields(e)}}}"""
+        lines += removeJson(rel, e, System.currentTimeMillis(), dataChange = false)
         removed += 1
       }
       val stats = footerStats(spark, dest, dataSchema, partColsPhys)
@@ -2928,13 +2513,14 @@ object DeltaSink {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(rootPath, "_delta_log")
-    val st = replayState(spark, rootPath, forbidDv = "OPTIMIZE ZORDER")
+    val st = DeltaLog.snapshot(spark, path)
+    requireNoDv(st, rootPath, "OPTIMIZE ZORDER")
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
     writerGates(st, path, removesData = false, "OPTIMIZE ZORDER")
     if (st.partCols.nonEmpty) throw DeltaReadException(
       s"`$path`: ZORDER on a partitioned table needs per-partition " +
         "z-subdivision — use a delta connector jar")
-    val cmMode = st.conf.getOrElse("delta.columnMapping.mode", "none")
+    val cmMode = st.columnMappingMode
     if (cmMode != "none" && cmMode != "name")
       throw DeltaReadException(
         s"`$path`: column mapping mode `$cmMode` cannot be z-ordered by this " +
@@ -2953,14 +2539,10 @@ object DeltaSink {
     // zorderBy expressions resolve; the clustered frame renames back to
     // physical before the rewrite below
     val mapped = cmMode == "name"
-    def physName(f: org.apache.spark.sql.types.StructField): String =
-      if (f.metadata.contains("delta.columnMapping.physicalName"))
-        f.metadata.getString("delta.columnMapping.physicalName")
-      else f.name
     val readSchema0 =
       if (!mapped) dataSchema
       else StructType(dataSchema.fields.map(f =>
-        StructField(physName(f), f.dataType, f.nullable)))
+        StructField(physicalName(f), f.dataType, f.nullable)))
     // row tracking: clustering MOVES every row — materialize stable ids
     // (coalesce of any prior materialization with base + position) before
     // the shuffle renumbers positions
@@ -2990,7 +2572,7 @@ object DeltaSink {
     val df =
       if (!mapped) df0
       else df0.select(dataSchema.fields.map(f =>
-        col(physName(f)).as(f.name)).toSeq ++ matColNames.map(col): _*)
+        col(physicalName(f)).as(f.name)).toSeq ++ matColNames.map(col): _*)
     // per-column bucket expressions (256 buckets = 8 bits each)
     val numericish: Set[DataType] = Set(ByteType, ShortType, IntegerType,
       LongType, FloatType, DoubleType, DateType, TimestampType, TimestampNTZType)
@@ -3038,7 +2620,7 @@ object DeltaSink {
     val clustered =
       if (!mapped) clustered0
       else clustered0.select(dataSchema.fields.map(f =>
-        col(f.name).as(physName(f))).toSeq ++ matColNames.map(col): _*)
+        col(f.name).as(physicalName(f))).toSeq ++ matColNames.map(col): _*)
     val newFiles = writeDataFiles(clustered, rootPath, Nil, Map.empty)
     def esc(s: String): String = mapper.writeValueAsString(s)
     val version = st.version + 1
@@ -3046,7 +2628,7 @@ object DeltaSink {
     val lines = Seq.newBuilder[String]
     lines += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"OPTIMIZE","operationParameters":{"zOrderBy":${esc(zorderBy.mkString(","))}}}}"""
     st.live.foreach { case (rel, e) =>
-      lines += s"""{"remove":{"path":${esc(rel)},"deletionTimestamp":${System.currentTimeMillis()},"dataChange":false${rtEchoFields(e)}}}"""
+      lines += removeJson(rel, e, System.currentTimeMillis(), dataChange = false)
     }
     newFiles.foreach { f =>
       val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
@@ -3075,7 +2657,7 @@ object DeltaSink {
     val logDir = new Path(rootPath, "_delta_log")
     if (!fs.exists(logDir))
       throw DeltaReadException(s"`$path` is not a Delta table: no _delta_log directory")
-    val state = replayState(spark, rootPath)
+    val state = DeltaLog.snapshot(spark, path)
     val rootQ = fs.makeQualified(rootPath).toString
     val liveAbs = state.live.keySet.map { rel =>
       val dp = new Path(java.net.URLDecoder.decode(rel, "UTF-8"))
@@ -3085,12 +2667,8 @@ object DeltaSink {
     // add.deletionVector descriptors, never add.path — resolve them the
     // way the reader does, or vacuum could orphan-collect a live DV (a
     // read error that resurfaces as unreadable deleted rows)
-    val liveDvAbs: Set[String] = state.live.values.flatMap(_.dv).flatMap { d =>
-      graft.sources.DeletionVectors.Descriptor(
-        d.storageType, d.payload, d.offset, d.sizeInBytes, d.cardinality)
-        .absolutePath(rootPath)
-        .map(p => fs.makeQualified(p).toString)
-    }.toSet
+    val liveDvAbs: Set[String] = state.live.values.flatMap(_.dv)
+      .flatMap(_.absolutePath(rootPath).map(p => fs.makeQualified(p).toString)).toSet
     val cutoff = System.currentTimeMillis() - retentionMs
     var deleted = 0
     val it = fs.listFiles(rootPath, true)

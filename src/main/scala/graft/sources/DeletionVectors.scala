@@ -231,6 +231,17 @@ object DeletionVectors {
       * (path, DV unique id); the exact string form is internal. */
     def uniqueKey: String = s"$storageType:$pathOrInlineDv@${offset.getOrElse(0)}"
 
+    /** The `deletionVector` JSON object a commit carries. */
+    def json: String = {
+      val o = com.fasterxml.jackson.databind.node.JsonNodeFactory.instance.objectNode()
+      o.put("storageType", storageType)
+      o.put("pathOrInlineDv", pathOrInlineDv)
+      offset.foreach(o.put("offset", _))
+      o.put("sizeInBytes", sizeInBytes)
+      o.put("cardinality", cardinality)
+      o.toString
+    }
+
     /** On-disk DV file location ("u"/"p"); None for inline. */
     def absolutePath(tableRoot: Path): Option[Path] = storageType match {
       case "i" => None

@@ -91,13 +91,7 @@ object DeltaChanges {
     if (!fs.exists(logDir))
       throw DeltaReadException(s"`$root` is not a Delta table: no _delta_log directory")
 
-    val commitRe = """(\d{20})\.json""".r
-    val commitStatuses = fs.listStatus(logDir).toSeq
-      .flatMap(st => st.getPath.getName match {
-        case commitRe(v) => Some((v.toLong, st))
-        case _ => None
-      })
-      .sortBy(_._1)
+    val commitStatuses = DeltaLog.commits(fs, logDir)
     if (commitStatuses.isEmpty) throw DeltaReadException(
       s"`$root`: change-feed reads need the commit JSON history; _delta_log " +
         "holds no commit files")
@@ -154,10 +148,7 @@ object DeltaChanges {
     }
 
     commitStatuses.takeWhile(_._1 <= end).foreach { case (v, st) =>
-      val in = fs.open(st.getPath)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-      val nodes = lines.filter(_.nonEmpty).map(mapper.readTree)
+      val nodes = DeltaLog.readActions(fs, st.getPath)
       val inRange = v >= start
 
       nodes.foreach { n =>
@@ -185,14 +176,7 @@ object DeltaChanges {
 
       val cdcNodes = nodes.filter(_.has("cdc"))
       if (inRange) {
-        val ts = nodes.collectFirst { case n if n.has("commitInfo") => n.path("commitInfo") }
-          .map { ci =>
-            if (ci.has("inCommitTimestamp")) ci.path("inCommitTimestamp").asLong()
-            else if (ci.has("timestamp")) ci.path("timestamp").asLong()
-            else st.getModificationTime
-          }
-          .getOrElse(st.getModificationTime)
-        versionTs += ((v, ts))
+        versionTs += ((v, DeltaLog.commitTimestamp(nodes, st)))
         if (cdcNodes.nonEmpty) {
           cdcNodes.foreach { n =>
             val c = n.path("cdc")
@@ -282,15 +266,11 @@ object DeltaChanges {
     // data/change files carry PHYSICAL names; rename back at the end) ----
     val cmMode = tableConf.getOrElse("delta.columnMapping.mode", "none")
     val mappingActive = cmMode != "none" &&
-      schema.fields.exists(_.metadata.contains(DeltaNative.PhysNameKey))
-    def physName(f: StructField): String =
-      if (f.metadata.contains(DeltaNative.PhysNameKey))
-        f.metadata.getString(DeltaNative.PhysNameKey)
-      else f.name
+      schema.fields.exists(_.metadata.contains(DeltaLog.PhysNameKey))
     val physSchema =
-      if (mappingActive) StructType(schema.fields.map(f => f.copy(name = physName(f))))
+      if (mappingActive) StructType(schema.fields.map(f => f.copy(name = DeltaLog.physicalName(f))))
       else schema
-    val physByLogical = schema.fields.map(f => f.name -> physName(f)).toMap
+    val physByLogical = schema.fields.map(f => f.name -> DeltaLog.physicalName(f)).toMap
     val physPartCols = partCols.map(c => physByLogical.getOrElse(c, c))
 
     def resolve(p: String): String = {
@@ -425,7 +405,7 @@ object DeltaChanges {
       (physSchema.fieldNames.toSeq ++ feedCols).map(col): _*)
     if (!mappingActive) ordered
     else ordered.select(schema.fields.toSeq.map { f =>
-      col(physName(f)).cast(f.dataType).as(f.name)
+      col(DeltaLog.physicalName(f)).cast(f.dataType).as(f.name)
     } ++ feedCols.map(col): _*)
   }
 

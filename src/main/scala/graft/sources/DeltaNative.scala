@@ -1,8 +1,6 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, element_at, regexp_replace}
@@ -17,8 +15,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, MapType, Strin
   * (delta.io PROTOCOL.md): a Delta table is parquet data files plus a
   * `_delta_log/` of ordered JSON commits (one action per line: `protocol`,
   * `metaData`, `add`, `remove`) with periodic parquet checkpoints named by
-  * `_last_checkpoint`. Snapshot = checkpoint's live `add` set, then replay
-  * of later commits (add inserts by path, remove tombstones by path).
+  * `_last_checkpoint`. The snapshot comes from `DeltaLog.snapshot`, the
+  * one replay the writers share (checkpoint's live `add` set, then the
+  * later commits, reconciled on path and deletion-vector id).
   *
   * Spark-first split of labor: log resolution is bounded METADATA work
   * (exactly what delta-kernel does on the driver — checkpoints keep the
@@ -51,23 +50,8 @@ object DeltaNative {
 
   private val mapper = new ObjectMapper()
 
-  private[sources] val PhysNameKey = "delta.columnMapping.physicalName"
   private val SupportedReaderFeatures =
     Set("columnMapping", "timestampNtz", "deletionVectors", "v2Checkpoint")
-
-  /** Live-file entry after log reconciliation. `size`/`modificationTime`
-    * come from the add action (the protocol requires them accurate — split
-    * planning trusts them, exactly as delta-kernel does); `stats` is the
-    * writer's per-file statistics JSON, fuel for planning-time skipping. */
-  private final case class AddEntry(partitionValues: Map[String, String],
-      dv: Option[DeletionVectors.Descriptor], size: Long = 0L,
-      modificationTime: Long = 0L, stats: Option[String] = None,
-      addVersion: Long = 0L,
-      // PROTOCOL.md Row Tracking: default row ids are baseRowId + row
-      // position, defaulting commit version to the add's commit — fuel for
-      // the `row_tracking=true` read option
-      baseRowId: Option[Long] = None,
-      defaultRowCommitVersion: Option[Long] = None)
 
   /** Table-history introspection (`delta_history('<root>')`): one row per
     * commit JSON in the log — version, resolved timestamp (the time-travel
@@ -81,27 +65,14 @@ object DeltaNative {
     val logDir = new Path(rootPath, "_delta_log")
     if (!fs.exists(logDir))
       throw DeltaReadException(s"`$root` is not a Delta table: no _delta_log directory")
-    val commitRe = """(\d{20})\.json""".r
-    val commits = fs.listStatus(logDir).toSeq
-      .flatMap(st => st.getPath.getName match {
-        case commitRe(v) => Some((v.toLong, st))
-        case _ => None
-      })
-      .sortBy(_._1)
+    val commits = DeltaLog.commits(fs, logDir)
     if (commits.isEmpty) throw DeltaReadException(
       s"`$root`: _delta_log holds no commit JSON files (checkpoint-only logs " +
         "carry no per-commit history)")
     val rows = commits.map { case (v, st) =>
-      val in = fs.open(st.getPath)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-      val nodes = lines.filter(_.nonEmpty).map(mapper.readTree)
+      val nodes = DeltaLog.readActions(fs, st.getPath)
       val ci = nodes.collectFirst { case n if n.has("commitInfo") => n.path("commitInfo") }
-      val ts = ci.map { c =>
-        if (c.has("inCommitTimestamp")) c.path("inCommitTimestamp").asLong()
-        else if (c.has("timestamp")) c.path("timestamp").asLong()
-        else st.getModificationTime
-      }.getOrElse(st.getModificationTime)
+      val ts = DeltaLog.commitTimestamp(nodes, st)
       Row(v,
         new java.sql.Timestamp(ts),
         ci.filter(_.has("operation")).map(_.path("operation").asText()).orNull,
@@ -136,80 +107,12 @@ object DeltaNative {
     if (!fs.exists(logDir))
       throw DeltaReadException(s"`$root` is not a Delta table: no _delta_log directory")
 
-    // --- resolve the snapshot from the log (driver-side metadata work) ---
-    var schemaJson: Option[String] = None
-    var partCols: Seq[String] = Nil
-    var tableConf: Map[String, String] = Map.empty
-    // protocol demands are VALIDATED AFTER replay: whether reader v2/v3 is
-    // satisfiable depends on metaData.configuration (column mapping mode),
-    // and the actions may arrive in either order within the log
-    var readerVersion = 1
-    var readerFeatures: Set[String] = Set.empty
-    // reconciliation key per PROTOCOL.md: (path, deletion-vector unique id)
-    // — a DV update commits remove(path, oldDv) + add(path, newDv), so path
-    // alone would let the remove kill the fresh add
-    val adds = scala.collection.mutable.LinkedHashMap[(String, String), AddEntry]()
-    def dvKey(dv: Option[DeletionVectors.Descriptor]): String =
-      dv.map(_.uniqueKey).getOrElse("")
-
-    def applyProtocolJson(p: JsonNode): Unit = {
-      readerVersion = math.max(readerVersion, p.path("minReaderVersion").asInt(1))
-      if (p.has("readerFeatures"))
-        readerFeatures ++= p.path("readerFeatures").elements().asScala.map(_.asText())
-    }
-    def applyMetaJson(m: JsonNode): Unit = {
-      schemaJson = Some(m.path("schemaString").asText())
-      partCols = m.path("partitionColumns").elements().asScala.map(_.asText()).toSeq
-      if (m.has("configuration"))
-        tableConf = m.path("configuration").fields().asScala
-          .map(e => e.getKey -> e.getValue.asText()).toMap
-    }
-    def partValuesJson(a: JsonNode): Map[String, String] =
-      a.path("partitionValues").fields().asScala
-        .map(e => e.getKey -> (if (e.getValue.isNull) null else e.getValue.asText())).toMap
-    def addEntryJson(a: JsonNode, dv: Option[DeletionVectors.Descriptor],
-        version: Long): AddEntry = {
-      def optLong(k: String): Option[Long] = {
-        val n = a.path(k)
-        if (n.isNumber) Some(n.asLong()) else None
-      }
-      AddEntry(partValuesJson(a), dv,
-        a.path("size").asLong(0L),
-        a.path("modificationTime").asLong(0L),
-        Option(a.path("stats")).filter(n => n.isTextual && n.asText().nonEmpty)
-          .map(_.asText()),
-        addVersion = version,
-        baseRowId = optLong("baseRowId"),
-        defaultRowCommitVersion = optLong("defaultRowCommitVersion"))
-    }
-    def dvJson(a: JsonNode): Option[DeletionVectors.Descriptor] = {
-      val d = a.path("deletionVector")
-      if (d.isMissingNode || d.isNull) None
-      else Some(DeletionVectors.Descriptor(
-        d.path("storageType").asText(),
-        d.path("pathOrInlineDv").asText(),
-        Option(d.path("offset")).filter(n => !n.isMissingNode && !n.isNull).map(_.asInt()),
-        d.path("sizeInBytes").asInt(),
-        d.path("cardinality").asLong()))
-    }
-
-    // all commit JSON files present in the log, version-ordered (statuses
-    // kept: modification time is the timestamp fallback for time travel)
-    val commitRe = """(\d{20})\.json""".r
-    val allCommitStatuses = fs.listStatus(logDir).toSeq
-      .flatMap(st => st.getPath.getName match {
-        case commitRe(v) => Some((v.toLong, st))
-        case _ => None
-      })
-      .sortBy(_._1)
-
-    // TIME TRAVEL: `version_as_of` pins the replay at that commit version;
-    // `timestamp_as_of` resolves an instant to the last commit at or before
-    // it via commitInfo timestamps (protocol order: inCommitTimestamp >
-    // commitInfo.timestamp > log-file modification time, monotonized per
-    // the protocol's clock-skew note). A checkpoint NEWER than the pin
-    // cannot be used (it already folded later commits), so the replay falls
-    // back to commits from 0 — and errors loudly if those were vacuumed.
+    // TIME TRAVEL: `version_as_of` pins the snapshot at that commit
+    // version; `timestamp_as_of` resolves an instant to the last commit at
+    // or before it via commit timestamps (protocol order: inCommitTimestamp
+    // > commitInfo.timestamp > log-file modification time, monotonized per
+    // the protocol's clock-skew note). DeltaLog skips a checkpoint newer
+    // than the pin and errors loudly if the commits it needs were vacuumed.
     val versionPin: Option[Long] = options.get("version_as_of").map { v =>
       val n = try v.toLong catch {
         case _: NumberFormatException =>
@@ -238,239 +141,47 @@ object DeltaNative {
       if (n < 0) throw DeltaReadException(s"changes_since $n is negative")
       n
     }
-    def commitTimestamp(st: org.apache.hadoop.fs.FileStatus): Long = {
-      val in = fs.open(st.getPath)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-      lines.iterator.filter(_.nonEmpty).map(mapper.readTree)
-        .collectFirst { case n if n.has("commitInfo") => n.path("commitInfo") }
-        .map { ci =>
-          if (ci.has("inCommitTimestamp")) ci.path("inCommitTimestamp").asLong()
-          else if (ci.has("timestamp")) ci.path("timestamp").asLong()
-          else st.getModificationTime
-        }
-        .getOrElse(st.getModificationTime)
-    }
     val asOf: Option[Long] = versionPin.orElse(tsPin.map { target =>
-      if (allCommitStatuses.isEmpty) throw DeltaReadException(
+      val commits = DeltaLog.commits(fs, logDir)
+      if (commits.isEmpty) throw DeltaReadException(
         s"`$root`: timestamp_as_of needs commit files in _delta_log, none found")
-      val history = allCommitStatuses.map { case (v, st) => (v, commitTimestamp(st)) }
+      val history = commits.map { case (v, st) =>
+        (v, DeltaLog.commitTimestamp(DeltaLog.readActions(fs, st.getPath), st))
+      }
       try TimeTravel.resolve(history, target, "timestamp_as_of", "commit")
       catch {
         case e: IllegalArgumentException => throw DeltaReadException(s"`$root`: ${e.getMessage}")
       }
     })
 
-    // checkpoint, if any (skipped when it post-dates the time-travel pin)
-    val lastCp = Option(fs.exists(new Path(logDir, "_last_checkpoint")))
-      .filter(identity)
-      .map { _ =>
-        val in = fs.open(new Path(logDir, "_last_checkpoint"))
-        val node = try mapper.readTree(in) finally in.close()
-        (node.path("version").asLong(), Option(node.path("parts")).filter(!_.isMissingNode).map(_.asInt()))
-      }
-      .filter { case (v, _) => asOf.forall(v <= _) }
-    /** Ingest one checkpoint-shaped parquet frame (classic checkpoint,
-      * multi-part part set, V2 manifest, or V2 sidecar): protocol/metaData
-      * rows apply when present; the add column is the scale-bearing one —
-      * typed Rows, no per-entry JSON text. A checkpoint's remove entries
-      * are expired tombstones kept for vacuum, not live deletes. Returns
-      * any `sidecar` action paths (V2 manifests only). */
-    def ingestCheckpointFrame(cp: DataFrame, cpVersion: Long): Seq[String] = {
-      val topFields = cp.schema.fieldNames.toSet
-      def structFields(c: String): Set[String] =
-        cp.schema(c).dataType.asInstanceOf[StructType].fieldNames.toSet
-      def sub(c: String, f: String): Option[String] =
-        if (topFields.contains(c) && structFields(c).contains(f)) Some(s"$c.$f") else None
-
-      if (topFields.contains("protocol")) {
-        val sel = Seq(Some("protocol.minReaderVersion"), sub("protocol", "readerFeatures")).flatten
-        cp.filter(col("protocol").isNotNull).select(sel.map(col): _*).collect().foreach { r =>
-          readerVersion = math.max(readerVersion, if (r.isNullAt(0)) 1 else r.getInt(0))
-          if (r.length > 1 && !r.isNullAt(1)) readerFeatures ++= r.getSeq[String](1)
-        }
-      }
-      if (topFields.contains("metaData")) {
-        val sel = Seq(Some("metaData.schemaString"), Some("metaData.partitionColumns"),
-          sub("metaData", "configuration")).flatten
-        cp.filter(col("metaData").isNotNull).select(sel.map(col): _*).collect().foreach { r =>
-          schemaJson = Some(r.getString(0))
-          partCols = if (r.isNullAt(1)) Nil else r.getSeq[String](1)
-          if (r.length > 2 && !r.isNullAt(2))
-            tableConf = r.getMap[String, String](2).toMap
-        }
-      }
-      if (topFields.contains("add")) {
-        val sub = structFields("add")
-        val sel = Seq("path" -> "p", "partitionValues" -> "pv",
-          "deletionVector" -> "dvv", "size" -> "sz",
-          "modificationTime" -> "mt", "stats" -> "st",
-          "baseRowId" -> "bri", "defaultRowCommitVersion" -> "drcv")
-          .collect { case (f, alias) if f == "path" || sub.contains(f) =>
-            col(s"add.$f").as(alias)
-          }
-        cp.filter(col("add").isNotNull).select(sel: _*).collect().foreach { r =>
-          def at(alias: String): Option[Int] = {
-            val i = r.schema.fieldNames.indexOf(alias)
-            if (i >= 0 && !r.isNullAt(i)) Some(i) else None
-          }
-          val pv = at("pv").map(i => r.getMap[String, String](i).toMap)
-            .getOrElse(Map.empty[String, String])
-          val dv = at("dvv").map { i =>
-            val s = r.getStruct(i)
-            def fld(n: String): Option[AnyRef] =
-              if (s.schema.fieldNames.contains(n) && !s.isNullAt(s.fieldIndex(n)))
-                Some(s.get(s.fieldIndex(n)).asInstanceOf[AnyRef])
-              else None
-            DeletionVectors.Descriptor(
-              fld("storageType").map(_.toString).getOrElse(""),
-              fld("pathOrInlineDv").map(_.toString).getOrElse(""),
-              fld("offset").map(_.asInstanceOf[Number].intValue()),
-              fld("sizeInBytes").map(_.asInstanceOf[Number].intValue()).getOrElse(0),
-              fld("cardinality").map(_.asInstanceOf[Number].longValue()).getOrElse(0L))
-          }
-          adds((r.getString(0), dvKey(dv))) = AddEntry(pv, dv,
-            at("sz").map(r.getLong).getOrElse(0L),
-            at("mt").map(r.getLong).getOrElse(0L),
-            at("st").map(r.getString).filter(_.nonEmpty),
-            addVersion = cpVersion,
-            baseRowId = at("bri").map(r.getLong),
-            defaultRowCommitVersion = at("drcv").map(r.getLong))
-        }
-      }
-      if (topFields.contains("sidecar"))
-        cp.filter(col("sidecar").isNotNull).select(col("sidecar.path"))
-          .collect().map(_.getString(0)).toSeq
-      else Nil
-    }
-
-    // sidecar paths resolve against _delta_log/_sidecars/ unless absolute
-    // (PROTOCOL.md "V2 Checkpoint Table Feature")
-    def resolveSidecar(p: String): String = {
-      val raw = new Path(java.net.URLDecoder.decode(p, "UTF-8"))
-      (if (raw.isAbsolute) raw else new Path(new Path(logDir, "_sidecars"), raw)).toString
-    }
-
-    lastCp.foreach { case (version, parts) =>
-      val files: Seq[Path] = parts match {
-        case Some(n) =>
-          (1 to n).map(i => new Path(logDir, f"$version%020d.checkpoint.$i%010d.$n%010d.parquet"))
-        case None =>
-          val classic = new Path(logDir, f"$version%020d.checkpoint.parquet")
-          if (fs.exists(classic)) Seq(classic)
-          else {
-            // V2 checkpoints are UUID-named (`v.checkpoint.<unique>.parquet`
-            // or `.json`) and found by LISTING, not name construction. Each
-            // V2 manifest is complete on its own — pick one deterministically.
-            val prefix = f"$version%020d.checkpoint."
-            val cands = fs.listStatus(logDir).map(_.getPath).filter { p =>
-              val n = p.getName
-              n.startsWith(prefix) && (n.endsWith(".parquet") || n.endsWith(".json"))
-            }
-            if (cands.isEmpty) throw DeltaReadException(
-              s"`$root`: _last_checkpoint names version $version but no matching " +
-                "checkpoint file exists in _delta_log")
-            Seq(cands.maxBy(_.getName))
-          }
-      }
-      val sidecars: Seq[String] =
-        if (files.length == 1 && files.head.getName.endsWith(".json")) {
-          // V2 JSON manifest: one action per line, like a commit, plus
-          // sidecar actions; checkpoint add/remove semantics (removes are
-          // expired tombstones — ignored)
-          val in = fs.open(files.head)
-          val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-          lines.filter(_.nonEmpty).flatMap { line =>
-            val node = mapper.readTree(line)
-            if (node.has("protocol")) applyProtocolJson(node.path("protocol"))
-            if (node.has("metaData")) applyMetaJson(node.path("metaData"))
-            if (node.has("add")) {
-              val a = node.path("add")
-              val dv = dvJson(a)
-              adds((a.path("path").asText(), dvKey(dv))) = addEntryJson(a, dv, version)
-            }
-            if (node.has("sidecar")) Some(node.path("sidecar").path("path").asText()) else None
-          }
-        } else
-          // mergeSchema: multi-part checkpoints may split action kinds
-          // across parts; the union of part schemas is the action schema
-          ingestCheckpointFrame(spark.read.option("mergeSchema", "true")
-            .parquet(files.map(_.toString): _*), version)
-      if (sidecars.nonEmpty) {
-        val more = ingestCheckpointFrame(spark.read.option("mergeSchema", "true")
-          .parquet(sidecars.map(resolveSidecar): _*), version)
-        if (more.nonEmpty) throw DeltaReadException(
-          s"`$root`: V2 checkpoint sidecar files must not reference further " +
-            "sidecars — malformed checkpoint")
-      }
-    }
-
-    // JSON commits after the checkpoint (and up to the time-travel pin),
-    // in version order
-    val allCommitVersions = allCommitStatuses.map { case (v, st) => (v, st.getPath) }
-    val commits = allCommitVersions.filter { case (v, _) =>
-      lastCp.forall(_._1 < v) && asOf.forall(v <= _)
-    }
-    asOf.foreach { pin =>
-      val maxAvail = (lastCp.map(_._1).toSeq ++ allCommitVersions.map(_._1)).maxOption
-      if (maxAvail.forall(_ < pin))
-        throw DeltaReadException(
-          s"`$root`: version_as_of $pin does not exist" +
-            maxAvail.map(m => s" (latest available: $m)").getOrElse(""))
-      // contiguity: the replay must cover [base, pin] with no vacuumed gap
-      val base = lastCp.map(_._1 + 1).getOrElse(0L)
-      val have = commits.map(_._1).toSet
-      (base to pin).find(!have.contains(_)).foreach { missing =>
-        throw DeltaReadException(
-          s"`$root`: version_as_of $pin needs commit $missing, which is not in " +
-            "_delta_log (vacuumed?) — this version is no longer reconstructible")
-      }
-    }
-    if (lastCp.isEmpty && commits.isEmpty)
+    // --- resolve the snapshot from the log (driver-side metadata work) ---
+    val snap = DeltaLog.snapshot(spark, root, asOf)
+    if (!snap.exists)
       throw DeltaReadException(s"`$root`: _delta_log holds no checkpoint and no commits")
     changesSince.foreach { since =>
       // a checkpoint folds per-file add versions away: every folded file
       // reports the checkpoint version. A `since` BELOW the checkpoint
       // would silently misreport folded files as fresh changes — reject.
-      lastCp.foreach { case (cpV, _) =>
+      snap.checkpointVersion.foreach { cpV =>
         if (since < cpV) throw DeltaReadException(
           s"`$root`: changes_since $since predates checkpoint $cpV, which no " +
             "longer records per-file add versions; pass changes_since >= " +
             s"$cpV or keep the commit JSON history")
       }
-      val end = asOf.orElse(
-        (lastCp.map(_._1).toSeq ++ commits.map(_._1)).maxOption).getOrElse(0L)
-      if (since > end) throw DeltaReadException(
-        s"`$root`: changes_since $since is beyond the read's end version $end " +
-          "(nothing has been committed after it)")
+      if (since > snap.version) throw DeltaReadException(
+        s"`$root`: changes_since $since is beyond the read's end version " +
+          s"${snap.version} (nothing has been committed after it)")
     }
-    commits.foreach { case (v, path) =>
-      val in = fs.open(path)
-      val lines = try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-      lines.filter(_.nonEmpty).foreach { line =>
-        val node = mapper.readTree(line)
-        if (node.has("protocol")) applyProtocolJson(node.path("protocol"))
-        if (node.has("metaData")) applyMetaJson(node.path("metaData"))
-        if (node.has("add")) {
-          val a = node.path("add")
-          val dv = dvJson(a)
-          adds((a.path("path").asText(), dvKey(dv))) = addEntryJson(a, dv, v)
-        }
-        if (node.has("remove")) {
-          val rm = node.path("remove")
-          adds.remove((rm.path("path").asText(), dvKey(dvJson(rm))))
-        }
-      }
-    }
-
-    val schema = DataType.fromJson(schemaJson.getOrElse(
+    val schema = DataType.fromJson(snap.schemaJson.getOrElse(
       throw DeltaReadException(s"`$root`: no metaData action found in the Delta log")))
       .asInstanceOf[StructType]
+    val partCols = snap.partCols
+    val tableConf = snap.conf
 
     // --- protocol gate (now that configuration + features are known) ---
-    val cmMode = tableConf.getOrElse("delta.columnMapping.mode", "none")
+    val readerVersion = snap.protocol.map(_.minReader).getOrElse(1)
+    val readerFeatures = snap.protocol.map(_.readerFeatures).getOrElse(Set.empty)
+    val cmMode = snap.columnMappingMode
     if (readerVersion == 2 && cmMode != "none" && cmMode != "name" && cmMode != "id")
       throw DeltaReadException(
         s"`$root`: unknown column mapping mode `$cmMode`; this native reader " +
@@ -490,17 +201,10 @@ object DeltaNative {
           "install a delta connector jar for this table")
     }
 
-    // --- flatten reconciliation keys back to one live entry per file ---
-    val liveAll: Seq[(String, AddEntry)] = adds.toSeq.map { case ((p, _), e) => p -> e }
-    val live: Seq[(String, AddEntry)] = changesSince match {
-      case Some(since) => liveAll.filter(_._2.addVersion > since)
-      case None => liveAll
+    val live: Seq[(String, DeltaLog.FileEntry)] = changesSince match {
+      case Some(since) => snap.live.toSeq.filter(_._2.addVersion > since)
+      case None => snap.live.toSeq
     }
-    val dupPaths = liveAll.groupBy(_._1).filter(_._2.size > 1).keys.toSeq.sorted
-    if (dupPaths.nonEmpty) throw DeltaReadException(
-      s"`$root`: log reconciliation left ${dupPaths.size} file path(s) live more " +
-        s"than once (first: ${dupPaths.head}) — a remove action is missing its " +
-        "deletionVector id; refusing to double-read")
 
     // --- column mapping (PROTOCOL.md Column Mapping): data files carry
     // PHYSICAL column names; the logical schema's field metadata holds the
@@ -508,26 +212,24 @@ object DeltaNative {
     // by alias, nested levels by position-cast (Cast on structs matches by
     // position and rewrites names). Pure metadata, zero data movement.
     val mappingActive = cmMode != "none" &&
-      schema.fields.exists(_.metadata.contains(PhysNameKey))
-    def physName(f: StructField): String =
-      if (f.metadata.contains(PhysNameKey)) f.metadata.getString(PhysNameKey) else f.name
+      schema.fields.exists(_.metadata.contains(DeltaLog.PhysNameKey))
     def toPhysical(dt: DataType): DataType = dt match {
       case s: StructType =>
-        StructType(s.fields.map(f => f.copy(name = physName(f), dataType = toPhysical(f.dataType))))
+        StructType(s.fields.map(f => f.copy(name = DeltaLog.physicalName(f), dataType = toPhysical(f.dataType))))
       case a: ArrayType => a.copy(elementType = toPhysical(a.elementType))
       case m: MapType => m.copy(keyType = toPhysical(m.keyType), valueType = toPhysical(m.valueType))
       case other => other
     }
     val physSchema = if (mappingActive) toPhysical(schema).asInstanceOf[StructType] else schema
     val physByLogical: Map[String, String] =
-      schema.fields.map(f => f.name -> physName(f)).toMap
+      schema.fields.map(f => f.name -> DeltaLog.physicalName(f)).toMap
     // partitionColumns are logical names; add.partitionValues (and hive dir
     // names) are keyed by PHYSICAL names when mapping is active
     val physPartCols = partCols.map(c => physByLogical.getOrElse(c, c))
     def unmapped(df: DataFrame): DataFrame =
       if (!mappingActive) df
       else df.select(schema.fields.map { f =>
-        col(physName(f)).cast(f.dataType).as(f.name)
+        col(DeltaLog.physicalName(f)).cast(f.dataType).as(f.name)
       }.toSeq: _*)
 
     def resolve(p: String): String = {
@@ -653,7 +355,7 @@ object DeltaNative {
         val sel = joined.select(physSchema.fieldNames.map(col).toSeq ++ rtCols: _*)
         if (!mappingActive) sel
         else sel.select(schema.fields.map { f =>
-          col(physName(f)).cast(f.dataType).as(f.name)
+          col(DeltaLog.physicalName(f)).cast(f.dataType).as(f.name)
         }.toSeq ++ rtCols: _*)
       }
     }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.SparkSession
   * optimization or refactor commits (run once from the pre-change tree for
   * the "before" set, once from the change for "after"):
   *   - `<query>_<suffix>.txt`: `.explain("formatted")` of the frame the
-  *     query returns;
+  *     query returns, normalised like the actions below;
   *   - `<query>_<suffix>_actions.txt`: the optimized plan of every action
   *     the query ran while it was built (a MERGE's stats collect and its
   *     writes, which the returned read never shows). Expression ids and
@@ -36,8 +36,8 @@ object PlanDump {
       try {
         val (df, actions) =
           org.apache.spark.graft.ActionPlans.capture(spark)(all(name)(spark, sfDir))
-        write(s"${name}_$suffix.txt", df.queryExecution.explainString(
-          org.apache.spark.sql.execution.FormattedMode))
+        write(s"${name}_$suffix.txt", normalise(df.queryExecution.explainString(
+          org.apache.spark.sql.execution.FormattedMode), sfDir))
         write(s"${name}_${suffix}_actions.txt", actions
           .map { case (fn, qe) =>
             s"== $fn ==\n${normalise(qe.optimizedPlan.treeString, sfDir)}"
@@ -51,22 +51,26 @@ object PlanDump {
     spark.stop()
   }
 
-  /** Expression ids, plan and query-stage ids, the data and temp
+  /** Expression ids, plan and query-stage ids, the data, temp and checkout
     * directories, and the random or order-dependent parts of file names
-    * (uuids, stamps, part numbers, truncated scan locations) vary run to
-    * run; plans do not. */
+    * (uuids, stamps, part numbers, fixture suffixes such as
+    * `delta_upsert_x19-7e498888`, truncated scan locations) and the
+    * names of JVM lambda classes vary run to run; plans do not. */
   def normalise(plan: String, sfDir: String): String = {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir")).getCanonicalPath
+    val checkout = new java.io.File(".").getCanonicalPath
     plan
       .replace(new java.io.File(sfDir).getCanonicalPath, "<sf>")
       .replace(tmp, "<tmp>")
+      .replace(checkout + "/", "<checkout>/")
       .replaceAll("#\\d+L?", "#N")
       .replaceAll("plan_id=\\d+", "plan_id=N")
       .replaceAll("QueryStage \\d+", "QueryStage N")
       .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}[0-9a-f-]*", "<uuid>")
       .replaceAll("part-\\d+-", "part-N-")
       .replaceAll("_graft_tmp_[a-z]*-?[0-9a-f]{8}", "_graft_tmp_<stamp>")
-      .replaceAll("-[0-9a-f]{8}(?=/)", "-<id>")
+      .replaceAll("-[0-9a-f]{8}(?=[/,\\]\\s]|$)", "-<id>")
       .replaceAll("(Location: \\w+\\(\\d+ paths?\\))\\[[^\\s,\\]]*", "$1[<loc>")
+      .replaceAll("Lambda\\$?\\d*/0x[0-9a-f]+@[0-9a-f]+", "Lambda<id>")
   }
 }

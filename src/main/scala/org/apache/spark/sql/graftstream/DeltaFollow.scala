@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
 import org.apache.spark.sql.types.StructType
 
-import graft.sources.DeltaNative
+import graft.sources.{DeltaLog, DeltaNative}
 
 /** STRUCTURED STREAMING over the native Delta log — `readStream` follows a
   * Delta table with no delta-spark jar, the streaming face of the batch
@@ -98,12 +98,7 @@ class DeltaFollowSource(spark: CSparkSession, root: String,
     val logDir = new Path(root, "_delta_log")
     val fs = logDir.getFileSystem(spark.sessionState.newHadoopConf())
     if (!fs.exists(logDir)) return None
-    val commitRe = """(\d{20})\.json""".r
-    val versions = fs.listStatus(logDir).iterator.flatMap(_.getPath.getName match {
-      case commitRe(v) => Some(v.toLong)
-      case _ => None
-    }).toSeq
-    if (versions.isEmpty) None else Some(versions.max)
+    DeltaLog.commits(fs, logDir).lastOption.map(_._1)
   }
 
   /** `max_commits_per_trigger=N` bounds how many NEW commits one

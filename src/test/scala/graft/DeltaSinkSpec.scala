@@ -1364,4 +1364,91 @@ class DeltaSinkSpec extends SparkSpec {
     assert(readBack(root).orderBy("id").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).toSeq === rows)
   }
+
+  /** A one-file table whose DV-delete commit lists `add(p, dv)` BEFORE
+    * `remove(p)`: the protocol does not fix the order of a commit's
+    * actions, and only the (path, DV id) key tells the two apart. */
+  private def reorderedDvTable(prefix: String): String = {
+    val root = tempDir(prefix).getPath + "/t"
+    DeltaSink.write(Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "v").coalesce(1),
+      root, Map.empty)
+    assert(DeltaSink.deleteWhereDv(spark, root, "id = 2") === 1L)
+    val commit = java.nio.file.Paths.get(s"$root/_delta_log/00000000000000000001.json")
+    val lines = java.nio.file.Files.readAllLines(commit).asScala.toSeq.filter(_.nonEmpty)
+    val (fileActions, rest) =
+      lines.partition(l => l.startsWith("{\"add\"") || l.startsWith("{\"remove\""))
+    assert(fileActions.map(_.startsWith("{\"remove\"")) === Seq(true, false))
+    java.nio.file.Files.writeString(commit,
+      (rest ++ fileActions.reverse).mkString("", "\n", "\n"))
+    // the local file system would reject the rewrite against its old checksum
+    java.nio.file.Files.deleteIfExists(
+      commit.resolveSibling(s".${commit.getFileName}.crc"))
+    assert(readBack(root).select("id").as[Long].collect().sorted.toSeq === Seq(1L, 3L))
+    root
+  }
+
+  test("writers reconcile on (path, DV id): a DV commit in either order keeps its rows") {
+    val cp = reorderedDvTable("dsink_dvorder_cp")
+    DeltaSink.checkpoint(spark, cp)
+    assert(readBack(cp).select("id").as[Long].collect().sorted.toSeq === Seq(1L, 3L))
+    val ow = reorderedDvTable("dsink_dvorder_ow")
+    Sinks.copyTo(Seq((9L, "z")).toDF("id", "v"), ow, "delta", Map("overwrite" -> "true"))
+    assert(readBack(ow).select("id").as[Long].collect().toSeq === Seq(9L))
+  }
+
+  test("DV gates see the live set: after REORG PURGE, COW DELETE, MERGE and OPTIMIZE work") {
+    val root = tempDir("dsink_dvpurge_dml").getPath + "/t"
+    DeltaSink.write((1L to 8L).map(i => (i, s"v$i")).toDF("id", "v").repartition(2),
+      root, Map.empty)
+    var model = (1L to 8L).map(i => i -> s"v$i").toMap
+    def check(): Unit = assert(readBack(root).as[(Long, String)].collect().sorted.toSeq
+      === model.toSeq.sorted)
+    assert(DeltaSink.deleteWhereDv(spark, root, "id = 2") === 1L)
+    model -= 2L; check()
+    DeltaSink.purgeDeletionVectors(spark, root)
+    check()
+    assert(DeltaSink.deleteWhere(spark, root, "id = 3") === 1L)
+    model -= 3L; check()
+    val src = Seq((4L, "x"), (10L, "new")).toDF("id", "v")
+    assert(DeltaSink.mergeInto(spark, root, src, "t.id = s.id",
+      matchedClauses = Seq(MergeMatchedClause(None, Some(Map("v" -> "s.v")))),
+      insertClauses = Seq(MergeInsertClause(None, None))) === ((1L, 1L)))
+    model = model + (4L -> "x") + (10L -> "new"); check()
+    val (compacted, written) = DeltaSink.optimize(spark, root, minFileBytes = Long.MaxValue)
+    assert(compacted >= 2 && written >= 1, (compacted, written))
+    check()
+  }
+
+  test("resolving a checkpointed table runs one Spark job per checkpoint frame") {
+    val root = tempDir("dsink_cp_jobs").getPath + "/t"
+    DeltaSink.write(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root, Map.empty)
+    DeltaSink.write(Seq((3L, "c")).toDF("id", "v"), root, Map.empty)
+    DeltaSink.checkpoint(spark, root)
+    DeltaSink.write(Seq((4L, "d")).toDF("id", "v"), root, Map.empty)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    def jobsOf(body: => Unit): Int = {
+      Thread.sleep(200) // earlier jobs' start events drain first
+      jobs.set(0)
+      body
+      // let the async listener bus drain before reading the counter
+      var waited = 0
+      var last = -1
+      while (waited < 2000 && last != jobs.get) { last = jobs.get; Thread.sleep(100); waited += 100 }
+      jobs.get
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(jobsOf { DeltaNative.read(spark, root, Map.empty) } === 1, "reader")
+      assert(jobsOf {
+        DeltaSink.setTableProperties(spark, root, Map("owner" -> "spec"))
+      } === 1, "writer")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(readBack(root).select("id").as[Long].collect().sorted.toSeq
+      === Seq(1L, 2L, 3L, 4L))
+  }
 }
