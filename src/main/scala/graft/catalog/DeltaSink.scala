@@ -1881,6 +1881,28 @@ object DeltaSink {
             .drop(Seq("__rt_key", "__rt_idx", "__rt_base", "__rt_def") ++ matColNames: _*)
       }
     }
+
+    /** The `files` whose add.stats admit a row satisfying `predicateSql`,
+      * pruned as the reader prunes (`LogFileIndex.mayMatch` over the
+      * predicate's conjuncts, on physical names). A file without stats, or
+      * a predicate that does not resolve against the schema alone, keeps
+      * every file. */
+    def mayMatch(files: Map[String, Map[String, String]],
+        predicateSql: String): Map[String, Map[String, String]] = {
+      import org.apache.spark.sql.catalyst.expressions.AttributeReference
+      import org.apache.spark.sql.catalyst.plans.logical.Filter
+      val cond = try {
+        val analyzed = spark.createDataFrame(java.util.List.of[org.apache.spark.sql.Row](), schema)
+          .filter(predicateSql).queryExecution.analyzed
+        val Filter(c, _) = org.apache.spark.sql.catalyst.optimizer.ConstantFolding(analyzed)
+        c.transform { case a: AttributeReference => a.withName(physKey(a.name)) }
+      } catch { case _: Exception => return files }
+      val physSchema = StructType(schema.fields.map(f => f.copy(name = physKey(f.name))))
+      files.filter { case (rel, _) =>
+        st.live(rel).stats.flatMap(graft.sources.LogFileIndex.parseDeltaStats(_, physSchema, mapper))
+          .forall(graft.sources.LogFileIndex.mayMatch(cond, _))
+      }
+    }
   }
 
   private def copyOnWriteDml(spark: org.apache.spark.sql.SparkSession, path: String,
@@ -1968,7 +1990,8 @@ object DeltaSink {
     val rtCarry: Seq[org.apache.spark.sql.Column] =
       if (rtOn) Seq(col("__rt_id"), col("__rt_ver")) else Nil
     val pred = expr(predicateSql)
-    val affectedRel = cow.rows(live).filter(pred).select(col("__file")).distinct()
+    val affectedRel = cow.rows(cow.mayMatch(live, predicateSql)).filter(pred)
+      .select(col("__file")).distinct()
       .collect().map(r => cow.relOf(r.getString(0))).toSeq
     if (affectedRel.isEmpty) return 0L
 

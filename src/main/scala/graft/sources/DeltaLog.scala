@@ -105,6 +105,7 @@ object DeltaLog {
   /** A resolved table version.
     *   - `exists`: the log holds a checkpoint or a commit (a missing or
     *     empty `_delta_log` gives version -1 and nothing else);
+    *   - `logExists`: the `_delta_log` directory exists;
     *   - `live`: path (as the log names it) → entry, in log order;
     *   - `txnVersions`: the highest `txn.version` per appId;
     *   - `domains`: live domainMetadata, domain → configuration string
@@ -113,7 +114,7 @@ object DeltaLog {
     *     commits, the floor for the next commit on an ICT table;
     *   - `checkpointVersion`: the checkpoint the replay started from;
     *   - `commits`: every commit file in the log, version-ordered. */
-  final case class Snapshot(version: Long, exists: Boolean,
+  final case class Snapshot(version: Long, exists: Boolean, logExists: Boolean,
       schemaJson: Option[String], partCols: Seq[String], conf: Map[String, String],
       tableId: Option[String], protocol: Option[Protocol],
       live: VectorMap[String, FileEntry], txnVersions: Map[String, Long],
@@ -185,10 +186,11 @@ object DeltaLog {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(rootPath, "_delta_log")
-    if (!fs.exists(logDir))
-      return Snapshot(-1L, exists = false, None, Nil, Map.empty, None, None,
-        VectorMap.empty, Map.empty, Map.empty, None, None, Nil)
-    val listing = fs.listStatus(logDir).toSeq
+    val listing = try fs.listStatus(logDir).toSeq catch {
+      case _: java.io.FileNotFoundException =>
+        return Snapshot(-1L, exists = false, logExists = false, None, Nil, Map.empty,
+          None, None, VectorMap.empty, Map.empty, Map.empty, None, None, Nil)
+    }
     val names = listing.map(_.getPath.getName).toSet
     val allCommits = commitsIn(listing)
     val latestCp: Option[(Long, Option[Int])] =
@@ -402,8 +404,8 @@ object DeltaLog {
             s"than once (first: ${dupPaths.head}) — a remove action is missing its " +
             "deletionVector id; refusing to double-read")
       }
-      Snapshot(version, exists, schemaJson, partCols, conf, tableId, protocol, live,
-        txns.toMap, domains.toMap, lastIct, checkpointVersion, commits)
+      Snapshot(version, exists, logExists = true, schemaJson, partCols, conf, tableId,
+        protocol, live, txns.toMap, domains.toMap, lastIct, checkpointVersion, commits)
     }
   }
 }

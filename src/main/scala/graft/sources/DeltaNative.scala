@@ -104,8 +104,7 @@ object DeltaNative {
     val rootPath = new Path(root)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
     val logDir = new Path(rootPath, "_delta_log")
-    if (!fs.exists(logDir))
-      throw DeltaReadException(s"`$root` is not a Delta table: no _delta_log directory")
+    def notDelta = DeltaReadException(s"`$root` is not a Delta table: no _delta_log directory")
 
     // TIME TRAVEL: `version_as_of` pins the snapshot at that commit
     // version; `timestamp_as_of` resolves an instant to the last commit at
@@ -142,7 +141,8 @@ object DeltaNative {
       n
     }
     val asOf: Option[Long] = versionPin.orElse(tsPin.map { target =>
-      val commits = DeltaLog.commits(fs, logDir)
+      val commits = try DeltaLog.commits(fs, logDir)
+        catch { case _: java.io.FileNotFoundException => throw notDelta }
       if (commits.isEmpty) throw DeltaReadException(
         s"`$root`: timestamp_as_of needs commit files in _delta_log, none found")
       val history = commits.map { case (v, st) =>
@@ -156,6 +156,7 @@ object DeltaNative {
 
     // --- resolve the snapshot from the log (driver-side metadata work) ---
     val snap = DeltaLog.snapshot(spark, root, asOf)
+    if (!snap.logExists) throw notDelta
     if (!snap.exists)
       throw DeltaReadException(s"`$root`: _delta_log holds no checkpoint and no commits")
     changesSince.foreach { since =>

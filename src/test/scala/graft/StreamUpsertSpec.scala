@@ -124,9 +124,9 @@ class StreamUpsertSpec extends SparkSpec {
     }
     // the survivors of the one affected file, written by one task
     assert(writers === Seq(50L))
-    // the affected-file search reads the table once (400); the count and
-    // the survivor write read the affected file's 50 rows each
-    assert(all.sum === 500L)
+    // the affected-file search reads only the file whose stats admit k = 7,
+    // and the count and the survivor write read its 50 rows again
+    assert(all.sum === 150L)
     assert(liveFiles(root).size === 8)
     val got = DeltaNative.read(spark, root, Map.empty).collect().map(_.getLong(0)).toSet
     assert(got === (0L until 400L).toSet - 7L)

@@ -1,14 +1,19 @@
 #!/usr/bin/env python3
-"""Summarises a same-session A/B of the benchmark's untraced runs.
+"""Summarises a same-session A/B of the benchmark's runs.
 
 A runs directory holds one artifact per run, named
-`<tag>-<side>-<workload>-s<seed>-trace0.json`, where side is `parent` or
-`change`; the two runs with the same tag and seed form a pair. For every
-workload and every end-to-end metric of BENCHMARK.json this prints each side's
-q1 / median / q3, how many pairs the change won (ties count for neither), and
-whether the gain rule holds: the change wins at least 9 of 10 pairs, and the
-medians differ, in the better direction, by more than the parent's
-interquartile range.
+`<tag>-<side>-<workload>-s<seed>-trace<0|1>.json`, where side is `parent` or
+`change`; the two runs with the same tag, seed and trace flag form a pair.
+
+Untraced pairs: for every workload and every end-to-end metric of
+BENCHMARK.json this prints each side's q1 / median / q3, how many pairs the
+change won (ties count for neither), and whether the gain rule holds: the
+change wins at least 9 of 10 pairs, and the medians differ, in the better
+direction, by more than the parent's interquartile range.
+
+Traced pairs: for every workload, each side's median of the per-layer
+metrics in LAYERS (those that read 0 on every run of the workload are left
+out) and every pair's parent and change value.
 
 Usage: python3 tools/ab_summary.py <runs dir>
 """
@@ -20,6 +25,12 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
 # +1 when a higher value is better, -1 when a lower one is
 BETTER = {m["name"]: 1 if m["better"] == "higher" else -1 for m in BENCH["end_to_end"]}
 WORKLOADS = [w["name"] for w in BENCH["workloads"]]
+# the stream phases, the sink writes and the driver time around them
+LAYERS = [m["name"] for m in BENCH["per_layer"]
+          if m["name"].startswith("streaming.") and m["name"].endswith("_ms.p50")] + [
+    "catalog.write_ms.stream_delta.p50", "catalog.write_ms.stream_iceberg.p50",
+    "catalog.driver_ms_per_write.p50", "catalog.jobs_per_write.p50",
+    "engine.driver_gap_ms.p50"]
 
 
 def quartiles(xs):
@@ -27,16 +38,21 @@ def quartiles(xs):
     return q[0], statistics.median(xs), q[2]
 
 
-def pairs(runs, workload):
-    """The (parent, change) artifacts of every complete pair, in tag order."""
+def tagged_pairs(runs, workload, trace=0):
+    """(tag, seed, parent, change) of every complete pair, in tag order."""
     by = {}
-    for f in glob.glob(os.path.join(runs, "*-*-%s-s*-trace0.json" % workload)):
+    for f in glob.glob(os.path.join(runs, "*-*-%s-s*-trace%d.json" % (workload, trace))):
         tag, side = os.path.basename(f).split("-")[:2]
         with open(f) as fh:
             a = json.load(fh)
         by.setdefault((tag, a["seed"]), {})[side] = a
-    return [(p["parent"], p["change"]) for _, p in sorted(by.items())
+    return [(tag, seed, p["parent"], p["change"]) for (tag, seed), p in sorted(by.items())
             if "parent" in p and "change" in p]
+
+
+def pairs(runs, workload):
+    """The (parent, change) artifacts of every complete untraced pair."""
+    return [(p, c) for _, _, p, c in tagged_pairs(runs, workload)]
 
 
 def gain(par, chg, sign):
@@ -68,8 +84,29 @@ def end_to_end(runs, workload):
     print()
 
 
+def traced(runs, workload):
+    ps = tagged_pairs(runs, workload, trace=1)
+    print("## %s: %d traced pairs" % (workload, len(ps)))
+    if not ps:
+        return
+    print("| metric | parent median | change median | %s |" % " | ".join(
+        "%s s%d parent / change" % (tag, seed) for tag, seed, _, _ in ps))
+    print("|---|---|---|%s" % ("---|" * len(ps)))
+    for m in LAYERS:
+        par = [p["per_layer"][m]["value"] for _, _, p, _ in ps]
+        chg = [c["per_layer"][m]["value"] for _, _, _, c in ps]
+        if not any(par + chg):
+            continue
+        print("| %s | %.1f | %.1f | %s |" % (
+            m, statistics.median(par), statistics.median(chg),
+            " | ".join("%.1f / %.1f" % pc for pc in zip(par, chg))))
+    print()
+
+
 if __name__ == "__main__":
     if len(sys.argv) != 2 or not os.path.isdir(sys.argv[1]):
         sys.exit(__doc__.strip().splitlines()[-1])
     for w in WORKLOADS:
         end_to_end(sys.argv[1], w)
+    for w in WORKLOADS:
+        traced(sys.argv[1], w)
