@@ -39,7 +39,7 @@ import org.apache.spark.sql.types._
   * O(files) cost the original write paid), so plan-time skipping AND
   * metadata-only aggregates work on the converted table immediately. */
 object Convert {
-  import graft.sources.DeltaLog
+  import graft.sources.{DeltaLog, IcebergLog}
   import graft.sources.IcebergNative.IcebergReadException
 
   private val mapper = new ObjectMapper()
@@ -47,22 +47,6 @@ object Convert {
   /** Marker key in the Iceberg snapshot summary recording which Delta
     * version a conversion snapshot mirrors. */
   private[graft] val DeltaVersionKey = "graft-converted-delta-version"
-
-  private def iceType(dt: DataType): String = dt match {
-    case BooleanType => "boolean"
-    case ByteType | ShortType | IntegerType => "int"
-    case LongType => "long"
-    case FloatType => "float"
-    case DoubleType => "double"
-    case StringType => "string"
-    case BinaryType => "binary"
-    case DateType => "date"
-    case TimestampType => "timestamptz"
-    case TimestampNTZType => "timestamp"
-    case d: DecimalType => s"decimal(${d.precision}, ${d.scale})"
-    case other => throw IcebergReadException(
-      s"convert_to_iceberg: type ${other.simpleString} has no iceberg mapping")
-  }
 
   /** Convert (or re-sync) the Delta table at `path` to Iceberg metadata in
     * the same root. Returns the number of live data files referenced by
@@ -106,34 +90,18 @@ object Convert {
     }
 
     // ---- existing iceberg metadata: only our own conversions may re-sync ----
-    val metaDir = new Path(rootPath, "metadata")
-    val resolved = IcebergSink.resolveCurrent(fs, metaDir)
-    var prevVersion = 0L
-    var lastSnapshotId = 0L
-    var lastSeq = 0L
-    var prevSnapshotsJson: Seq[String] = Nil
-    var prevSnapshotLog: Seq[(Long, Long)] = Nil
-    resolved.foreach { case (v, metaFile) =>
-      val meta = {
-        val in = fs.open(metaFile)
-        try mapper.readTree(in) finally in.close()
-      }
-      val snaps = meta.path("snapshots").elements().asScala.toSeq
-      val converted = snaps.flatMap(s0 =>
+    val base = IcebergLog.snapshot(spark, path)
+    if (base.exists) {
+      val converted = base.snapshots.flatMap(s0 =>
         Option(s0.path("summary").path(DeltaVersionKey)).filter(!_.isMissingNode)
           .map(_.asText("-1").toLong))
       if (converted.isEmpty) throw IcebergReadException(
-        s"convert_to_iceberg: `$path` already has Iceberg metadata (v$v) that " +
+        s"convert_to_iceberg: `$path` already has Iceberg metadata (v${base.version}) that " +
           "this converter did not produce — refusing to overwrite a live table's " +
           "metadata; remove metadata/ or convert into a fresh root")
       if (converted.max >= st.version) return -1L // this Delta version is synced
-      prevVersion = v
-      lastSnapshotId = snaps.map(_.path("snapshot-id").asLong()).maxOption.getOrElse(0L)
-      lastSeq = snaps.map(_.path("sequence-number").asLong(0L)).maxOption.getOrElse(0L)
-      prevSnapshotsJson = snaps.map(mapper.writeValueAsString)
-      prevSnapshotLog = meta.path("snapshot-log").elements().asScala
-        .map(e => (e.path("timestamp-ms").asLong(), e.path("snapshot-id").asLong())).toSeq
     }
+    val lastSnapshotId = base.lastSnapshotId
 
     val fieldIds: Seq[(StructField, Int)] =
       schema.fields.toSeq.zipWithIndex.map { case (f, i) => (f, i + 1) }
@@ -213,12 +181,11 @@ object Convert {
       else Some(dfSch.getField("partition").schema().getTypes.get(1))
 
     // ---- write manifest + manifest list + metadata.json + hint ----
-    val version = prevVersion + 1
     val snapshotId = lastSnapshotId + 1
-    val seq = lastSeq + 1
+    val seq = base.lastSeq + 1
     val nowMs = System.currentTimeMillis()
     val stamp = java.util.UUID.randomUUID().toString.take(8)
-    fs.mkdirs(metaDir)
+    fs.mkdirs(base.metaDir)
     def writeAvro(rel: String, sch: org.apache.avro.Schema, rows: Seq[GenericRecord]): Unit = {
       val out = fs.create(new Path(rootPath, rel), false)
       val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](sch))
@@ -263,7 +230,7 @@ object Convert {
       fieldIds.foreach { case (f, id) =>
         val fn = arr.addObject()
         fn.put("id", id); fn.put("name", f.name)
-        fn.put("required", !f.nullable); fn.put("type", iceType(f.dataType))
+        fn.put("required", !f.nullable); fn.put("type", IcebergSink.iceType(f.dataType, "convert_to_iceberg"))
       }
       mapper.writeValueAsString(sch)
     }
@@ -274,12 +241,12 @@ object Convert {
       sn.put("sequence-number", seq)
       sn.put("timestamp-ms", nowMs)
       val summary = sn.putObject("summary")
-      summary.put("operation", if (prevVersion == 0) "append" else "overwrite")
+      summary.put("operation", if (base.exists) "overwrite" else "append")
       summary.put(DeltaVersionKey, st.version.toString)
       sn.put("manifest-list", mlRel)
       mapper.writeValueAsString(sn)
     }
-    val logJson = (prevSnapshotLog :+ ((nowMs, snapshotId))).map { case (ts, id) =>
+    val logJson = (base.snapshotLog :+ ((nowMs, snapshotId))).map { case (ts, id) =>
       s"""{"timestamp-ms": $ts, "snapshot-id": $id}"""
     }.mkString("[", ", ", "]")
     val specJson = st.partCols.zipWithIndex.map { case (c, i) =>
@@ -299,16 +266,9 @@ object Convert {
          |"partition-specs": [{"spec-id": 0, "fields": [$specJson]}],
          |"current-snapshot-id": $snapshotId,
          |"snapshot-log": $logJson,
-         |"snapshots": ${(prevSnapshotsJson :+ snapshotJson).mkString("[", ", ", "]")}}""".stripMargin
-    val metaTarget = new Path(metaDir, s"v$version.metadata.json")
-    if (fs.exists(metaTarget)) throw IcebergReadException(
-      s"convert_to_iceberg: `$path` metadata version $version already exists — " +
-        "another writer got there first")
-    val out = fs.create(metaTarget, false)
-    try out.write(metaJson.getBytes("UTF-8")) finally out.close()
-    val hint = new Path(metaDir, "version-hint.text")
-    val hintOut = fs.create(hint, true)
-    try hintOut.write(version.toString.getBytes("UTF-8")) finally hintOut.close()
+         |"snapshots": ${(base.snapshots.map(mapper.writeValueAsString) :+ snapshotJson)
+      .mkString("[", ", ", "]")}}""".stripMargin
+    IcebergLog.commit(base, metaJson)
     entries.size.toLong
   }
 
@@ -365,38 +325,20 @@ object Convert {
     * Delta scan simply never requests (partition columns are served from
     * the log). */
   def icebergToDelta(spark: SparkSession, path: String): Long = {
-    import org.apache.avro.file.DataFileReader
-    import org.apache.avro.generic.GenericDatumReader
-    import org.apache.avro.mapred.FsInput
-
-    val rootPath = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = rootPath.getFileSystem(conf)
-    val metaDir = new Path(rootPath, "metadata")
-
-    val (_, metaFile) = IcebergSink.resolveCurrent(fs, metaDir).getOrElse(
-      throw IcebergReadException(
-        s"convert_to_delta: `$path` has no metadata/*.metadata.json — not an " +
-          "Iceberg table"))
-    val meta = {
-      val in = fs.open(metaFile)
-      try mapper.readTree(in) finally in.close()
-    }
-    val snapId = meta.path("current-snapshot-id").asLong(-1L)
+    val snap = IcebergLog.snapshot(spark, path)
+    if (!snap.exists) throw IcebergReadException(
+      s"convert_to_delta: `$path` has no metadata/*.metadata.json — not an " +
+        "Iceberg table")
+    val (rootPath, conf, fs, meta) = (snap.root, snap.conf, snap.fs, snap.meta)
+    val snapId = snap.currentSnapshotId
     if (snapId == -1L) throw IcebergReadException(
       s"convert_to_delta: `$path` has no current snapshot — nothing to convert")
-    val snap = meta.path("snapshots").elements().asScala
-      .find(_.path("snapshot-id").asLong() == snapId).getOrElse(
-        throw IcebergReadException(
-          s"convert_to_delta: `$path` current-snapshot-id $snapId not in snapshots"))
+    val current = snap.snapshotById(snapId).getOrElse(
+      throw IcebergReadException(
+        s"convert_to_delta: `$path` current-snapshot-id $snapId not in snapshots"))
 
     // ---- schema: current-schema-id, flat primitives only ----
-    val curSchemaId = meta.path("current-schema-id").asInt(0)
-    val schemaNode = meta.path("schemas").elements().asScala
-      .find(_.path("schema-id").asInt(-1) == curSchemaId)
-      .orElse(Option(meta.path("schema")).filter(!_.isMissingNode))
-      .getOrElse(throw IcebergReadException(
-        s"convert_to_delta: `$path` declares no schema $curSchemaId"))
+    val schemaNode = snap.currentSchema
     val fields: Seq[(Int, StructField)] = schemaNode.path("fields").elements().asScala.map { f =>
       val t = f.path("type")
       if (!t.isTextual) throw IcebergReadException(
@@ -436,25 +378,8 @@ object Convert {
     val partCols: Seq[String] = partPairs.map(_._2)
 
     // ---- walk the manifest list: live parquet data files, no deletes ----
-    def resolve(p: String): Path = {
-      val raw = new Path(p)
-      if (raw.isAbsolute || p.contains(":/")) raw else new Path(rootPath, raw)
-    }
-    def avroRows(p: Path): Seq[GenericRecord] = {
-      val rdr = DataFileReader.openReader(new FsInput(p, conf),
-        new GenericDatumReader[GenericRecord]())
-      try rdr.iterator().asScala.toList finally rdr.close()
-    }
-    def opt(r: GenericRecord, field: String): Option[AnyRef] =
-      Option(r.getSchema.getField(field)).flatMap(_ => Option(r.get(field)))
-    val manifestPaths: Seq[(Path, Int)] =
-      if (snap.has("manifest-list"))
-        avroRows(resolve(snap.path("manifest-list").asText())).map { r =>
-          (resolve(r.get("manifest_path").toString),
-            opt(r, "content").map(_.asInstanceOf[Number].intValue()).getOrElse(0))
-        }
-      else snap.path("manifests").elements().asScala.toSeq.map(m => (resolve(m.asText()), 0))
-    if (manifestPaths.exists(_._2 == 1)) throw IcebergReadException(
+    val manifests = snap.manifestsOf(current)
+    if (manifests.exists(_.content == 1)) throw IcebergReadException(
       s"convert_to_delta: `$path` snapshot $snapId carries row-level delete " +
         "manifests — their dead rows are invisible to a Delta reader; run " +
         "rewriteDataFiles (compaction) first")
@@ -478,52 +403,45 @@ object Convert {
           "date/bool only) — rewrite the table unpartitioned or on a " +
           "supported column first")
     }
-    val live: Seq[LiveFile] = manifestPaths.flatMap { case (mp, _) =>
-      avroRows(mp).flatMap { e =>
-        val status = e.get("status").asInstanceOf[Number].intValue()
-        if (status == 2) None // DELETED entry
-        else {
-          val df = e.get("data_file").asInstanceOf[GenericRecord]
-          val content = opt(df, "content").map(_.asInstanceOf[Number].intValue()).getOrElse(0)
-          if (content != 0) throw IcebergReadException(
-            s"convert_to_delta: `$path` snapshot $snapId references delete " +
-              s"file ${df.get("file_path")} — compact first (rewriteDataFiles)")
-          val fmt = df.get("file_format").toString.toUpperCase
-          if (fmt != "PARQUET") throw IcebergReadException(
-            s"convert_to_delta: data file format $fmt — Delta data files are " +
-              "parquet only")
-          val fp = df.get("file_path").toString
-          val abs = resolve(fp)
-          val rootStr = fs.makeQualified(rootPath).toString
-          val absStr = fs.makeQualified(abs).toString
-          if (!absStr.startsWith(rootStr + "/")) throw IcebergReadException(
-            s"convert_to_delta: data file `$fp` lives outside the table root — " +
-              "a same-root Delta log cannot reference it relatively")
-          val rel = absStr.stripPrefix(rootStr + "/")
-          val size = opt(df, "file_size_in_bytes").map(_.asInstanceOf[Number].longValue())
-            .filter(_ > 0).getOrElse(fs.getFileStatus(abs).getLen)
-          val pv: Map[String, String] = opt(df, "partition") match {
-            case Some(pr: GenericRecord) =>
-              // resolve r102 fields by NAME against the spec fields — an
-              // entry written under an older evolved spec with the same
-              // field count would mispair silently under positional zip
-              partPairs.map { case (specName, c) =>
-                val rf = Option(pr.getSchema.getField(specName)).getOrElse(
-                  throw IcebergReadException(
-                    s"convert_to_delta: data file `$fp` partition record has " +
-                      s"no field `$specName` (fields: ${pr.getSchema.getFields
-                        .asScala.map(_.name).mkString(", ")}) — written under " +
-                      "a different partition spec; rewrite the table first"))
-                c -> pvString(pr.get(rf.pos()), schema(c).dataType)
-              }.toMap
-            case _ => Map.empty
-          }
-          if (partCols.nonEmpty && pv.size != partCols.size) throw IcebergReadException(
-            s"convert_to_delta: data file `$fp` carries ${pv.size} partition " +
-              s"values for ${partCols.size} spec fields — refusing to guess")
-          Some(LiveFile(rel, abs, size, pv))
-        }
+    val live: Seq[LiveFile] = manifests.flatMap(snap.entries).filter(_.live).map { e =>
+      val df = e.file
+      if (e.content != 0) throw IcebergReadException(
+        s"convert_to_delta: `$path` snapshot $snapId references delete " +
+          s"file ${df.get("file_path")} — compact first (rewriteDataFiles)")
+      val fmt = e.format.toUpperCase
+      if (fmt != "PARQUET") throw IcebergReadException(
+        s"convert_to_delta: data file format $fmt — Delta data files are " +
+          "parquet only")
+      val fp = df.get("file_path").toString
+      val abs = new Path(e.path)
+      val rootStr = fs.makeQualified(rootPath).toString
+      val absStr = fs.makeQualified(abs).toString
+      if (!absStr.startsWith(rootStr + "/")) throw IcebergReadException(
+        s"convert_to_delta: data file `$fp` lives outside the table root — " +
+          "a same-root Delta log cannot reference it relatively")
+      val rel = absStr.stripPrefix(rootStr + "/")
+      val size = IcebergLog.field(df, "file_size_in_bytes").map(_.asInstanceOf[Number].longValue())
+        .filter(_ > 0).getOrElse(fs.getFileStatus(abs).getLen)
+      val pv: Map[String, String] = e.partition match {
+        case Some(pr) =>
+          // resolve r102 fields by NAME against the spec fields — an
+          // entry written under an older evolved spec with the same
+          // field count would mispair silently under positional zip
+          partPairs.map { case (specName, c) =>
+            val rf = Option(pr.getSchema.getField(specName)).getOrElse(
+              throw IcebergReadException(
+                s"convert_to_delta: data file `$fp` partition record has " +
+                  s"no field `$specName` (fields: ${pr.getSchema.getFields
+                    .asScala.map(_.name).mkString(", ")}) — written under " +
+                  "a different partition spec; rewrite the table first"))
+            c -> pvString(pr.get(rf.pos()), schema(c).dataType)
+          }.toMap
+        case None => Map.empty
       }
+      if (partCols.nonEmpty && pv.size != partCols.size) throw IcebergReadException(
+        s"convert_to_delta: data file `$fp` carries ${pv.size} partition " +
+          s"values for ${partCols.size} spec fields — refusing to guess")
+      LiveFile(rel, abs, size, pv)
     }
 
     // ---- footer-name probe over EVERY live file: Delta mode=none resolves
@@ -604,9 +522,10 @@ object Convert {
     }
     fs.mkdirs(logDir)
     val target = new Path(logDir, f"$version%020d.json")
-    if (fs.exists(target)) throw IcebergReadException(
+    def lost = IcebergReadException(
       s"convert_to_delta: `$path` Delta commit $version already exists — " +
         "another writer got there first")
+    if (fs.exists(target)) throw lost
     val staged = new Path(logDir,
       s".${target.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
     val out = fs.create(staged, false)
@@ -614,9 +533,7 @@ object Convert {
     finally out.close()
     if (!fs.rename(staged, target)) {
       fs.delete(staged, false)
-      throw IcebergReadException(
-        s"convert_to_delta: `$path` Delta commit $version already exists — " +
-          "another writer got there first")
+      throw lost
     }
     live.size.toLong
   }

@@ -1402,9 +1402,10 @@ object DeltaSink {
     * CRC-32), so the driver only ever sees bounded per-file descriptors.
     * The write→read DV loop closes against the native reader (spec + w07).
     *
-    * Rejects: tables already carrying DVs (merging decode+union is a
-    * compaction concern — OPTIMIZE first), CDF tables (use copy-on-write
-    * DELETE, which emits exact cdc rows), column mapping. */
+    * On a table already carrying DVs, an affected file's new vector is the
+    * union of its old and new dead positions (a DV replaces its
+    * predecessor). Rejects: CDF tables (use copy-on-write DELETE, which
+    * emits exact cdc rows) and column mapping mode `id`. */
   def deleteWhereDv(spark: org.apache.spark.sql.SparkSession, path: String,
       predicateSql: String): Long = dvDml(spark, path, predicateSql, Map.empty)
 

@@ -3,9 +3,8 @@ package graft.catalog
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
-import org.apache.avro.file.{DataFileReader, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.mapred.FsInput
+import org.apache.avro.file.DataFileWriter
+import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
@@ -44,6 +43,7 @@ import org.apache.spark.sql.types._
   * columns stay in the files as the spec expects; spec evolution rejects
   * loudly. */
 object IcebergSink {
+  import graft.sources.IcebergLog
   import graft.sources.IcebergNative.IcebergReadException
 
   private val mapper = new ObjectMapper()
@@ -152,6 +152,24 @@ object IcebergSink {
       s"partition source type `$other` is not supported for partitioned appends")
   }
 
+  /** The spec's primitive type name for a Spark type; `op` prefixes the
+    * rejection of a type with no mapping. */
+  private[catalog] def iceType(dt: DataType, op: String): String = dt match {
+    case BooleanType => "boolean"
+    case ByteType | ShortType | IntegerType => "int"
+    case LongType => "long"
+    case FloatType => "float"
+    case DoubleType => "double"
+    case StringType => "string"
+    case BinaryType => "binary"
+    case DateType => "date"
+    case TimestampType => "timestamptz"
+    case TimestampNTZType => "timestamp"
+    case d: DecimalType => s"decimal(${d.precision}, ${d.scale})"
+    case other => throw IcebergReadException(
+      s"$op: type ${other.simpleString} has no iceberg mapping")
+  }
+
   /** The table's default partition spec as PartFields, source types read
     * from the current schema's (textual) field types. Empty when
     * unpartitioned. */
@@ -159,12 +177,7 @@ object IcebergSink {
       meta: com.fasterxml.jackson.databind.JsonNode): Seq[PartField] = {
     val specs = defaultSpecFields(meta)
     if (specs.isEmpty) return Nil
-    val sch = if (meta.has("schemas")) {
-      val cur = meta.path("current-schema-id").asInt(0)
-      meta.path("schemas").elements().asScala
-        .find(_.path("schema-id").asInt(-1) == cur).get
-    } else meta.path("schema")
-    val byId: Map[Int, (String, String)] = sch.path("fields").elements().asScala
+    val byId: Map[Int, (String, String)] = IcebergLog.currentSchema(meta).path("fields").elements().asScala
       .collect { case f if f.path("type").isTextual =>
         f.path("id").asInt() -> (f.path("name").asText(), f.path("type").asText())
       }.toMap
@@ -352,39 +365,6 @@ object IcebergSink {
       {"name":"content","type":["null","int"],"default":null},
       {"name":"sequence_number","type":["null","long"],"default":null}]}""")
 
-  /** Current (version, metadata file): the hint when it's readable, numeric,
-    * and its file exists; else the NUMERICALLY highest *.metadata.json.
-    * The hint is ADVISORY (iceberg's HadoopTableOperations semantics) — a
-    * concurrent hint rewrite can expose an empty/truncated file to a
-    * polling reader, and lexicographic max would pick v9 over v10. None =
-    * no table here. */
-  private[catalog] def resolveCurrent(fs: org.apache.hadoop.fs.FileSystem,
-      metaDir: Path): Option[(Long, Path)] = {
-    val hint = new Path(metaDir, "version-hint.text")
-    def fromHint: Option[(Long, Path)] =
-      if (!fs.exists(hint)) None
-      else {
-        val in = fs.open(hint)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-        if (s.isEmpty || !s.forall(_.isDigit)) None
-        else Seq(s"v$s.metadata.json", s"$s.metadata.json")
-          .map(new Path(metaDir, _)).find(fs.exists).map((s.toLong, _))
-      }
-    def fromListing: Option[(Long, Path)] =
-      if (!fs.exists(metaDir)) None
-      else {
-        val re = """v?(\d+)\.metadata\.json""".r
-        fs.listStatus(metaDir).toSeq.flatMap { st =>
-          st.getPath.getName match {
-            case re(v) => Some((v.toLong, st.getPath))
-            case _ => None
-          }
-        }.maxByOption(_._1)
-      }
-    fromHint.orElse(fromListing)
-  }
-
   /** Record count + Appendix-D single-value bounds + null counts from one
     * parquet footer, keyed by field-id decimal string — the skipping fuel
     * the manifest-backed FileIndex burns at plan time (the write→read
@@ -493,9 +473,8 @@ object IcebergSink {
           validOptions.toSeq.sorted.mkString(", "))
     }
     val spark = df.sparkSession
-    val rootPath = new Path(path)
-    val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val metaDir = new Path(rootPath, "metadata")
+    val base = IcebergLog.snapshot(spark, path)
+    val (rootPath, fs, metaDir) = (base.root, base.fs, base.metaDir)
     val overwrite = options.get("overwrite").exists(_.toBoolean)
 
     // ---- schema with field ids (flat; the scope gate) ----
@@ -508,21 +487,6 @@ object IcebergSink {
               "is top-level only); use an iceberg connector jar")
         case _ => ()
       }
-    }
-    def iceType(dt: DataType): String = dt match {
-      case BooleanType => "boolean"
-      case ByteType | ShortType | IntegerType => "int"
-      case LongType => "long"
-      case FloatType => "float"
-      case DoubleType => "double"
-      case StringType => "string"
-      case BinaryType => "binary"
-      case DateType => "date"
-      case TimestampType => "timestamptz"
-      case TimestampNTZType => "timestamp"
-      case d: DecimalType => s"decimal(${d.precision}, ${d.scale})"
-      case other => throw IcebergReadException(
-        s"type ${other.simpleString} has no iceberg mapping in this native writer")
     }
     // positional ids on create; an APPEND re-derives them from the table's
     // current schema below (after ADD COLUMN evolution they still match by
@@ -558,7 +522,7 @@ object IcebergSink {
         val fn = arr.addObject()
         fn.put("id", id); fn.put("name", f.name)
         fn.put("required", !f.nullable || idCols.contains(f.name))
-        fn.put("type", iceType(f.dataType))
+        fn.put("type", iceType(f.dataType, s"`$path`"))
       }
       if (idCols.nonEmpty) {
         val ids = sch.putArray("identifier-field-ids")
@@ -584,36 +548,41 @@ object IcebergSink {
       }
 
     // ---- existing-table state ----
-    val hint = new Path(metaDir, "version-hint.text")
-    val resolved = resolveCurrent(fs, metaDir)
-    val creating = resolved.isEmpty
-    var prevManifests: Seq[(String, Long)] = Nil // (path, sequence_number)
-    var prevVersion = 0L
-    var prevSnapshotsJson: Seq[String] = Nil
-    var prevSnapshotLog: Seq[(Long, Long)] = Nil // (timestamp-ms, snapshot-id)
-    var lastSeq = 0L
-    var lastSnapshotId = 0L
-    var partColsEff: Seq[PartField] = partColsOpt.getOrElse(Nil)
-    // preserved verbatim on existing tables: the table identity and the
+    // On create `meta` is missing and every lookup below reads its default.
+    // Preserved verbatim on existing tables: the table identity and the
     // declared schema/spec history are COMMIT-INVARIANT — regenerating them
     // from the incoming frame would let an append rewrite nullability
     // (required flags) or reset evolution history
-    var prevUuid: Option[String] = None
-    var prevSchemasJson: Option[String] = None
-    var prevCurrentSchemaId = 0
-    var prevLastColumnId = 0
-    var prevSpecsJson: Option[String] = None
-    var prevDefaultSpecId = 0
-    var prevLastPartitionId = -1
-    // snapshot refs (branches/tags, spec v2 `refs`): tags and non-main
-    // branches stay pinned where they are; `main` advances with the commit
-    var prevRefs: Map[String, String] = Map.empty // name → ref json
-    var prevSortOrdersJson: Option[String] = None
-    var prevDefaultSortOrderId = 0
+    val creating = !base.exists
+    val meta = base.meta
+    val prevUuid = Some(meta.path("table-uuid").asText()).filter(_.nonEmpty)
+    val prevSchemasJson =
+      if (meta.has("schemas")) Some(mapper.writeValueAsString(meta.path("schemas"))) else None
+    val prevCurrentSchemaId = meta.path("current-schema-id").asInt(0)
+    val prevLastColumnId = meta.path("last-column-id").asInt(0)
+    val prevSpecsJson =
+      if (meta.has("partition-specs")) Some(mapper.writeValueAsString(meta.path("partition-specs")))
+      else None
+    val prevDefaultSpecId = meta.path("default-spec-id").asInt(0)
+    // spec: last-partition-id is the highest assigned partition field id;
+    // carry it (or recompute from the specs for older metadata)
+    val prevLastPartitionId =
+      if (!meta.has("partition-specs")) -1
+      else meta.path("last-partition-id").asInt(base.specs
+        .flatMap(_.path("fields").elements().asScala.map(_.path("field-id").asInt(0)))
+        .maxOption.getOrElse(999))
+    val prevSortOrdersJson =
+      if (meta.has("sort-orders")) Some(mapper.writeValueAsString(meta.path("sort-orders"))) else None
+    val prevDefaultSortOrderId = meta.path("default-sort-order-id").asInt(0)
     // v3 row lineage: next-row-id present in metadata = the table assigns
     // row ids; carried and advanced by every data-adding commit
-    var prevNextRowId: Option[Long] = None
-    var prevFormatVersion = 2
+    val prevNextRowId =
+      if (meta.has("next-row-id")) Some(meta.path("next-row-id").asLong()) else None
+    // snapshot refs (branches/tags, spec v2 `refs`): tags and non-main
+    // branches stay pinned where they are; `main` advances with the commit
+    val prevRefs: Map[String, String] = meta.path("refs").properties().asScala
+      .map(e => e.getKey -> mapper.writeValueAsString(e.getValue)).toMap
+    val prevCurrentId = base.currentSnapshotId
     val rlOpt = options.get("row_lineage").exists(_.toBoolean)
     Seq(RowIdColName, LastSeqColName).find(df.schema.fieldNames.contains)
       .foreach { c =>
@@ -631,23 +600,14 @@ object IcebergSink {
       s"`$path`: branch=main IS the default write target; drop the option")
     if (creating && branchOpt.isDefined) throw IcebergReadException(
       s"`$path`: branch writes need an existing table — create it on main first")
-    var prevCurrentId = -1L
+    var prevManifests: Seq[(String, Long)] = Nil // (path, sequence_number)
+    var partColsEff: Seq[PartField] = partColsOpt.getOrElse(Nil)
     var parentId = 0L
     if (!creating) {
-      val (v, metaFile) = resolved.get
-      prevVersion = v
-      val meta = {
-        val in = fs.open(metaFile)
-        try mapper.readTree(in) finally in.close()
-      }
       // the table's spec wins; a conflicting explicit option rejects (spec
       // evolution is a connector-jar feature)
-      val existingSchema0 = if (meta.has("schemas")) {
-        val cur = meta.path("current-schema-id").asInt(0)
-        meta.path("schemas").elements().asScala
-          .find(_.path("schema-id").asInt(-1) == cur).get
-      } else meta.path("schema")
-      val nameById = existingSchema0.path("fields").elements().asScala
+      val existingSchema = base.currentSchema
+      val nameById = existingSchema.path("fields").elements().asScala
         .map(f => f.path("id").asInt() -> f.path("name").asText()).toMap
       val tableSpec: Seq[PartField] = defaultSpecFields(meta).map {
         case (nm, tr, srcId) =>
@@ -668,104 +628,41 @@ object IcebergSink {
               "this writer does not evolve partition specs")
       }
       partColsEff = tableSpec
-      val existingSchema = if (meta.has("schemas")) {
-        val cur = meta.path("current-schema-id").asInt(0)
-        meta.path("schemas").elements().asScala
-          .find(_.path("schema-id").asInt(-1) == cur).get
-      } else meta.path("schema")
       val existingShape = existingSchema.path("fields").elements().asScala
         .map(f => (f.path("name").asText(), f.path("type").asText())).toSeq
-      val incomingShape = fieldIds.map { case (f, _) => (f.name, iceType(f.dataType)) }
+      val incomingShape = fieldIds.map { case (f, _) =>
+        (f.name, iceType(f.dataType, s"`$path`")) }
       if (existingShape != incomingShape) throw IcebergReadException(
         s"`$path`: frame schema $incomingShape does not match the table's " +
           s"$existingShape; this writer does not evolve schemas")
       // data files carry the TABLE's field ids (by name; the shape check
       // above guarantees every frame column exists in the table schema)
-      val idByName = existingSchema.path("fields").elements().asScala
-        .map(f => f.path("name").asText() -> f.path("id").asInt()).toMap
+      val idByName = nameById.map(_.swap)
       fieldIds = df.schema.fields.toSeq.map(f => (f, idByName(f.name)))
-      prevUuid = Some(meta.path("table-uuid").asText()).filter(_.nonEmpty)
-      if (meta.has("schemas")) {
-        prevSchemasJson = Some(mapper.writeValueAsString(meta.path("schemas")))
-        prevCurrentSchemaId = meta.path("current-schema-id").asInt(0)
-        prevLastColumnId = meta.path("last-column-id").asInt(0)
-      }
-      if (meta.has("partition-specs")) {
-        prevSpecsJson = Some(mapper.writeValueAsString(meta.path("partition-specs")))
-        prevDefaultSpecId = meta.path("default-spec-id").asInt(0)
-        // spec: last-partition-id is the highest assigned partition field
-        // id; carry it (or recompute from the specs for older metadata)
-        prevLastPartitionId = meta.path("last-partition-id").asInt(
-          meta.path("partition-specs").elements().asScala
-            .flatMap(_.path("fields").elements().asScala
-              .map(_.path("field-id").asInt(0))).maxOption.getOrElse(999))
-      }
-      if (meta.has("sort-orders")) {
-        prevSortOrdersJson = Some(mapper.writeValueAsString(meta.path("sort-orders")))
-        prevDefaultSortOrderId = meta.path("default-sort-order-id").asInt(0)
-      }
-      prevFormatVersion = meta.path("format-version").asInt(2)
-      if (meta.has("next-row-id")) prevNextRowId = Some(meta.path("next-row-id").asLong())
       if (rlOpt && prevNextRowId.isEmpty) throw IcebergReadException(
         s"`$path`: row_lineage is fixed at table creation — this table has " +
           "no next-row-id; create a new v3 table with row_lineage=true")
-      val currentId = meta.path("current-snapshot-id").asLong()
-      prevCurrentId = currentId
-      lastSnapshotId = meta.path("snapshots").elements().asScala
-        .map(_.path("snapshot-id").asLong()).maxOption.getOrElse(0L)
-      lastSeq = meta.path("snapshots").elements().asScala
-        .map(_.path("sequence-number").asLong(0L)).maxOption.getOrElse(0L)
-      prevSnapshotsJson = meta.path("snapshots").elements().asScala
-        .map(mapper.writeValueAsString).toSeq
-      if (meta.has("refs"))
-        prevRefs = meta.path("refs").fields().asScala
-          .map(e => e.getKey -> mapper.writeValueAsString(e.getValue)).toMap
       // idempotence gate: this txn (micro-batch) already landed → no-op
-      txn.foreach { case (appId, v2) =>
-        val committed = meta.path("snapshots").elements().asScala
-          .map(_.path("summary"))
-          .filter(s0 => s0.path("graft-app-id").asText("") == appId)
-          .map(_.path("graft-batch-version").asText("-1").toLong)
-          .maxOption.getOrElse(Long.MinValue)
-        if (committed >= v2) return
-      }
-      prevSnapshotLog = meta.path("snapshot-log").elements().asScala
-        .map(e => (e.path("timestamp-ms").asLong(), e.path("snapshot-id").asLong())).toSeq
+      txn.foreach { case (appId, v2) => if (base.committedBatch(appId) >= v2) return }
       // the snapshot this write BUILDS ON: main's head, or the branch's
       val headId = branchOpt match {
-        case None => currentId
+        case None => prevCurrentId
         case Some(b) =>
-          val r = meta.path("refs").path(b)
+          val r = base.refs.path(b)
           if (r.has("snapshot-id")) {
             if (r.path("type").asText("branch") != "branch") throw IcebergReadException(
               s"`$path`: ref `$b` is a TAG — tags are immutable points; " +
                 "branch writes need a branch (createRef(..., isBranch=true))")
             r.path("snapshot-id").asLong()
-          } else currentId // bootstrap the branch at the current head
+          } else prevCurrentId // bootstrap the branch at the current head
       }
       parentId = headId
-      val current = meta.path("snapshots").elements().asScala
-        .find(_.path("snapshot-id").asLong() == headId).getOrElse(
-          throw IcebergReadException(
-            s"`$path`: ${branchOpt.fold("current")(b => s"branch `$b` head")} " +
-              s"snapshot $headId not listed"))
-      if (!overwrite) {
-        // carry the current snapshot's manifests forward
-        val mlPath = current.path("manifest-list").asText()
-        val mlAbs = {
-          val p = new Path(mlPath)
-          if (p.isAbsolute) p else new Path(rootPath, p)
-        }
-        val reader = new DataFileReader[GenericRecord](
-          new FsInput(mlAbs, spark.sessionState.newHadoopConf()),
-          new GenericDatumReader[GenericRecord]())
-        try prevManifests = reader.iterator().asScala.map { r =>
-          (r.get("manifest_path").toString,
-            Option(r.get("sequence_number")).map(_.asInstanceOf[Long])
-              .getOrElse(current.path("sequence-number").asLong(0L)))
-        }.toSeq
-        finally reader.close()
-      }
+      val current = base.snapshotById(headId).getOrElse(
+        throw IcebergReadException(
+          s"`$path`: ${branchOpt.fold("current")(b => s"branch `$b` head")} " +
+            s"snapshot $headId not listed"))
+      // carry the current snapshot's manifests forward
+      if (!overwrite) prevManifests = base.manifestsOf(current).map(m => (m.path, m.seq))
     }
 
     // ---- distributed data write (with parquet field ids), move under root ----
@@ -873,9 +770,9 @@ object IcebergSink {
     } finally fs.delete(tmp, true)
 
     // ---- one manifest + one manifest list + one metadata.json ----
-    val version = prevVersion + 1
+    val lastSnapshotId = base.lastSnapshotId
     val snapshotId = lastSnapshotId + 1
-    val seq = lastSeq + 1
+    val seq = base.lastSeq + 1
     val nowMs = System.currentTimeMillis()
     val stamp = java.util.UUID.randomUUID().toString.take(8)
     fs.mkdirs(metaDir)
@@ -960,7 +857,7 @@ object IcebergSink {
       mapper.writeValueAsString(sn)
     }
     // the snapshot-log tracks MAIN (spec): branch snapshots don't enter it
-    val logJson = (prevSnapshotLog ++
+    val logJson = (base.snapshotLog ++
       (if (branchOpt.isEmpty) Seq((nowMs, snapshotId)) else Nil))
       .map { case (ts, id) =>
         s"""{"timestamp-ms": $ts, "snapshot-id": $id}"""
@@ -969,7 +866,7 @@ object IcebergSink {
     // creation (an existing table keeps whatever format it already carries)
     val formatVersion =
       if (creating) (if (rlOpt) 3 else 2)
-      else math.max(prevFormatVersion, if (lineage) 3 else 2)
+      else math.max(meta.path("format-version").asInt(2), if (lineage) 3 else 2)
     val metaJson =
       s"""{"format-version": $formatVersion,${
         if (lineage) s"""\n"next-row-id": $rowIdNext,""" else ""}
@@ -1022,48 +919,48 @@ object IcebergSink {
       }.map { case (n, j) => s"${mapper.writeValueAsString(n)}: $j" }
         .mkString("{", ", ", "}")},
          |"snapshot-log": $logJson,
-         |"snapshots": ${(prevSnapshotsJson :+ snapshotJson).mkString("[", ", ", "]")}}""".stripMargin
-    val metaTarget = new Path(metaDir, s"v$version.metadata.json")
-    if (fs.exists(metaTarget)) throw IcebergReadException(
-      s"`$path`: metadata version $version already exists — another writer got " +
-        "there first; this native writer does not do commit retries")
-    val out = fs.create(metaTarget, false)
-    try out.write(metaJson.getBytes("UTF-8")) finally out.close()
-    val hintOut = fs.create(hint, true)
-    try hintOut.write(version.toString.getBytes("UTF-8")) finally hintOut.close()
+         |"snapshots": ${(base.snapshots.map(mapper.writeValueAsString) :+ snapshotJson)
+      .mkString("[", ", ", "]")}}""".stripMargin
+    IcebergLog.commit(base, metaJson)
   }
 
   // ------------------------------------------------- merge-on-read core
-  /** Current-snapshot state a row-level DML pass needs: live data files,
-    * prior positional-delete files, the manifest carry-forward list, and
-    * the counters the next commit increments. Bounded driver metadata
-    * work (the iceberg-core arrangement). */
   /** (referencedDataFileAbs, puffinPathAbs, blobOffset, blobSize,
     * cardinality) for each live v3 deletion vector. */
   private type DvRef = (String, String, Long, Long, Long)
 
+  /** Current-snapshot state a row-level DML pass needs: live data files,
+    * prior positional-delete files, the manifest carry-forward list, and
+    * the counters the next commit increments. Bounded driver metadata
+    * work (the iceberg-core arrangement). */
   private final case class MorState(
-      fs: org.apache.hadoop.fs.FileSystem, rootPath: Path,
-      metaDir: Path, hint: Path, version: Long,
-      meta: com.fasterxml.jackson.databind.JsonNode,
-      lastSnapshotId: Long, lastSeq: Long,
-      prevManifests: Seq[(String, Long)],
+      snap: IcebergLog.Snapshot, manifests: Seq[IcebergLog.Manifest],
       dataPaths: Seq[String], priorDeleteFiles: Seq[String],
-      dvRefs: Seq[DvRef], hasEqDeletes: Boolean,
+      dvRefs: Seq[DvRef],
       // equality-delete files (abs path, equality field ids, sequence) and
       // each data file's sequence — eq deletes apply to STRICTLY LOWER seqs
-      eqDeletes: Seq[(String, Seq[Int], Long)] = Nil,
-      dataSeqs: Map[String, Long] = Map.empty,
+      eqDeletes: Seq[(String, Seq[Int], Long)],
+      // record_count summed over the live delete entries (each names one
+      // dead row)
+      deleteRows: Long,
+      dataSeqs: Map[String, Long],
       // each live data file's r102 partition tuple (abs path → field name →
       // avro value) — DV manifest entries echo their referenced file's tuple
-      dataTuples: Map[String, Map[String, AnyRef]] = Map.empty,
+      dataTuples: Map[String, Map[String, AnyRef]],
       // each live data file's manifest-declared record_count — the exact
       // deleted-row count for metadata-only whole-file drops
-      dataRowCounts: Map[String, Long] = Map.empty,
-      // v3 row lineage: the metadata's next-row-id (present = the table
-      // assigns row ids) and each live data file's explicit first_row_id
-      nextRowId: Option[Long] = None,
-      dataFirstRowIds: Map[String, Long] = Map.empty) {
+      dataRowCounts: Map[String, Long],
+      // v3 row lineage: each live data file's explicit first_row_id
+      dataFirstRowIds: Map[String, Long]) {
+    def fs: org.apache.hadoop.fs.FileSystem = snap.fs
+    def rootPath: Path = snap.root
+    def meta: com.fasterxml.jackson.databind.JsonNode = snap.meta
+    lazy val lastSnapshotId: Long = snap.lastSnapshotId
+    lazy val lastSeq: Long = snap.lastSeq
+    def hasEqDeletes: Boolean = eqDeletes.nonEmpty
+    /** The metadata's next-row-id: present = the table assigns row ids. */
+    def nextRowId: Option[Long] =
+      if (meta.has("next-row-id")) Some(meta.path("next-row-id").asLong()) else None
     def hasLineage: Boolean = nextRowId.isDefined
   }
 
@@ -1075,16 +972,8 @@ object IcebergSink {
     val orderId = meta.path("default-sort-order-id").asInt(0)
     val order = meta.path("sort-orders").elements().asScala
       .find(_.path("order-id").asInt(-1) == orderId).getOrElse(return Nil)
-    val idToName: Map[Int, String] = {
-      val cur =
-        if (meta.has("schemas")) {
-          val cid = meta.path("current-schema-id").asInt(0)
-          meta.path("schemas").elements().asScala
-            .find(_.path("schema-id").asInt(-1) == cid).getOrElse(return Nil)
-        } else meta.path("schema")
-      cur.path("fields").elements().asScala
-        .map(f => f.path("id").asInt() -> f.path("name").asText()).toMap
-    }
+    val idToName: Map[Int, String] = IcebergLog.currentSchema(meta).path("fields")
+      .elements().asScala.map(f => f.path("id").asInt() -> f.path("name").asText()).toMap
     val fields = order.path("fields").elements().asScala.toSeq
     if (fields.exists(_.path("transform").asText("identity") != "identity")) Nil
     else fields.flatMap(f => idToName.get(f.path("source-id").asInt(-1)))
@@ -1092,126 +981,39 @@ object IcebergSink {
 
   private def loadMorState(spark: org.apache.spark.sql.SparkSession,
       path: String): MorState = {
-    val rootPath = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = rootPath.getFileSystem(conf)
-    val metaDir = new Path(rootPath, "metadata")
-    val hint = new Path(metaDir, "version-hint.text")
-    val (v, metaFile) = resolveCurrent(fs, metaDir).getOrElse(
-      throw IcebergReadException(
-        s"`$path`: no metadata — not a table this native writer manages"))
-    val meta = {
-      val in = fs.open(metaFile)
-      try mapper.readTree(in) finally in.close()
-    }
-    val currentId = meta.path("current-snapshot-id").asLong()
-    val lastSnapshotId = meta.path("snapshots").elements().asScala
-      .map(_.path("snapshot-id").asLong()).maxOption.getOrElse(0L)
-    val lastSeq = meta.path("snapshots").elements().asScala
-      .map(_.path("sequence-number").asLong(0L)).maxOption.getOrElse(0L)
-    val current = meta.path("snapshots").elements().asScala
-      .find(_.path("snapshot-id").asLong() == currentId).getOrElse(
-        throw IcebergReadException(s"`$path`: current snapshot $currentId not listed"))
-    def abs(rel: String): Path = {
-      val p = new Path(rel)
-      if (p.isAbsolute) p else new Path(rootPath, p)
-    }
-    val prevManifests: Seq[(String, Long)] = {
-      val r = new DataFileReader[GenericRecord](
-        new FsInput(abs(current.path("manifest-list").asText()), conf),
-        new GenericDatumReader[GenericRecord]())
-      try r.iterator().asScala.map { rec =>
-        (rec.get("manifest_path").toString,
-          Option(rec.get("sequence_number")).map(_.asInstanceOf[Long])
-            .getOrElse(current.path("sequence-number").asLong(0L)))
-      }.toSeq
-      finally r.close()
-    }
-    // live DATA files of the current snapshot (status != DELETED, content
-    // data) + any EXISTING positional delete files (their dead positions
-    // must not re-affect rows, or the returned counts lie)
-    val dataFiles = Seq.newBuilder[String]
-    val priorDeleteFiles = Seq.newBuilder[String]
-    val dvRefs = Seq.newBuilder[DvRef]
-    val eqDeletes = Seq.newBuilder[(String, Seq[Int], Long)]
-    val dataSeqs = Map.newBuilder[String, Long]
-    val dataTuples = Map.newBuilder[String, Map[String, AnyRef]]
-    val dataRowCounts = Map.newBuilder[String, Long]
-    val dataFirstRowIds = Map.newBuilder[String, Long]
-    var hasEqDeletes = false
-    prevManifests.foreach { case (m, mseq) =>
-      val r = new DataFileReader[GenericRecord](
-        new FsInput(abs(m), conf), new GenericDatumReader[GenericRecord]())
-      try r.iterator().asScala.foreach { e =>
-        val status = e.get("status").asInstanceOf[Int]
-        val entrySeq = Option(e.getSchema.getField("sequence_number"))
-          .flatMap(_ => Option(e.get("sequence_number")))
-          .map(_.asInstanceOf[Long]).getOrElse(mseq)
-        val dfr = e.get("data_file").asInstanceOf[GenericRecord]
-        val content = Option(dfr.get("content")).map(_.asInstanceOf[Int]).getOrElse(0)
-        def fld(n: String): Option[AnyRef] =
-          Option(dfr.getSchema.getField(n)).flatMap(_ => Option(dfr.get(n)))
-        if (status != 2) {
-          if (content == 0) {
-            val p = abs(dfr.get("file_path").toString).toString
-            dataFiles += p
-            dataSeqs += p -> entrySeq
-            dataRowCounts += p -> dfr.get("record_count").asInstanceOf[Long]
-            fld("first_row_id").foreach(v =>
-              dataFirstRowIds += p -> v.asInstanceOf[Long])
-            fld("partition").foreach {
-              case pr: GenericRecord =>
-                dataTuples += p -> pr.getSchema.getFields.asScala.map { f2 =>
-                  f2.name() -> (pr.get(f2.name()) match {
-                    case u: org.apache.avro.util.Utf8 => u.toString
-                    case other => other
-                  })
-                }.toMap
-              case _ => ()
-            }
-          }
-          else if (content == 1 &&
-            dfr.get("file_format").toString.equalsIgnoreCase("PARQUET"))
-            priorDeleteFiles += abs(dfr.get("file_path").toString).toString
-          else if (content == 1 &&
-            dfr.get("file_format").toString.equalsIgnoreCase("PUFFIN"))
-            dvRefs += ((
-              abs(fld("referenced_data_file").map(_.toString).getOrElse(
-                throw IcebergReadException(
-                  s"`$path`: puffin DV entry lacks referenced_data_file"))).toString,
-              abs(dfr.get("file_path").toString).toString,
-              fld("content_offset").map(_.asInstanceOf[Long]).getOrElse(4L),
-              fld("content_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(0L),
-              dfr.get("record_count").asInstanceOf[Long]))
-          else if (content == 2) {
-            hasEqDeletes = true
-            val ids = Option(dfr.getSchema.getField("equality_ids"))
-              .flatMap(_ => Option(dfr.get("equality_ids"))) match {
-              case Some(l: java.util.List[_]) =>
-                l.asScala.map(_.asInstanceOf[Number].intValue()).toSeq
-              case _ => Nil
-            }
-            eqDeletes += ((abs(dfr.get("file_path").toString).toString,
-              ids, entrySeq))
-          }
-        }
-      }
-      finally r.close()
-    }
-    MorState(fs, rootPath, metaDir, hint, v, meta, lastSnapshotId, lastSeq,
-      prevManifests, dataFiles.result(), priorDeleteFiles.result(),
-      dvRefs.result(), hasEqDeletes, eqDeletes.result(), dataSeqs.result(),
-      dataTuples.result(), dataRowCounts.result(),
-      nextRowId = if (meta.has("next-row-id"))
-        Some(meta.path("next-row-id").asLong()) else None,
-      dataFirstRowIds = dataFirstRowIds.result())
+    val snap = IcebergLog.current(spark, path)
+    val manifests = snap.manifestsOf(snap.currentSnapshot)
+    val live = manifests.flatMap(snap.entries).filter(_.live)
+    val data = live.filter(_.content == 0)
+    def fld(e: IcebergLog.Entry, n: String): Option[AnyRef] = IcebergLog.field(e.file, n)
+    def deletesIn(format: String) =
+      live.filter(e => e.content == 1 && e.format.equalsIgnoreCase(format))
+    MorState(snap, manifests, data.map(_.path),
+      // EXISTING positional delete files: their dead positions must not
+      // re-affect rows, or the returned counts lie
+      deletesIn("PARQUET").map(_.path),
+      deletesIn("PUFFIN").map { e =>
+        (snap.resolve(fld(e, "referenced_data_file").map(_.toString).getOrElse(
+          throw IcebergReadException(
+            s"`$path`: puffin DV entry lacks referenced_data_file"))).toString,
+          e.path,
+          fld(e, "content_offset").map(_.asInstanceOf[Long]).getOrElse(4L),
+          fld(e, "content_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(0L),
+          e.recordCount)
+      },
+      live.filter(_.content == 2).map { e =>
+        (e.path, fld(e, "equality_ids") match {
+          case Some(l: java.util.List[_]) => l.asScala.map(_.asInstanceOf[Number].intValue()).toSeq
+          case _ => Nil
+        }, e.seq)
+      },
+      live.filter(_.content != 0).map(_.recordCount).sum,
+      data.map(e => e.path -> e.seq).toMap,
+      data.filter(_.partition.isDefined).map(e => e.path -> e.tuple).toMap,
+      data.map(e => e.path -> e.recordCount).toMap,
+      data.flatMap(e => fld(e, "first_row_id").map(v => e.path -> v.asInstanceOf[Long])).toMap)
   }
 
-  /** DELETE stays available on partitioned tables (positional delete files
-    * are path-scoped), but ops that APPEND data files (UPDATE/MERGE images,
-    * compaction rewrites) would need partition-aware file splitting to
-    * record correct tuples — reject loudly rather than write files whose
-    * manifest claims the wrong partition. */
   /** Positional deletes layered over live deletion vectors are ambiguous
     * (a DV replaces its file's delete state per the v3 spec) — reject
     * rather than risk resurrecting rows. Compaction clears DVs. */
@@ -1224,13 +1026,7 @@ object IcebergSink {
   /** Table column (name, field-id) pairs from the current schema. */
   private def schemaFieldIds(
       meta: com.fasterxml.jackson.databind.JsonNode): Seq[(String, Int)] = {
-    val sch = if (meta.has("schemas")) {
-      val cur = meta.path("current-schema-id").asInt(0)
-      meta.path("schemas").elements().asScala
-        .find(_.path("schema-id").asInt(-1) == cur).getOrElse(
-          throw IcebergReadException("current schema not listed in metadata"))
-    } else meta.path("schema")
-    sch.path("fields").elements().asScala
+    IcebergLog.currentSchema(meta).path("fields").elements().asScala
       .map(f => (f.path("name").asText(), f.path("id").asInt())).toSeq
   }
 
@@ -1238,8 +1034,9 @@ object IcebergSink {
     * (`__file`, `__pos`) — prior dead positions already anti-joined out.
     * The one distributed scan DELETE/UPDATE/MERGE all start from; a
     * predicate applied on top pushes below the anti-join into the parquet
-    * scan (it references only data columns). */
-  /** With `withLineage` on a row-lineage table, the frame additionally
+    * scan (it references only data columns).
+    *
+    * With `withLineage` on a row-lineage table, the frame additionally
     * carries `__rlid`/`__rlseq` — each surviving row's stable row id and
     * last-updated sequence (materialized value when the file carries it,
     * else first_row_id + position / the file's data sequence) — so
@@ -1475,15 +1272,15 @@ object IcebergSink {
     } finally fs.delete(tmp, true)
   }
 
-  /** One merge-on-read commit: optional positional-delete manifest +
-    * optional appended-data manifest joined to the carried-forward list,
-    * one new snapshot at the next sequence number, one new metadata.json
-    * version. Files are (rel, size, rows). */
   /** One puffin deletion-vector manifest entry: (relPath, fileSize,
     * cardinality, blobOffset, blobSize, referencedDataFile). */
   private[catalog] final case class DvEntry(rel: String, fileSize: Long,
     cardinality: Long, blobOffset: Long, blobSize: Long, referencedDataFile: String)
 
+  /** One merge-on-read commit: optional positional-delete manifest +
+    * optional appended-data manifest joined to the carried-forward list,
+    * one new snapshot at the next sequence number, one new metadata.json
+    * version. Files are (rel, size, rows). */
   private def commitMor(st: MorState, operation: String,
       summaryExtra: Seq[(String, String)],
       deleteFiles: Seq[(String, Long, Long)],
@@ -1623,7 +1420,7 @@ object IcebergSink {
     val carried = carriedOverride match {
       case Some(ms) => ms.map { case (p, sq) => (p, sq, None: Option[Int]) }
       case None =>
-        if (carryPrev) st.prevManifests.map { case (p, sq) => (p, sq, None: Option[Int]) }
+        if (carryPrev) st.manifests.map(m => (m.path, m.seq, None: Option[Int]))
         else Nil
     }
     writeAvroAt(fs, st.rootPath, mlRel, listSchema,
@@ -1635,7 +1432,7 @@ object IcebergSink {
           r.put("sequence_number", Long.box(sq))
           r
         })
-    val snapshotJson = {
+    val snapshotNode = {
       val sn = mapper.createObjectNode()
       sn.put("snapshot-id", snapshotId)
       if (st.lastSnapshotId > 0) sn.put("parent-snapshot-id", st.lastSnapshotId)
@@ -1663,15 +1460,8 @@ object IcebergSink {
         summary.put("added-equality-deletes", eqDeleteFiles.map(_._3).sum.toString)
       summaryExtra.foreach { case (k, v2) => summary.put(k, v2) }
       sn.put("manifest-list", mlRel)
-      mapper.writeValueAsString(sn)
+      sn
     }
-    val prevSnapshotsJson = st.meta.path("snapshots").elements().asScala
-      .map(mapper.writeValueAsString).toSeq
-    val prevSnapshotLog = st.meta.path("snapshot-log").elements().asScala
-      .map(e => (e.path("timestamp-ms").asLong(), e.path("snapshot-id").asLong())).toSeq
-    val logJson = (prevSnapshotLog :+ ((nowMs, snapshotId))).map { case (ts, id) =>
-      s"""{"timestamp-ms": $ts, "snapshot-id": $id}"""
-    }.mkString("[", ", ", "]")
     val newMeta = st.meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
     // deletion vectors are a format-v3 feature — declare it honestly
     if (dvEntries.nonEmpty && newMeta.path("format-version").asInt(2) < 3)
@@ -1681,10 +1471,8 @@ object IcebergSink {
     newMeta.put("last-updated-ms", nowMs)
     newMeta.put("last-sequence-number", seq)
     newMeta.put("current-snapshot-id", snapshotId)
-    newMeta.set[com.fasterxml.jackson.databind.JsonNode]("snapshots",
-      mapper.readTree((prevSnapshotsJson :+ snapshotJson).mkString("[", ",", "]")))
-    newMeta.set[com.fasterxml.jackson.databind.JsonNode]("snapshot-log",
-      mapper.readTree(logJson))
+    newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots").add(snapshotNode)
+    logEntry(newMeta, snapshotId, nowMs)
     // refs ride the deep copy verbatim (tags/branches stay pinned);
     // `main` is the live branch and advances with the commit (spec v2)
     locally {
@@ -1696,16 +1484,7 @@ object IcebergSink {
       mainRef.put("snapshot-id", snapshotId)
       mainRef.put("type", "branch")
     }
-    val newVersion = st.version + 1
-    val target = new Path(st.metaDir, s"v$newVersion.metadata.json")
-    if (fs.exists(target)) throw IcebergReadException(
-      s"`${st.rootPath}`: metadata version $newVersion already exists — " +
-        "another writer got there first")
-    val out = fs.create(target, false)
-    try out.write(mapper.writeValueAsString(newMeta).getBytes("UTF-8"))
-    finally out.close()
-    val hintOut = fs.create(st.hint, true)
-    try hintOut.write(newVersion.toString.getBytes("UTF-8")) finally hintOut.close()
+    IcebergLog.commit(st.snap, newMeta)
   }
 
   /** DELETE FROM — MERGE-ON-READ row-level deletion (the Iceberg v2
@@ -1812,58 +1591,33 @@ object IcebergSink {
       .collect().map(_.getString(0)).toSet)
   }
 
-  /** Rewrite every manifest holding a file in `dropped` with those entries
-    * marked DELETED (kept entries EXISTING, per-entry sequence numbers made
-    * explicit); unaffected manifests pass through verbatim. Returns the
-    * replacement carried-manifest list for commitMor. */
-  private def rewriteManifestsDropping(spark: org.apache.spark.sql.SparkSession,
-      st: MorState, dropped: Set[String], tag: String): Seq[(String, Long)] = {
-    def abs0(rel: String): Path = {
-      val p0 = new Path(rel)
-      if (p0.isAbsolute) p0 else new Path(st.rootPath, p0)
-    }
-    rewriteManifestsDroppingIf(spark, st, dfr =>
-      dropped.contains(abs0(dfr.get("file_path").toString).toString), tag)
-  }
-
-  /** Predicate form: any manifest entry whose data_file record satisfies
-    * `dropIf` is marked DELETED (e.g. replaced DV entries matched by their
-    * referenced_data_file, not by container path — several blobs may share
-    * one puffin file in foreign layouts). */
-  private def rewriteManifestsDroppingIf(spark: org.apache.spark.sql.SparkSession,
-      st: MorState, dropIf: GenericRecord => Boolean,
+  /** Rewrite every manifest holding an entry that satisfies `dropIf` with
+    * those entries marked DELETED (kept entries EXISTING, per-entry
+    * sequence numbers made explicit); unaffected manifests pass through
+    * verbatim. Returns the replacement carried-manifest list for
+    * commitMor. Replaced DV entries match by referenced_data_file, not by
+    * container path: several blobs may share one puffin file in foreign
+    * layouts. */
+  private def rewriteManifestsDroppingIf(st: MorState, dropIf: IcebergLog.Entry => Boolean,
       tag: String): Seq[(String, Long)] = {
-    val conf = spark.sessionState.newHadoopConf()
-    def abs(rel: String): Path = {
-      val p0 = new Path(rel)
-      if (p0.isAbsolute) p0 else new Path(st.rootPath, p0)
-    }
     val stamp = java.util.UUID.randomUUID().toString.take(8)
     var i = 0
-    st.prevManifests.map { case (m, mseq) =>
-      val reader = new DataFileReader[GenericRecord](
-        new FsInput(abs(m), conf), new GenericDatumReader[GenericRecord]())
-      val (entries, affected) =
-        try {
-          val es = reader.iterator().asScala.toSeq
-          (es, es.exists(e => dropIf(e.get("data_file").asInstanceOf[GenericRecord])))
-        } finally reader.close()
-      if (!affected) (m, mseq)
+    st.manifests.map { m =>
+      val entries = st.snap.entries(m)
+      if (!entries.exists(dropIf)) (m.path, m.seq)
       else {
-        val sch = entries.head.getSchema
+        val sch = entries.head.raw.getSchema
         val hasSeqField = sch.getField("sequence_number") != null
         entries.foreach { e =>
-          val isDropped = dropIf(e.get("data_file").asInstanceOf[GenericRecord])
-          val status = e.get("status").asInstanceOf[Int]
-          if (hasSeqField && e.get("sequence_number") == null)
-            e.put("sequence_number", Long.box(mseq)) // make inheritance explicit
-          if (isDropped && status != 2) e.put("status", 2) // DELETED
-          else if (status == 1) e.put("status", 0) // ADDED → EXISTING
+          if (hasSeqField && e.raw.get("sequence_number") == null)
+            e.raw.put("sequence_number", Long.box(m.seq)) // make inheritance explicit
+          if (dropIf(e) && e.live) e.raw.put("status", 2) // DELETED
+          else if (e.status == 1) e.raw.put("status", 0) // ADDED → EXISTING
         }
         i += 1
         val rel = s"metadata/m-$tag-${st.lastSnapshotId + 1}-$stamp-$i.avro"
-        writeAvroAt(st.fs, st.rootPath, rel, sch, entries)
-        (rel, mseq)
+        writeAvroAt(st.fs, st.rootPath, rel, sch, entries.map(_.raw))
+        (rel, m.seq)
       }
     }
   }
@@ -1891,10 +1645,7 @@ object IcebergSink {
     val carried = dead.join(affected, col("__dv_file") === col("__afk"))
       .select(col("__file"), col("__dv_pos").as("__pos"))
     val merged = matches0.unionByName(carried)
-    def absOf(rel: String): String = {
-      val p0 = new Path(rel)
-      (if (p0.isAbsolute) p0 else new Path(st.rootPath, p0)).toString
-    }
+    def absOf(rel: String): String = st.snap.resolve(rel).toString
     val oldCardByRef: Map[String, Long] = st.dvRefs
       .map { case (refd, _, _, _, card) => graft.sources.PathKeys.key(refd) -> card }.toMap
     def replacedRefs(dvEntries: Seq[DvEntry]): Set[String] =
@@ -1903,14 +1654,10 @@ object IcebergSink {
     val carriedOverrideFor: Seq[DvEntry] => Option[Seq[(String, Long)]] = { dvEntries =>
       val refs = replacedRefs(dvEntries)
       if (refs.isEmpty) None
-      else Some(rewriteManifestsDroppingIf(spark, st, { dfr =>
-        val content = Option(dfr.get("content")).map(_.asInstanceOf[Int]).getOrElse(0)
-        content == 1 &&
-          dfr.get("file_format").toString.equalsIgnoreCase("PUFFIN") &&
-          Option(dfr.getSchema.getField("referenced_data_file"))
-            .flatMap(_ => Option(dfr.get("referenced_data_file"))).exists(r =>
-              refs.contains(graft.sources.PathKeys.key(absOf(r.toString))))
-      }, "dvm"))
+      else Some(rewriteManifestsDroppingIf(st, e =>
+        e.content == 1 && e.format.equalsIgnoreCase("PUFFIN") &&
+          IcebergLog.field(e.file, "referenced_data_file").exists(r =>
+            refs.contains(graft.sources.PathKeys.key(absOf(r.toString)))), "dvm"))
     }
     val carriedOldFor: Seq[DvEntry] => Long = { dvEntries =>
       replacedRefs(dvEntries).toSeq.map(oldCardByRef).sum
@@ -1925,7 +1672,7 @@ object IcebergSink {
     val dropped = partitionMatchedFiles(spark, st, predicateSql).getOrElse(return None)
     if (dropped.isEmpty) return Some(0L)
     val deletedRows = dropped.toSeq.map(st.dataRowCounts.getOrElse(_, return None)).sum
-    val newCarried = rewriteManifestsDropping(spark, st, dropped, "pdel")
+    val newCarried = rewriteManifestsDroppingIf(st, e => dropped.contains(e.path), "pdel")
     commitMor(st, "delete",
       Seq("graft-predicate" -> predicateSql,
         "graft-strategy" -> "metadata-only-partition-drop"),
@@ -1984,11 +1731,7 @@ object IcebergSink {
     val keyCols: Seq[String] =
       if (keyCols0.nonEmpty) keyCols0
       else {
-        val sch = if (st.meta.has("schemas")) {
-          val cur = st.meta.path("current-schema-id").asInt(0)
-          st.meta.path("schemas").elements().asScala
-            .find(_.path("schema-id").asInt(-1) == cur).get
-        } else st.meta.path("schema")
+        val sch = st.snap.currentSchema
         val byId = sch.path("fields").elements().asScala
           .map(f => f.path("id").asInt() -> f.path("name").asText()).toMap
         val ids = sch.path("identifier-field-ids").elements().asScala
@@ -1999,14 +1742,7 @@ object IcebergSink {
         ids.map(byId)
       }
     // exactly-once for streaming micro-batch replays: same ledger as write()
-    txn.foreach { case (appId, v) =>
-      val committed = st.meta.path("snapshots").elements().asScala
-        .map(_.path("summary"))
-        .filter(s0 => s0.path("graft-app-id").asText("") == appId)
-        .map(_.path("graft-batch-version").asText("-1").toLong)
-        .maxOption.getOrElse(Long.MinValue)
-      if (committed >= v) return (0L, 0L)
-    }
+    txn.foreach { case (appId, v) => if (st.snap.committedBatch(appId) >= v) return (0L, 0L) }
     // Partitioned tables work: the new rows fan out per the spec's
     // transforms (writeMorData), and the equality delete rides a NULL
     // partition record = GLOBAL scope — correct for upsert, where a key's
@@ -2286,15 +2022,10 @@ object IcebergSink {
         // empty table: nothing matches, every insert-eligible source row
         // inserts; no data files to scan types from — the iceberg schema
         // supplies them
-        val schNode = if (st.meta.has("schemas")) {
-          val cur = st.meta.path("current-schema-id").asInt(0)
-          st.meta.path("schemas").elements().asScala
-            .find(_.path("schema-id").asInt(-1) == cur).getOrElse(
-              throw IcebergReadException("current schema not listed in metadata"))
-        } else st.meta.path("schema")
         val dataFiles = if (!plan.inserting) Nil
           else writeMorData(plan.insertRows(source.alias("s"),
-            graft.sources.IcebergNative.toStruct(schNode).fields.toSeq), st, s"mrg-$stamp")
+            graft.sources.IcebergNative.toStruct(st.snap.currentSchema).fields.toSeq),
+            st, s"mrg-$stamp")
         val inserted = dataFiles.map(_.rows).sum
         if (inserted > 0L)
           commitMor(st, "overwrite", Seq("graft-merge-on" -> condSql), Nil, dataFiles)
@@ -2378,93 +2109,54 @@ object IcebergSink {
     import org.apache.spark.sql.functions.col
     val st = loadMorState(spark, path)
     if (st.dataPaths.isEmpty) return (0, 0)
-    where.foreach { pred =>
-      val matched = partitionMatchedFiles(spark, st, pred).getOrElse(
+    // (predicate, matched files) of a scoped compaction
+    val scope: Option[(String, Set[String])] = where.map { pred =>
+      (pred, partitionMatchedFiles(spark, st, pred).getOrElse(
         throw IcebergReadException(
           s"`$path`: OPTIMIZE ... WHERE must reference only identity " +
-            "partition source columns"))
-      if (matched.isEmpty) return (0, 0)
-      val stScoped = st.copy(dataPaths = st.dataPaths.filter(matched))
-      val stamp = java.util.UUID.randomUUID().toString.take(8)
-      val rows = liveRows(spark, stScoped, withLineage = st.hasLineage)
-      val dataCols = rows.schema.fields
-        .filterNot(f => Set("__file", "__pos", "__rlid", "__rlseq")(f.name)).toSeq
-      val liveEstimate = math.max(1L,
-        matched.toSeq.map(st.dataRowCounts.getOrElse(_, 0L)).sum)
-      val numFiles = math.max(1L,
-        (liveEstimate + targetFileRows - 1) / targetFileRows).toInt
-      val sortCols = defaultSortCols(st.meta).filter(c =>
-        dataCols.exists(_.name == c))
-      // row lineage: compaction MOVES rows — their stable ids and
-      // last-updated sequences materialize into the rewritten files
-      val base = rows.select(dataCols.map(f => col(f.name)) ++
-        (if (st.hasLineage) Seq(col("__rlid").as(RowIdColName),
-          col("__rlseq").as(LastSeqColName)) else Nil): _*)
-      // a declared sort order RE-CLUSTERS on compaction (clustering decays
-      // as deletes/appends accumulate; the maintenance pass restores it)
-      val compacted =
-        if (sortCols.isEmpty) base.repartition(numFiles)
-        else base.repartitionByRange(numFiles, sortCols.map(col): _*)
-          .sortWithinPartitions(sortCols.map(col): _*)
-      val dataFiles = writeMorData(compacted, st, s"cmp-$stamp")
-      // untouched manifest entries carry; matched files leave as DELETED
-      val carried = rewriteManifestsDropping(spark, st, matched, "cmpw")
-      commitMor(st, "replace",
-        Seq("graft-compaction" -> s"target-file-rows=$targetFileRows",
-          "graft-predicate" -> pred),
-        Nil, dataFiles, carriedOverride = Some(carried))
-      return (matched.size, dataFiles.size)
+            "partition source columns")))
     }
+    if (scope.exists(_._2.isEmpty)) return (0, 0)
+    val rewritten = scope.fold(st.dataPaths)(sc => st.dataPaths.filter(sc._2))
     // manifest-declared row counts size the output without a count() job;
-    // delete-file record counts subtract (each dead position kills a row)
-    val conf = spark.sessionState.newHadoopConf()
-    var dataRows = 0L
-    var deadRows = 0L
-    st.prevManifests.foreach { case (m, _) =>
-      val p = new Path(m)
-      val r = new DataFileReader[GenericRecord](
-        new FsInput(if (p.isAbsolute) p else new Path(st.rootPath, p), conf),
-        new GenericDatumReader[GenericRecord]())
-      try r.iterator().asScala.foreach { e =>
-        if (e.get("status").asInstanceOf[Int] != 2) {
-          val dfr = e.get("data_file").asInstanceOf[GenericRecord]
-          val content = Option(dfr.get("content")).map(_.asInstanceOf[Int]).getOrElse(0)
-          val rows = dfr.get("record_count").asInstanceOf[Long]
-          if (content == 0) dataRows += rows else deadRows += rows
-        }
-      }
-      finally r.close()
-    }
-    val liveEstimate = math.max(1L, dataRows - deadRows)
+    // on the whole table delete-file record counts subtract (each dead
+    // position kills a row)
+    val liveEstimate = math.max(1L, scope match {
+      case Some((_, matched)) => matched.toSeq.map(st.dataRowCounts.getOrElse(_, 0L)).sum
+      case None => st.dataRowCounts.values.sum - st.deleteRows
+    })
     val numFiles = math.max(1L, (liveEstimate + targetFileRows - 1) / targetFileRows).toInt
     val stamp = java.util.UUID.randomUUID().toString.take(8)
-    val rows = liveRows(spark, st, withLineage = st.hasLineage)
+    val rows = liveRows(spark, st.copy(dataPaths = rewritten), withLineage = st.hasLineage)
     val dataCols = rows.schema.fields
       .filterNot(f => Set("__file", "__pos", "__rlid", "__rlseq")(f.name)).toSeq
-    // repartition, not coalesce: coalesce would fold the scan itself down
-    // to numFiles tasks — on a large fragmented table the read must stay
-    // parallel, and the one shuffle is the same order as the write itself
-    val sortCols0 = defaultSortCols(st.meta).filter(c =>
-      dataCols.exists(_.name == c))
-    val base0 = rows.select(dataCols.map(f => col(f.name)) ++
+    val sortCols = defaultSortCols(st.meta).filter(c => dataCols.exists(_.name == c))
+    // row lineage: compaction MOVES rows — their stable ids and
+    // last-updated sequences materialize into the rewritten files
+    val base = rows.select(dataCols.map(f => col(f.name)) ++
       (if (st.hasLineage) Seq(col("__rlid").as(RowIdColName),
         col("__rlseq").as(LastSeqColName)) else Nil): _*)
+    // repartition, not coalesce: coalesce would fold the scan itself down
+    // to numFiles tasks — on a large fragmented table the read must stay
+    // parallel, and the one shuffle is the same order as the write itself.
+    // A declared sort order RE-CLUSTERS on compaction (clustering decays
+    // as deletes/appends accumulate; the maintenance pass restores it)
     val compacted =
-      if (sortCols0.isEmpty) base0.repartition(numFiles)
-      else base0.repartitionByRange(numFiles, sortCols0.map(col): _*)
-        .sortWithinPartitions(sortCols0.map(col): _*)
+      if (sortCols.isEmpty) base.repartition(numFiles)
+      else base.repartitionByRange(numFiles, sortCols.map(col): _*)
+        .sortWithinPartitions(sortCols.map(col): _*)
     val dataFiles = writeMorData(compacted, st, s"cmp-$stamp")
-    commitMor(st, "replace",
-      Seq("graft-compaction" -> s"target-file-rows=$targetFileRows"),
-      Nil, dataFiles, carryPrev = false)
-    (st.dataPaths.size, dataFiles.size)
+    val summary = "graft-compaction" -> s"target-file-rows=$targetFileRows"
+    scope match {
+      // untouched manifest entries carry; matched files leave as DELETED
+      case Some((pred, matched)) =>
+        commitMor(st, "replace", Seq(summary, "graft-predicate" -> pred), Nil, dataFiles,
+          carriedOverride = Some(rewriteManifestsDroppingIf(st, e => matched.contains(e.path), "cmpw")))
+      case None => commitMor(st, "replace", Seq(summary), Nil, dataFiles, carryPrev = false)
+    }
+    (rewritten.size, dataFiles.size)
   }
 
-  /** ROLLBACK — re-points `current-snapshot-id` at an existing (usually
-    * older) snapshot in a new metadata.json version, appending to the
-    * snapshot-log; nothing else changes, so the rolled-past snapshots stay
-    * time-travelable until expired. The iceberg `rollback_to_snapshot`
-    * procedure's arrangement. */
   /** ADD COLUMN schema evolution: a new metadata.json version whose
     * schemas array gains an evolved schema (new schema-id, new field with
     * id = last-column-id + 1) and whose current-schema-id points at it —
@@ -2478,12 +2170,7 @@ object IcebergSink {
     if (!st.meta.has("schemas")) throw IcebergReadException(
       s"ALTER TABLE: `$path` metadata carries no schemas array (v1 single-" +
         "schema layout) — evolution needs the v2 metadata shape")
-    val curId = st.meta.path("current-schema-id").asInt(0)
-    val schemas = st.meta.path("schemas")
-    val cur = schemas.elements().asScala
-      .find(_.path("schema-id").asInt(-1) == curId).getOrElse(
-        throw IcebergReadException(s"`$path`: current-schema-id $curId not in schemas"))
-    val existing = cur.path("fields").elements().asScala
+    val existing = st.snap.currentSchema.path("fields").elements().asScala
       .map(_.path("name").asText()).toSeq
     if (existing.exists(_.equalsIgnoreCase(colName))) throw IcebergReadException(
       s"ALTER TABLE: column `$colName` already exists in `$path`")
@@ -2491,85 +2178,44 @@ object IcebergSink {
       case e: Exception => throw IcebergReadException(
         s"ALTER TABLE: `$typeDdl` is not a Spark type: ${e.getMessage}")
     }
-    val iceT: String = dt match {
-      case BooleanType => "boolean"
-      case ByteType | ShortType | IntegerType => "int"
-      case LongType => "long"
-      case FloatType => "float"
-      case DoubleType => "double"
-      case StringType => "string"
-      case BinaryType => "binary"
-      case DateType => "date"
-      case TimestampType => "timestamptz"
-      case TimestampNTZType => "timestamp"
-      case d: DecimalType => s"decimal(${d.precision}, ${d.scale})"
-      case other => throw IcebergReadException(
-        s"ALTER TABLE: type ${other.simpleString} has no iceberg mapping")
-    }
-    val maxFieldId = schemas.elements().asScala.flatMap(
+    val iceT = iceType(dt, "ALTER TABLE")
+    val maxFieldId = st.meta.path("schemas").elements().asScala.flatMap(
       _.path("fields").elements().asScala.map(_.path("id").asInt(0))).maxOption.getOrElse(0)
     val newFieldId = math.max(st.meta.path("last-column-id").asInt(0), maxFieldId) + 1
-    val newSchemaId = schemas.elements().asScala
-      .map(_.path("schema-id").asInt(0)).maxOption.getOrElse(0) + 1
-    val evolved = cur.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    evolved.put("schema-id", newSchemaId)
-    val nf = evolved.withArray("fields").addObject()
-    nf.put("id", newFieldId); nf.put("name", colName)
-    nf.put("required", false); nf.put("type", iceT)
-    val newMeta = st.meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    newMeta.withArray("schemas").add(evolved)
-    newMeta.put("current-schema-id", newSchemaId)
-    newMeta.put("last-column-id", newFieldId)
-    newMeta.put("last-updated-ms", System.currentTimeMillis())
-    val newVersion = st.version + 1
-    val target = new Path(st.metaDir, s"v$newVersion.metadata.json")
-    if (st.fs.exists(target)) throw IcebergReadException(
-      s"`$path`: metadata version $newVersion already exists — another writer " +
-        "got there first")
-    val out = st.fs.create(target, false)
-    try out.write(mapper.writeValueAsString(newMeta).getBytes("UTF-8"))
-    finally out.close()
-    val hintOut = st.fs.create(st.hint, true)
-    try hintOut.write(newVersion.toString.getBytes("UTF-8")) finally hintOut.close()
+    commitEvolvedSchema(st, { evolved =>
+      val nf = evolved.withArray("fields").addObject()
+      nf.put("id", newFieldId); nf.put("name", colName)
+      nf.put("required", false); nf.put("type", iceT)
+    }, _.put("last-column-id", newFieldId))
   }
 
-  /** Shared tail of the metadata-only evolution ops: append an evolved
-    * schema (new schema-id), point current-schema-id at it, write the next
-    * metadata.json version + hint. */
   /** One metadata-only commit: deep-copy the current table metadata, apply
-    * `mutateMeta`, bump last-updated, write vN+1 + version-hint. The shared
-    * tail of every ALTER TABLE that moves no data bytes. */
+    * `mutateMeta`, bump last-updated, publish it as the next version. The
+    * shared tail of every ALTER TABLE that moves no data bytes. */
   private def commitEvolvedMeta(st: MorState,
       mutateMeta: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
     val newMeta = st.meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
     mutateMeta(newMeta)
     newMeta.put("last-updated-ms", System.currentTimeMillis())
-    val newVersion = st.version + 1
-    val target = new Path(st.metaDir, s"v$newVersion.metadata.json")
-    if (st.fs.exists(target)) throw IcebergReadException(
-      s"metadata version $newVersion already exists — another writer got there first")
-    val out = st.fs.create(target, false)
-    try out.write(mapper.writeValueAsString(newMeta).getBytes("UTF-8"))
-    finally out.close()
-    val hintOut = st.fs.create(st.hint, true)
-    try hintOut.write(newVersion.toString.getBytes("UTF-8")) finally hintOut.close()
+    IcebergLog.commit(st.snap, newMeta)
   }
 
+  /** Shared tail of the schema evolution ops: append an evolved copy of
+    * the current schema (new schema-id, `mutate` applied), point
+    * current-schema-id at it and apply `mutateMeta`, as one metadata-only
+    * commit. */
   private def commitEvolvedSchema(st: MorState,
-      mutate: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
-    val curId = st.meta.path("current-schema-id").asInt(0)
-    val schemas = st.meta.path("schemas")
-    val cur = schemas.elements().asScala
-      .find(_.path("schema-id").asInt(-1) == curId).getOrElse(
-        throw IcebergReadException(s"current-schema-id $curId not in schemas"))
-    val newSchemaId = schemas.elements().asScala
+      mutate: com.fasterxml.jackson.databind.node.ObjectNode => Unit,
+      mutateMeta: com.fasterxml.jackson.databind.node.ObjectNode => Unit = _ => ()): Unit = {
+    val newSchemaId = st.meta.path("schemas").elements().asScala
       .map(_.path("schema-id").asInt(0)).maxOption.getOrElse(0) + 1
-    val evolved = cur.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+    val evolved = st.snap.currentSchema.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
     evolved.put("schema-id", newSchemaId)
     mutate(evolved)
     commitEvolvedMeta(st, { newMeta =>
       newMeta.withArray("schemas").add(evolved)
       newMeta.put("current-schema-id", newSchemaId)
+      mutateMeta(newMeta)
     })
   }
 
@@ -2584,7 +2230,7 @@ object IcebergSink {
   def addPartitionField(spark: org.apache.spark.sql.SparkSession, path: String,
       entry: String): Unit = {
     val st = loadMorState(spark, path)
-    val (curSchema, sparkSchema) = currentSparkSchema(st.meta, path)
+    val (curSchema, sparkSchema) = currentSparkSchema(st.meta)
     val pf = parsePartitionBy(Seq(entry), sparkSchema).head
     val srcId = curSchema.path("fields").elements().asScala
       .find(_.path("name").asText() == pf.srcCol)
@@ -2661,15 +2307,9 @@ object IcebergSink {
 
   /** The current schema node + its Spark-type rendering (drives
     * parsePartitionBy's type checks). */
-  private def currentSparkSchema(meta: com.fasterxml.jackson.databind.JsonNode,
-      path: String): (com.fasterxml.jackson.databind.JsonNode, StructType) = {
-    val cur =
-      if (meta.has("schemas")) {
-        val curId = meta.path("current-schema-id").asInt(0)
-        meta.path("schemas").elements().asScala
-          .find(_.path("schema-id").asInt(-1) == curId).getOrElse(
-            throw IcebergReadException(s"`$path`: current-schema-id $curId not in schemas"))
-      } else meta.path("schema")
+  private def currentSparkSchema(meta: com.fasterxml.jackson.databind.JsonNode)
+      : (com.fasterxml.jackson.databind.JsonNode, StructType) = {
+    val cur = IcebergLog.currentSchema(meta)
     // non-textual types (struct/list/map) cannot source a partition
     // transform — keep them out of the projection instead of failing the
     // whole table for an unrelated nested column
@@ -2692,10 +2332,7 @@ object IcebergSink {
     if (!st.meta.has("schemas")) throw IcebergReadException(
       s"ALTER TABLE: `$path` metadata carries no schemas array — evolution " +
         "needs the v2 metadata shape")
-    val curId = st.meta.path("current-schema-id").asInt(0)
-    val cur = st.meta.path("schemas").elements().asScala
-      .find(_.path("schema-id").asInt(-1) == curId).get
-    val field = cur.path("fields").elements().asScala
+    val field = st.snap.currentSchema.path("fields").elements().asScala
       .find(_.path("name").asText() == colName).getOrElse(
         throw IcebergReadException(
           s"ALTER TABLE: column `$colName` does not exist in `$path`"))
@@ -2729,10 +2366,7 @@ object IcebergSink {
     if (!st.meta.has("schemas")) throw IcebergReadException(
       s"ALTER TABLE: `$path` metadata carries no schemas array — evolution " +
         "needs the v2 metadata shape")
-    val curId = st.meta.path("current-schema-id").asInt(0)
-    val cur = st.meta.path("schemas").elements().asScala
-      .find(_.path("schema-id").asInt(-1) == curId).get
-    val names = cur.path("fields").elements().asScala.map(_.path("name").asText()).toSeq
+    val names = st.snap.currentSchema.path("fields").elements().asScala.map(_.path("name").asText()).toSeq
     if (!names.contains(oldName)) throw IcebergReadException(
       s"ALTER TABLE: column `$oldName` does not exist in `$path`")
     if (names.exists(_.equalsIgnoreCase(newName))) throw IcebergReadException(
@@ -2764,45 +2398,33 @@ object IcebergSink {
     })
   }
 
+  /** ROLLBACK — re-points `current-snapshot-id` at an existing (usually
+    * older) snapshot in a new metadata.json version, appending to the
+    * snapshot-log; nothing else changes, so the rolled-past snapshots stay
+    * time-travelable until expired. The iceberg `rollback_to_snapshot`
+    * procedure's arrangement. */
   def rollbackTo(spark: org.apache.spark.sql.SparkSession, path: String,
       snapshotId: Long): Unit = {
     val st = loadMorState(spark, path)
-    val known = st.meta.path("snapshots").elements().asScala
-      .map(_.path("snapshot-id").asLong()).toSeq
+    val known = st.snap.snapshots.map(_.path("snapshot-id").asLong())
     if (!known.contains(snapshotId)) throw IcebergReadException(
       s"`$path`: cannot roll back to snapshot $snapshotId — table knows " +
         s"snapshots ${known.sorted.mkString(", ")}")
-    val nowMs = System.currentTimeMillis()
-    val prevSnapshotLog = st.meta.path("snapshot-log").elements().asScala
-      .map(e => (e.path("timestamp-ms").asLong(), e.path("snapshot-id").asLong())).toSeq
-    val logJson = (prevSnapshotLog :+ ((nowMs, snapshotId))).map { case (ts, id) =>
-      s"""{"timestamp-ms": $ts, "snapshot-id": $id}"""
-    }.mkString("[", ", ", "]")
-    val newMeta = st.meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    newMeta.put("last-updated-ms", nowMs)
-    newMeta.put("current-snapshot-id", snapshotId)
-    newMeta.set[com.fasterxml.jackson.databind.JsonNode]("snapshot-log",
-      mapper.readTree(logJson))
-    val newVersion = st.version + 1
-    val target = new Path(st.metaDir, s"v$newVersion.metadata.json")
-    if (st.fs.exists(target)) throw IcebergReadException(
-      s"`$path`: metadata version $newVersion already exists — another writer " +
-        "got there first")
-    val out = st.fs.create(target, false)
-    try out.write(mapper.writeValueAsString(newMeta).getBytes("UTF-8"))
-    finally out.close()
-    val hintOut = st.fs.create(st.hint, true)
-    try hintOut.write(newVersion.toString.getBytes("UTF-8")) finally hintOut.close()
+    commitEvolvedMeta(st, { newMeta =>
+      newMeta.put("current-snapshot-id", snapshotId)
+      logEntry(newMeta, snapshotId)
+    })
   }
 
-  /** EXPIRE SNAPSHOTS — the Iceberg maintenance pass that stops metadata
-    * (and the orphaned data behind it) growing without bound: snapshots
-    * older than `retentionMs` that are NOT current are dropped from a new
-    * metadata.json version (snapshot-log trimmed to match), then any
-    * manifest, manifest-list, or data file referenced ONLY by expired
-    * snapshots is deleted. Mirrors `expireSnapshots` in iceberg-core; all
-    * bounded driver metadata work. Returns (snapshotsExpired,
-    * filesDeleted). */
+  /** Append `snapshotId` to a metadata node's snapshot-log. */
+  private def logEntry(meta: com.fasterxml.jackson.databind.node.ObjectNode,
+      snapshotId: Long, timestampMs: Long = System.currentTimeMillis()): Unit = {
+    val entry = meta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
+      .addObject()
+    entry.put("timestamp-ms", timestampMs)
+    entry.put("snapshot-id", snapshotId)
+  }
+
   /** CREATE TAG / CREATE BRANCH (spec v2 `refs`): pin a name to a snapshot
     * — a TAG marks an immutable point (the training-run reproducibility
     * lever: `ref=run-2026-08` reads the exact corpus a job trained on), a
@@ -2818,21 +2440,20 @@ object IcebergSink {
         "and cannot be re-pinned")
     if (st.meta.path("refs").has(name)) throw IcebergReadException(
       s"`$path`: ref `$name` already exists; dropRef first")
-    val known = st.meta.path("snapshots").elements().asScala
-      .map(_.path("snapshot-id").asLong()).toSet
+    val known = st.snap.snapshots.map(_.path("snapshot-id").asLong()).toSet
     val target = snapshotId.getOrElse(st.meta.path("current-snapshot-id").asLong())
     if (!known.contains(target)) throw IcebergReadException(
       s"`$path`: snapshot $target not in table metadata (known: " +
         s"${known.toSeq.sorted.mkString(", ")})")
-    val newMeta = st.meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    val refsNode =
-      if (newMeta.has("refs"))
-        newMeta.path("refs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      else newMeta.putObject("refs")
-    val r = refsNode.putObject(name)
-    r.put("snapshot-id", target)
-    r.put("type", if (isBranch) "branch" else "tag")
-    writeNextMetadata(st, newMeta)
+    commitEvolvedMeta(st, { newMeta =>
+      val refs =
+        if (newMeta.has("refs"))
+          newMeta.path("refs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+        else newMeta.putObject("refs")
+      val r = refs.putObject(name)
+      r.put("snapshot-id", target)
+      r.put("type", if (isBranch) "branch" else "tag")
+    })
     target
   }
 
@@ -2851,21 +2472,16 @@ object IcebergSink {
     if (r.path("type").asText("branch") != "branch") throw IcebergReadException(
       s"`$path`: ref `$branch` is a TAG — fast-forward publishes a BRANCH")
     val target = r.path("snapshot-id").asLong()
-    if (!st.meta.path("snapshots").elements().asScala
-      .exists(_.path("snapshot-id").asLong() == target)) throw IcebergReadException(
+    if (st.snap.snapshotById(target).isEmpty) throw IcebergReadException(
       s"`$path`: branch `$branch` head $target is not in the snapshots list")
-    val newMeta = st.meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    newMeta.put("current-snapshot-id", target)
-    val refsNode = newMeta.path("refs")
-      .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    val mainRef = refsNode.putObject("main")
-    mainRef.put("snapshot-id", target)
-    mainRef.put("type", "branch")
-    val log = newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
-    val entry = log.addObject()
-    entry.put("timestamp-ms", System.currentTimeMillis())
-    entry.put("snapshot-id", target)
-    writeNextMetadata(st, newMeta)
+    commitEvolvedMeta(st, { newMeta =>
+      newMeta.put("current-snapshot-id", target)
+      val mainRef = newMeta.path("refs")
+        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].putObject("main")
+      mainRef.put("snapshot-id", target)
+      mainRef.put("type", "branch")
+      logEntry(newMeta, target)
+    })
     target
   }
 
@@ -2878,37 +2494,10 @@ object IcebergSink {
     if (!st.meta.path("refs").has(name)) throw IcebergReadException(
       s"`$path`: no ref `$name`; known: " +
         st.meta.path("refs").fieldNames().asScala.mkString(", "))
-    val newMeta = st.meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
-    newMeta.path("refs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-      .remove(name)
-    writeNextMetadata(st, newMeta)
+    commitEvolvedMeta(st,
+      _.path("refs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove(name))
   }
 
-  private def writeNextMetadata(st: MorState,
-      newMeta: com.fasterxml.jackson.databind.node.ObjectNode): Unit = {
-    val newVersion = st.version + 1
-    val target = new Path(st.metaDir, s"v$newVersion.metadata.json")
-    if (st.fs.exists(target)) throw IcebergReadException(
-      s"`${st.rootPath}`: metadata version $newVersion already exists — " +
-        "another writer got there first")
-    val out = st.fs.create(target, false)
-    try out.write(mapper.writeValueAsString(newMeta).getBytes("UTF-8"))
-    finally out.close()
-    val hintOut = st.fs.create(st.hint, true)
-    try hintOut.write(newVersion.toString.getBytes("UTF-8")) finally hintOut.close()
-  }
-
-  /** REMOVE ORPHAN FILES — the maintenance sibling of expireSnapshots for
-    * CRASHED writes: a data/metadata file no snapshot references (a task
-    * that wrote then died before commit, a torn fanout temp move) sits in
-    * the tree forever unless something diffs the LISTING against the
-    * REACHABLE set. Reachability = every listed snapshot's manifest list →
-    * manifests → every entry's file_path (data, positional/equality
-    * deletes, puffin DVs alike) + all metadata files. `graceMs` protects
-    * files younger than the window (a CONCURRENT writer's uncommitted
-    * output looks orphaned until its commit lands — the same race
-    * Iceberg's own remove_orphan_files defaults 3 days for). Returns the
-    * deleted count. */
   /** CALL system.rewrite_manifests — manifest CONSOLIDATION, the metadata
     * health lever of a long-lived table: a steady drip of commits leaves
     * one small manifest per snapshot, and planning cost grows with the
@@ -2922,13 +2511,8 @@ object IcebergSink {
   def rewriteManifests(spark: org.apache.spark.sql.SparkSession,
       path: String): (Int, Int) = {
     val st = loadMorState(spark, path)
-    val before = st.prevManifests.size
+    val before = st.manifests.size
     if (before <= 1) return (before, before)
-    val conf = spark.sessionState.newHadoopConf()
-    def abs(rel: String): Path = {
-      val p0 = new Path(rel)
-      if (p0.isAbsolute) p0 else new Path(st.rootPath, p0)
-    }
     // group live entries by (writer schema, data-vs-delete): records copy
     // VERBATIM so bounds/stats/tuples survive untouched; mixed eras
     // (unpartitioned vs partition-aware records) cannot share an Avro
@@ -2936,38 +2520,30 @@ object IcebergSink {
     val groups = scala.collection.mutable.LinkedHashMap[
       (org.apache.avro.Schema, Boolean),
       scala.collection.mutable.Buffer[GenericRecord]]()
-    st.prevManifests.foreach { case (m, mseq) =>
-      val r = new DataFileReader[GenericRecord](
-        new FsInput(abs(m), conf), new GenericDatumReader[GenericRecord]())
-      try r.iterator().asScala.foreach { e =>
-        if (e.get("status").asInstanceOf[Int] != 2) {
-          // An entry schema WITHOUT sequence_number (foreign/older writer)
-          // can only inherit its manifest's sequence — after consolidation
-          // that manifest carries maxSeq, silently inflating the entry's
-          // sequence past any equality-delete it was subject to (the
-          // strictly-lower rule) and resurrecting deleted rows. Refuse
-          // unless inheritance is a no-op (mseq already == maxSeq).
-          if (Option(e.getSchema.getField("sequence_number")).isEmpty &&
-              mseq != st.lastSeq)
-            throw IcebergReadException(
-              s"rewrite_manifests: manifest `$m` (sequence $mseq) has an " +
-              s"entry schema without sequence_number; consolidating would " +
-              s"inflate its entries' inherited sequence to ${st.lastSeq}, " +
-              "breaking delete-file visibility — leave it unconsolidated " +
-              "or rewrite it with a sequence-bearing writer first")
-          if (Option(e.getSchema.getField("sequence_number")).isDefined &&
-              e.get("sequence_number") == null)
-            e.put("sequence_number", Long.box(mseq))
-          if (e.get("status").asInstanceOf[Int] == 1) e.put("status", 0)
-          val dfr = e.get("data_file").asInstanceOf[GenericRecord]
-          val isDelete =
-            Option(dfr.getSchema.getField("content")).flatMap(_ =>
-              Option(dfr.get("content"))).exists(_.asInstanceOf[Int] != 0)
-          groups.getOrElseUpdate((e.getSchema, isDelete),
-            scala.collection.mutable.Buffer[GenericRecord]()) += e
-        }
+    st.manifests.foreach { m =>
+      st.snap.entries(m).filter(_.live).foreach { entry =>
+        val e = entry.raw
+        // An entry schema WITHOUT sequence_number (foreign/older writer)
+        // can only inherit its manifest's sequence — after consolidation
+        // that manifest carries maxSeq, silently inflating the entry's
+        // sequence past any equality-delete it was subject to (the
+        // strictly-lower rule) and resurrecting deleted rows. Refuse
+        // unless inheritance is a no-op (the manifest's sequence already
+        // == maxSeq).
+        val hasSeqField = e.getSchema.getField("sequence_number") != null
+        if (!hasSeqField && m.seq != st.lastSeq)
+          throw IcebergReadException(
+            s"rewrite_manifests: manifest `${m.path}` (sequence ${m.seq}) has an " +
+            s"entry schema without sequence_number; consolidating would " +
+            s"inflate its entries' inherited sequence to ${st.lastSeq}, " +
+            "breaking delete-file visibility — leave it unconsolidated " +
+            "or rewrite it with a sequence-bearing writer first")
+        if (hasSeqField && e.get("sequence_number") == null)
+          e.put("sequence_number", Long.box(m.seq))
+        if (entry.status == 1) e.put("status", 0)
+        groups.getOrElseUpdate((e.getSchema, entry.content != 0),
+          scala.collection.mutable.Buffer[GenericRecord]()) += e
       }
-      finally r.close()
     }
     val stamp = java.util.UUID.randomUUID().toString.take(8)
     val maxSeq = st.lastSeq
@@ -3023,69 +2599,42 @@ object IcebergSink {
     val delFiles = writeMoved(consolidated, st, s"posrw-$stamp")
     // retire every old positional-delete entry; data entries carry as-is
     val dropped = st.priorDeleteFiles.toSet
-    def absStr(rel: String): String = {
-      val p0 = new Path(rel)
-      (if (p0.isAbsolute) p0 else new Path(st.rootPath, p0)).toString
-    }
-    val carried = rewriteManifestsDroppingIf(spark, st, dfr =>
-      dropped.contains(absStr(dfr.get("file_path").toString)), s"posrw-$stamp")
+    val carried = rewriteManifestsDroppingIf(st, e => dropped.contains(e.path), s"posrw-$stamp")
     commitMor(st, "replace",
       Seq("graft-rewritten-position-delete-files" -> before.toString),
       delFiles, Nil, carriedOverride = Some(carried))
     (before, delFiles.size)
   }
 
+  /** REMOVE ORPHAN FILES — the maintenance sibling of expireSnapshots for
+    * CRASHED writes: a data/metadata file no snapshot references (a task
+    * that wrote then died before commit, a torn fanout temp move) sits in
+    * the tree forever unless something diffs the LISTING against the
+    * REACHABLE set. Reachability = every listed snapshot's manifest list →
+    * manifests → every entry's file_path (data, positional/equality
+    * deletes, puffin DVs alike) + all metadata files. `graceMs` protects
+    * files younger than the window (a CONCURRENT writer's uncommitted
+    * output looks orphaned until its commit lands — the same race
+    * Iceberg's own remove_orphan_files defaults 3 days for). Returns the
+    * deleted count. */
   def removeOrphanFiles(spark: org.apache.spark.sql.SparkSession, path: String,
       graceMs: Long = 3L * 24 * 3600 * 1000): Int = {
-    val rootPath = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = rootPath.getFileSystem(conf)
-    val metaDir = new Path(rootPath, "metadata")
-    val (_, metaFile) = resolveCurrent(fs, metaDir).getOrElse(
-      throw IcebergReadException(
-        s"`$path`: no metadata — not a table this native writer manages"))
-    val meta = {
-      val in = fs.open(metaFile)
-      try mapper.readTree(in) finally in.close()
-    }
-    def abs(rel: String): String = {
-      val p = new Path(rel)
-      fs.makeQualified(if (p.isAbsolute) p else new Path(rootPath, p)).toString
-    }
-    import org.apache.avro.file.DataFileReader
-    import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-    val reachable = scala.collection.mutable.Set.empty[String]
-    meta.path("snapshots").elements().asScala.foreach { sn =>
-      val ml = sn.path("manifest-list").asText()
-      if (ml.nonEmpty) {
-        reachable += abs(ml)
-        val r = new DataFileReader[GenericRecord](
-          new FsInput(new Path(abs(ml)), conf), new GenericDatumReader[GenericRecord]())
-        val manifests = try r.iterator().asScala
-          .map(_.get("manifest_path").toString).toList finally r.close()
-        manifests.foreach { m =>
-          reachable += abs(m)
-          val r2 = new DataFileReader[GenericRecord](
-            new FsInput(new Path(abs(m)), conf), new GenericDatumReader[GenericRecord]())
-          try r2.iterator().asScala.foreach { e =>
-            reachable += abs(e.get("data_file").asInstanceOf[GenericRecord]
-              .get("file_path").toString)
-          } finally r2.close()
-        }
-      }
-    }
+    val snap = IcebergLog.current(spark, path)
+    val (fs, rootPath, metaDir) = (snap.fs, snap.root, snap.metaDir)
+    val reachable: Set[String] =
+      snap.snapshots.flatMap(reachableFiles(snap, _)).map(fs.makeQualified(_).toString).toSet
     val cutoff = System.currentTimeMillis() - graceMs
     var deleted = 0
     // sweep data/ (orphaned task output) and metadata/ avro (torn manifest
-    // writes); metadata.json versions + version-hint stay — they ARE the
-    // table history, expireSnapshots owns trimming it
+    // writes); metadata.json versions and the version hint stay — they
+    // ARE the table history, expireSnapshots owns trimming it
     Seq(new Path(rootPath, "data"), metaDir).foreach { dirP =>
       if (fs.exists(dirP)) {
         val it = fs.listFiles(dirP, true)
         while (it.hasNext) {
           val f = it.next()
           val name = f.getPath.getName
-          val isMetaJson = name.endsWith(".metadata.json") || name == "version-hint.text"
+          val isMetaJson = name.endsWith(".metadata.json") || name == IcebergLog.HintName
           if (f.isFile && !isMetaJson && f.getModificationTime < cutoff &&
             !reachable.contains(fs.makeQualified(f.getPath).toString)) {
             if (fs.delete(f.getPath, false)) deleted += 1
@@ -3096,89 +2645,58 @@ object IcebergSink {
     deleted
   }
 
+  /** EXPIRE SNAPSHOTS — the Iceberg maintenance pass that stops metadata
+    * (and the orphaned data behind it) growing without bound: snapshots
+    * older than `retentionMs` that are NOT current are dropped from a new
+    * metadata.json version (snapshot-log trimmed to match), then any
+    * manifest, manifest-list, or data file referenced ONLY by expired
+    * snapshots is deleted. Mirrors `expireSnapshots` in iceberg-core; all
+    * bounded driver metadata work. Returns (snapshotsExpired,
+    * filesDeleted). */
   def expireSnapshots(spark: org.apache.spark.sql.SparkSession, path: String,
       retentionMs: Long = 7L * 24 * 3600 * 1000): (Int, Int) = {
-    val rootPath = new Path(path)
-    val conf = spark.sessionState.newHadoopConf()
-    val fs = rootPath.getFileSystem(conf)
-    val metaDir = new Path(rootPath, "metadata")
-    val hint = new Path(metaDir, "version-hint.text")
-    val (v, metaFile) = resolveCurrent(fs, metaDir).getOrElse(
-      throw IcebergReadException(
-        s"`$path`: no metadata — not a table this native writer manages"))
-    val meta = {
-      val in = fs.open(metaFile)
-      try mapper.readTree(in) finally in.close()
-    }
-    val currentId = meta.path("current-snapshot-id").asLong()
+    val snap = IcebergLog.current(spark, path)
+    val currentId = snap.currentSnapshotId
     val cutoff = System.currentTimeMillis() - retentionMs
     // a snapshot pinned by any ref (tag/branch) is PROTECTED from
     // expiration regardless of age — dropping it would break every
     // `ref=` read that name promises (the spec's retention rule)
-    val refPinned: Set[Long] = meta.path("refs").elements().asScala
+    val refPinned: Set[Long] = snap.refs.elements().asScala
       .map(_.path("snapshot-id").asLong()).toSet
-    val snaps = meta.path("snapshots").elements().asScala.toSeq
-    val (expired, kept) = snaps.partition { sn =>
+    val (expired, kept) = snap.snapshots.partition { sn =>
       val id = sn.path("snapshot-id").asLong()
       id != currentId && !refPinned.contains(id) &&
         sn.path("timestamp-ms").asLong() < cutoff
     }
     if (expired.isEmpty) return (0, 0)
-
-    def abs(rel: String): Path = {
-      val p = new Path(rel)
-      if (p.isAbsolute) p else new Path(rootPath, p)
-    }
-    /** manifest-list path → its manifests → their data files (all as the
-      * relative/absolute strings the metadata records). */
-    def reachable(sn: com.fasterxml.jackson.databind.JsonNode): (Set[String], Set[String]) = {
-      val ml = sn.path("manifest-list").asText()
-      val manifests = {
-        val r = new DataFileReader[GenericRecord](
-          new FsInput(abs(ml), conf), new GenericDatumReader[GenericRecord]())
-        try r.iterator().asScala.map(_.get("manifest_path").toString).toSeq
-        finally r.close()
-      }
-      val dataFiles = manifests.flatMap { m =>
-        val r = new DataFileReader[GenericRecord](
-          new FsInput(abs(m), conf), new GenericDatumReader[GenericRecord]())
-        try r.iterator().asScala
-          .map(_.get("data_file").asInstanceOf[GenericRecord].get("file_path").toString)
-          .toSeq
-        finally r.close()
-      }
-      (manifests.toSet + ml, dataFiles.toSet)
-    }
     // read EVERY reachability set before deleting anything — expired
     // snapshots share manifests with each other (appends carry them
     // forward), so delete-as-you-go would tear files out from under the
     // next snapshot's walk
-    val keptRefs = kept.map(reachable)
-    val keptMeta = keptRefs.flatMap(_._1).toSet
-    val keptData = keptRefs.flatMap(_._2).toSet
-    val expiredRefs = expired.map(reachable)
-    val doomed = (expiredRefs.flatMap(_._1).toSet -- keptMeta) ++
-      (expiredRefs.flatMap(_._2).toSet -- keptData)
-    var deleted = 0
-    doomed.foreach { rel => if (fs.delete(abs(rel), false)) deleted += 1 }
+    val doomed = expired.flatMap(reachableFiles(snap, _)).toSet --
+      kept.flatMap(reachableFiles(snap, _))
     val keptIds = kept.map(_.path("snapshot-id").asLong()).toSet
-    val newLog = meta.path("snapshot-log").elements().asScala.toSeq
+    val newLog = snap.meta.path("snapshot-log").elements().asScala.toSeq
       .filter(e => keptIds.contains(e.path("snapshot-id").asLong()))
-    val newMeta = meta.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    val newMeta = snap.meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
     newMeta.set[com.fasterxml.jackson.databind.JsonNode]("snapshots",
-      mapper.createArrayNode().addAll(kept.map(_.deepCopy[com.fasterxml.jackson.databind.JsonNode]()).asJava))
+      mapper.createArrayNode().addAll(kept.asJava))
     newMeta.set[com.fasterxml.jackson.databind.JsonNode]("snapshot-log",
-      mapper.createArrayNode().addAll(newLog.map(_.deepCopy[com.fasterxml.jackson.databind.JsonNode]()).asJava))
-    val newVersion = v + 1
-    val target = new Path(metaDir, s"v$newVersion.metadata.json")
-    if (fs.exists(target)) throw IcebergReadException(
-      s"`$path`: metadata version $newVersion already exists — another writer " +
-        "got there first")
-    val out = fs.create(target, false)
-    try out.write(mapper.writeValueAsString(newMeta).getBytes("UTF-8"))
-    finally out.close()
-    val hintOut = fs.create(hint, true)
-    try hintOut.write(newVersion.toString.getBytes("UTF-8")) finally hintOut.close()
-    (expired.size, deleted)
+      mapper.createArrayNode().addAll(newLog.asJava))
+    // publish first, then delete (iceberg-core's order): a lost commit
+    // leaves the still-current metadata's files intact, and a crash in
+    // between leaves only orphans, which removeOrphanFiles reclaims
+    IcebergLog.commit(snap, newMeta)
+    (expired.size, doomed.count(snap.fs.delete(_, false)))
+  }
+
+  /** The files snapshot `sn` reaches: its manifest list, its manifests and
+    * every entry's file (data, delete files and DVs alike, DELETED entries
+    * included). */
+  private def reachableFiles(snap: IcebergLog.Snapshot,
+      sn: com.fasterxml.jackson.databind.JsonNode): Seq[Path] = {
+    val manifests = snap.manifestsOf(sn)
+    Option(sn.path("manifest-list").asText(null)).map(snap.resolve).toSeq ++
+      manifests.map(_.file) ++ manifests.flatMap(snap.entries).map(e => new Path(e.path))
   }
 }

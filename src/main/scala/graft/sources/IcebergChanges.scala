@@ -1,9 +1,5 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
-import com.fasterxml.jackson.databind.json.JsonMapper
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
 
@@ -30,8 +26,6 @@ import org.apache.spark.sql.functions.{col, lit}
 object IcebergChanges {
   import IcebergNative.IcebergReadException
 
-  private val mapper = JsonMapper.builder().build()
-
   def read(spark: SparkSession, root: String,
       options: Map[String, String]): DataFrame = {
     val start = options.getOrElse("start_snapshot",
@@ -41,21 +35,8 @@ object IcebergChanges {
       case _: NumberFormatException =>
         throw IcebergReadException(s"start_snapshot `$start` is not a number")
     }
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val meta = {
-      val metaDir = new Path(new Path(root), "metadata")
-      val hint = new Path(metaDir, "version-hint.text")
-      if (!fs.exists(hint)) throw IcebergReadException(
-        s"`$root`: no metadata/version-hint.text — not a native Iceberg table")
-      val v = {
-        val in = fs.open(hint)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-        finally in.close()
-      }
-      val in = fs.open(new Path(metaDir, s"v$v.metadata.json"))
-      try mapper.readTree(in) finally in.close()
-    }
-    val snaps = meta.path("snapshots").elements().asScala.toSeq
+    val snap = IcebergLog.current(spark, root)
+    val snaps = snap.snapshots
       .map(sn => (sn.path("snapshot-id").asLong(),
         sn.path("timestamp-ms").asLong(),
         sn.path("summary").path("operation").asText("append")))
@@ -66,8 +47,7 @@ object IcebergChanges {
     // main-line snapshot against an unpublished audit-branch one,
     // fabricating insert/delete pairs with wrong attribution. snapshot-log
     // order IS commit order — no id-sort assumption needed.
-    val logIds = meta.path("snapshot-log").elements().asScala.toSeq
-      .map(_.path("snapshot-id").asLong()).distinct
+    val logIds = snap.snapshotLog.map(_._2).distinct
     val mainLine: Seq[(Long, Long, String)] =
       if (logIds.nonEmpty) logIds.flatMap(snapById.get)
       else snaps.sortBy(_._1)
@@ -88,7 +68,7 @@ object IcebergChanges {
       }
       requireMain(id, "end_snapshot")
       id
-    }.getOrElse(meta.path("current-snapshot-id").asLong())
+    }.getOrElse(snap.currentSnapshotId)
     val startIdx = mainLine.indexWhere(_._1 == startId)
     val endIdx = mainLine.indexWhere(_._1 == endId)
     if (endIdx < startIdx) throw IcebergReadException(

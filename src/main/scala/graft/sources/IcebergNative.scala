@@ -2,10 +2,8 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
-import org.apache.avro.file.DataFileReader
-import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-import org.apache.avro.mapred.FsInput
+import com.fasterxml.jackson.databind.JsonNode
+import org.apache.avro.generic.GenericRecord
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types._
@@ -16,7 +14,7 @@ import org.apache.spark.sql.types._
   * (src/fdw/iceberg.rs, src/duckdb/iceberg.rs:48-89: `iceberg_scan(path)`
   * of a table root, latest snapshot). This reader is built from the PUBLIC
   * Iceberg table spec (iceberg.apache.org/spec): a table root holds
-  * `metadata/vN.metadata.json` (current version via `version-hint.text`),
+  * `metadata/vN.metadata.json` (the current one resolved by [[IcebergLog]]),
   * whose current snapshot points at an Avro manifest list, whose rows point
   * at Avro manifest files, whose entries list the parquet data files. The
   * Avro core library ships with Spark, so manifest reading needs nothing
@@ -55,8 +53,6 @@ object IcebergNative {
 
   final case class IcebergReadException(msg: String) extends IllegalArgumentException(msg)
 
-  private val mapper = new ObjectMapper()
-
   /** One equality-delete scope predicate: source column, partition
     * transform, and the tuple's stored (transformed) value — null means
     * the delete is scoped to the NULL partition of that source. */
@@ -67,53 +63,11 @@ object IcebergNative {
     "identity", """bucket\[\d+\]""", """truncate\[\d+\]""",
     "year", "years", "month", "months", "day", "days", "hour", "hours")
 
-  /** Locate the CURRENT metadata.json (version-hint.text, else latest by
-    * name) and parse it — the bounded driver read every entry point shares. */
-  private def currentMeta(fs: org.apache.hadoop.fs.FileSystem, root: String): JsonNode = {
-    val metaDir = new Path(new Path(root), "metadata")
-    if (!fs.exists(metaDir))
-      throw IcebergReadException(s"`$root` is not an Iceberg table: no metadata directory")
-    val hint = new Path(metaDir, "version-hint.text")
-    // The hint is ADVISORY (iceberg's own HadoopTableOperations semantics):
-    // a concurrent writer rewriting it can expose an empty/truncated file
-    // to a poller (streaming followers hit this), so any unreadable,
-    // non-numeric, or dangling hint falls back to the NUMERICALLY highest
-    // *.metadata.json — numeric, because lexicographic max would pick
-    // v9 over v10 from version 10 onward.
-    def fromListing: Path = {
-      val re = """v?(\d+)\.metadata\.json""".r
-      val metas = fs.listStatus(metaDir).toSeq.flatMap { st =>
-        st.getPath.getName match {
-          case re(v) => Some((v.toLong, st.getPath))
-          case _ => None
-        }
-      }
-      if (metas.isEmpty) throw IcebergReadException(
-        s"`$root`: no *.metadata.json in metadata/")
-      metas.maxBy(_._1)._2
-    }
-    val metaFile: Path =
-      if (fs.exists(hint)) {
-        val in = fs.open(hint)
-        val v = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim finally in.close()
-        if (v.isEmpty || !v.forall(_.isDigit)) fromListing
-        else Seq(s"v$v.metadata.json", s"$v.metadata.json")
-          .map(new Path(metaDir, _)).find(fs.exists).getOrElse(fromListing)
-      } else fromListing
-    val metaIn = fs.open(metaFile)
-    try mapper.readTree(metaIn) finally metaIn.close()
-  }
-
   /** The table's append-only snapshot-log as (timestamp-ms, snapshot-id)
     * entries, oldest first — the offset ledger a streaming follower polls.
     * Empty when the table has no snapshot-log yet. */
-  def snapshotLog(spark: SparkSession, root: String): Seq[(Long, Long)] = {
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    import scala.jdk.CollectionConverters._
-    currentMeta(fs, root).path("snapshot-log").elements().asScala
-      .map(e => (e.path("timestamp-ms").asLong(), e.path("snapshot-id").asLong()))
-      .toSeq
-  }
+  def snapshotLog(spark: SparkSession, root: String): Seq[(Long, Long)] =
+    IcebergLog.current(spark, root).snapshotLog
 
   /** Snapshot-history introspection (`iceberg_snapshots('<root>')`): one
     * row per snapshot in the current metadata.json — id, parent, sequence
@@ -122,10 +76,9 @@ object IcebergNative {
     * the frame is history-sized. */
   def snapshots(spark: SparkSession, root: String): DataFrame = {
     import org.apache.spark.sql.Row
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val meta = currentMeta(fs, root)
-    val currentId = meta.path("current-snapshot-id").asLong(-1L)
-    val rows = meta.path("snapshots").elements().asScala.toSeq.map { sn =>
+    val snap = IcebergLog.current(spark, root)
+    val currentId = snap.currentSnapshotId
+    val rows = snap.snapshots.map { sn =>
       Row(
         sn.path("snapshot-id").asLong(),
         if (sn.has("parent-snapshot-id")) java.lang.Long.valueOf(sn.path("parent-snapshot-id").asLong())
@@ -156,50 +109,14 @@ object IcebergNative {
     * counts, row totals). Bounded driver Avro walks, no data touched;
     * the rows an operator reads to judge compaction/expiry health. */
   def manifests(spark: SparkSession, root: String): DataFrame = {
-    import org.apache.avro.file.DataFileReader
-    import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-    import org.apache.avro.mapred.FsInput
     import org.apache.spark.sql.Row
-    val conf = spark.sessionState.newHadoopConf()
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    val meta = currentMeta(fs, root)
-    val currentId = meta.path("current-snapshot-id").asLong(-1L)
-    val current = meta.path("snapshots").elements().asScala
-      .find(_.path("snapshot-id").asLong() == currentId).getOrElse(
-        throw IcebergReadException(s"`$root`: current snapshot $currentId not listed"))
-    def abs(rel: String): Path = {
-      val p = new Path(rel)
-      if (p.isAbsolute) p else new Path(rootPath, p)
-    }
-    val mlPath = abs(current.path("manifest-list").asText())
-    val list = {
-      val r = new DataFileReader[GenericRecord](new FsInput(mlPath, conf),
-        new GenericDatumReader[GenericRecord]())
-      try r.iterator().asScala.map { rec =>
-        (rec.get("manifest_path").toString,
-          Option(rec.get("sequence_number")).map(_.asInstanceOf[Long])
-            .getOrElse(current.path("sequence-number").asLong(0L)))
-      }.toSeq
-      finally r.close()
-    }
-    val rows = list.map { case (mp, seq) =>
-      var liveData = 0L; var liveDeletes = 0L; var removed = 0L; var rowsTotal = 0L
-      val r = new DataFileReader[GenericRecord](new FsInput(abs(mp), conf),
-        new GenericDatumReader[GenericRecord]())
-      try r.iterator().asScala.foreach { e =>
-        val status = e.get("status").asInstanceOf[Int]
-        val dfr = e.get("data_file").asInstanceOf[GenericRecord]
-        val content = Option(dfr.get("content")).map(_.asInstanceOf[Int]).getOrElse(0)
-        if (status == 2) removed += 1
-        else {
-          if (content == 0) liveData += 1 else liveDeletes += 1
-          rowsTotal += Option(dfr.get("record_count")).map(_.asInstanceOf[Long]).getOrElse(0L)
-        }
-      }
-      finally r.close()
-      Row(mp, seq, if (liveDeletes > 0 && liveData == 0) "deletes" else "data",
-        liveData, liveDeletes, removed, rowsTotal)
+    val snap = IcebergLog.current(spark, root)
+    val rows = snap.manifestsOf(snap.currentSnapshot).map { m =>
+      val (live, removed) = snap.entries(m).partition(_.live)
+      val liveData = live.count(_.content == 0).toLong
+      val liveDeletes = live.size - liveData
+      Row(m.path, m.seq, if (liveDeletes > 0 && liveData == 0) "deletes" else "data",
+        liveData, liveDeletes, removed.size.toLong, live.map(_.recordCount).sum)
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), StructType(Seq(
       StructField("manifest_path", StringType, nullable = false),
@@ -216,71 +133,26 @@ object IcebergNative {
     * delete files alike), partition tuple rendered as JSON. Bounded driver
     * Avro walks; no data bytes touched. */
   def files(spark: SparkSession, root: String): DataFrame = {
-    import org.apache.avro.file.DataFileReader
-    import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
-    import org.apache.avro.mapred.FsInput
     import org.apache.spark.sql.Row
-    val conf = spark.sessionState.newHadoopConf()
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    val meta = currentMeta(fs, root)
-    val currentId = meta.path("current-snapshot-id").asLong(-1L)
-    val current = meta.path("snapshots").elements().asScala
-      .find(_.path("snapshot-id").asLong() == currentId).getOrElse(
-        throw IcebergReadException(s"`$root`: current snapshot $currentId not listed"))
-    def abs(rel: String): Path = {
-      val p = new Path(rel)
-      if (p.isAbsolute) p else new Path(rootPath, p)
-    }
-    val list = {
-      val r = new DataFileReader[GenericRecord](
-        new FsInput(abs(current.path("manifest-list").asText()), conf),
-        new GenericDatumReader[GenericRecord]())
-      try r.iterator().asScala.map { rec =>
-        (rec.get("manifest_path").toString,
-          Option(rec.get("sequence_number")).map(_.asInstanceOf[Long])
-            .getOrElse(current.path("sequence-number").asLong(0L)))
-      }.toSeq
-      finally r.close()
-    }
-    val rows = list.flatMap { case (mp, mseq) =>
-      val r = new DataFileReader[GenericRecord](new FsInput(abs(mp), conf),
-        new GenericDatumReader[GenericRecord]())
-      try r.iterator().asScala.flatMap { e =>
-        val status = e.get("status").asInstanceOf[Int]
-        if (status == 2) None
-        else {
-          val dfr = e.get("data_file").asInstanceOf[GenericRecord]
-          val content = Option(dfr.get("content")).map(_.asInstanceOf[Int]).getOrElse(0)
-          val entrySeq = Option(e.getSchema.getField("sequence_number"))
-            .flatMap(_ => Option(e.get("sequence_number")))
-            .map(_.asInstanceOf[Long]).getOrElse(mseq)
-          def fld(n: String): Option[AnyRef] =
-            Option(dfr.getSchema.getField(n)).flatMap(_ => Option(dfr.get(n)))
-          val partJson = fld("partition").collect { case pr: GenericRecord =>
-            pr.getSchema.getFields.asScala.map { f2 =>
-              val v = pr.get(f2.name()) match {
-                case null => "null"
-                case u: org.apache.avro.util.Utf8 =>
-                  "\"" + u.toString.replace("\"", "\\\"") + "\""
-                case s0: String => "\"" + s0.replace("\"", "\\\"") + "\""
-                case other => other.toString
-              }
-              "\"" + f2.name() + "\":" + v
-            }.mkString("{", ",", "}")
-          }.orNull
-          Some(Row(
-            content match { case 0 => "data"; case 1 => "position-deletes"; case 2 => "equality-deletes"; case n => s"content-$n" },
-            dfr.get("file_path").toString,
-            dfr.get("file_format").toString,
-            partJson,
-            Option(dfr.get("record_count")).map(_.asInstanceOf[Long]).getOrElse(0L),
-            fld("file_size_in_bytes").map(_.asInstanceOf[Long].longValue())
-              .map(java.lang.Long.valueOf).orNull,
-            entrySeq))
+    val snap = IcebergLog.current(spark, root)
+    val rows = snap.manifestsOf(snap.currentSnapshot).flatMap(snap.entries).filter(_.live).map { e =>
+      val partJson = e.partition.map(_ => e.tuple.map { case (name, v0) =>
+        val v = v0 match {
+          case null => "null"
+          case s0: String => "\"" + s0.replace("\"", "\\\"") + "\""
+          case other => other.toString
         }
-      }.toSeq
-      finally r.close()
+        "\"" + name + "\":" + v
+      }.mkString("{", ",", "}")).orNull
+      Row(
+        e.content match { case 0 => "data"; case 1 => "position-deletes"; case 2 => "equality-deletes"; case n => s"content-$n" },
+        e.file.get("file_path").toString,
+        e.format,
+        partJson,
+        e.recordCount,
+        IcebergLog.field(e.file, "file_size_in_bytes").map(_.asInstanceOf[Long].longValue())
+          .map(java.lang.Long.valueOf).orNull,
+        e.seq)
     }
     spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), StructType(Seq(
       StructField("content", StringType, nullable = false),
@@ -307,9 +179,7 @@ object IcebergNative {
     * tag/branch with its pinned snapshot. */
   def refs(spark: SparkSession, root: String): DataFrame = {
     import org.apache.spark.sql.Row
-    val fs = new Path(root).getFileSystem(spark.sessionState.newHadoopConf())
-    val meta = currentMeta(fs, root)
-    val rows = meta.path("refs").properties().asScala.toSeq.map { ent =>
+    val rows = IcebergLog.current(spark, root).refs.properties().asScala.toSeq.map { ent =>
       Row(ent.getKey, ent.getValue.path("type").asText("branch"),
         ent.getValue.path("snapshot-id").asLong())
     }
@@ -320,22 +190,11 @@ object IcebergNative {
   }
 
   def read(spark: SparkSession, root: String, options: Map[String, String]): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val rootPath = new Path(root)
-    val fs = rootPath.getFileSystem(conf)
-    val meta = currentMeta(fs, root)
+    val snap = IcebergLog.current(spark, root)
+    val (conf, fs, meta, rootPath) = (snap.conf, snap.fs, snap.meta, snap.root)
 
     // --- schema → Spark StructType (by schema-id; default = current) ---
-    def schemaNodeById(idOpt: Option[Int]): JsonNode =
-      if (meta.has("schemas")) {
-        val want = idOpt.getOrElse(meta.path("current-schema-id").asInt(0))
-        meta.path("schemas").elements().asScala
-          .find(_.path("schema-id").asInt(-1) == want)
-          .getOrElse(throw IcebergReadException(
-            s"schema-id $want not found in schemas" +
-              (if (idOpt.isEmpty) " (current-schema-id)" else " (named by the snapshot)")))
-      } else meta.path("schema")
-    val curSchemaNode: JsonNode = schemaNodeById(None)
+    val curSchemaNode: JsonNode = snap.currentSchema
     val curSchema = toStruct(curSchemaNode, timeAsLong = true)
 
     // --- snapshot → live parquet files (TIME TRAVEL: `snapshot_id` pins
@@ -371,9 +230,7 @@ object IcebergNative {
     val requested: Option[Long] = requestedId.orElse(requestedRef).orElse(requestedTs.map { target =>
       // snapshot-log is the table's append-only (timestamp-ms, snapshot-id)
       // history per the Iceberg spec; entries are already time-ordered
-      val history = meta.path("snapshot-log").elements().asScala
-        .map(e => (e.path("snapshot-id").asLong(), e.path("timestamp-ms").asLong()))
-        .toSeq
+      val history = snap.snapshotLog.map(_.swap)
       if (history.isEmpty) throw IcebergReadException(
         s"`$root`: as_of_timestamp needs a snapshot-log in the table metadata, " +
           "but it is empty or absent")
@@ -382,7 +239,7 @@ object IcebergNative {
         case e: IllegalArgumentException => throw IcebergReadException(s"`$root`: ${e.getMessage}")
       }
     })
-    val snapId = requested.getOrElse(meta.path("current-snapshot-id").asLong(-1L))
+    val snapId = requested.getOrElse(snap.currentSnapshotId)
     if (snapId == -1L) // an empty table has no snapshot yet (time cols
       // still surface as TimestampNTZ — same schema as a populated read)
       return spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -390,11 +247,10 @@ object IcebergNative {
           if (f.metadata.contains(TimeMarker))
             f.copy(dataType = TimestampNTZType, metadata = Metadata.empty)
           else f)))
-    val snapshot = meta.path("snapshots").elements().asScala
-      .find(_.path("snapshot-id").asLong() == snapId)
+    def knownIds = snap.snapshots.map(_.path("snapshot-id").asLong()).mkString(", ")
+    val snapshot = snap.snapshotById(snapId)
       .getOrElse {
-        val known = meta.path("snapshots").elements().asScala
-          .map(_.path("snapshot-id").asLong()).mkString(", ")
+        val known = knownIds
         throw IcebergReadException(
           if (requested.isDefined)
             s"snapshot_id $snapId not found in table metadata (known: $known) — expired?"
@@ -408,40 +264,19 @@ object IcebergNative {
     val schemaNode: JsonNode = {
       val snapSchemaId = Option(snapshot.path("schema-id"))
         .filter(n => !n.isMissingNode && !n.isNull).map(_.asInt())
-      if (requested.isDefined && snapSchemaId.isDefined)
-        schemaNodeById(snapSchemaId) else curSchemaNode
+      if (requested.isDefined && meta.has("schemas") && snapSchemaId.isDefined)
+        IcebergLog.schemaById(meta, snapSchemaId.get).getOrElse(throw IcebergReadException(
+          s"schema-id ${snapSchemaId.get} not found in schemas (named by the snapshot)"))
+      else curSchemaNode
     }
     val schema = if (schemaNode eq curSchemaNode) curSchema
       else toStruct(schemaNode, timeAsLong = true)
 
-    def resolve(p: String): Path = {
-      val raw = new Path(p)
-      if (raw.isAbsolute || p.contains(":/")) raw else new Path(rootPath, raw)
-    }
-    def avroRows(p: Path): Seq[GenericRecord] = {
-      val rdr = DataFileReader.openReader(new FsInput(p, conf), new GenericDatumReader[GenericRecord]())
-      try rdr.iterator().asScala.toList finally rdr.close()
-    }
-    // optional-field access: GenericRecord.get THROWS on fields the writer
-    // schema never had (older manifests predate sequence numbers etc.)
-    def opt(r: GenericRecord, field: String): Option[AnyRef] =
-      Option(r.getSchema.getField(field)).flatMap(_ => Option(r.get(field)))
-
     // --- walk manifests: data files + v2 row-level delete files, each with
     // its sequence number (entry-level, inherited from the manifest-list row
     // when null — the spec's inheritance rule) ---
-    final case class ManifestRef(path: Path, seq: Long)
-    def manifestRefsOf(snap: JsonNode): Seq[ManifestRef] =
-      if (snap.has("manifest-list")) {
-        avroRows(resolve(snap.path("manifest-list").asText())).map { r =>
-          val seq = opt(r, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)
-          ManifestRef(resolve(r.get("manifest_path").toString), seq)
-        }
-      } else if (snap.has("manifests"))
-        snap.path("manifests").elements().asScala
-          .map(m => ManifestRef(resolve(m.asText()), 0L)).toSeq
-      else throw IcebergReadException("snapshot carries neither manifest-list nor manifests")
-    val manifestRefs: Seq[ManifestRef] = manifestRefsOf(snapshot)
+    val manifestRefs: Seq[IcebergLog.Manifest] = snap.manifestsOf(snapshot)
+    def opt(r: GenericRecord, field: String): Option[AnyRef] = IcebergLog.field(r, field)
 
     // INCREMENTAL BOUND (`changes_since_snapshot`): manifest files are
     // IMMUTABLE, so one shared by the base and end snapshots cannot
@@ -453,28 +288,22 @@ object IcebergNative {
     // ONLY the end-only manifests (plus base-only ones for the
     // rewrite-subtraction further down) makes a follow micro-batch
     // O(changed manifests), not O(whole table) — the x08 scale bound.
-    val incrementalBase: Option[(JsonNode, Seq[ManifestRef])] =
+    val incrementalBase: Option[(JsonNode, Seq[IcebergLog.Manifest])] =
       options.get("changes_since_snapshot").map { v =>
         val baseId = try v.toLong catch {
           case _: NumberFormatException =>
             throw IcebergReadException(s"changes_since_snapshot `$v` is not a number")
         }
-        val baseSnap = meta.path("snapshots").elements().asScala
-          .find(_.path("snapshot-id").asLong() == baseId)
-          .getOrElse {
-            val known = meta.path("snapshots").elements().asScala
-              .map(_.path("snapshot-id").asLong()).mkString(", ")
-            throw IcebergReadException(
-              s"changes_since_snapshot $baseId not found in table metadata " +
-                s"(known: $known) — expired?")
-          }
-        (baseSnap, manifestRefsOf(baseSnap))
+        val baseSnap = snap.snapshotById(baseId).getOrElse(throw IcebergReadException(
+          s"changes_since_snapshot $baseId not found in table metadata " +
+            s"(known: $knownIds) — expired?"))
+        (baseSnap, snap.manifestsOf(baseSnap))
       }
-    val walkRefs: Seq[ManifestRef] = incrementalBase match {
+    val walkRefs: Seq[IcebergLog.Manifest] = incrementalBase match {
       case None => manifestRefs
       case Some((_, baseRefs)) =>
-        val basePathsSet = baseRefs.map(_.path).toSet
-        manifestRefs.filterNot(m => basePathsSet.contains(m.path))
+        val basePathsSet = baseRefs.map(_.file).toSet
+        manifestRefs.filterNot(m => basePathsSet.contains(m.file))
     }
 
     // partition specs (for delete-scope resolution): field name →
@@ -502,10 +331,7 @@ object IcebergNative {
       walk(schemaNode, Nil).toMap
     }
     val specFields: Map[String, (String, Option[String])] = {
-      val specs =
-        if (meta.has("partition-specs")) meta.path("partition-specs").elements().asScala.toSeq
-        else Seq(meta.path("partition-spec")).filter(!_.isMissingNode)
-      val pairs = specs.flatMap { sp =>
+      val pairs = snap.specs.flatMap { sp =>
         val fields = if (sp.has("fields")) sp.path("fields") else sp
         fields.elements().asScala.map { f =>
           f.path("name").asText() ->
@@ -643,60 +469,48 @@ object IcebergNative {
     val posDeletes = Seq.newBuilder[FileRef]
     val eqDeletes = Seq.newBuilder[(FileRef, Seq[Int], Seq[ScopeField])]
     val dvRefs = Seq.newBuilder[DvRef]
-    walkRefs.foreach { mref =>
-      avroRows(mref.path).foreach { entry =>
-        val status = entry.get("status").asInstanceOf[Int]
-        if (status != 2) { // 2 = DELETED entry: file left the snapshot
-          val df = entry.get("data_file").asInstanceOf[GenericRecord]
-          val content = opt(df, "content").map(_.asInstanceOf[Int]).getOrElse(0)
-          val fmt = df.get("file_format").toString
-          val isPuffinDv = content == 1 && fmt.equalsIgnoreCase("puffin")
-          if (!fmt.equalsIgnoreCase("parquet") && !isPuffinDv) throw IcebergReadException(
-            s"file format `$fmt` unsupported for content=$content " +
-              "(parquet data/delete files and puffin deletion vectors only)")
-          val seq = opt(entry, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(mref.seq)
-          val bytes = opt(df, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(0L)
-          val ref = FileRef(resolve(df.get("file_path").toString).toString, seq, bytes)
-          content match {
-            case 1 if isPuffinDv =>
-              // v3 deletion vector (spec "Position Delete Vectors"): the
-              // manifest carries the blob's offset/length so no puffin
-              // footer parse is needed; a DV applies to EXACTLY its
-              // referenced data file (no sequence comparison — it replaces
-              // that file's delete state). Missing fields reject loudly.
-              def need(f: String): AnyRef = opt(df, f).getOrElse(throw IcebergReadException(
-                s"puffin deletion vector entry lacks `$f` — cannot locate the " +
-                  "blob; use an iceberg connector jar"))
-              dvRefs += DvRef(ref.path,
-                need("content_offset").asInstanceOf[Long],
-                need("content_size_in_bytes").asInstanceOf[Long],
-                resolve(need("referenced_data_file").toString).toString,
-                opt(df, "record_count").map(_.asInstanceOf[Long]).getOrElse(0L))
-            case 0 =>
-              // keep the r102 partition tuple: identity values in it are
-              // authoritative (spec) — served as partition columns when the
-              // data files don't physically carry them (migrated tables)
-              val tuple = opt(df, "partition") match {
-                case Some(r: GenericRecord) =>
-                  r.getSchema.getFields.asScala
-                    .map(fld => fld.name() -> r.get(fld.pos())).toMap
-                case _ => Map.empty[String, AnyRef]
-              }
-              dataFiles += ref.copy(stats = statsOf(df), tuple = tuple,
-                firstRowId = opt(df, "first_row_id")
-                  .map(_.asInstanceOf[Number].longValue()))
-            case 1 => posDeletes += ref // scope unnecessary: keyed by exact file path
-            case 2 =>
-              val ids = opt(df, "equality_ids").orNull match {
-                case l: java.util.List[_] =>
-                  l.asScala.map(x => x.asInstanceOf[Number].intValue()).toSeq
-                case _ => throw IcebergReadException(
-                  "equality delete file lists no equality_ids")
-              }
-              eqDeletes += ((ref, ids, eqScope(df)))
-            case c => throw IcebergReadException(s"unknown data_file content=$c")
+    walkRefs.iterator.flatMap(snap.entries).filter(_.live).foreach { entry =>
+      val df = entry.file
+      val content = entry.content
+      val fmt = entry.format
+      val isPuffinDv = content == 1 && fmt.equalsIgnoreCase("puffin")
+      if (!fmt.equalsIgnoreCase("parquet") && !isPuffinDv) throw IcebergReadException(
+        s"file format `$fmt` unsupported for content=$content " +
+          "(parquet data/delete files and puffin deletion vectors only)")
+      val bytes = opt(df, "file_size_in_bytes").map(_.asInstanceOf[Long]).getOrElse(0L)
+      val ref = FileRef(entry.path, entry.seq, bytes)
+      content match {
+        case 1 if isPuffinDv =>
+          // v3 deletion vector (spec "Position Delete Vectors"): the
+          // manifest carries the blob's offset/length so no puffin
+          // footer parse is needed; a DV applies to EXACTLY its
+          // referenced data file (no sequence comparison — it replaces
+          // that file's delete state). Missing fields reject loudly.
+          def need(f: String): AnyRef = opt(df, f).getOrElse(throw IcebergReadException(
+            s"puffin deletion vector entry lacks `$f` — cannot locate the " +
+              "blob; use an iceberg connector jar"))
+          dvRefs += DvRef(ref.path,
+            need("content_offset").asInstanceOf[Long],
+            need("content_size_in_bytes").asInstanceOf[Long],
+            snap.resolve(need("referenced_data_file").toString).toString,
+            entry.recordCount)
+        case 0 =>
+          // keep the r102 partition tuple: identity values in it are
+          // authoritative (spec) — served as partition columns when the
+          // data files don't physically carry them (migrated tables)
+          dataFiles += ref.copy(stats = statsOf(df), tuple = entry.tuple,
+            firstRowId = opt(df, "first_row_id")
+              .map(_.asInstanceOf[Number].longValue()))
+        case 1 => posDeletes += ref // scope unnecessary: keyed by exact file path
+        case 2 =>
+          val ids = opt(df, "equality_ids").orNull match {
+            case l: java.util.List[_] =>
+              l.asScala.map(x => x.asInstanceOf[Number].intValue()).toSeq
+            case _ => throw IcebergReadException(
+              "equality delete file lists no equality_ids")
           }
-        }
+          eqDeletes += ((ref, ids, eqScope(df)))
+        case c => throw IcebergReadException(s"unknown data_file content=$c")
       }
     }
     val (dataAll, pos, eqs, dvs) =
@@ -716,19 +530,9 @@ object IcebergNative {
         // a new manifest as EXISTING entries, so subtract the files of the
         // BASE-ONLY manifests — zero extra reads in the steady append case
         // (base-only is empty when every base manifest carried forward).
-        val endPaths = manifestRefs.map(_.path).toSet
-        val baseOnly = baseRefs.filterNot(m => endPaths.contains(m.path))
-        val basePaths: Set[String] = baseOnly.flatMap { mref =>
-          avroRows(mref.path).flatMap { entry =>
-            if (entry.get("status").asInstanceOf[Int] == 2) None
-            else {
-              val df = entry.get("data_file").asInstanceOf[GenericRecord]
-              if (opt(df, "content").map(_.asInstanceOf[Int]).getOrElse(0) == 0)
-                Some(resolve(df.get("file_path").toString).toString)
-              else None
-            }
-          }
-        }.toSet
+        val endPaths = manifestRefs.map(_.file).toSet
+        val basePaths: Set[String] = baseRefs.filterNot(m => endPaths.contains(m.file))
+          .flatMap(snap.entries).filter(e => e.live && e.content == 0).map(_.path).toSet
         dataAll.filterNot(f => basePaths.contains(f.path))
     }
 

@@ -54,8 +54,9 @@ object PlanDump {
   /** Expression ids, plan and query-stage ids, the data, temp and checkout
     * directories, and the random or order-dependent parts of file names
     * (uuids, stamps, part numbers, fixture suffixes such as
-    * `delta_upsert_x19-7e498888`, truncated scan locations) and the
-    * names of JVM lambda classes vary run to run; plans do not. */
+    * `delta_upsert_x19-7e498888`, truncated scan locations, temp
+    * directory numbers), the names of JVM lambda classes, object identity
+    * hashes and commit-time literals vary run to run; plans do not. */
   def normalise(plan: String, sfDir: String): String = {
     val tmp = new java.io.File(System.getProperty("java.io.tmpdir")).getCanonicalPath
     val checkout = new java.io.File(".").getCanonicalPath
@@ -68,9 +69,13 @@ object PlanDump {
       .replaceAll("QueryStage \\d+", "QueryStage N")
       .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}[0-9a-f-]*", "<uuid>")
       .replaceAll("part-\\d+-", "part-N-")
+      .replaceAll("-[0-9a-f]{8}-part-N-", "-<stamp>-part-N-")
       .replaceAll("_graft_tmp_[a-z]*-?[0-9a-f]{8}", "_graft_tmp_<stamp>")
       .replaceAll("-[0-9a-f]{8}(?=[/,\\]\\s]|$)", "-<id>")
       .replaceAll("(Location: \\w+\\(\\d+ paths?\\))\\[[^\\s,\\]]*", "$1[<loc>")
       .replaceAll("Lambda\\$?\\d*/0x[0-9a-f]+@[0-9a-f]+", "Lambda<id>")
+      .replaceAll("(\\w)@[0-9a-f]{4,8}\\b", "$1@<obj>")
+      .replaceAll("-\\d{9,}(?=/)", "-<n>")
+      .replaceAll("\\d{4}-\\d\\d-\\d\\d \\d\\d:\\d\\d:\\d\\d(\\.\\d+)?", "<ts>")
   }
 }

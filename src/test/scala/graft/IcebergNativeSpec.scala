@@ -1037,4 +1037,49 @@ class IcebergNativeSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("metadata"))
   }
+
+  test("the one resolver: advisory hint, numeric fallback, unpadded names, no metadata") {
+    import graft.sources.IcebergLog
+    val root = tempDir("ice_resolve")
+    val md = new File(root, "metadata"); md.mkdirs()
+    def put(name: String, text: String): Unit =
+      java.nio.file.Files.writeString(new File(md, name).toPath, text)
+    def hint(text: Option[String]): Unit = text match {
+      case Some(t) => put("version-hint.text", t)
+      case None => new File(md, "version-hint.text").delete()
+    }
+    def resolved: (Long, Int) = {
+      val snap = IcebergLog.snapshot(spark, root.getPath)
+      (snap.version, snap.meta.path("marker").asInt(-1))
+    }
+    Seq(1, 2, 9, 10).foreach(v => put(s"v$v.metadata.json", s"""{"marker": $v}"""))
+    hint(Some("2"))
+    assert(resolved === ((2L, 2)))                      // a readable hint wins
+    // every unusable hint falls back to the numerically highest file
+    // (lexicographic order would pick v9 over v10)
+    for (h <- Seq(Some(""), Some("  \n"), Some("v2"), Some("abc"), Some("7"), None)) {
+      hint(h)
+      assert(resolved === ((10L, 10)), s"hint $h")
+    }
+    // an unpadded `N.metadata.json`, by hint and by listing
+    put("11.metadata.json", """{"marker": 11}""")
+    hint(Some("11"))
+    assert(resolved === ((11L, 11)))
+    hint(None)
+    assert(resolved === ((11L, 11)))
+    // an existing directory without metadata files is no table either
+    val empty = tempDir("ice_resolve_empty")
+    new File(empty, "metadata").mkdirs()
+    assert(!IcebergLog.snapshot(spark, empty.getPath).exists)
+    assert(intercept[IcebergNative.IcebergReadException] {
+      IcebergNative.read(spark, empty.getPath, Map.empty)
+    }.getMessage.contains("no *.metadata.json"))
+    // no metadata directory at all: loud, and named
+    val bare = tempDir("ice_resolve_bare")
+    val snap = IcebergLog.snapshot(spark, bare.getPath)
+    assert(!snap.exists && !snap.metaDirExists)
+    assert(intercept[IcebergNative.IcebergReadException] {
+      IcebergNative.read(spark, bare.getPath, Map.empty)
+    }.getMessage.contains("is not an Iceberg table: no metadata directory"))
+  }
 }

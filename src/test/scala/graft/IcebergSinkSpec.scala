@@ -310,6 +310,44 @@ class IcebergSinkSpec extends SparkSpec {
     assert(IcebergNative.snapshots(spark, root).count() === 1L)
   }
 
+  test("expireSnapshots publishes before it deletes: a lost commit deletes nothing") {
+    val root = tempDir("isink_expire_race").getPath
+    (1L to 3L).foreach { i =>
+      Sinks.copyTo(Seq((i, s"v$i")).toDF("id", "v"), root, "iceberg")
+    }
+    // a concurrent writer already published v4; the hint still names v3
+    val md = new java.io.File(root, "metadata")
+    java.nio.file.Files.copy(new java.io.File(md, "v3.metadata.json").toPath,
+      new java.io.File(md, "v4.metadata.json").toPath)
+    assert(java.nio.file.Files.readString(
+      new java.io.File(md, "version-hint.text").toPath).trim === "3")
+    val e = intercept[IcebergNative.IcebergReadException] {
+      IcebergSink.expireSnapshots(spark, root, retentionMs = 0L)
+    }
+    assert(e.getMessage.contains("another writer got there first"))
+    // the still-current metadata lists snapshot 1, and its files are intact
+    assert(IcebergNative.read(spark, root, Map("snapshot_id" -> "1"))
+      .as[(Long, String)].collect().toSeq === Seq((1L, "v1")))
+  }
+
+  test("iceberg_changes resolves like iceberg_scan: no hint and a blank hint") {
+    val root = tempDir("isink_changes_hint").getPath
+    Sinks.copyTo(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root, "iceberg")
+    IcebergSink.deleteWhere(spark, root, "id = 1")
+    def changelog = graft.sources.IcebergChanges.read(spark, root,
+      Map("start_snapshot" -> "1"))
+      .select("id", "v", "_change_type", "_commit_snapshot_id")
+      .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3)))
+      .toSet
+    val intact = changelog
+    assert(intact === Set((1L, "a", "delete", 2L)))
+    val hint = new java.io.File(root, "metadata/version-hint.text")
+    assert(hint.delete())
+    assert(changelog === intact)
+    java.nio.file.Files.writeString(hint.toPath, "")
+    assert(changelog === intact)
+  }
+
   test("sink-written bounds stats prune files at plan time (write→read skipping)") {
     import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec

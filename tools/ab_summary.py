@@ -25,11 +25,13 @@ with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
 # +1 when a higher value is better, -1 when a lower one is
 BETTER = {m["name"]: 1 if m["better"] == "higher" else -1 for m in BENCH["end_to_end"]}
 WORKLOADS = [w["name"] for w in BENCH["workloads"]]
-# the stream phases, the sink writes and the driver time around them
+# the stream phases, the sink writes, the table attaches and the driver
+# time around them
 LAYERS = [m["name"] for m in BENCH["per_layer"]
           if m["name"].startswith("streaming.") and m["name"].endswith("_ms.p50")] + [
     "catalog.write_ms.stream_delta.p50", "catalog.write_ms.stream_iceberg.p50",
     "catalog.driver_ms_per_write.p50", "catalog.jobs_per_write.p50",
+    "catalog.attach_ms.delta.p50", "catalog.attach_ms.iceberg.p50",
     "engine.driver_gap_ms.p50"]
 
 
