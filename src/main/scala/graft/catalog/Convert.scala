@@ -466,7 +466,6 @@ object Convert {
     }
 
     // ---- existing _delta_log: only our own conversions may re-sync ----
-    val logDir = new Path(rootPath, "_delta_log")
     val st = DeltaLog.snapshot(spark, path)
     if (st.exists) {
       val markers = st.commits.map { case (_, c) =>
@@ -487,54 +486,23 @@ object Convert {
 
     // ---- one commit: metaData on create, then set-diff adds/removes ----
     val creating = !st.exists
-    val version = st.version + 1
     val nowMs = System.currentTimeMillis()
-    def esc(s: String): String = mapper.writeValueAsString(s)
     val lines = Seq.newBuilder[String]
-    lines += s"""{"commitInfo":{"timestamp":$nowMs,"operation":"CONVERT","$IcebergSnapshotKey":$snapId}}"""
     if (creating) {
       lines += s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}"""
-      val m = mapper.createObjectNode()
-      m.put("id", java.util.UUID.randomUUID().toString)
-      val fmt = m.putObject("format")
-      fmt.put("provider", "parquet"); fmt.putObject("options")
-      m.put("schemaString", schema.json)
-      val pa = m.putArray("partitionColumns"); partCols.foreach(pa.add)
-      m.putObject("configuration")
-      m.put("createdTime", nowMs)
-      lines += s"""{"metaData":${mapper.writeValueAsString(m)}}"""
+      lines += DeltaSink.metaDataAction(None, schema, partCols, Map.empty, Some(nowMs))
     }
-    val prevLive: Set[String] = st.live.keySet.toSet
     val newLive: Set[String] = live.map(_.rel).toSet
-    (prevLive -- newLive).toSeq.sorted.foreach { p =>
-      lines += s"""{"remove":{"path":${esc(p)},"deletionTimestamp":$nowMs,"dataChange":true}}"""
+    st.live.toSeq.filter(p => !newLive.contains(p._1)).sortBy(_._1).foreach { case (p, e) =>
+      lines += DeltaSink.removeJson(p, e, nowMs, dataChange = true)
     }
-    live.filter(f => !prevLive.contains(f.rel)).foreach { f =>
-      val pv = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      val stats = DeltaSink.footerStats(spark, f.abs, schema, partCols)
-      val modTime = fs.getFileStatus(f.abs).getModificationTime
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pv)},""" +
-        s""""size":${f.size},"modificationTime":$modTime,"dataChange":true,""" +
-        s""""stats":${esc(stats)}}}"""
+    live.filter(f => !st.live.contains(f.rel)).foreach { f =>
+      lines += DeltaSink.addJson(f.rel, f.partitionValues, f.size,
+        fs.getFileStatus(f.abs).getModificationTime, dataChange = true,
+        Some(DeltaSink.footerStats(spark, f.abs, schema, partCols)))
     }
-    fs.mkdirs(logDir)
-    val target = new Path(logDir, f"$version%020d.json")
-    def lost = IcebergReadException(
-      s"convert_to_delta: `$path` Delta commit $version already exists — " +
-        "another writer got there first")
-    if (fs.exists(target)) throw lost
-    val staged = new Path(logDir,
-      s".${target.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(staged, false)
-    try out.write((lines.result().mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(staged, target)) {
-      fs.delete(staged, false)
-      throw lost
-    }
+    DeltaSink.commit(fs, st, path, "CONVERT", Nil, lines.result(),
+      info = Seq(IcebergSnapshotKey -> snapId))
     live.size.toLong
   }
 }

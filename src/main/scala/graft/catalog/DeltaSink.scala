@@ -26,8 +26,10 @@ import org.apache.spark.sql.types._
   * replay the native reader uses: version, schema, configuration, table
   * id, protocol, live files keyed by path, txn ledger and domains.
   *
-  * Single-writer contract: the commit fails loudly if the target version
-  * file already exists — optimistic-concurrency retry is a coordinator
+  * Every statement commits through [[commit]], the one writer of
+  * `_delta_log/<v>.json`. Single-writer contract: the commit fails loudly
+  * if the target version file already exists (`CommitStore.publish`,
+  * exclusive on `file:`) — optimistic-concurrency retry is a coordinator
   * feature this library intentionally leaves to a connector jar. */
 object DeltaSink {
   import graft.sources.DeltaLog
@@ -55,7 +57,6 @@ object DeltaSink {
     val spark = df.sparkSession
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
     val partCols: Seq[String] = options.get("partition_by").toSeq
       .flatMap(_.split(",").map(_.trim).filter(_.nonEmpty))
     partCols.find(c => !df.schema.fieldNames.contains(c)).foreach { c =>
@@ -139,13 +140,11 @@ object DeltaSink {
 
     // ---- one commit JSON, atomically placed at the next version ----
     val version = st.version + 1
-    def esc(s: String): String = mapper.writeValueAsString(s)
     val lines = Seq.newBuilder[String]
     val op = if (creating) "CREATE TABLE AS SELECT"
       else if (overwrite) "WRITE (overwrite)" else "WRITE (append)"
-    lines += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":${esc(op)}}}"""
     txn.foreach { case (appId, v) =>
-      lines += s"""{"txn":{"appId":${esc(appId)},"version":$v}}"""
+      lines += s"""{"txn":{"appId":${mapper.writeValueAsString(appId)},"version":$v}}"""
     }
     if (creating) {
       // rowTracking needs the table-features protocol (it depends on the
@@ -158,62 +157,30 @@ object DeltaSink {
           s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":7,"writerFeatures":[$feats]}}"""
         } else
           s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":${if (cdf) 4 else 2}}}""")
-      val conf = mapper.createObjectNode()
-      if (cdf) conf.put("delta.enableChangeDataFeed", "true")
-      if (rtOpt) {
-        // stable-id preservation writes under randomly-named hidden
-        // physical columns (the delta-spark arrangement) — fixed at
-        // creation so every later rewrite agrees on the names
-        val suffix = java.util.UUID.randomUUID().toString
-        conf.put("delta.enableRowTracking", "true")
-        conf.put(MatRowIdKey, s"_row-id-col-$suffix")
-        conf.put(MatRowVerKey, s"_row-commit-version-col-$suffix")
-      }
-      val meta = mapper.createObjectNode()
-      meta.put("id", java.util.UUID.randomUUID().toString)
-      val fmt = meta.putObject("format")
-      fmt.put("provider", "parquet"); fmt.putObject("options")
-      meta.put("schemaString", df.schema.json)
-      val pa = meta.putArray("partitionColumns"); partCols.foreach(pa.add)
-      meta.set[com.fasterxml.jackson.databind.JsonNode]("configuration", conf)
-      meta.put("createdTime", System.currentTimeMillis())
-      lines += s"""{"metaData":${mapper.writeValueAsString(meta)}}"""
+      // stable-id preservation writes under randomly-named hidden physical
+      // columns (the delta-spark arrangement) — fixed at creation so every
+      // later rewrite agrees on the names
+      val suffix = java.util.UUID.randomUUID().toString
+      val conf = Seq(
+        Option.when(cdf)("delta.enableChangeDataFeed" -> "true"),
+        Option.when(rtOpt)("delta.enableRowTracking" -> "true"),
+        Option.when(rtOpt)(MatRowIdKey -> s"_row-id-col-$suffix"),
+        Option.when(rtOpt)(MatRowVerKey -> s"_row-commit-version-col-$suffix")).flatten
+      lines += metaDataAction(None, df.schema, partCols,
+        scala.collection.immutable.ListMap(conf: _*), Some(System.currentTimeMillis()))
     }
     // an advanced identity high-water mark re-commits the metaData with the
     // updated field metadata (same table id)
     identitySchemaUpdate.foreach { ns =>
-      lines += s"""{"metaData":${metaDataJson(st.tableId, ns, tablePartCols, tableConf)}}"""
+      lines += metaDataAction(st.tableId, ns, tablePartCols, tableConf)
     }
     if (overwrite && !creating) live.foreach { case (p, e) =>
       lines += removeJson(p, e, System.currentTimeMillis(), dataChange = true)
     }
-    val alloc = new RowIdAllocator(st, version, forceActive = creating && rtOpt)
-    newFiles.foreach { f =>
-      val pv = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pv)},""" +
-        s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":true$rt,""" +
-        s""""stats":${esc(f.stats)}}}"""
-    }
+    val alloc = new RowIdAllocator(st, version, path, forceActive = creating && rtOpt)
+    newFiles.foreach(f => lines += alloc.add(f, dataChange = true))
     alloc.domainLine.foreach(lines += _)
-    fs.mkdirs(logDir)
-    val target = new Path(logDir, f"$version%020d.json")
-    if (fs.exists(target)) throw DeltaReadException(
-      s"`$path`: commit $version already exists — another writer got there " +
-        "first; this native writer does not do optimistic-concurrency retry")
-    val staged = new Path(logDir, s".${target.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(staged, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(staged, target)) {
-      fs.delete(staged, false)
-      throw DeltaReadException(
-        s"`$path`: commit $version already exists — another writer got there " +
-          "first; this native writer does not do optimistic-concurrency retry")
-    }
+    commit(fs, st, path, op, Nil, lines.result())
   }
 
   private final case class NewFile(rel: String, size: Long, modTime: Long,
@@ -327,24 +294,25 @@ object DeltaSink {
         "assign row ids on a rowTracking table")
   }
 
-  /** Per-commit fresh row-id allocation: `fields(n)` hands the next
-    * non-overlapping base range to an add action; `domainLine` emits the
-    * advanced high-water mark (one domainMetadata action per commit that
-    * allocated anything). Inactive (empty strings, no line) on tables
+  /** Per-commit fresh row-id allocation: `add` writes a new file's add
+    * action with the next non-overlapping base range; `domainLine` emits
+    * the advanced high-water mark (one domainMetadata action per commit
+    * that allocated anything). Inactive (no id fields, no line) on tables
     * whose protocol does not list rowTracking. */
   private[catalog] final class RowIdAllocator(st: Snapshot,
-      commitVersion: Long, forceActive: Boolean = false) {
+      commitVersion: Long, path: String, forceActive: Boolean = false) {
     val active: Boolean = forceActive || rowTrackingSupported(st)
     private var next: Long = rowIdHwm(st) + 1
     private var allocated = false
-    def fields(numRecords: Long): String =
-      if (!active) ""
-      else {
-        val base = next
-        next += math.max(numRecords, 0L)
-        allocated = true
-        s""","baseRowId":$base,"defaultRowCommitVersion":$commitVersion"""
-      }
+    def add(f: NewFile, dataChange: Boolean): String =
+      addJson(f.rel, f.partitionValues, f.size, f.modTime, dataChange, Some(f.stats),
+        if (!active) ""
+        else {
+          val base = next
+          next += math.max(statsNumRecords(f.stats, path), 0L)
+          allocated = true
+          s""","baseRowId":$base,"defaultRowCommitVersion":$commitVersion"""
+        })
     def domainLine: Option[String] =
       if (!active || !allocated) None
       else Some(s"""{"domainMetadata":{"domain":"$RowTrackingDomain",""" +
@@ -352,10 +320,42 @@ object DeltaSink {
           s"""{"rowIdHighWaterMark":${next - 1}}""")},"removed":false}}""")
   }
 
+  /** The add action of a file: `extra` (row-tracking fields) follows
+    * dataChange, then the stats and the deletion vector when given. */
+  private[catalog] def addJson(rel: String, partitionValues: Map[String, String],
+      size: Long, modTime: Long, dataChange: Boolean, stats: Option[String],
+      extra: String = "", dv: Option[graft.sources.DeletionVectors.Descriptor] = None): String = {
+    s"""{"add":{"path":${mapper.writeValueAsString(rel)},"partitionValues":${pvJson(partitionValues)},""" +
+      s""""size":$size,"modificationTime":$modTime,"dataChange":$dataChange$extra""" +
+      stats.map(s0 => s""","stats":${mapper.writeValueAsString(s0)}""").getOrElse("") +
+      dv.map(d => s""","deletionVector":${d.json}""").getOrElse("") + "}}"
+  }
+
+  /** A partitionValues object; a null value is a JSON null. */
+  private def pvJson(partitionValues: Map[String, String]): String = {
+    val pv = mapper.createObjectNode()
+    partitionValues.foreach { case (k, v) => if (v == null) pv.putNull(k) else pv.put(k, v) }
+    mapper.writeValueAsString(pv)
+  }
+
+  /** The file actions of a copy-on-write rewrite (UPDATE/DELETE, MERGE):
+    * a cdc action per change file, a remove per rewritten file, an add per
+    * new file and the row-id high-water mark. */
+  private def rewriteActions(st: Snapshot, path: String, cdcFiles: Seq[NewFile],
+      rewritten: Seq[String], newFiles: Seq[NewFile]): Seq[String] = {
+    val alloc = new RowIdAllocator(st, st.version + 1, path)
+    val now = System.currentTimeMillis()
+    cdcFiles.map { f =>
+      s"""{"cdc":{"path":${mapper.writeValueAsString(f.rel)},"partitionValues":${pvJson(f.partitionValues)},""" +
+        s""""size":${f.size},"dataChange":false}}"""
+    } ++ rewritten.map(rel => removeJson(rel, st.live(rel), now, dataChange = true)) ++
+      newFiles.map(alloc.add(_, dataChange = true)) ++ alloc.domainLine
+  }
+
   /** The remove action of a live file. It carries the file's deletion
     * vector, since readers reconcile on (path, DV id): a bare remove would
     * leave a DV-carrying add live. */
-  private def removeJson(rel: String, e: FileEntry, nowMs: Long,
+  private[catalog] def removeJson(rel: String, e: FileEntry, nowMs: Long,
       dataChange: Boolean): String =
     s"""{"remove":{"path":${mapper.writeValueAsString(rel)},"deletionTimestamp":$nowMs,"dataChange":$dataChange""" +
       e.dv.map(d => s""","deletionVector":${d.json}""").getOrElse("") + rtEchoFields(e) + "}}"
@@ -561,24 +561,6 @@ object DeltaSink {
     if (st.live.values.exists(_.dv.isDefined)) throw DeltaReadException(
       s"`$rootPath`: deletion-vector files — use a delta connector jar for $op")
 
-  /** RESTORE TABLE ... TO VERSION — Delta's RESTORE command: ONE new
-    * commit whose add/remove set flips the live-file set back to version
-    * `version`'s. Files removed since then RE-ADD with their original
-    * entries (partitionValues/size/stats intact, so file skipping keeps
-    * working); files added since then REMOVE — content equals the old
-    * version, history stays, every intermediate version keeps
-    * time-traveling, and on a CDF table the bare dataChange add/removes
-    * synthesize whole-file insert/delete rows in the feed (the protocol's
-    * reading of non-cdc commits). A version below a folded checkpoint or
-    * a schema changed since then rejects loudly (schema-evolving RESTORE
-    * is a connector-jar feature). Pure bounded driver log work — zero
-    * data bytes move. Returns (filesAdded, filesRemoved). */
-  /** ADD COLUMN schema evolution: one log-only commit carrying an updated
-    * metaData action (the protocol's evolution shape — data files are
-    * untouched). The new column is always nullable: pre-evolution files
-    * cannot carry it, and the reader serves it as NULL (pinned in
-    * DeltaNativeSpec). Appends after evolution must supply the full new
-    * schema. The table id is preserved across the metaData rewrite. */
   /** SHALLOW CLONE — a ZERO-COPY snapshot of a table (the delta-spark
     * `CREATE TABLE ... SHALLOW CLONE` shape): the clone's commit 0 carries
     * the source's protocol/schema/configuration and one `add` per live
@@ -611,36 +593,30 @@ object DeltaSink {
       s"`$dstPath`: already a Delta table — clone needs a fresh destination")
     val schemaJson = st.schemaJson.getOrElse(
       throw DeltaReadException(s"`$srcPath`: no metaData action"))
-    lazy val esc = (s: String) => mapper.writeValueAsString(s)
     def absUri(rel: String): String = {
       val p = new Path(java.net.URLDecoder.decode(rel, "UTF-8"))
       val abs = if (p.isAbsolute) p else new Path(srcRoot, p)
       fs.makeQualified(abs).toUri.toString
     }
     val adds = st.live.toSeq.map { case (rel, e) =>
-      val pv = e.partitionValues.map { case (k, v) =>
-        s"${esc(k)}:${if (v == null) "null" else esc(v)}"
-      }.mkString("{", ",", "}")
-      s"""{"add":{"path":${esc(absUri(rel))},"partitionValues":$pv,""" +
-        s""""size":${e.size},"modificationTime":${e.modificationTime},"dataChange":true${rtEchoFields(e)}""" +
-        e.stats.map(s0 => s""","stats":${esc(s0)}""").getOrElse("") + "}}"
+      addJson(absUri(rel), e.partitionValues, e.size, e.modificationTime,
+        dataChange = true, e.stats, rtEchoFields(e))
     }
     val protoJson = st.protocol.map(_.json).getOrElse(
       """{"protocol":{"minReaderVersion":1,"minWriterVersion":2}}""")
-    fs.mkdirs(dstLog)
-    val metaData = metaDataJson(None,
+    val metaData = metaDataAction(None,
       DataType.fromJson(schemaJson).asInstanceOf[StructType], st.partCols, st.conf)
     // live domains ride along — dropping delta.rowTracking's high-water
     // mark would let the clone's first append allocate row-id ranges that
     // overlap the cloned files' existing baseRowIds
     val domainLines = st.domains.toSeq.map { case (d, c) =>
-      s"""{"domainMetadata":{"domain":${esc(d)},"configuration":${esc(c)},"removed":false}}"""
+      s"""{"domainMetadata":{"domain":${mapper.writeValueAsString(d)},""" +
+        s""""configuration":${mapper.writeValueAsString(c)},"removed":false}}"""
     }
-    val lines = Seq(
-      s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"CLONE","operationParameters":{"source":${esc(srcPath)}}}}""",
-      protoJson,
-      s"""{"metaData":$metaData}""") ++ domainLines ++ adds
-    writeCommit(fs, dstLog, 0L, withIct(st, lines), dstPath)
+    // the clone's log starts at version 0, under the source's configuration
+    // (and so its in-commit-timestamp floor)
+    commit(fs, st.copy(version = -1L), dstPath, "CLONE", Seq("source" -> srcPath),
+      Seq(protoJson, metaData) ++ domainLines ++ adds)
     st.live.size.toLong
   }
 
@@ -660,6 +636,7 @@ object DeltaSink {
     val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
+    writerGates(st, path, removesData = false, "ADD CONSTRAINT")
     val key = s"delta.constraints.${name.toLowerCase}"
     if (st.conf.contains(key)) throw DeltaReadException(
       s"ALTER TABLE: constraint `$name` already exists on `$path`")
@@ -680,15 +657,10 @@ object DeltaSink {
       else if (p.minWriter < 3) Some(p.copy(minWriter = 3).json)
       else None
     }
-    val logDir = new Path(rootPath, "_delta_log")
-    lazy val esc = (s: String) => mapper.writeValueAsString(s)
     val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
-    val lines = Seq(
-      s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"ADD CONSTRAINT","operationParameters":{"name":${esc(name)},"expr":${esc(exprSql)}}}}""") ++
-      protoLine ++
-      Seq(s"""{"metaData":${metaDataJson(st.tableId, schema, st.partCols,
-        st.conf + (key -> exprSql))}}""")
-    writeCommit(fs, logDir, st.version + 1, withIct(st, lines), path)
+    commit(fs, st, path, "ADD CONSTRAINT", Seq("name" -> name, "expr" -> exprSql),
+      protoLine.toSeq :+ metaDataAction(st.tableId, schema, st.partCols,
+        st.conf + (key -> exprSql)))
   }
 
   /** DROP CONSTRAINT <name> — removes the configuration key (the protocol
@@ -700,19 +672,15 @@ object DeltaSink {
     val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
+    writerGates(st, path, removesData = false, "DROP CONSTRAINT")
     val key = s"delta.constraints.${name.toLowerCase}"
     if (!st.conf.contains(key)) throw DeltaReadException(
       s"ALTER TABLE: no constraint `$name` on `$path`; known: " +
         st.conf.keys.filter(_.startsWith("delta.constraints."))
           .map(_.stripPrefix("delta.constraints.")).toSeq.sorted.mkString(", "))
-    val logDir = new Path(rootPath, "_delta_log")
-    lazy val esc = (s: String) => mapper.writeValueAsString(s)
     val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
-    val lines = Seq(
-      s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"DROP CONSTRAINT","operationParameters":{"name":${esc(name)}}}}""",
-      s"""{"metaData":${metaDataJson(st.tableId, schema, st.partCols,
-        st.conf - key)}}""")
-    writeCommit(fs, logDir, st.version + 1, withIct(st, lines), path)
+    commit(fs, st, path, "DROP CONSTRAINT", Seq("name" -> name),
+      Seq(metaDataAction(st.tableId, schema, st.partCols, st.conf - key)))
   }
 
   /** SET TBLPROPERTIES — `delta.appendOnly` (the writer-v2 gate this
@@ -743,15 +711,18 @@ object DeltaSink {
     val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
-    val logDir = new Path(rootPath, "_delta_log")
+    writerGates(st, path, removesData = false, "SET TBLPROPERTIES")
     val schema = DataType.fromJson(st.schemaJson.get).asInstanceOf[StructType]
-    val lines = Seq(
-      s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"SET TBLPROPERTIES"}}""",
-      s"""{"metaData":${metaDataJson(st.tableId, schema, st.partCols,
-        st.conf ++ props)}}""")
-    writeCommit(fs, logDir, st.version + 1, withIct(st, lines), path)
+    commit(fs, st, path, "SET TBLPROPERTIES", Nil,
+      Seq(metaDataAction(st.tableId, schema, st.partCols, st.conf ++ props)))
   }
 
+  /** ADD COLUMN schema evolution: one log-only commit carrying an updated
+    * metaData action (the protocol's evolution shape — data files are
+    * untouched). The new column is always nullable: pre-evolution files
+    * cannot carry it, and the reader serves it as NULL (pinned in
+    * DeltaNativeSpec). Appends after evolution must supply the full new
+    * schema. The table id is preserved across the metaData rewrite. */
   def addColumn(spark: org.apache.spark.sql.SparkSession, path: String,
       colName: String, typeDdl: String): Unit = {
     val rootPath = new Path(path)
@@ -759,6 +730,7 @@ object DeltaSink {
     val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
+    writerGates(st, path, removesData = false, "ADD COLUMNS")
     val schema = DataType.fromJson(st.schemaJson.getOrElse(throw DeltaReadException(
       s"ALTER TABLE: `$path` log declares no schema"))).asInstanceOf[StructType]
     if (schema.fieldNames.exists(_.equalsIgnoreCase(colName))) throw DeltaReadException(
@@ -788,12 +760,8 @@ object DeltaSink {
       if (!mapped) st.conf
       else st.conf + ("delta.columnMapping.maxColumnId" ->
         newField.metadata.getLong("delta.columnMapping.id").toString)
-    val logDir = new Path(rootPath, "_delta_log")
-    lazy val esc = (s: String) => mapper.writeValueAsString(s)
-    val lines = Seq(
-      s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"ADD COLUMNS","operationParameters":{"column":${esc(colName)},"type":${esc(typeDdl)}}}}""",
-      s"""{"metaData":${metaDataJson(st.tableId, newSchema, st.partCols, newConf)}}""")
-    writeCommit(fs, logDir, st.version + 1, withIct(st, lines), path)
+    commit(fs, st, path, "ADD COLUMNS", Seq("column" -> colName, "type" -> typeDdl),
+      Seq(metaDataAction(st.tableId, newSchema, st.partCols, newConf)))
   }
 
   /** DROP COLUMN — metadata-only on Delta via COLUMN MAPPING: the first
@@ -822,6 +790,7 @@ object DeltaSink {
     val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(
       s"ALTER TABLE: `$path` has no _delta_log — not a Delta table")
+    writerGates(st, path, removesData = false, op)
     val schema = DataType.fromJson(st.schemaJson.getOrElse(throw DeltaReadException(
       s"ALTER TABLE: `$path` log declares no schema"))).asInstanceOf[StructType]
     if (!schema.fieldNames.contains(colName)) throw DeltaReadException(
@@ -867,28 +836,24 @@ object DeltaSink {
     val newConf = st.conf +
       ("delta.columnMapping.mode" -> "name") +
       ("delta.columnMapping.maxColumnId" -> maxId.toString)
-    val logDir = new Path(rootPath, "_delta_log")
-    lazy val esc = (s: String) => mapper.writeValueAsString(s)
-    val lines = Seq.newBuilder[String]
-    val paramJson = renameTo match {
-      case Some(n) => s""""oldColumn":${esc(colName)},"newColumn":${esc(n)}"""
-      case None => s""""column":${esc(colName)}"""
+    val params = renameTo match {
+      case Some(n) => Seq("oldColumn" -> colName, "newColumn" -> n)
+      case None => Seq("column" -> colName)
     }
-    lines += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":${esc(op)},"operationParameters":{$paramJson}}}"""
     // column mapping must be declared in the protocol before a compliant
     // reader honors physicalName resolution (legacy reader 2 / writer 5,
     // or the columnMapping feature on a table-features protocol)
     val curProto = st.protocol.getOrElse(Protocol(1, 2, Set.empty, Set.empty))
-    if (!curProto.supportsColumnMapping) lines += curProto.withColumnMapping.json
-    lines += s"""{"metaData":${metaDataJson(st.tableId,
-      StructType(newFields), st.partCols, newConf)}}"""
-    writeCommit(fs, logDir, st.version + 1, withIct(st, lines.result()), path)
+    commit(fs, st, path, op, params,
+      Option.when(!curProto.supportsColumnMapping)(curProto.withColumnMapping.json).toSeq :+
+        metaDataAction(st.tableId, StructType(newFields), st.partCols, newConf))
   }
 
-  /** metaData action JSON carrying the table's id (a new table, `None`,
+  /** The metaData action carrying the table's id (a new table, `None`,
     * gets a fresh one). */
-  private def metaDataJson(tableId: Option[String], newSchema: StructType,
-      partCols: Seq[String], conf: Map[String, String]): String = {
+  private[catalog] def metaDataAction(tableId: Option[String], newSchema: StructType,
+      partCols: Seq[String], conf: Map[String, String],
+      createdTime: Option[Long] = None): String = {
     val meta = mapper.createObjectNode()
     meta.put("id", tableId.getOrElse(java.util.UUID.randomUUID().toString))
     val fmtN = meta.putObject("format")
@@ -898,31 +863,49 @@ object DeltaSink {
     val confN = mapper.createObjectNode()
     conf.foreach { case (k, v) => confN.put(k, v) }
     meta.set[com.fasterxml.jackson.databind.JsonNode]("configuration", confN)
-    mapper.writeValueAsString(meta)
+    createdTime.foreach(meta.put("createdTime", _))
+    s"""{"metaData":${mapper.writeValueAsString(meta)}}"""
   }
 
-  /** PROTOCOL.md "In-Commit Timestamps": when the table enables/demands
-    * inCommitTimestamp, every commit's commitInfo action must come FIRST in
-    * the commit and carry an `inCommitTimestamp` strictly greater than the
-    * previous commit's — readers order history by it instead of file
-    * mtimes, which object stores can rewrite. Returns the lines reordered
-    * and stamped, or unchanged when the feature is off. */
-  private[catalog] def withIct(st: Snapshot, lines: Seq[String]): Seq[String] = {
-    val on = st.conf.get("delta.enableInCommitTimestamps").exists(_.toBoolean) ||
-      st.protocol.exists(p => demandedWriterFeatures(p).contains("inCommitTimestamp"))
-    if (!on) lines
-    else {
+  /** The one Delta commit writer: every statement that commits calls it.
+    * It builds the commit's one commitInfo (timestamp, `op`, `params` as
+    * operationParameters when there are any, then the `info` fields) and
+    * publishes it with `actions` as version `st.version + 1` through
+    * [[graft.sources.CommitStore.publish]]; a version that already exists
+    * raises the one lost-commit error, and nothing is published.
+    *
+    * PROTOCOL.md "In-Commit Timestamps": when the table enables or demands
+    * inCommitTimestamp, the commitInfo (always the first action here)
+    * carries an `inCommitTimestamp` strictly greater than the previous
+    * commit's — readers order history by it instead of file mtimes, which
+    * object stores can rewrite. */
+  private[catalog] def commit(fs: org.apache.hadoop.fs.FileSystem, st: Snapshot,
+      path: String, op: String, params: Seq[(String, Any)], actions: Seq[String],
+      info: Seq[(String, Any)] = Nil): Unit = {
+    import com.fasterxml.jackson.databind.JsonNode
+    val now = System.currentTimeMillis()
+    val ci = mapper.createObjectNode()
+    if (st.conf.get("delta.enableInCommitTimestamps").exists(_.toBoolean) ||
+        st.protocol.exists(p => demandedWriterFeatures(p).contains("inCommitTimestamp"))) {
       val floor = (st.lastIct.toSeq ++
         st.conf.get("delta.inCommitTimestampEnablementTimestamp")
           .flatMap(v => scala.util.Try(v.toLong).toOption)).maxOption.getOrElse(-1L)
-      val ict = math.max(System.currentTimeMillis(), floor + 1)
-      val (ci, rest) = lines.partition(_.startsWith("{\"commitInfo\":"))
-      val stamped = ci.headOption
-        .map(_.replaceFirst("""\{"commitInfo":\{""",
-          s"""{"commitInfo":{"inCommitTimestamp":$ict,"""))
-        .getOrElse(s"""{"commitInfo":{"inCommitTimestamp":$ict,"timestamp":$ict,"operation":"WRITE"}}""")
-      (stamped +: ci.drop(1)) ++ rest
+      ci.put("inCommitTimestamp", math.max(now, floor + 1))
     }
+    ci.put("timestamp", now)
+    ci.put("operation", op)
+    if (params.nonEmpty) {
+      val pn = ci.putObject("operationParameters")
+      params.foreach { case (k, v) => pn.set[JsonNode](k, mapper.valueToTree[JsonNode](v)) }
+    }
+    info.foreach { case (k, v) => ci.set[JsonNode](k, mapper.valueToTree[JsonNode](v)) }
+    val version = st.version + 1
+    val body = (s"""{"commitInfo":${mapper.writeValueAsString(ci)}}""" +: actions)
+      .mkString("", "\n", "\n")
+    graft.sources.CommitStore.publish(fs,
+      new Path(new Path(path), f"_delta_log/$version%020d.json"), body.getBytes("UTF-8"))(
+      DeltaReadException(s"`$path`: commit $version already exists — another writer " +
+        "got there first; this native writer does not do optimistic-concurrency retry"))
   }
 
   /** DESCRIBE DETAIL — the delta-spark one-row table summary: format, id,
@@ -952,26 +935,22 @@ object DeltaSink {
         StructField("minWriterVersion", IntegerType, nullable = false))))
   }
 
-  /** Stage + atomically rename one commit JSON at `version`. */
-  private def writeCommit(fs: org.apache.hadoop.fs.FileSystem, logDir: Path,
-      version: Long, lines: Seq[String], path: String): Unit = {
-    val target = new Path(logDir, f"$version%020d.json")
-    val staged = new Path(logDir,
-      s".${target.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(staged, false)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8")) finally out.close()
-    if (!fs.rename(staged, target)) {
-      fs.delete(staged, false)
-      throw DeltaReadException(
-        s"`$path`: commit $version already exists — another writer got there first")
-    }
-  }
-
+  /** RESTORE TABLE ... TO VERSION — Delta's RESTORE command: ONE new
+    * commit whose add/remove set flips the live-file set back to version
+    * `version`'s. Files removed since then RE-ADD with their original
+    * entries (partitionValues/size/stats intact, so file skipping keeps
+    * working); files added since then REMOVE — content equals the old
+    * version, history stays, every intermediate version keeps
+    * time-traveling, and on a CDF table the bare dataChange add/removes
+    * synthesize whole-file insert/delete rows in the feed (the protocol's
+    * reading of non-cdc commits). A version below a folded checkpoint or
+    * a schema changed since then rejects loudly (schema-evolving RESTORE
+    * is a connector-jar feature). Pure bounded driver log work — zero
+    * data bytes move. Returns (filesAdded, filesRemoved). */
   def restore(spark: org.apache.spark.sql.SparkSession, path: String,
       version: Long): (Int, Int) = {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
     val cur = DeltaLog.snapshot(spark, path)
     requireNoDv(cur, rootPath, "RESTORE")
     if (!cur.exists) throw DeltaReadException(s"`$path`: not a Delta table")
@@ -991,31 +970,16 @@ object DeltaSink {
     val removes = cur.live.keys.filterNot(old.live.contains).toSeq
     val adds = old.live.toSeq.filterNot { case (p, _) => cur.live.contains(p) }
     if (removes.isEmpty && adds.isEmpty) return (0, 0)
-    def esc(s: String): String = mapper.writeValueAsString(s)
     val now = System.currentTimeMillis()
-    val lines = Seq.newBuilder[String]
-    lines += s"""{"commitInfo":{"timestamp":$now,"operation":"RESTORE","operationParameters":{"version":$version}}}"""
-    removes.foreach { rel =>
-      lines += removeJson(rel, cur.live(rel), now, dataChange = true)
-    }
-    adds.foreach { case (rel, e) =>
-      val pvNode = mapper.createObjectNode()
-      e.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
-      }
-      val statsPart = e.stats.map(s0 => s""","stats":${esc(s0)}""").getOrElse("")
-      // re-adds keep their ORIGINAL row-id base/default (content identical,
-      // rows never moved); the hwm never rewinds, so no domain update
-      lines += s"""{"add":{"path":${esc(rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},""" +
-        s""""size":${e.size},"modificationTime":${e.modificationTime},"dataChange":true${rtEchoFields(e)}$statsPart}}"""
-    }
-    val newVersion = cur.version + 1
-    val target = new Path(logDir, f"$newVersion%020d.json")
-    if (fs.exists(target)) throw DeltaReadException(
-      s"`$path`: commit $newVersion already exists — another writer got there first")
-    val out = fs.create(target, false)
-    try out.write((withIct(cur, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    commit(fs, cur, path, "RESTORE", Seq("version" -> version),
+      removes.map(rel => removeJson(rel, cur.live(rel), now, dataChange = true)) ++
+        // re-adds keep their ORIGINAL row-id base/default (content
+        // identical, rows never moved); the hwm never rewinds, so no
+        // domain update
+        adds.map { case (rel, e) =>
+          addJson(rel, e.partitionValues, e.size, e.modificationTime, dataChange = true,
+            e.stats, rtEchoFields(e))
+        })
     (adds.size, removes.size)
   }
 
@@ -1428,7 +1392,6 @@ object DeltaSink {
     import graft.sources.DeletionVectors
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
     val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
     writerGates(st, path, removesData = true,
@@ -1610,11 +1573,8 @@ object DeltaSink {
       }
     if (descriptors.isEmpty) return 0L
 
-    def esc(s: String): String = mapper.writeValueAsString(s)
     val nowMs = System.currentTimeMillis()
-    val opName = if (isUpdate) "UPDATE" else "DELETE"
     val lines = Seq.newBuilder[String]
-    lines += s"""{"commitInfo":{"timestamp":$nowMs,"operation":"$opName","operationParameters":{"predicate":${esc(predicateSql)},"strategy":"deletion-vector"}}}"""
     // a DV commit against a protocol that never declared the feature is
     // invisible to compliant external readers (they may ignore the
     // descriptor and resurrect deleted rows) — the first DV commit
@@ -1622,16 +1582,11 @@ object DeltaSink {
     // legacy-implied features carried over per PROTOCOL.md
     val curProto = st.protocol.getOrElse(Protocol(1, 2, Set.empty, Set.empty))
     if (!curProto.supportsDv) lines += curProto.withDeletionVectors.json
-    val version = st.version + 1
-    val alloc = new RowIdAllocator(st, version)
+    val alloc = new RowIdAllocator(st, st.version + 1, path)
     descriptors.foreach { case (abs, storage, payload, size, card) =>
       val rel = relByAbs.getOrElse(norm(abs),
         throw DeltaReadException(s"`$path`: scanned file $abs is not in the live set"))
       val e = st.live(rel)
-      val pv = mapper.createObjectNode()
-      e.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
       val dv = DeletionVectors.Descriptor(storage, payload,
         if (storage == "u") Some(1) else None, size, card)
       // stats keep the PHYSICAL numRecords (per protocol) but must flag
@@ -1645,33 +1600,13 @@ object DeltaSink {
       // the re-add keeps the file's ORIGINAL base/default — rows never
       // moved, so their ids still derive from the original range
       lines += removeJson(rel, e, nowMs, dataChange = true)
-      lines += s"""{"add":{"path":${esc(rel)},"partitionValues":${mapper.writeValueAsString(pv)},""" +
-        s""""size":${e.size},"modificationTime":${e.modificationTime},"dataChange":true${rtEchoFields(e)},""" +
-        loosened.map(s0 => s""""stats":${esc(s0)},""").getOrElse("") +
-        s""""deletionVector":${dv.json}}}"""
+      lines += addJson(rel, e.partitionValues, e.size, e.modificationTime,
+        dataChange = true, loosened, rtEchoFields(e), Some(dv))
     }
-    imageFiles.foreach { f =>
-      val pv = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pv)},""" +
-        s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":true$rt,""" +
-        s""""stats":${esc(f.stats)}}}"""
-    }
+    imageFiles.foreach(f => lines += alloc.add(f, dataChange = true))
     alloc.domainLine.foreach(lines += _)
-    val target = new Path(logDir, f"$version%020d.json")
-    val staged = new Path(logDir,
-      s".${target.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(staged, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(staged, target)) {
-      fs.delete(staged, false)
-      throw DeltaReadException(
-        s"`$path`: commit $version already exists — another writer got there first")
-    }
+    commit(fs, st, path, if (isUpdate) "UPDATE" else "DELETE",
+      Seq("predicate" -> predicateSql, "strategy" -> "deletion-vector"), lines.result())
     // merged descriptors carry old ∪ new cardinality — report only the
     // rows THIS statement killed
     val carriedOld: Long = existingDvs.collect {
@@ -1695,9 +1630,10 @@ object DeltaSink {
     import graft.sources.DeletionVectors
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
     val st = DeltaLog.snapshot(spark, path)
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
+    // dataChange=false rewrite, like OPTIMIZE: legal under appendOnly
+    writerGates(st, path, removesData = false, "REORG PURGE")
     val cmMode = st.columnMappingMode
     if (cmMode != "none" && cmMode != "name")
       throw DeltaReadException(
@@ -1762,40 +1698,14 @@ object DeltaSink {
           .drop("__rt_key", "__rt_idx", "__rt_base", "__rt_def")
     }
     val newFiles = writeDataFiles(survivors, rootPath, partColsT.map(physKey), Map.empty)
-    def esc(s: String): String = mapper.writeValueAsString(s)
     val nowMs = System.currentTimeMillis()
-    val lines = Seq.newBuilder[String]
-    lines += s"""{"commitInfo":{"timestamp":$nowMs,"operation":"REORG","operationParameters":{"applyPurge":"true"}}}"""
-    dvFiles.foreach { case (rel, e) =>
+    val alloc = new RowIdAllocator(st, st.version + 1, path)
+    commit(fs, st, path, "REORG", Seq("applyPurge" -> "true"),
       // the remove must carry the removed version's DV: the protocol
       // reconciles on (path, dv-id), so a bare remove would leave the
       // DV'd add live and DUPLICATE the purged rows
-      lines += removeJson(rel, e, nowMs, dataChange = false)
-    }
-    val version = st.version + 1
-    val alloc = new RowIdAllocator(st, version)
-    newFiles.foreach { f =>
-      val pv = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pv.putNull(k) else pv.put(k, v)
-      }
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pv)},""" +
-        s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":false$rt,""" +
-        s""""stats":${esc(f.stats)}}}"""
-    }
-    alloc.domainLine.foreach(lines += _)
-    val target = new Path(logDir, f"$version%020d.json")
-    val staged = new Path(logDir,
-      s".${target.getName}.${java.util.UUID.randomUUID().toString.take(8)}.tmp")
-    val out = fs.create(staged, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
-    if (!fs.rename(staged, target)) {
-      fs.delete(staged, false)
-      throw DeltaReadException(
-        s"`$path`: commit $version already exists — another writer got there first")
-    }
+      dvFiles.map { case (rel, e) => removeJson(rel, e, nowMs, dataChange = false) } ++
+        newFiles.map(alloc.add(_, dataChange = false)) ++ alloc.domainLine)
     (dvFiles.size, dvFiles.map(_._2.dv.get.cardinality).sum)
   }
 
@@ -1911,7 +1821,6 @@ object DeltaSink {
     import org.apache.spark.sql.functions.{col, expr, lit}
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
     val st = DeltaLog.snapshot(spark, path)
     requireNoDv(st, rootPath, if (setExprs.nonEmpty) "UPDATE" else "DELETE")
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
@@ -1975,14 +1884,10 @@ object DeltaSink {
           }
         }
         if (counts.forall(_.isDefined)) {
-          def esc0(x: String): String = mapper.writeValueAsString(x)
           val now = System.currentTimeMillis()
-          val lines = Seq.newBuilder[String]
-          lines += s"""{"commitInfo":{"timestamp":$now,"operation":"DELETE","operationParameters":{"predicate":${esc0(predicateSql)},"strategy":"metadata-only-partition-drop"}}}"""
-          matched.foreach { rel =>
-            lines += removeJson(rel, st.live(rel), now, dataChange = true)
-          }
-          writeCommit(fs, logDir, st.version + 1, withIct(st, lines.result()), path)
+          commit(fs, st, path, "DELETE",
+            Seq("predicate" -> predicateSql, "strategy" -> "metadata-only-partition-drop"),
+            matched.map(rel => removeJson(rel, st.live(rel), now, dataChange = true)))
           return counts.flatten.sum
         }
       }
@@ -2062,39 +1967,8 @@ object DeltaSink {
       else writeDataFiles(toPhys(cdcFrame), rootPath, partColsT.map(physKey),
         Map.empty, subDir = Some("_change_data"))
 
-    def esc(s: String): String = mapper.writeValueAsString(s)
-    val opName = if (isUpdate) "UPDATE" else "DELETE"
-    val lines = Seq.newBuilder[String]
-    lines += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"$opName","operationParameters":{"predicate":${esc(predicateSql)}}}}"""
-    cdcFiles.foreach { f =>
-      val pvNode = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
-      }
-      lines += s"""{"cdc":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},"size":${f.size},"dataChange":false}}"""
-    }
-    val version = st.version + 1
-    val alloc = new RowIdAllocator(st, version)
-    affectedRel.foreach { rel =>
-      lines += removeJson(rel, st.live(rel), System.currentTimeMillis(), dataChange = true)
-    }
-    newFiles.foreach { f =>
-      val pvNode = mapper.createObjectNode()
-      f.partitionValues.foreach { case (k, v) =>
-        if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
-      }
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},""" +
-        s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":true$rt,""" +
-        s""""stats":${esc(f.stats)}}}"""
-    }
-    alloc.domainLine.foreach(lines += _)
-    val target = new Path(logDir, f"$version%020d.json")
-    if (fs.exists(target)) throw DeltaReadException(
-      s"`$path`: commit $version already exists — another writer got there first")
-    val out = fs.create(target, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    commit(fs, st, path, if (isUpdate) "UPDATE" else "DELETE",
+      Seq("predicate" -> predicateSql), rewriteActions(st, path, cdcFiles, affectedRel, newFiles))
     changedCount
   }
 
@@ -2116,7 +1990,6 @@ object DeltaSink {
     import org.apache.spark.sql.functions.{coalesce, col, lit, when}
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
     val st = DeltaLog.snapshot(spark, path)
     requireNoDv(st, rootPath, "MERGE")
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
@@ -2312,38 +2185,8 @@ object DeltaSink {
         val newFiles = written.take(dataThunks.length).flatten
         val cdcFiles = written.drop(dataThunks.length).flatten
 
-        def esc(s: String): String = mapper.writeValueAsString(s)
-        val lines = Seq.newBuilder[String]
-        lines += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"MERGE","operationParameters":{"predicate":${esc(condSql)}}}}"""
-        cdcFiles.foreach { f =>
-          val pvNode = mapper.createObjectNode()
-          f.partitionValues.foreach { case (k, v) =>
-            if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
-          }
-          lines += s"""{"cdc":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},"size":${f.size},"dataChange":false}}"""
-        }
-        val version = st.version + 1
-        val alloc = new RowIdAllocator(st, version)
-        if (doRewrite) affectedRel.foreach { rel =>
-          lines += removeJson(rel, st.live(rel), System.currentTimeMillis(), dataChange = true)
-        }
-        newFiles.foreach { f =>
-          val pvNode = mapper.createObjectNode()
-          f.partitionValues.foreach { case (k, v) =>
-            if (v == null) pvNode.putNull(k) else pvNode.put(k, v)
-          }
-          val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-          lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":${mapper.writeValueAsString(pvNode)},""" +
-            s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":true$rt,""" +
-            s""""stats":${esc(f.stats)}}}"""
-        }
-        alloc.domainLine.foreach(lines += _)
-        val target2 = new Path(logDir, f"$version%020d.json")
-        if (fs.exists(target2)) throw DeltaReadException(
-          s"`$path`: commit $version already exists — another writer got there first")
-        val out = fs.create(target2, false)
-        try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-        finally out.close()
+        commit(fs, st, path, "MERGE", Seq("predicate" -> condSql),
+          rewriteActions(st, path, cdcFiles, rewrittenRel, newFiles))
         (stats.updated + stats.bsUpdated, stats.inserted)
       }
     }
@@ -2368,7 +2211,6 @@ object DeltaSink {
       where: Option[String] = None): (Int, Int) = {
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
     val st = DeltaLog.snapshot(spark, path)
     requireNoDv(st, rootPath, "OPTIMIZE")
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
@@ -2429,14 +2271,11 @@ object DeltaSink {
         StructField(physicalName(f), f.dataType, f.nullable)))
     val partColsPhys = if (cmMode == "none") partColsT else partColsT.map(physKeyOf)
     val lines = Seq.newBuilder[String]
-    lines += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"OPTIMIZE"}}"""
-    def esc(s: String): String = mapper.writeValueAsString(s)
-    val version = st.version + 1
     // row tracking: compaction MOVES rows, so stable ids must materialize
     // into the hidden columns before positions renumber — each source row's
     // id is coalesce(already-materialized, file base + row position)
     val rtOn = rowTrackingEnabled(st)
-    val alloc = new RowIdAllocator(st, version)
+    val alloc = new RowIdAllocator(st, st.version + 1, path)
     val rtMat: Option[(String, String)] = if (rtOn) Some(rtMatCols(st, path)) else None
     lazy val infoDf = rtInfoDf(spark, st, rel => {
       val dp = new Path(java.net.URLDecoder.decode(rel, "UTF-8"))
@@ -2491,26 +2330,16 @@ object DeltaSink {
         throw DeltaReadException(s"`$path`: failed to move compacted file")
       fs.delete(tmp, true)
       val destSt = fs.getFileStatus(dest)
-      val pvNode = mapper.createObjectNode()
-      pv.foreach { case (k, v) => if (v == null) pvNode.putNull(k) else pvNode.put(k, v) }
       files.foreach { case (rel, e) =>
         lines += removeJson(rel, e, System.currentTimeMillis(), dataChange = false)
         removed += 1
       }
-      val stats = footerStats(spark, dest, dataSchema, partColsPhys)
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(destRel)},"partitionValues":${mapper.writeValueAsString(pvNode)},""" +
-        s""""size":${destSt.getLen},"modificationTime":${destSt.getModificationTime},"dataChange":false$rt,""" +
-        s""""stats":${esc(stats)}}}"""
+      lines += alloc.add(NewFile(destRel, destSt.getLen, destSt.getModificationTime, pv,
+        footerStats(spark, dest, dataSchema, partColsPhys)), dataChange = false)
       added += 1
     }
     alloc.domainLine.foreach(lines += _)
-    val target = new Path(logDir, f"$version%020d.json")
-    if (fs.exists(target)) throw DeltaReadException(
-      s"`$path`: commit $version already exists — another writer got there first")
-    val out = fs.create(target, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    commit(fs, st, path, "OPTIMIZE", Nil, lines.result())
     (removed, added)
   }
 
@@ -2536,7 +2365,6 @@ object DeltaSink {
     require(zorderBy.nonEmpty, "optimizeZOrder needs at least one column")
     val rootPath = new Path(path)
     val fs = rootPath.getFileSystem(spark.sessionState.newHadoopConf())
-    val logDir = new Path(rootPath, "_delta_log")
     val st = DeltaLog.snapshot(spark, path)
     requireNoDv(st, rootPath, "OPTIMIZE ZORDER")
     if (!st.exists) throw DeltaReadException(s"`$path`: not a Delta table")
@@ -2646,27 +2474,11 @@ object DeltaSink {
       else clustered0.select(dataSchema.fields.map(f =>
         col(f.name).as(physicalName(f))).toSeq ++ matColNames.map(col): _*)
     val newFiles = writeDataFiles(clustered, rootPath, Nil, Map.empty)
-    def esc(s: String): String = mapper.writeValueAsString(s)
-    val version = st.version + 1
-    val alloc = new RowIdAllocator(st, version)
-    val lines = Seq.newBuilder[String]
-    lines += s"""{"commitInfo":{"timestamp":${System.currentTimeMillis()},"operation":"OPTIMIZE","operationParameters":{"zOrderBy":${esc(zorderBy.mkString(","))}}}}"""
-    st.live.foreach { case (rel, e) =>
-      lines += removeJson(rel, e, System.currentTimeMillis(), dataChange = false)
-    }
-    newFiles.foreach { f =>
-      val rt = if (alloc.active) alloc.fields(statsNumRecords(f.stats, path)) else ""
-      lines += s"""{"add":{"path":${esc(f.rel)},"partitionValues":{},""" +
-        s""""size":${f.size},"modificationTime":${f.modTime},"dataChange":false$rt,""" +
-        s""""stats":${esc(f.stats)}}}"""
-    }
-    alloc.domainLine.foreach(lines += _)
-    val target = new Path(logDir, f"$version%020d.json")
-    if (fs.exists(target)) throw DeltaReadException(
-      s"`$path`: commit $version already exists — another writer got there first")
-    val out = fs.create(target, false)
-    try out.write((withIct(st, lines.result()).mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    val alloc = new RowIdAllocator(st, st.version + 1, path)
+    val now = System.currentTimeMillis()
+    commit(fs, st, path, "OPTIMIZE", Seq("zOrderBy" -> zorderBy.mkString(",")),
+      st.live.toSeq.map { case (rel, e) => removeJson(rel, e, now, dataChange = false) } ++
+        newFiles.map(alloc.add(_, dataChange = false)) ++ alloc.domainLine)
     (st.live.size, newFiles.size)
   }
 

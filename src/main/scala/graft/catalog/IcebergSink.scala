@@ -3,6 +3,7 @@ package graft.catalog
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.avro.file.DataFileWriter
 import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.hadoop.fs.Path
@@ -493,7 +494,7 @@ object IcebergSink {
     // name, and the table's ids are the protocol truth)
     var fieldIds: Seq[(StructField, Int)] = df.schema.fields.toSeq.zipWithIndex
       .map { case (f, i) => (f, i + 1) }
-    lazy val schemaJson: String = {
+    lazy val schemaNode: ObjectNode = {
       val sch = mapper.createObjectNode()
       sch.put("type", "struct"); sch.put("schema-id", 0)
       val arr = sch.putArray("fields")
@@ -528,7 +529,7 @@ object IcebergSink {
         val ids = sch.putArray("identifier-field-ids")
         idCols.foreach(c => ids.add(fieldIds.find(_._1.name == c).get._2))
       }
-      mapper.writeValueAsString(sch)
+      sch
     }
 
     // ---- partition spec (partition_by=c1,bucket(16,c2),day(ts),…) ----
@@ -549,39 +550,18 @@ object IcebergSink {
 
     // ---- existing-table state ----
     // On create `meta` is missing and every lookup below reads its default.
-    // Preserved verbatim on existing tables: the table identity and the
-    // declared schema/spec history are COMMIT-INVARIANT — regenerating them
-    // from the incoming frame would let an append rewrite nullability
-    // (required flags) or reset evolution history
+    // An existing table's metadata is copied and only the fields this
+    // commit changes are set: the table identity, the declared schema/spec
+    // history and every field a foreign writer put there are COMMIT-
+    // INVARIANT — regenerating them from the incoming frame would let an
+    // append rewrite nullability (required flags), reset evolution history
+    // or drop properties
     val creating = !base.exists
     val meta = base.meta
-    val prevUuid = Some(meta.path("table-uuid").asText()).filter(_.nonEmpty)
-    val prevSchemasJson =
-      if (meta.has("schemas")) Some(mapper.writeValueAsString(meta.path("schemas"))) else None
-    val prevCurrentSchemaId = meta.path("current-schema-id").asInt(0)
-    val prevLastColumnId = meta.path("last-column-id").asInt(0)
-    val prevSpecsJson =
-      if (meta.has("partition-specs")) Some(mapper.writeValueAsString(meta.path("partition-specs")))
-      else None
-    val prevDefaultSpecId = meta.path("default-spec-id").asInt(0)
-    // spec: last-partition-id is the highest assigned partition field id;
-    // carry it (or recompute from the specs for older metadata)
-    val prevLastPartitionId =
-      if (!meta.has("partition-specs")) -1
-      else meta.path("last-partition-id").asInt(base.specs
-        .flatMap(_.path("fields").elements().asScala.map(_.path("field-id").asInt(0)))
-        .maxOption.getOrElse(999))
-    val prevSortOrdersJson =
-      if (meta.has("sort-orders")) Some(mapper.writeValueAsString(meta.path("sort-orders"))) else None
-    val prevDefaultSortOrderId = meta.path("default-sort-order-id").asInt(0)
     // v3 row lineage: next-row-id present in metadata = the table assigns
     // row ids; carried and advanced by every data-adding commit
     val prevNextRowId =
       if (meta.has("next-row-id")) Some(meta.path("next-row-id").asLong()) else None
-    // snapshot refs (branches/tags, spec v2 `refs`): tags and non-main
-    // branches stay pinned where they are; `main` advances with the commit
-    val prevRefs: Map[String, String] = meta.path("refs").properties().asScala
-      .map(e => e.getKey -> mapper.writeValueAsString(e.getValue)).toMap
     val prevCurrentId = base.currentSnapshotId
     val rlOpt = options.get("row_lineage").exists(_.toBoolean)
     Seq(RowIdColName, LastSeqColName).find(df.schema.fieldNames.contains)
@@ -829,7 +809,7 @@ object IcebergSink {
         r.put("sequence_number", Long.box(sq))
         r
       })
-    val snapshotJson = {
+    val snapshotNode = {
       val sn = mapper.createObjectNode()
       sn.put("snapshot-id", snapshotId)
       // parent = the head this write BUILT ON (main's or the branch's) —
@@ -840,7 +820,7 @@ object IcebergSink {
       sn.put("timestamp-ms", nowMs)
       // pin the schema this snapshot was written under — a time-travel
       // read serves THIS schema, not a later evolution's (spec field)
-      sn.put("schema-id", if (prevSchemasJson.isDefined) prevCurrentSchemaId else 0)
+      sn.put("schema-id", if (meta.has("schemas")) meta.path("current-schema-id").asInt(0) else 0)
       if (lineage) sn.put("first-row-id", rowIdBase)
       val summary = sn.putObject("summary")
       summary.put("operation", if (overwrite) "overwrite" else "append")
@@ -854,74 +834,75 @@ object IcebergSink {
         summary.put("graft-batch-version", v2.toString)
       }
       sn.put("manifest-list", mlRel)
-      mapper.writeValueAsString(sn)
+      sn
     }
-    // the snapshot-log tracks MAIN (spec): branch snapshots don't enter it
-    val logJson = (base.snapshotLog ++
-      (if (branchOpt.isEmpty) Seq((nowMs, snapshotId)) else Nil))
-      .map { case (ts, id) =>
-        s"""{"timestamp-ms": $ts, "snapshot-id": $id}"""
-      }.mkString("[", ", ", "]")
+    def fieldId(c: String, what: String): Int = fieldIds.find(_._1.name == c).map(_._2)
+      .getOrElse(throw IcebergReadException(s"$what column `$c` missing a field id"))
+    val newMeta: ObjectNode =
+      if (creating) mapper.createObjectNode() else meta.deepCopy[ObjectNode]()
     // row lineage is a v3 feature; a lineage table declares format 3 from
     // creation (an existing table keeps whatever format it already carries)
-    val formatVersion =
+    newMeta.put("format-version",
       if (creating) (if (rlOpt) 3 else 2)
-      else math.max(meta.path("format-version").asInt(2), if (lineage) 3 else 2)
-    val metaJson =
-      s"""{"format-version": $formatVersion,${
-        if (lineage) s"""\n"next-row-id": $rowIdNext,""" else ""}
-         |"table-uuid": "${prevUuid.getOrElse(java.util.UUID.randomUUID().toString)}",
-         |"location": ${mapper.writeValueAsString(path)},
-         |"last-updated-ms": $nowMs,
-         |"last-column-id": ${
-      if (prevSchemasJson.isDefined) math.max(prevLastColumnId, fieldIds.map(_._2).maxOption.getOrElse(0))
-      else fieldIds.map(_._2).maxOption.getOrElse(0)},
-         |"last-sequence-number": $seq,
-         |"current-schema-id": ${if (prevSchemasJson.isDefined) prevCurrentSchemaId else 0},
-         |"schemas": ${prevSchemasJson.getOrElse(s"[$schemaJson]")},
-         |"default-spec-id": ${if (prevSpecsJson.isDefined) prevDefaultSpecId else 0},
-         |"last-partition-id": ${
-      if (prevLastPartitionId >= 0) prevLastPartitionId
-      else 999 + partColsEff.size},
-         |"partition-specs": ${prevSpecsJson.getOrElse(s"""[{"spec-id": 0, "fields": [${
-      partColsEff.zipWithIndex.map { case (p, i) =>
-        val srcId = fieldIds.find(_._1.name == p.srcCol).map(_._2).getOrElse(
-          throw IcebergReadException(s"partition column `${p.srcCol}` missing a field id"))
-        s"""{"name": ${mapper.writeValueAsString(p.name)}, "transform": ${
-          mapper.writeValueAsString(p.transform)}, """ +
-          s""""source-id": $srcId, "field-id": ${1000 + i}}"""
-      }.mkString(", ")}]}]""")},
-         |"sort-orders": ${
-      prevSortOrdersJson.getOrElse {
-        if (sortCols.isEmpty) """[{"order-id": 0, "fields": []}]"""
-        else s"""[{"order-id": 0, "fields": []}, {"order-id": 1, "fields": [${
-          sortCols.map { c =>
-            val srcId = fieldIds.find(_._1.name == c).map(_._2).getOrElse(
-              throw IcebergReadException(s"sort_by column `$c` missing a field id"))
-            s"""{"transform": "identity", "source-id": $srcId, """ +
-              """"direction": "asc", "null-order": "nulls-first"}"""
-          }.mkString(", ")}]}]"""
-      }},
-         |"default-sort-order-id": ${
-      prevSortOrdersJson.map(_ => prevDefaultSortOrderId)
-        .getOrElse(if (sortCols.isEmpty) 0 else 1)},
-         |"current-snapshot-id": ${
-      if (branchOpt.isDefined) prevCurrentId else snapshotId},
-         |"refs": ${
-      {
-        val base =
-          if (branchOpt.isDefined && !prevRefs.contains("main") && prevCurrentId > 0)
-            prevRefs + ("main" ->
-              s"""{"snapshot-id": $prevCurrentId, "type": "branch"}""")
-          else prevRefs
-        base + (branchOpt.getOrElse("main") ->
-          s"""{"snapshot-id": $snapshotId, "type": "branch"}""")
-      }.map { case (n, j) => s"${mapper.writeValueAsString(n)}: $j" }
-        .mkString("{", ", ", "}")},
-         |"snapshot-log": $logJson,
-         |"snapshots": ${(base.snapshots.map(mapper.writeValueAsString) :+ snapshotJson)
-      .mkString("[", ", ", "]")}}""".stripMargin
-    IcebergLog.commit(base, metaJson)
+      else math.max(meta.path("format-version").asInt(2), if (lineage) 3 else 2))
+    if (lineage) newMeta.put("next-row-id", rowIdNext)
+    if (!newMeta.has("table-uuid")) newMeta.put("table-uuid", java.util.UUID.randomUUID().toString)
+    if (!newMeta.has("location")) newMeta.put("location", path)
+    newMeta.put("last-updated-ms", nowMs)
+    newMeta.put("last-column-id", math.max(meta.path("last-column-id").asInt(0),
+      fieldIds.map(_._2).maxOption.getOrElse(0)))
+    newMeta.put("last-sequence-number", seq)
+    // a table without the v2 history arrays (created here, or v1-shaped)
+    // gains them from this write's schema, spec and sort order
+    if (!newMeta.has("schemas")) {
+      newMeta.put("current-schema-id", 0)
+      newMeta.putArray("schemas").add(schemaNode)
+    }
+    if (!newMeta.has("partition-specs")) {
+      newMeta.put("default-spec-id", 0)
+      newMeta.put("last-partition-id", 999 + partColsEff.size)
+      val spec = newMeta.putArray("partition-specs").addObject()
+      spec.put("spec-id", 0)
+      val fields = spec.putArray("fields")
+      partColsEff.zipWithIndex.foreach { case (p, i) =>
+        val f = fields.addObject()
+        f.put("name", p.name); f.put("transform", p.transform)
+        f.put("source-id", fieldId(p.srcCol, "partition")); f.put("field-id", 1000 + i)
+      }
+    } else if (!newMeta.has("last-partition-id"))
+      // spec: last-partition-id is the highest assigned partition field id
+      newMeta.put("last-partition-id", base.specs
+        .flatMap(_.path("fields").elements().asScala.map(_.path("field-id").asInt(0)))
+        .maxOption.getOrElse(999))
+    if (!newMeta.has("sort-orders")) {
+      val orders = newMeta.putArray("sort-orders")
+      orders.addObject().put("order-id", 0).putArray("fields")
+      if (sortCols.nonEmpty) {
+        val fields = orders.addObject().put("order-id", 1).putArray("fields")
+        sortCols.foreach { c =>
+          fields.addObject().put("transform", "identity").put("source-id", fieldId(c, "sort_by"))
+            .put("direction", "asc").put("null-order", "nulls-first")
+        }
+      }
+      newMeta.put("default-sort-order-id", if (sortCols.isEmpty) 0 else 1)
+    }
+    newMeta.put("current-snapshot-id", if (branchOpt.isDefined) prevCurrentId else snapshotId)
+    // snapshot refs (branches/tags, spec v2 `refs`): tags and non-main
+    // branches stay pinned where they are; the written branch advances
+    locally {
+      val refs = newMeta.path("refs") match {
+        case o: ObjectNode => o
+        case _ => newMeta.putObject("refs")
+      }
+      def pin(name: String, id: Long): Unit =
+        refs.putObject(name).put("snapshot-id", id).put("type", "branch")
+      if (branchOpt.isDefined && !refs.has("main") && prevCurrentId > 0) pin("main", prevCurrentId)
+      pin(branchOpt.getOrElse("main"), snapshotId)
+    }
+    // the snapshot-log tracks MAIN (spec): branch snapshots don't enter it
+    if (branchOpt.isEmpty) logEntry(newMeta, snapshotId, nowMs)
+    newMeta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshots").add(snapshotNode)
+    IcebergLog.commit(base, newMeta)
   }
 
   // ------------------------------------------------- merge-on-read core
@@ -1462,7 +1443,7 @@ object IcebergSink {
       sn.put("manifest-list", mlRel)
       sn
     }
-    val newMeta = st.meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+    val newMeta = st.meta.deepCopy[ObjectNode]()
     // deletion vectors are a format-v3 feature — declare it honestly
     if (dvEntries.nonEmpty && newMeta.path("format-version").asInt(2) < 3)
       newMeta.put("format-version", 3)
@@ -1478,7 +1459,7 @@ object IcebergSink {
     locally {
       val refsNode =
         if (newMeta.has("refs"))
-          newMeta.path("refs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          newMeta.path("refs").asInstanceOf[ObjectNode]
         else newMeta.putObject("refs")
       val mainRef = refsNode.putObject("main")
       mainRef.put("snapshot-id", snapshotId)
@@ -2166,11 +2147,11 @@ object IcebergSink {
     * optional — old files cannot satisfy a required one. */
   def addColumn(spark: org.apache.spark.sql.SparkSession, path: String,
       colName: String, typeDdl: String): Unit = {
-    val st = loadMorState(spark, path)
-    if (!st.meta.has("schemas")) throw IcebergReadException(
+    val snap = IcebergLog.current(spark, path)
+    if (!snap.meta.has("schemas")) throw IcebergReadException(
       s"ALTER TABLE: `$path` metadata carries no schemas array (v1 single-" +
         "schema layout) — evolution needs the v2 metadata shape")
-    val existing = st.snap.currentSchema.path("fields").elements().asScala
+    val existing = snap.currentSchema.path("fields").elements().asScala
       .map(_.path("name").asText()).toSeq
     if (existing.exists(_.equalsIgnoreCase(colName))) throw IcebergReadException(
       s"ALTER TABLE: column `$colName` already exists in `$path`")
@@ -2179,10 +2160,10 @@ object IcebergSink {
         s"ALTER TABLE: `$typeDdl` is not a Spark type: ${e.getMessage}")
     }
     val iceT = iceType(dt, "ALTER TABLE")
-    val maxFieldId = st.meta.path("schemas").elements().asScala.flatMap(
+    val maxFieldId = snap.meta.path("schemas").elements().asScala.flatMap(
       _.path("fields").elements().asScala.map(_.path("id").asInt(0))).maxOption.getOrElse(0)
-    val newFieldId = math.max(st.meta.path("last-column-id").asInt(0), maxFieldId) + 1
-    commitEvolvedSchema(st, { evolved =>
+    val newFieldId = math.max(snap.meta.path("last-column-id").asInt(0), maxFieldId) + 1
+    commitEvolvedSchema(snap, { evolved =>
       val nf = evolved.withArray("fields").addObject()
       nf.put("id", newFieldId); nf.put("name", colName)
       nf.put("required", false); nf.put("type", iceT)
@@ -2192,27 +2173,27 @@ object IcebergSink {
   /** One metadata-only commit: deep-copy the current table metadata, apply
     * `mutateMeta`, bump last-updated, publish it as the next version. The
     * shared tail of every ALTER TABLE that moves no data bytes. */
-  private def commitEvolvedMeta(st: MorState,
-      mutateMeta: com.fasterxml.jackson.databind.node.ObjectNode => Unit): Unit = {
-    val newMeta = st.meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+  private def commitEvolvedMeta(snap: IcebergLog.Snapshot,
+      mutateMeta: ObjectNode => Unit): Unit = {
+    val newMeta = snap.meta.deepCopy[ObjectNode]()
     mutateMeta(newMeta)
     newMeta.put("last-updated-ms", System.currentTimeMillis())
-    IcebergLog.commit(st.snap, newMeta)
+    IcebergLog.commit(snap, newMeta)
   }
 
   /** Shared tail of the schema evolution ops: append an evolved copy of
     * the current schema (new schema-id, `mutate` applied), point
     * current-schema-id at it and apply `mutateMeta`, as one metadata-only
     * commit. */
-  private def commitEvolvedSchema(st: MorState,
-      mutate: com.fasterxml.jackson.databind.node.ObjectNode => Unit,
-      mutateMeta: com.fasterxml.jackson.databind.node.ObjectNode => Unit = _ => ()): Unit = {
-    val newSchemaId = st.meta.path("schemas").elements().asScala
+  private def commitEvolvedSchema(snap: IcebergLog.Snapshot,
+      mutate: ObjectNode => Unit,
+      mutateMeta: ObjectNode => Unit = _ => ()): Unit = {
+    val newSchemaId = snap.meta.path("schemas").elements().asScala
       .map(_.path("schema-id").asInt(0)).maxOption.getOrElse(0) + 1
-    val evolved = st.snap.currentSchema.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+    val evolved = snap.currentSchema.deepCopy[ObjectNode]()
     evolved.put("schema-id", newSchemaId)
     mutate(evolved)
-    commitEvolvedMeta(st, { newMeta =>
+    commitEvolvedMeta(snap, { newMeta =>
       newMeta.withArray("schemas").add(evolved)
       newMeta.put("current-schema-id", newSchemaId)
       mutateMeta(newMeta)
@@ -2229,15 +2210,15 @@ object IcebergSink {
     * next append fans out by the evolved spec. */
   def addPartitionField(spark: org.apache.spark.sql.SparkSession, path: String,
       entry: String): Unit = {
-    val st = loadMorState(spark, path)
-    val (curSchema, sparkSchema) = currentSparkSchema(st.meta)
+    val snap = IcebergLog.current(spark, path)
+    val (curSchema, sparkSchema) = currentSparkSchema(snap.meta)
     val pf = parsePartitionBy(Seq(entry), sparkSchema).head
     val srcId = curSchema.path("fields").elements().asScala
       .find(_.path("name").asText() == pf.srcCol)
       .map(_.path("id").asInt()).getOrElse(throw IcebergReadException(
         s"ALTER TABLE: partition source column `${pf.srcCol}` is not in `$path`'s schema"))
-    val specs = st.meta.path("partition-specs")
-    val defaultId = st.meta.path("default-spec-id").asInt(0)
+    val specs = snap.meta.path("partition-specs")
+    val defaultId = snap.meta.path("default-spec-id").asInt(0)
     val defaultSpec = specs.elements().asScala
       .find(_.path("spec-id").asInt(-1) == defaultId).getOrElse(
         throw IcebergReadException(s"`$path`: default-spec-id $defaultId not in partition-specs"))
@@ -2262,7 +2243,7 @@ object IcebergSink {
     val newFieldId = math.max(999, specs.elements().asScala
       .flatMap(_.path("fields").elements().asScala.map(_.path("field-id").asInt(0)))
       .maxOption.getOrElse(999)) + 1
-    commitEvolvedMeta(st, { newMeta =>
+    commitEvolvedMeta(snap, { newMeta =>
       val sp = mapper.createObjectNode()
       sp.put("spec-id", newSpecId)
       val fields = sp.putArray("fields")
@@ -2281,9 +2262,9 @@ object IcebergSink {
     * their tuples; only FUTURE writes stop fanning out by it. */
   def dropPartitionField(spark: org.apache.spark.sql.SparkSession, path: String,
       fieldName: String): Unit = {
-    val st = loadMorState(spark, path)
-    val specs = st.meta.path("partition-specs")
-    val defaultId = st.meta.path("default-spec-id").asInt(0)
+    val snap = IcebergLog.current(spark, path)
+    val specs = snap.meta.path("partition-specs")
+    val defaultId = snap.meta.path("default-spec-id").asInt(0)
     val defaultSpec = specs.elements().asScala
       .find(_.path("spec-id").asInt(-1) == defaultId).getOrElse(
         throw IcebergReadException(s"`$path`: default-spec-id $defaultId not in partition-specs"))
@@ -2294,7 +2275,7 @@ object IcebergSink {
           s"partition spec (${defaultFields.map(_.path("name").asText()).mkString(", ")})")
     val newSpecId = specs.elements().asScala
       .map(_.path("spec-id").asInt(0)).maxOption.getOrElse(0) + 1
-    commitEvolvedMeta(st, { newMeta =>
+    commitEvolvedMeta(snap, { newMeta =>
       val sp = mapper.createObjectNode()
       sp.put("spec-id", newSpecId)
       val fields = sp.putArray("fields")
@@ -2346,7 +2327,7 @@ object IcebergSink {
       s"ALTER TABLE: `$path` carries live row-level delete files — compact " +
         "first (rewriteDataFiles), then drop the column (an equality delete " +
         "referencing the dropped field id would dangle)")
-    commitEvolvedSchema(st, { evolved =>
+    commitEvolvedSchema(st.snap, { evolved =>
       val fields = evolved.withArray("fields")
       val keep = fields.elements().asScala
         .filter(_.path("name").asText() != colName).toSeq
@@ -2389,9 +2370,9 @@ object IcebergSink {
           "it resolves by NAME, so renaming would silently null the column; " +
           "rewrite the table first (rewriteDataFiles)")
     }
-    commitEvolvedSchema(st, { evolved =>
+    commitEvolvedSchema(st.snap, { evolved =>
       evolved.withArray("fields").elements().asScala.foreach {
-        case f: com.fasterxml.jackson.databind.node.ObjectNode
+        case f: ObjectNode
           if f.path("name").asText() == oldName => f.put("name", newName)
         case _ => ()
       }
@@ -2405,19 +2386,19 @@ object IcebergSink {
     * procedure's arrangement. */
   def rollbackTo(spark: org.apache.spark.sql.SparkSession, path: String,
       snapshotId: Long): Unit = {
-    val st = loadMorState(spark, path)
-    val known = st.snap.snapshots.map(_.path("snapshot-id").asLong())
+    val snap = IcebergLog.current(spark, path)
+    val known = snap.snapshots.map(_.path("snapshot-id").asLong())
     if (!known.contains(snapshotId)) throw IcebergReadException(
       s"`$path`: cannot roll back to snapshot $snapshotId — table knows " +
         s"snapshots ${known.sorted.mkString(", ")}")
-    commitEvolvedMeta(st, { newMeta =>
+    commitEvolvedMeta(snap, { newMeta =>
       newMeta.put("current-snapshot-id", snapshotId)
       logEntry(newMeta, snapshotId)
     })
   }
 
   /** Append `snapshotId` to a metadata node's snapshot-log. */
-  private def logEntry(meta: com.fasterxml.jackson.databind.node.ObjectNode,
+  private def logEntry(meta: ObjectNode,
       snapshotId: Long, timestampMs: Long = System.currentTimeMillis()): Unit = {
     val entry = meta.withArray[com.fasterxml.jackson.databind.node.ArrayNode]("snapshot-log")
       .addObject()
@@ -2434,21 +2415,21 @@ object IcebergSink {
   def createRef(spark: org.apache.spark.sql.SparkSession, path: String,
       name: String, isBranch: Boolean = false,
       snapshotId: Option[Long] = None): Long = {
-    val st = loadMorState(spark, path)
+    val snap = IcebergLog.current(spark, path)
     if (name == "main") throw IcebergReadException(
       s"`$path`: ref `main` is the live branch — it advances with commits " +
         "and cannot be re-pinned")
-    if (st.meta.path("refs").has(name)) throw IcebergReadException(
+    if (snap.meta.path("refs").has(name)) throw IcebergReadException(
       s"`$path`: ref `$name` already exists; dropRef first")
-    val known = st.snap.snapshots.map(_.path("snapshot-id").asLong()).toSet
-    val target = snapshotId.getOrElse(st.meta.path("current-snapshot-id").asLong())
+    val known = snap.snapshots.map(_.path("snapshot-id").asLong()).toSet
+    val target = snapshotId.getOrElse(snap.meta.path("current-snapshot-id").asLong())
     if (!known.contains(target)) throw IcebergReadException(
       s"`$path`: snapshot $target not in table metadata (known: " +
         s"${known.toSeq.sorted.mkString(", ")})")
-    commitEvolvedMeta(st, { newMeta =>
+    commitEvolvedMeta(snap, { newMeta =>
       val refs =
         if (newMeta.has("refs"))
-          newMeta.path("refs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+          newMeta.path("refs").asInstanceOf[ObjectNode]
         else newMeta.putObject("refs")
       val r = refs.putObject(name)
       r.put("snapshot-id", target)
@@ -2464,20 +2445,20 @@ object IcebergSink {
     * when the pipeline retires it). Returns the published snapshot id. */
   def fastForward(spark: org.apache.spark.sql.SparkSession, path: String,
       branch: String): Long = {
-    val st = loadMorState(spark, path)
-    val r = st.meta.path("refs").path(branch)
+    val snap = IcebergLog.current(spark, path)
+    val r = snap.meta.path("refs").path(branch)
     if (!r.has("snapshot-id")) throw IcebergReadException(
       s"`$path`: no ref `$branch`; known: " +
-        st.meta.path("refs").fieldNames().asScala.mkString(", "))
+        snap.meta.path("refs").fieldNames().asScala.mkString(", "))
     if (r.path("type").asText("branch") != "branch") throw IcebergReadException(
       s"`$path`: ref `$branch` is a TAG — fast-forward publishes a BRANCH")
     val target = r.path("snapshot-id").asLong()
-    if (st.snap.snapshotById(target).isEmpty) throw IcebergReadException(
+    if (snap.snapshotById(target).isEmpty) throw IcebergReadException(
       s"`$path`: branch `$branch` head $target is not in the snapshots list")
-    commitEvolvedMeta(st, { newMeta =>
+    commitEvolvedMeta(snap, { newMeta =>
       newMeta.put("current-snapshot-id", target)
       val mainRef = newMeta.path("refs")
-        .asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].putObject("main")
+        .asInstanceOf[ObjectNode].putObject("main")
       mainRef.put("snapshot-id", target)
       mainRef.put("type", "branch")
       logEntry(newMeta, target)
@@ -2488,14 +2469,14 @@ object IcebergSink {
   /** Drop a tag/branch by name; `main` rejects. */
   def dropRef(spark: org.apache.spark.sql.SparkSession, path: String,
       name: String): Unit = {
-    val st = loadMorState(spark, path)
+    val snap = IcebergLog.current(spark, path)
     if (name == "main") throw IcebergReadException(
       s"`$path`: ref `main` is the live branch and cannot be dropped")
-    if (!st.meta.path("refs").has(name)) throw IcebergReadException(
+    if (!snap.meta.path("refs").has(name)) throw IcebergReadException(
       s"`$path`: no ref `$name`; known: " +
-        st.meta.path("refs").fieldNames().asScala.mkString(", "))
-    commitEvolvedMeta(st,
-      _.path("refs").asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode].remove(name))
+        snap.meta.path("refs").fieldNames().asScala.mkString(", "))
+    commitEvolvedMeta(snap,
+      _.path("refs").asInstanceOf[ObjectNode].remove(name))
   }
 
   /** CALL system.rewrite_manifests — manifest CONSOLIDATION, the metadata
@@ -2678,7 +2659,7 @@ object IcebergSink {
     val keptIds = kept.map(_.path("snapshot-id").asLong()).toSet
     val newLog = snap.meta.path("snapshot-log").elements().asScala.toSeq
       .filter(e => keptIds.contains(e.path("snapshot-id").asLong()))
-    val newMeta = snap.meta.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+    val newMeta = snap.meta.deepCopy[ObjectNode]()
     newMeta.set[com.fasterxml.jackson.databind.JsonNode]("snapshots",
       mapper.createArrayNode().addAll(kept.asJava))
     newMeta.set[com.fasterxml.jackson.databind.JsonNode]("snapshot-log",

@@ -3,6 +3,8 @@ package graft.sources
 import scala.collection.immutable.VectorMap
 import scala.jdk.CollectionConverters._
 
+import com.fasterxml.jackson.core.JsonGenerator
+import com.fasterxml.jackson.core.util.MinimalPrettyPrinter
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.MissingNode
 import org.apache.avro.file.DataFileReader
@@ -194,21 +196,29 @@ object IcebergLog {
     }
   }
 
-  /** Publish `metaJson` as version `base.version + 1` and point the hint at
-    * it. A version that already exists means a concurrent commit won: the
-    * caller's work is not published. Returns the new version. */
+  /** Publish `metaJson` as version `base.version + 1` through
+    * [[CommitStore.publish]] and point the hint at it. A version that
+    * already exists means a concurrent commit won: the caller's work is not
+    * published. Returns the new version. */
   def commit(base: Snapshot, metaJson: String): Long = {
     val v = base.version + 1
-    val target = new Path(base.metaDir, s"v$v.metadata.json")
-    if (base.fs.exists(target)) throw IcebergReadException(
+    CommitStore.publish(base.fs, new Path(base.metaDir, s"v$v.metadata.json"),
+      metaJson.getBytes("UTF-8"))(IcebergReadException(
       s"`${base.root}`: metadata version $v already exists — another writer got " +
-        "there first; this native writer does not do commit retries")
-    val out = base.fs.create(target, false)
-    try out.write(metaJson.getBytes("UTF-8")) finally out.close()
+        "there first; this native writer does not do commit retries"))
     val hintOut = base.fs.create(new Path(base.metaDir, HintName), true)
     try hintOut.write(v.toString.getBytes("UTF-8")) finally hintOut.close()
     v
   }
 
-  def commit(base: Snapshot, meta: JsonNode): Long = commit(base, mapper.writeValueAsString(meta))
+  /** [[commit]] of a metadata node, written on one line as `"key": value`
+    * pairs separated by `, `: the layout the table-creating write has
+    * always produced, kept for every version. */
+  def commit(base: Snapshot, meta: JsonNode): Long = commit(base, metaWriter.writeValueAsString(meta))
+
+  private val metaWriter = mapper.writer(new MinimalPrettyPrinter {
+    override def writeObjectFieldValueSeparator(g: JsonGenerator): Unit = g.writeRaw(": ")
+    override def writeObjectEntrySeparator(g: JsonGenerator): Unit = g.writeRaw(", ")
+    override def writeArrayValueSeparator(g: JsonGenerator): Unit = g.writeRaw(", ")
+  })
 }

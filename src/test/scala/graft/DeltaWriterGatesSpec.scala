@@ -119,11 +119,24 @@ class DeltaWriterGatesSpec extends SparkSpec {
     val dir = tempDir("gates")
     // liquid clustering demands writer behavior (cluster maintenance) we
     // deliberately don't implement — the gate must refuse
-    val root = writeTable(dir, "", features = "\"clustering\",\"appendOnly\"")
-    val e = intercept[DeltaNative.DeltaReadException] {
-      DeltaSink.write(Seq((2L, 5.0)).toDF("id", "x"), root, Map.empty)
+    val root = writeTable(dir, "\"delta.constraints.x_pos\":\"x > 0\"",
+      features = "\"clustering\",\"appendOnly\",\"checkConstraints\"")
+    val statements: Seq[(String, () => Any)] = Seq(
+      "append" -> (() => DeltaSink.write(Seq((2L, 5.0)).toDF("id", "x"), root, Map.empty)),
+      "ADD CONSTRAINT" -> (() => DeltaSink.addCheckConstraint(spark, root, "x_small", "x < 100")),
+      "DROP CONSTRAINT" -> (() => DeltaSink.dropCheckConstraint(spark, root, "x_pos")),
+      "SET TBLPROPERTIES" -> (() => DeltaSink.setTableProperties(spark, root, Map("k" -> "v"))),
+      "ADD COLUMN" -> (() => DeltaSink.addColumn(spark, root, "y", "int")),
+      "DROP COLUMN" -> (() => DeltaSink.dropColumn(spark, root, "x")),
+      "RENAME COLUMN" -> (() => DeltaSink.renameColumn(spark, root, "x", "x2")),
+      "REORG PURGE" -> (() => DeltaSink.purgeDeletionVectors(spark, root)))
+    statements.foreach { case (name, run) =>
+      val e = intercept[DeltaNative.DeltaReadException](run())
+      assert(e.getMessage.contains("clustering"), s"$name: ${e.getMessage}")
     }
-    assert(e.getMessage.contains("clustering"))
+    // nothing committed: the log still ends at the fixture's version 0
+    assert(new File(root, "_delta_log").list().filter(_.endsWith(".json")).toSeq ===
+      Seq(f"${0L}%020d.json"))
     // a v7 table demanding only features we implement writes fine
     val dir2 = tempDir("gates")
     val root2 = writeTable(dir2, "",

@@ -330,6 +330,43 @@ class IcebergSinkSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq === Seq((1L, "v1")))
   }
 
+  test("an append keeps the metadata fields a foreign writer put there") {
+    val root = tempDir("isink_foreign_fields").getPath
+    Sinks.copyTo(Seq((1L, "a")).toDF("id", "v"), root, "iceberg")
+    val md = new java.io.File(root, "metadata")
+    val v1 = new java.io.File(md, "v1.metadata.json")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val meta = mapper.readTree(v1).asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    meta.putObject("properties").put("write.target-file-size-bytes", "1024")
+    meta.putArray("statistics")
+    meta.putArray("metadata-log")
+    java.nio.file.Files.writeString(v1.toPath, mapper.writeValueAsString(meta))
+    new java.io.File(md, ".v1.metadata.json.crc").delete() // stale LocalFS checksum
+    Sinks.copyTo(Seq((2L, "b")).toDF("id", "v"), root, "iceberg")
+    val v2 = mapper.readTree(new java.io.File(md, "v2.metadata.json"))
+    assert(v2.path("properties").path("write.target-file-size-bytes").asText() === "1024",
+      v2.toString.take(400))
+    assert(v2.has("statistics") && v2.has("metadata-log"))
+    assert(v2.path("snapshots").size() === 2 && v2.path("snapshot-log").size() === 2)
+    assert(readBack(root).as[(Long, String)].collect().sorted.toSeq === Seq((1L, "a"), (2L, "b")))
+  }
+
+  test("metadata-only statements commit without reading the manifests") {
+    val root = tempDir("isink_no_walk").getPath
+    Sinks.copyTo(Seq((1L, "a")).toDF("id", "v"), root, "iceberg")
+    Sinks.copyTo(Seq((2L, "b")).toDF("id", "v"), root, "iceberg")
+    val md = new java.io.File(root, "metadata")
+    val manifest = md.listFiles().filter(f => f.getName.startsWith("m-") &&
+      f.getName.endsWith(".avro")).minBy(_.getName)
+    assert(manifest.delete())
+    val tagged = IcebergSink.createRef(spark, root, "pinned")
+    IcebergSink.addColumn(spark, root, "score", "double")
+    val v4 = new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(new java.io.File(md, "v4.metadata.json"))
+    assert(v4.path("refs").path("pinned").path("snapshot-id").asLong() === tagged)
+    assert(v4.path("schemas").size() === 2)
+  }
+
   test("iceberg_changes resolves like iceberg_scan: no hint and a blank hint") {
     val root = tempDir("isink_changes_hint").getPath
     Sinks.copyTo(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), root, "iceberg")
